@@ -63,8 +63,8 @@ object PlanAudit {
   val MaxBroadcastRows = 100L
 
   /** Queries allowed bnlj nodes the bound derivation cannot clear, in
-    * exactly two sanctioned classes (every entry was re-probed by hand
-    * — ProbeBnlj prints each build side):
+    * exactly two sanctioned classes (every entry was re-probed by hand,
+    * build side by build side — NOTES.md, "PlanAudit v2"):
     *
     *   (a) QUERY SETS: a build side selected by an id filter over a
     *       scan (`vec_id = 0` single-row query-vector selects,

@@ -2394,8 +2394,9 @@ object SparkEntry {
   /** The same planted fixture through the DISTRIBUTED peel
     * (`driverMaxEdges = 0` disables the small-graph driver union-find
     * fast path, so the phase/round degree-peeling loop — the 100 TB
-    * shape, measured at 2.4M edges by CorenessDrill — is the code
-    * under the oracle every round, not just in a one-off drill).
+    * shape, measured at 2.4M edges (NOTES.md, "Coreness at adversarial
+    * scale") — is the code under the oracle every round, not just in a
+    * one-off drill).
     */
   private def graphCorenessDistributed(s: SparkSession, dir: String): DataFrame =
     graft.operators.Graphs

@@ -11,19 +11,11 @@ package graft.config
   *
   * `partitionCols` participate in the upsert merge keys so the merge can
   * prune target partitions (reference: stream.py:116-117).
-  */
-/** @param sortCols optional within-partition sort applied on every
+  *
+  * @param sortCols optional within-partition sort applied on every
   *                  write: clusters rows so parquet row-group min/max
   *                  statistics prune point/range scans on those columns
   *                  (poor man's clustering/Z-order for one dimension).
-  * @param zOrderWrite when true and `sortCols` lists 2+ columns, every
-  *                  write sorts by the interleaved Z-order key of
-  *                  `sortCols` ([[graft.functions.InterleaveBits]])
-  *                  instead of the lexicographic sort: row-group
-  *                  min/max stats then prune scans on EVERY sort
-  *                  column (each at ~1/N bit precision) rather than
-  *                  only the leading one. Same trade as
-  *                  OPTIMIZE ZORDER BY in table formats.
   * @param autoCompactEvery when > 0, [[graft.streaming.MicroBatchMerger]]
   *                  runs [[graft.operators.MergeEngine.compact]] on this
   *                  table after every Nth processed micro-batch —
@@ -40,7 +32,6 @@ final case class TableConfig(
     additionalCols: Seq[String] = Seq.empty,
     partitionCols: Seq[String] = Seq.empty,
     sortCols: Seq[String] = Seq.empty,
-    zOrderWrite: Boolean = false,
     autoCompactEvery: Int = 0) {
   require(schema.nonEmpty, "schema must be non-empty")
   require(tableName.nonEmpty, "tableName must be non-empty")

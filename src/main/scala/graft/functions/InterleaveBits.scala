@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
@@ -133,44 +132,4 @@ case class InterleaveBits(children: Seq[Expression]) extends Expression {
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): InterleaveBits = copy(children = newChildren)
-}
-
-object ZOrder {
-
-  import org.apache.spark.sql.functions._
-
-  /** Z-order key over raw column bits. The interleave reads the TOP
-    * 64/N bits of each monotone-mapped input, so inputs must already
-    * spread across their 64-bit space — use [[rangeScaled]] wrappers
-    * for real data, whose values typically occupy only the low bits
-    * (every small int then shares identical top bits and the key
-    * degenerates to a constant).
-    */
-  def zorder(cols: Column*): Column = {
-    import org.apache.spark.sql.GraftColumnShim._
-    column(InterleaveBits(cols.map(expression)))
-  }
-
-  /** Scale a numeric column's [lo, hi] range onto the top `bits` bits
-    * of the unsigned space — the range normalization Z-order needs
-    * (table formats estimate the same per-column ranges before their
-    * ZORDER pass). Pure built-ins, codegen'd; out-of-range values
-    * clamp; a degenerate range maps to 0.
-    */
-  def rangeScaled(c: Column, lo: Double, hi: Double, bits: Int = 16): Column = {
-    require(bits > 0 && bits <= 32, "bits must be in [1, 32]")
-    val span = hi - lo
-    val maxv = (1L << bits) - 1
-    val scaled =
-      if (span <= 0) lit(0L)
-      else least(
-        lit(maxv),
-        greatest(lit(0L),
-          ((c.cast("double") - lit(lo)) / lit(span) * lit(maxv.toDouble)).cast("long")))
-    // center before shifting: InterleaveBits flips the sign bit to get
-    // unsigned order, so the emitted long's SIGNED order must equal the
-    // scaled order — (scaled - 2^(bits-1)) << (64-bits) maps monotone()
-    // back to exactly scaled << (64-bits)
-    shiftleft(scaled - lit(1L << (bits - 1)), 64 - bits)
-  }
 }

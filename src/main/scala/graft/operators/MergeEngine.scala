@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.config.TableConfig
+import graft.sources.StagedSwap.{deleteOrThrow, renameOrThrow}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -33,6 +34,13 @@ import java.util.UUID
   *     rewrite partitions that actually contained a matched key.
   *
   * Physical design, chosen for the 100 TB case:
+  *   - One transaction per change set ([[apply]], the body of the
+  *     reference's per-batch `foreachBatch`): ONE routing aggregation
+  *     over the deduplicated changes — per-(upsert/delete, partition)
+  *     row counts — decides which sides run and which partitions the
+  *     upserts touch; then ONE target read, one resolve chain (upsert,
+  *     then the pk-only delete), one staged swap and one catalog sync.
+  *     [[upsert]] and [[delete]] are single-sided change sets.
   *   - The upsert is ONE shuffle at most: union target-slice + source,
   *     then a max_by aggregate with partial/final phases (map-side
   *     combine, skew-bounded) — and when the inputs are already
@@ -192,8 +200,7 @@ object MergeEngine {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a crash during manifest creation leaves only the tmp file: nothing
     // was swapped yet, so discarding it (and any staged bytes) suffices
-    val tmp = new Path(root, ManifestName + ".tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, false)
+    deleteOrThrow(fs, new Path(root, ManifestName + ".tmp"))
     val manifestPath = new Path(root, ManifestName)
     if (!fs.exists(manifestPath)) return false
     val m = Manifest.read(fs, manifestPath)
@@ -203,27 +210,25 @@ object MergeEngine {
         val live = new Path(root, rel)
         val saved = new Path(backup, rel)
         if (fs.exists(saved)) {
-          if (fs.exists(live)) fs.delete(live, true)
+          deleteOrThrow(fs, live)
           fs.mkdirs(live.getParent)
-          fs.rename(saved, live)
+          renameOrThrow(fs, saved, live)
         } else if (!m.existing.contains(rel)) {
           // new partition: nothing to restore, remove if swapped in
-          if (fs.exists(live)) fs.delete(live, true)
+          deleteOrThrow(fs, live)
         } // else: original still in place — the swap never reached it
       }
     } else {
-      m.stagedFiles.foreach { f =>
-        val live = new Path(root, f)
-        if (fs.exists(live)) fs.delete(live, false)
-      }
+      m.stagedFiles.foreach(f => deleteOrThrow(fs, new Path(root, f)))
       m.originalFiles.foreach { f =>
         val saved = new Path(backup, f)
-        if (fs.exists(saved)) fs.rename(saved, new Path(root, f))
+        if (fs.exists(saved)) renameOrThrow(fs, saved, new Path(root, f))
       }
     }
-    fs.delete(new Path(m.staging), true)
-    fs.delete(backup, true)
-    fs.delete(manifestPath, false)
+    // a refused restore above threw: the backup is still the only copy
+    deleteOrThrow(fs, new Path(m.staging))
+    deleteOrThrow(fs, backup)
+    deleteOrThrow(fs, manifestPath)
     true
   }
 
@@ -246,110 +251,106 @@ object MergeEngine {
     }
   }
 
-  /** MERGE-upsert `source` into the table at `cfg.path`.
+  /** Marks the side of an [[upsert]] / [[delete]] change set. */
+  private val OpCol = "__graft_op_deleted"
+
+  /** MERGE one change set into the table at `cfg.path` — the micro-batch
+    * transaction of the reference (stream.py:114-148: guarded upsert,
+    * then pk-only delete) as ONE read-modify-write.
     *
-    * Only partitions present in `source` are read from the target and
-    * rewritten (static partition pruning: the touched partition values are
-    * collected — they are few — and pushed as scan filters).
+    * `changes` holds one row per key ([[CdcDedup.latestPerKey]]);
+    * `deletedCol == "true"` marks tombstones, any other value an upsert
+    * (written without `deletedCol`), null neither. The frame is cached
+    * for the call — and unpersisted on return, so pass one the caller
+    * does not cache itself — and routed by ONE aggregation:
+    * per-(side, partition) row counts, whose cardinality is sides x
+    * touched partitions — small enough to collect by construction. The
+    * counts say which sides are non-empty and which partitions the
+    * upserts touch, so no side pays an emptiness probe or a
+    * partition-discovery collect of its own.
     *
-    * @param touchedUpsert the distinct `cfg.partitionCols` values of
-    *        `source`, when the caller already collected them (the
-    *        micro-batch loop folds them into its routing aggregation so
-    *        routing + partition discovery is ONE driver job); None
-    *        collects here
+    * Only partitions the upserts touch or a deleted key occupies are read
+    * and rewritten. Deletes match on pk alone, so their partitions come
+    * from a probe of the pre-state ([[pkRangeFilter]] prunes it by
+    * row-group stats when files are pk-clustered); partitions the swap
+    * leaves empty are removed in the same transaction. Sequentially
+    * equivalent to upsert-then-delete: an upsert can add keys only
+    * inside its own touched partitions, so every row the delete could
+    * see is in the slice; even a key on both sides ends deleted.
     */
+  def apply(
+      spark: SparkSession,
+      cfg: TableConfig,
+      changes: DataFrame,
+      pkCols: Seq[String],
+      versionCol: String,
+      deletedCol: String): Unit = {
+    val partCols = cfg.partitionCols
+    changes.cache()
+    try {
+      val isDel = col(deletedCol) === "true"
+      val routed = changes
+        .groupBy(isDel.as("__is_del") +: partCols.map(col): _*)
+        .count()
+        .collect()
+        .filterNot(_.isNullAt(0))
+      val (delRows, upRows) = routed.partition(_.getBoolean(0))
+      val upserts = changes.filter(!isDel).drop(deletedCol)
+      val deletes = changes.filter(isDel)
+      val target = readTable(spark, cfg.path)
+      if (target.isEmpty && upRows.isEmpty) return // nothing to delete from
+      // the partitions to read and rewrite: those the upserts touch plus
+      // those holding a deleted key (probed on the pre-state)
+      val rewrite: Array[Row] = target match {
+        case Some(t) if partCols.nonEmpty =>
+          val affected =
+            if (delRows.isEmpty) Array.empty[Row]
+            else
+              pkRangeFilter(deletes, pkCols, cfg.sortCols).map(t.filter).getOrElse(t)
+                .join(deletes.select(pkCols.map(col): _*).distinct(), pkCols, "left_semi")
+                .select(partCols.map(col): _*)
+                .distinct()
+                .collect()
+          val touched = upRows.map(r => Row.fromSeq((1 to partCols.size).map(r.get)))
+          val union = (touched ++ affected).distinct
+          if (union.isEmpty) return
+          union
+        case _ => Array.empty
+      }
+      val merged = target match {
+        case None => upserts // brand-new table
+        case Some(t) =>
+          val slice = if (rewrite.isEmpty) t else t.filter(partitionPredicate(partCols, rewrite))
+          if (upRows.isEmpty) slice
+          else resolveUpsert(slice, upserts, (pkCols ++ partCols).distinct, versionCol)
+      }
+      val resolved = if (delRows.isEmpty) merged else resolveDelete(merged, deletes, pkCols)
+      // a delete that empties an unpartitioned table leaves no rows to stage
+      if (partCols.isEmpty && delRows.nonEmpty && target.isDefined && resolved.isEmpty)
+        truncate(spark, cfg)
+      else syncCatalog(spark, cfg, writeStaged(spark, cfg, resolved, rewrite))
+    } finally { changes.unpersist(); () }
+  }
+
+  /** MERGE-upsert `source` (one row per key) into the table at `cfg.path`. */
   def upsert(
       spark: SparkSession,
       cfg: TableConfig,
       source: DataFrame,
       pkCols: Seq[String],
-      versionCol: String,
-      knownNonEmpty: Boolean = false,
-      touchedUpsert: Option[Array[Row]] = None): Unit = {
-    if (!knownNonEmpty && source.isEmpty) return
-    val keys = (pkCols ++ cfg.partitionCols).distinct
-    val written = readTable(spark, cfg.path) match {
-      case None =>
-        writeStaged(spark, cfg, source)
-      case Some(target) =>
-        val slice =
-          if (cfg.partitionCols.isEmpty) target
-          else {
-            val touched = touchedUpsert.getOrElse(
-              source.select(cfg.partitionCols.map(col): _*).distinct().collect())
-            if (touched.isEmpty) return
-            target.filter(partitionPredicate(cfg.partitionCols, touched))
-          }
-        val resolved = resolveUpsert(slice, source, keys, versionCol)
-        writeStaged(spark, cfg, resolved)
-    }
-    syncCatalog(spark, cfg, written)
-  }
+      versionCol: String): Unit =
+    apply(spark, cfg, source.withColumn(OpCol, lit("false")), pkCols, versionCol, OpCol)
 
-  /** MERGE-upsert + MERGE-delete in ONE read-modify-write transaction —
-    * the mixed-batch fast path (a CDC micro-batch usually carries
-    * both). One target read, one resolve chain (upsert semantics first,
-    * then the pk-only delete — the reference's sequential order), one
-    * staged atomic swap, one catalog sync; sequential
-    * `upsert(); delete()` pays each of those twice.
-    *
-    * Sequentially equivalent to upsert-then-delete: the rewritten slice
-    * is the UNION of the upsert-touched partitions and the
-    * delete-affected partitions (probed on the pre-state), and an
-    * upsert can introduce keys only inside its own touched partitions —
-    * so every row the sequential delete pass could see is in the slice,
-    * including a key inserted and deleted by the same batch.
+  /** MERGE-delete: remove the rows whose pk appears in `deletes`. Deletes
+    * match on pk alone, so `deletes` may omit the partition columns
+    * (routed as null); with no upsert side the version column is never
+    * read.
     */
-  def merge(
-      spark: SparkSession,
-      cfg: TableConfig,
-      upserts: DataFrame,
-      deletes: DataFrame,
-      pkCols: Seq[String],
-      versionCol: String,
-      knownBothNonEmpty: Boolean = false,
-      touchedUpsert: Option[Array[Row]] = None): Unit = {
-    if (!knownBothNonEmpty) {
-      // degenerate routing keeps the single-sided invariants (incl.
-      // upsert's no-op on empty) in one place
-      if (deletes.isEmpty)
-        return upsert(spark, cfg, upserts, pkCols, versionCol, touchedUpsert = touchedUpsert)
-      if (upserts.isEmpty) return delete(spark, cfg, deletes, pkCols)
-    }
-    val keys = (pkCols ++ cfg.partitionCols).distinct
-    readTable(spark, cfg.path) match {
-      case None =>
-        // brand-new table: deletes can only match keys from this batch
-        val written = writeStaged(spark, cfg, resolveDelete(upserts, deletes, pkCols))
-        syncCatalog(spark, cfg, written)
-      case Some(target) =>
-        if (cfg.partitionCols.isEmpty) {
-          val resolved =
-            resolveDelete(resolveUpsert(target, upserts, keys, versionCol), deletes, pkCols)
-          if (resolved.isEmpty) truncate(spark, cfg)
-          else { writeStaged(spark, cfg, resolved); () }
-        } else {
-          val touched = touchedUpsert.getOrElse(
-            upserts.select(cfg.partitionCols.map(col): _*).distinct().collect())
-          val delKeys = deletes.select(pkCols.map(col): _*).distinct()
-          val probe = pkRangeFilter(deletes, pkCols, cfg.sortCols)
-            .map(target.filter)
-            .getOrElse(target)
-          val affected = probe
-            .join(delKeys, pkCols, "left_semi")
-            .select(cfg.partitionCols.map(col): _*)
-            .distinct()
-            .collect()
-          val union = (touched ++ affected).distinct
-          if (union.isEmpty) return
-          val slice = target.filter(partitionPredicate(cfg.partitionCols, union))
-          val resolved =
-            resolveDelete(resolveUpsert(slice, upserts, keys, versionCol), deletes, pkCols)
-          val written = writeStaged(spark, cfg, resolved, removeCandidates = union)
-          syncCatalog(spark, cfg, written)
-        }
-    }
-  }
+  def delete(spark: SparkSession, cfg: TableConfig, deletes: DataFrame, pkCols: Seq[String]): Unit =
+    apply(spark, cfg,
+      deletes.withColumns((cfg.partitionCols.filterNot(deletes.columns.contains).map(_ -> lit(null))
+        :+ (OpCol -> lit("true"))).toMap),
+      pkCols, OpCol, OpCol)
 
   /** Per-(application, table) memo of partition rels already registered
     * in the catalog: a steady-state CDC stream touches the same few
@@ -369,39 +370,30 @@ object MergeEngine {
   /** Keep a registered catalog table consistent with the path.
     *
     * The merge writes partitions directly to the path, so a registered
-    * catalog table must learn about NEW partition dirs. When the swap
-    * reports which partitions it touched, ONE targeted
+    * catalog table must learn about NEW partition dirs: ONE targeted
     * `ALTER TABLE ... ADD IF NOT EXISTS PARTITION` registers exactly
-    * those NOT yet known to this session — O(new per batch);
-    * `recoverPartitions` (the MSCK-equivalent fallback, also used when
-    * the touched list is unavailable) lists the ENTIRE table tree, a
-    * per-batch cost that grows with table size, not batch size.
+    * the swapped-in partitions NOT yet known to this session — O(new
+    * per batch). `recoverPartitions` (the MSCK-equivalent fallback for
+    * tables that reject the ALTER) lists the ENTIRE table tree, a cost
+    * that grows with table size, not batch size.
     */
-  private def syncCatalog(
-      spark: SparkSession,
-      cfg: TableConfig,
-      touchedRels: Seq[String] = Nil): Unit =
-    if (cfg.partitionCols.nonEmpty && spark.catalog.tableExists(cfg.qualifiedName)) {
+  private def syncCatalog(spark: SparkSession, cfg: TableConfig, touchedRels: Seq[String]): Unit =
+    if (touchedRels.nonEmpty && spark.catalog.tableExists(cfg.qualifiedName)) {
       try {
-        if (touchedRels.nonEmpty) {
-          val known = registeredPartitions.getOrElseUpdate(spark, cfg.qualifiedName)(
-            new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean])
-          val fresh = touchedRels.filterNot(known.containsKey)
-          if (fresh.nonEmpty) {
-            val specs = fresh.map { rel =>
-              rel.split("/").toSeq.map { seg =>
-                val Array(k, v) = seg.split("=", 2)
-                val value = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                  .unescapePathName(v).replace("'", "''")
-                s"$k='$value'"
-              }.mkString("PARTITION (", ", ", ")")
-            }
-            spark.sql(
-              s"ALTER TABLE ${cfg.qualifiedName} ADD IF NOT EXISTS ${specs.mkString(" ")}")
-            fresh.foreach(known.put(_, java.lang.Boolean.TRUE))
+        val known = registeredPartitions.getOrElseUpdate(spark, cfg.qualifiedName)(
+          new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean])
+        val fresh = touchedRels.filterNot(known.containsKey)
+        if (fresh.nonEmpty) {
+          val specs = fresh.map { rel =>
+            rel.split("/").toSeq.map { seg =>
+              val Array(k, v) = seg.split("=", 2)
+              s"$k='${ExternalCatalogUtils.unescapePathName(v).replace("'", "''")}'"
+            }.mkString("PARTITION (", ", ", ")")
           }
-          ()
-        } else spark.catalog.recoverPartitions(cfg.qualifiedName)
+          spark.sql(
+            s"ALTER TABLE ${cfg.qualifiedName} ADD IF NOT EXISTS ${specs.mkString(" ")}")
+          fresh.foreach(known.put(_, java.lang.Boolean.TRUE))
+        }
       } catch {
         // not a partitioned catalog table / DDL unsupported: best-effort
         case _: org.apache.spark.sql.AnalysisException =>
@@ -431,54 +423,13 @@ object MergeEngine {
       else Some(col(pk) >= lit(bounds.get(0)) && col(pk) <= lit(bounds.get(1)))
     } else None
 
-  /** MERGE-delete: remove rows matching `deletes` pks. Probes the table
-    * to find affected partitions (pk-only match — J2 semantics can't
-    * prune by partition value, but [[pkRangeFilter]] prunes the probe by
-    * row-group stats when files are pk-clustered), then rewrites only
-    * partitions that contained a matched key; partitions left empty are
-    * removed in the same atomic swap.
-    */
-  def delete(
-      spark: SparkSession,
-      cfg: TableConfig,
-      deletes: DataFrame,
-      pkCols: Seq[String],
-      knownNonEmpty: Boolean = false): Unit = {
-    if (!knownNonEmpty && deletes.isEmpty) return
-    readTable(spark, cfg.path).foreach { target =>
-      if (cfg.partitionCols.isEmpty) {
-        val survivors = resolveDelete(target, deletes, pkCols)
-        if (survivors.isEmpty) truncate(spark, cfg) // delete-all: no rows to stage
-        else writeStaged(spark, cfg, survivors)
-      } else {
-        val keys = deletes.select(pkCols.map(col): _*).distinct()
-        val probe = pkRangeFilter(deletes, pkCols, cfg.sortCols)
-          .map(target.filter)
-          .getOrElse(target)
-        val affected = probe
-          .join(keys, pkCols, "left_semi")
-          .select(cfg.partitionCols.map(col): _*)
-          .distinct()
-          .collect()
-        if (affected.isEmpty) return
-        val slice = target.filter(partitionPredicate(cfg.partitionCols, affected))
-        val survivors = resolveDelete(slice, deletes, pkCols)
-        // affected partitions the survivors no longer populate are
-        // removed inside the same manifest-guarded swap
-        writeStaged(spark, cfg, survivors, removeCandidates = affected)
-      }
-    }
-  }
-
   /** Remove all data for a table (used when a delete empties an
     * unpartitioned table).
     */
   private def truncate(spark: SparkSession, cfg: TableConfig): Unit = {
     val root = new Path(cfg.path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(root, true)
+    deleteOrThrow(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
     registeredPartitions.remove(spark, cfg.qualifiedName)
-    ()
   }
 
   /** Compact a merge table's small files (micro-batch CDC writes leave
@@ -590,7 +541,7 @@ object MergeEngine {
       try out.write(Serialization.write(m).getBytes("UTF-8"))
       finally out.close()
       val live = new Path(root, ManifestName)
-      fs.rename(tmp, live)
+      renameOrThrow(fs, tmp, live)
       live
     }
 
@@ -626,12 +577,16 @@ object MergeEngine {
     * A crash anywhere in 2-4 (and before the commit in 5) is rolled back
     * by [[recoverTable]]; after the commit the merge is durable.
     *
+    * Every rename and delete is checked ([[StagedSwap]]): a refused one
+    * throws, so the protocol never proceeds past a step that did not
+    * happen.
+    *
     * Partitioned tables swap only the partitions present in `df`
     * (plus `removeCandidates` partitions that received no staged data —
-    * used by [[delete]] to drop emptied partitions in the same
-    * transaction). Unpartitioned tables swap the full file set.
-    */
-  /** @return the touched partition rel-paths (e.g. `year=2024`) for a
+    * how [[apply]] drops emptied partitions in the same transaction).
+    * Unpartitioned tables swap the full file set.
+    *
+    * @return the touched partition rel-paths (e.g. `year=2024`) for a
     *         partitioned table — the caller's targeted catalog sync —
     *         or Nil for unpartitioned / nothing-to-swap.
     */
@@ -657,29 +612,11 @@ object MergeEngine {
       // aggregation's output shuffle. File-count growth is handled out
       // of band by [[compact]] (the OPTIMIZE model), which
       // [[graft.streaming.MicroBatchMerger]] can invoke on a cadence.
-      var staged4z: Option[DataFrame] = None
       val clustered =
-        if (cfg.sortCols.isEmpty) df
-        else if (cfg.zOrderWrite && cfg.sortCols.size >= 2) {
-          // Z-order needs per-column ranges (one extra agg pass over the
-          // staged slice — the same range-estimation pass table formats
-          // run before their ZORDER rewrite), then sorts by the
-          // interleaved range-scaled key.
-          val zdf = df.persist()
-          staged4z = Some(zdf)
-          val aggs = cfg.sortCols.flatMap(c =>
-            Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
-          val r = zdf.agg(aggs.head, aggs.tail: _*).head()
-          val scaled = cfg.sortCols.zipWithIndex.map { case (c, i) =>
-            if (r.isNullAt(2 * i)) lit(0L)
-            else graft.functions.ZOrder.rangeScaled(col(c), r.getDouble(2 * i), r.getDouble(2 * i + 1))
-          }
-          zdf.sortWithinPartitions(graft.functions.ZOrder.zorder(scaled: _*))
-        } else df.sortWithinPartitions(cfg.sortCols.map(col): _*)
+        if (cfg.sortCols.isEmpty) df else df.sortWithinPartitions(cfg.sortCols.map(col): _*)
       val writer = clustered.write.mode("overwrite")
       (if (cfg.partitionCols.nonEmpty) writer.partitionBy(cfg.partitionCols: _*) else writer)
         .parquet(stagingDir.toString)
-      staged4z.foreach(_.unpersist())
       Failpoints.hook("staged")
 
       fs.mkdirs(root) // first write on a brand-new path-only table
@@ -709,14 +646,14 @@ object MergeEngine {
         existing.foreach { rel =>
           val dst = new Path(backupDir, rel)
           fs.mkdirs(dst.getParent)
-          fs.rename(new Path(root, rel), dst)
+          renameOrThrow(fs, new Path(root, rel), dst)
         }
         Failpoints.hook("backed-up")
         // 4. swap staged units in
         touched.zipWithIndex.foreach { case (rel, i) =>
           val dst = new Path(root, rel)
           fs.mkdirs(dst.getParent)
-          fs.rename(new Path(stagingDir, rel), dst)
+          renameOrThrow(fs, new Path(stagingDir, rel), dst)
           if (i == 0) Failpoints.hook("mid-swap")
         }
         touched
@@ -730,20 +667,20 @@ object MergeEngine {
         Failpoints.hook("manifest")
         // 3. backup the current file set
         fs.mkdirs(backupDir)
-        originals.foreach(f => fs.rename(new Path(root, f), new Path(backupDir, f)))
+        originals.foreach(f => renameOrThrow(fs, new Path(root, f), new Path(backupDir, f)))
         Failpoints.hook("backed-up")
         // 4. swap staged files in
         staged.zipWithIndex.foreach { case (f, i) =>
-          fs.rename(new Path(stagingDir, f), new Path(root, f))
+          renameOrThrow(fs, new Path(stagingDir, f), new Path(root, f))
           if (i == 0) Failpoints.hook("mid-swap")
         }
         Nil
       }
       Failpoints.hook("pre-commit")
       // 5. commit
-      fs.delete(new Path(root, ManifestName), false)
-      fs.delete(backupDir, true)
-      fs.delete(stagingDir, true)
+      deleteOrThrow(fs, new Path(root, ManifestName))
+      deleteOrThrow(fs, backupDir)
+      deleteOrThrow(fs, stagingDir)
       // the committed schema is the table's new unified read schema
       // (see schemaCache): steady-state reads skip the footer sweep
       schemaCache.put(spark, cfg.path, nullableOf(df.schema))
@@ -758,9 +695,8 @@ object MergeEngine {
       // deregisters, so the left-behind manifest is correctly seen as
       // abandoned and recoverable.)
       if (!fs.exists(new Path(root, ManifestName))) {
-        fs.delete(stagingDir, true)
-        fs.delete(backupDir, true)
-        ()
+        deleteOrThrow(fs, stagingDir)
+        deleteOrThrow(fs, backupDir)
       }
     }
   }

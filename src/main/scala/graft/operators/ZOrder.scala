@@ -25,11 +25,11 @@ import org.apache.spark.sql.functions._
   * narrow per-file column ranges the scan planner prunes on.
   *
   * Relation to [[graft.functions.InterleaveBits]] (the native
-  * expression TableConfig sort-clustering uses): that form maps each
-  * value monotonically into unsigned-64 space and interleaves TOP
-  * bits — zero data passes, so it drops into a streaming write, but
-  * a column occupying a narrow slice of its type's range wastes most
-  * of its bits. This operator spends one min/max aggregate to
+  * expression behind the `interleave_bits` SQL function): that form
+  * maps each value monotonically into unsigned-64 space and
+  * interleaves TOP bits — zero data passes, so it drops into a
+  * streaming write, but a column occupying a narrow slice of its
+  * type's range wastes most of its bits. This operator spends one min/max aggregate to
   * RANGE-NORMALIZE first — the Delta/Iceberg OPTIMIZE-style batch
   * re-layout, where the extra pass is free relative to the rewrite
   * and buys full bucket resolution on every column.

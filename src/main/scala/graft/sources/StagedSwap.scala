@@ -43,14 +43,16 @@ private[graft] object StagedSwap {
     */
   private[graft] val completionSentinel = "_GRAFT_STAGE_COMPLETE"
 
-  private def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit =
+  /** The checked rename, shared with the MergeEngine commit protocol. */
+  private[graft] def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
-      throw new IOException(s"StagedSwap: rename($src, $dst) returned false — " +
-        "aborting the swap; the table is intact under its pre-step name")
+      throw new IOException(s"rename($src, $dst) returned false — " +
+        "aborting the swap; the data is intact under its pre-step name")
 
-  private def deleteOrThrow(fs: FileSystem, p: Path): Unit =
+  /** The checked recursive delete; a missing path is already deleted. */
+  private[graft] def deleteOrThrow(fs: FileSystem, p: Path): Unit =
     if (fs.exists(p) && !fs.delete(p, true))
-      throw new IOException(s"StagedSwap: delete($p) returned false")
+      throw new IOException(s"delete($p) returned false")
 
   /** A stage dir is promotable only when its write body COMPLETED —
     * i.e. [[rotateIn]] reached the point of writing the root

@@ -21,10 +21,9 @@ import org.apache.spark.sql.types.StructType
   * slice is additionally cached only when several pairs will re-read
   * it) -> per pair: pk cols from the key schema, FAILFAST Avro decode,
   * struct expansion, Debezium casts, W1 latest-per-key dedup,
-  * additional cols, memoized create-table, ONE routing aggregation
-  * (replacing two per-branch emptiness probes AND the merge's
-  * upsert-touched partition collect), upsert the live slice (strict
-  * LSN guard), delete the tombstone slice (pk-only, no guard).
+  * additional cols, memoized create-table, then ONE
+  * [[MergeEngine.apply]] — the change set's routing, strict-LSN upsert
+  * and pk-only delete in one transaction.
   */
 object MicroBatchMerger {
 
@@ -95,56 +94,15 @@ object MicroBatchMerger {
                 .select(DebeziumCast.castColumns(valueJson): _*)
 
               val deduped = CdcDedup.latestPerKeyAgg(decoded, pkCols, versionCol)
-              val withAdditional =
-                (if (cfg.additionalCols.isEmpty) deduped
-                 else deduped.select(deduped.columns.map(col).toSeq ++ cfg.additionalCols.map(expr): _*))
-                  .cache() // consumed 3x: routing stats + up to two merges
-
-              try {
-                val targetSchema =
-                  StructType(withAdditional.schema.filterNot(_.name == deletedCol))
-                ensuredTables.getOrElseUpdate(spark, cfg.qualifiedName) {
-                  MergeEngine.createTableIfNotExists(spark, targetSchema, cfg); true
-                }
-
-                // ONE routing + partition-discovery job: per-(branch,
-                // partition) counts replace the two per-branch emptiness
-                // probes AND the merge's upsert-touched partition collect
-                // (null __deleted rows route to neither branch). Row
-                // cardinality is branches x touched partitions — driver-
-                // bounded by construction.
-                val partCols = cfg.partitionCols
-                val routed = withAdditional
-                  .groupBy(
-                    (col(deletedCol) === "true").as("__is_del") +: partCols.map(col): _*)
-                  .count()
-                  .collect()
-                def n(del: Boolean) = routed
-                  .filter(r => !r.isNullAt(0) && r.getBoolean(0) == del)
-                  .map(_.getLong(partCols.size + 1)).sum
-                // the distinct partition values of the upsert branch, in
-                // the positional Row shape MergeEngine's partition
-                // predicate consumes
-                val touchedUpsert =
-                  if (partCols.isEmpty) None
-                  else Some(routed
-                    .filter(r => !r.isNullAt(0) && !r.getBoolean(0))
-                    .map(r => org.apache.spark.sql.Row
-                      .fromSeq((1 to partCols.size).map(r.get)))
-                    .distinct)
-
-                val upserts = withAdditional.filter(col(deletedCol) =!= "true").drop(deletedCol)
-                val deletes = withAdditional.filter(col(deletedCol) === "true")
-                if (n(false) > 0 && n(true) > 0)
-                  // mixed batch: ONE read-modify-write transaction
-                  MergeEngine.merge(spark, cfg, upserts, deletes, pkCols, versionCol,
-                    knownBothNonEmpty = true, touchedUpsert = touchedUpsert)
-                else if (n(false) > 0)
-                  MergeEngine.upsert(spark, cfg, upserts, pkCols, versionCol,
-                    knownNonEmpty = true, touchedUpsert = touchedUpsert)
-                else if (n(true) > 0)
-                  MergeEngine.delete(spark, cfg, deletes, pkCols, knownNonEmpty = true)
-              } finally { withAdditional.unpersist(); () }
+              val changes =
+                if (cfg.additionalCols.isEmpty) deduped
+                else deduped.select(deduped.columns.map(col).toSeq ++ cfg.additionalCols.map(expr): _*)
+              ensuredTables.getOrElseUpdate(spark, cfg.qualifiedName) {
+                MergeEngine.createTableIfNotExists(
+                  spark, StructType(changes.schema.filterNot(_.name == deletedCol)), cfg)
+                true
+              }
+              MergeEngine(spark, cfg, changes, pkCols, versionCol, deletedCol)
             }
             if (cfg.autoCompactEvery > 0) {
               val n = batchCounters

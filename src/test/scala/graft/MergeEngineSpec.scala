@@ -9,6 +9,14 @@ import org.apache.spark.sql.functions._
 class MergeEngineSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Jobs one mixed micro-batch on a partitioned table runs end to end. */
+  private val JobsPerMixedBatch = 15
+
+  /** One change set: `ups` and the tombstones `dels`, `op` marking the side. */
+  private def changeSet(ups: DataFrame, dels: DataFrame): DataFrame =
+    ups.withColumn("op", lit("false"))
+      .unionByName(dels.withColumn("op", lit("true")), allowMissingColumns = true)
+
   private def changelog(rows: (Int, String, String, Long)*): DataFrame =
     rows.toSeq.toDF("id", "name", "__deleted", "__log_sequence_number")
 
@@ -152,54 +160,54 @@ class MergeEngineSpec extends SparkSpec {
       "re-added partition missing from catalog (stale registration memo)")
   }
 
-  test("pre-collected touched partitions skip the discovery job, same end state") {
+  test("one mixed micro-batch on a partitioned table runs a pinned number of jobs") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val seed = Seq((1, "a", 2023, 10L), (2, "b", 2024, 11L)).toDF("id", "name", "year", "lsn")
-    val src = Seq((1, "a2", 2023, 20L), (3, "c", 2025, 21L)).toDF("id", "name", "year", "lsn")
+    val topic = "pg.public.users"
+    val provider = new graft.debezium.InMemorySchemaProvider(Map(
+      1 -> AvroTestData.usersKeySchema, 10 -> AvroTestData.usersValueSchemaV1))
+    def batchOf(rows: (Int, Long, Boolean)*): DataFrame =
+      rows.zipWithIndex.map { case ((id, lsn, deleted), i) =>
+        val value = AvroTestData.encode(AvroTestData.usersValueSchemaV1, Map[String, Any](
+          "id" -> id, "name" -> s"n$id-$lsn", "email" -> s"$id@x.com",
+          "created_at" -> 19968, "updated_at" -> "2024-09-01T00:00:00Z",
+          "__deleted" -> deleted.toString,
+          "__timestamp" -> 1725148800000L, "__log_sequence_number" -> lsn))
+        (topic, 0, lsn * 100 + i, new java.sql.Timestamp(1725148800000L), 0, 1, 10, value)
+      }.toDF("topic", "partition", "offset", "timestamp", "timestampType",
+        "key_schema_id", "value_schema_id", "value_avro")
+    val path = tmpDir("merge-jobs")
+    val cfg = TableConfig("graft_test", "jobs_tbl", s"$path/t",
+      additionalCols = Seq("CAST(id % 3 AS INT) AS part"), partitionCols = Seq("part"))
+    val configs = Map(topic -> cfg)
+    graft.streaming.MicroBatchMerger.process(
+      batchOf((1 to 6).map(id => (id, 1L, false)): _*), configs, provider)
+
     val counter = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = { counter.incrementAndGet(); () }
     }
-    // count Spark jobs for f: listener events are async, so poll until
-    // the count has been stable for a while before reading it
-    def jobs(f: => Unit): Int = {
-      spark.sparkContext.addSparkListener(listener)
-      counter.set(0)
-      try {
-        f
-        var last = -1
-        var stable = 0
-        while (stable < 3) {
-          Thread.sleep(100)
-          val now = counter.get
-          if (now == last) stable += 1 else { stable = 0; last = now }
-        }
-      } finally spark.sparkContext.removeSparkListener(listener)
-      counter.get
-    }
-    def run(name: String, touched: Option[Array[org.apache.spark.sql.Row]]): (Int, Seq[(Int, String)]) = {
-      val path = tmpDir(s"merge-touched-$name")
-      val cfg = TableConfig("graft_test", s"touched_$name", s"$path/t",
-        partitionCols = Seq("year"))
-      MergeEngine.upsert(spark, cfg, seed, Seq("id"), "lsn")
-      val n = jobs(MergeEngine.upsert(spark, cfg, src, Seq("id"), "lsn",
-        knownNonEmpty = true, touchedUpsert = touched))
-      val state = MergeEngine.readTable(spark, cfg.path).get
-        .select("id", "name").as[(Int, String)].collect().sortBy(_._1).toSeq
-      (n, state)
-    }
-    val (jobsCollecting, stateA) = run("collect", None)
-    val (jobsProvided, stateB) =
-      run("given", Some(Array(
-        org.apache.spark.sql.Row(2023), org.apache.spark.sql.Row(2025))))
-    assert(stateA == stateB, "end states diverged")
-    assert(stateA.map(_._1) == Seq(1, 2, 3))
-    // the caller-provided partition list drops the discovery
-    // distinct+collect entirely (>= 1 job; 2 under AQE's staged
-    // shuffle) — the micro-batch loop folds it into its routing
-    // aggregation, so routing + discovery is ONE driver job per pair
-    assert(jobsProvided < jobsCollecting,
-      s"expected fewer jobs, got $jobsProvided vs $jobsCollecting")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // update 1 and insert 7 (part 1), insert 8 (part 2), delete 3 (part 0)
+      graft.streaming.MicroBatchMerger.process(
+        batchOf((1, 2L, false), (7, 2L, false), (8, 2L, false), (3, 2L, true)), configs, provider)
+      // listener events are async: wait until the count has been stable
+      var last = -1
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val now = counter.get
+        if (now == last) stable += 1 else { stable = 0; last = now }
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    val state = MergeEngine.readTable(spark, cfg.path).get
+      .select("id", "name").as[(Int, String)].collect().toMap
+    assert(state == Map(1 -> "n1-2", 2 -> "n2-1", 4 -> "n4-1", 5 -> "n5-1", 6 -> "n6-1",
+      7 -> "n7-2", 8 -> "n8-2"))
+    // metadata collect, routing, delete probe, staged write (AQE stages
+    // included): one job more is a new pass over the batch
+    assert(counter.get <= JobsPerMixedBatch, s"${counter.get} jobs > $JobsPerMixedBatch")
   }
 
   test("fused mixed-batch merge on a partitioned table: one transaction, same end state") {
@@ -216,7 +224,7 @@ class MergeEngineSpec extends SparkSpec {
       .toDF("id", "name", "year", "lsn")
     val upserts = graft.operators.CdcDedup.latestPerKey(ups, Seq("id"), "lsn")
     val deletes = Seq((1, 99L), (2, 99L)).toDF("id", "lsn")
-    MergeEngine.merge(spark, cfg, upserts, deletes, Seq("id"), "lsn")
+    MergeEngine(spark, cfg, changeSet(upserts, deletes), Seq("id"), "lsn", "op")
 
     val t = MergeEngine.readTable(spark, cfg.path).get
     assert(t.select("id").as[Int].collect().sorted.toSeq == Seq(3, 4))
@@ -224,10 +232,10 @@ class MergeEngineSpec extends SparkSpec {
     assert(!new java.io.File(s"$path/t/year=2023").exists(), "emptied partition not cleaned up")
     assert(new java.io.File(s"$path/t/year=2025").exists(), "new partition missing")
 
-    // key inserted and deleted by the SAME mixed batch never lands
+    // a key on BOTH sides of one change set never lands
     val ups2 = Seq((9, "ghost", 2026, 30L)).toDF("id", "name", "year", "lsn")
     val dels2 = Seq((9, 31L)).toDF("id", "lsn")
-    MergeEngine.merge(spark, cfg, ups2, dels2, Seq("id"), "lsn")
+    MergeEngine(spark, cfg, changeSet(ups2, dels2), Seq("id"), "lsn", "op")
     val t2 = MergeEngine.readTable(spark, cfg.path).get
     assert(t2.filter(col("id") === 9).count() == 0L)
     assert(!new java.io.File(s"$path/t/year=2026").exists(), "ghost partition left behind")

@@ -12,7 +12,8 @@ import scala.util.Random
   * must match a trivial in-memory reference model of the same
   * contract (per batch: W1 dedup keeps the max-LSN op per key; upserts
   * guarded by strict `target.lsn < op.lsn`; tombstone batch-winners
-  * delete unconditionally).
+  * delete unconditionally), on an unpartitioned table and on one
+  * partitioned by `id % 3`.
   *
   * Seeded RNG -> deterministic cases; payloads derive from (id, lsn) so
   * equal-LSN duplicates carry identical payloads (the engine's
@@ -44,20 +45,28 @@ class MergePropertySpec extends SparkSpec {
     state
   }
 
+  /** Applies `batches` through the table-backed engine: as an upsert
+    * pass then a delete pass, or `fused` as one change set per batch.
+    * `partitioned` lays the table out by `id % 3`.
+    */
   private def runEngine(
       batches: Seq[Seq[Op]],
       path: String,
-      fused: Boolean = false): Map[Int, (String, Long)] = {
-    val cfg = TableConfig("graft_test", "prop_tbl", path)
+      fused: Boolean,
+      partitioned: Boolean): Map[Int, (String, Long)] = {
+    val cfg =
+      if (partitioned) TableConfig("graft_test", "prop_part_tbl", path, partitionCols = Seq("part"))
+      else TableConfig("graft_test", "prop_tbl", path)
     batches.foreach { batch =>
       if (batch.nonEmpty) {
-        val deduped = CdcDedup.latestPerKey(batch.toDF(), Seq("id"), "lsn")
-        val ups = deduped.filter(!col("deleted")).drop("deleted")
-        val dels = deduped.filter(col("deleted"))
-        if (fused) MergeEngine.merge(spark, cfg, ups, dels, Seq("id"), "lsn")
+        val ops = if (partitioned) batch.toDF().withColumn("part", col("id") % 3) else batch.toDF()
+        val deduped = CdcDedup.latestPerKey(ops, Seq("id"), "lsn")
+        if (fused)
+          MergeEngine(spark, cfg, deduped.withColumn("deleted", col("deleted").cast("string")),
+            Seq("id"), "lsn", "deleted")
         else {
-          MergeEngine.upsert(spark, cfg, ups, Seq("id"), "lsn")
-          MergeEngine.delete(spark, cfg, dels, Seq("id"))
+          MergeEngine.upsert(spark, cfg, deduped.filter(!col("deleted")).drop("deleted"), Seq("id"), "lsn")
+          MergeEngine.delete(spark, cfg, deduped.filter(col("deleted")), Seq("id"))
         }
       }
     }
@@ -80,9 +89,12 @@ class MergePropertySpec extends SparkSpec {
           Op(id, s"n$id-$lsn", deleted, lsn)
         }
       }
-      val got = runEngine(batches, s"${tmpDir("merge-prop")}/t")
       val want = model(batches).map { case (k, op) => k -> ((op.name, op.lsn)) }
-      assert(got == want, s"case $caseNo mismatch:\n batches=$batches\n got=$got\n want=$want")
+      Seq(false, true).foreach { partitioned =>
+        val got = runEngine(batches, s"${tmpDir("merge-prop")}/t", fused = false, partitioned)
+        assert(got == want,
+          s"case $caseNo (partitioned=$partitioned) mismatch:\n batches=$batches\n got=$got\n want=$want")
+      }
     }
   }
 
@@ -97,9 +109,12 @@ class MergePropertySpec extends SparkSpec {
           Op(id, s"n$id-$lsn", deleted, lsn)
         }
       }
-      val got = runEngine(batches, s"${tmpDir("merge-prop-fused")}/t", fused = true)
       val want = model(batches).map { case (k, op) => k -> ((op.name, op.lsn)) }
-      assert(got == want, s"fused case $caseNo mismatch:\n batches=$batches\n got=$got\n want=$want")
+      Seq(false, true).foreach { partitioned =>
+        val got = runEngine(batches, s"${tmpDir("merge-prop-fused")}/t", fused = true, partitioned)
+        assert(got == want,
+          s"fused case $caseNo (partitioned=$partitioned) mismatch:\n batches=$batches\n got=$got\n want=$want")
+      }
     }
   }
 }
