@@ -4915,7 +4915,7 @@ object SparkEntry {
     * table persists hash-prefix-partitioned beside the artifact), then
     * the ODD half folds in ([[graft.operators.UnigramLm
     * .absorbIntoSaved]] — the increment is word-counted, only touched
-    * word partitions merge under dynamic overwrite, and EM re-runs
+    * word partitions merge under one staged swap, and EM re-runs
     * over the vocabulary-sized word table; the base corpus is never
     * rescanned). Gated against the SAME full-corpus EM oracle as
     * `ulm_train`, so absorb == rebuild is itself oracle-checked (the

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.StagedSwap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,8 +25,8 @@ import org.apache.spark.sql.functions._
   * corpus-sized. Build is one map-side-combinable aggregation.
   * [[absorbIntoSaved]] aggregates ONLY the increment, reads back only
   * the store partitions its groups hash into (directory-pruned), and
-  * dynamically overwrites only those partitions — untouched partitions
-  * are never read or written. Probes prune the same way.
+  * swaps in only those partitions — untouched partitions are never
+  * read or written. Probes prune the same way.
   */
 object AggStore {
 
@@ -89,6 +91,7 @@ object AggStore {
 
   /** Load a persisted store (lazy — probes read only their prefixes). */
   def load(spark: SparkSession, path: String): Store = {
+    StagedSwap.recover(spark, s"$path/groups")
     val meta = spark.read.parquet(s"$path/meta").head()
     Store(
       spark.read.parquet(s"$path/groups"),
@@ -99,9 +102,9 @@ object AggStore {
   /** Fold an increment into the SAVED layout at O(increment): the
     * increment is aggregated, the store partitions its groups hash
     * into are read back (directory-pruned — bounded prefix collect,
-    * same contract as the dedup stores), merged, and dynamically
-    * overwritten. Partitions no increment group touches are neither
-    * read nor written.
+    * same contract as the dedup stores), merged, and swapped in by one
+    * [[StagedSwap]] commit. Partitions no increment group touches are
+    * neither read nor written.
     */
   def absorbIntoSaved(
       spark: SparkSession,
@@ -114,19 +117,12 @@ object AggStore {
       .persist()
     val touched = inc.select(col("__kp")).distinct().collect().map(_.getInt(0)).toSeq
     val slice = st.groups.filter(col("__kp").isin(touched: _*)).drop("__kp")
-    // localCheckpoint materializes the merge and CUTS the lineage to
-    // the store files, so the dynamic overwrite below neither re-reads
-    // the partitions it replaces nor trips the self-overwrite check.
-    // (Mid-write crash atomicity is MergeEngine's staged-swap domain;
-    // this store's contract is rebuild-from-corpus on corruption.)
-    val staged = merge(slice, inc.drop("__kp"), st.keyCols)
-      .withColumn("__kp", kp(st.keyCols, st.prefixBuckets))
-      .repartition(col("__kp"))
-      .localCheckpoint(true)
-    staged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__kp").parquet(s"$path/groups")
-    staged.unpersist(); inc.unpersist()
+    StagedSwap.overwritePartitions(spark, s"$path/groups",
+      merge(slice, inc.drop("__kp"), st.keyCols)
+        .withColumn("__kp", kp(st.keyCols, st.prefixBuckets))
+        .repartition(col("__kp")),
+      Seq("__kp"))
+    inc.unpersist()
     ()
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.sources.StagedSwap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -179,10 +180,10 @@ object Bm25 {
       idCol: String,
       textCol: String): Unit = {
     import spark.implicits._
-    // heal a crashed prior rotation BEFORE any read plans resolve —
+    // heal a crashed prior commit BEFORE any read plans resolve —
     // the reads below would throw path-not-found on a store whose
-    // live dir is mid-rename, making rotateIn's own heal unreachable
-    recoverSaved(spark, path)
+    // table dir is still backed up, making commit's own heal unreachable
+    StagedSwap.recover(spark, path)
     val meta = spark.read.parquet(s"$path/meta").head()
     val nb = meta.getAs[Int]("prefixBuckets")
     val inc = build(increment, idCol, textCol)
@@ -197,17 +198,11 @@ object Bm25 {
         .persist()
       val incIds = inc.docs.select(col("id")).distinct()
       val reused = tombs.join(broadcast(incIds), Seq("id"), "left_semi").persist()
-      if (reused.count() > 0) {
-        swapTable(spark, path, "postings",
-          spark.read.parquet(s"$path/postings")
-            .select(col("term"), col("id"), col("tf"), col("__tp"))
-            .join(broadcast(reused), Seq("id"), "left_anti"),
-          partitioned = true)
-        swapTable(spark, path, "docs",
-          spark.read.parquet(s"$path/docs").select(col("id"), col("dl"))
-            .join(broadcast(reused), Seq("id"), "left_anti"),
-          partitioned = false)
-        rewriteTombstones(spark, path, tombs.join(broadcast(reused), Seq("id"), "left_anti"))
+      if (reused.count() > 0) StagedSwap.commit(spark, path) { stage =>
+        stageWithout(spark, path, stage, reused)
+        tombs.join(broadcast(reused), Seq("id"), "left_anti")
+          .repartition(1).write.parquet(s"$stage/tombstones")
+        (Seq("postings", "docs", "tombstones"), Nil)
       }
       reused.unpersist(); tombs.unpersist()
     }
@@ -222,47 +217,19 @@ object Bm25 {
     inc.unpersist()
   }
 
-  /** Replace the tombstone table with `kept` via the rename-aside
-    * staged swap ([[rotateIn]]): a complete copy exists under a
-    * recoverable name at every instant.
+  /** Stage the store's postings and docs without the rows of `ids` —
+    * the rewrite half of a one-transaction [[StagedSwap.commit]] on the
+    * store root.
     */
-  private def rewriteTombstones(spark: SparkSession, path: String, kept: DataFrame): Unit =
-    rotateIn(spark, s"$path/tombstones") { stage =>
-      kept.repartition(1).write.mode("overwrite").parquet(stage)
-    }
-
-  /** Replace a store table with `rewritten` via the same rename-aside
-    * swap: write aside (the rewritten frame reads the very files it
-    * replaces), then rotate in.
-    */
-  private def swapTable(
-      spark: SparkSession,
-      path: String,
-      table: String,
-      rewritten: DataFrame,
-      partitioned: Boolean): Unit =
-    rotateIn(spark, s"$path/$table") { stage =>
-      val w = rewritten.write.mode("overwrite")
-      (if (partitioned) w.partitionBy("__tp") else w).parquet(stage)
-      ()
-    }
-
-  /** The rename-aside swap ([[graft.sources.StagedSwap.rotateIn]]):
-    * a complete copy of the table exists under a recoverable name at
-    * every instant — the delete-then-rename window that could leave NO
-    * live table is gone.
-    */
-  private def rotateIn(spark: SparkSession, livePath: String)(write: String => Unit): Unit =
-    graft.sources.StagedSwap.rotateIn(spark, livePath)(write)
-
-  /** Heal a store a crashed [[rotateIn]] left mid-rotation: for each
-    * table, restore `__old` (or the complete `__stage`) to live when
-    * live is missing and clear stray stage/old dirs. Idempotent; a
-    * no-op on a healthy store.
-    */
-  def recoverSaved(spark: SparkSession, path: String): Unit =
-    Seq("postings", "docs", "tombstones")
-      .foreach(t => graft.sources.StagedSwap.recover(spark, s"$path/$t"))
+  private def stageWithout(spark: SparkSession, path: String, stage: String, ids: DataFrame): Unit = {
+    spark.read.parquet(s"$path/postings")
+      .select(col("term"), col("id"), col("tf"), col("__tp"))
+      .join(broadcast(ids), Seq("id"), "left_anti")
+      .write.partitionBy("__tp").parquet(s"$stage/postings")
+    spark.read.parquet(s"$path/docs").select(col("id"), col("dl"))
+      .join(broadcast(ids), Seq("id"), "left_anti")
+      .write.parquet(s"$stage/docs")
+  }
 
   /** Physically drop tombstoned rows from a persisted index and reset
     * the tombstone table — the compaction half of the retract
@@ -272,32 +239,24 @@ object Bm25 {
     * for itself). Meta is untouched: [[retractFromSaved]] already
     * keeps it at the survivors' exact totals, so searches before and
     * after a vacuum score bit-for-bit the same (Bm25Spec's
-    * vacuum==retract differential). Each store table swaps staged
-    * (write aside, delete live, rename in) — a reader never sees a
-    * half-rewritten table and a crash leaves either the old or the
-    * new complete copy.
+    * vacuum==retract differential). Postings and docs swap in and the
+    * tombstones leave in ONE [[StagedSwap.commit]] on the store root —
+    * a crash leaves the whole pre-vacuum store, never a vacuumed
+    * postings next to unvacuumed docs.
     *
     * No-op when no tombstones exist.
     */
   def vacuumSaved(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    recoverSaved(spark, path)
+    StagedSwap.recover(spark, path)
     if (!tombstonesExist(spark, path)) return
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tombs = spark.read.parquet(s"$path/tombstones").select(col("id")).distinct()
       .persist()
     tombs.count()
-    swapTable(spark, path, "postings",
-      spark.read.parquet(s"$path/postings")
-        .select(col("term"), col("id"), col("tf"), col("__tp"))
-        .join(broadcast(tombs), Seq("id"), "left_anti"),
-      partitioned = true)
-    swapTable(spark, path, "docs",
-      spark.read.parquet(s"$path/docs").select(col("id"), col("dl"))
-        .join(broadcast(tombs), Seq("id"), "left_anti"),
-      partitioned = false)
+    StagedSwap.commit(spark, path) { stage =>
+      stageWithout(spark, path, stage, tombs)
+      (Seq("postings", "docs"), Seq("tombstones"))
+    }
     tombs.unpersist()
-    fs.delete(new Path(s"$path/tombstones"), true)
     ()
   }
 
@@ -339,7 +298,7 @@ object Bm25 {
       removeIds: DataFrame,
       idCol: String): Unit = {
     import spark.implicits._
-    recoverSaved(spark, path)
+    StagedSwap.recover(spark, path)
     val meta = spark.read.parquet(s"$path/meta").head()
     // Overlapping deletion batches are normal in right-to-be-forgotten
     // flows: ids already tombstoned must NOT subtract from the totals
@@ -391,8 +350,7 @@ object Bm25 {
     // [[vacuumSaved]]; save targets a fresh/other path (overwriting
     // the very files a loaded index reads from is not supported).
     val stale = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = stale.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(stale)) { fs.delete(stale, true); () }
+    StagedSwap.deleteOrThrow(stale.getFileSystem(spark.sparkContext.hadoopConfiguration), stale)
   }
 
   /** Load a persisted index; nothing is eagerly cached and searches
@@ -401,7 +359,7 @@ object Bm25 {
     * on the pruned postings read, never a store rewrite.
     */
   def load(spark: SparkSession, path: String): Index = {
-    recoverSaved(spark, path)
+    StagedSwap.recover(spark, path)
     val meta = spark.read.parquet(s"$path/meta").head()
     var postings = spark.read.parquet(s"$path/postings")
       .select(col("term"), col("id"), col("tf"), col("__tp"))

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.StagedSwap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -151,6 +153,7 @@ object QuantileSketch {
     * prefixes).
     */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): Store = {
+    StagedSwap.recover(spark, s"$path/sketch")
     val meta = spark.read.parquet(s"$path/meta").head()
     Store(
       spark.read.parquet(s"$path/sketch"),
@@ -161,9 +164,9 @@ object QuantileSketch {
 
   /** Fold an increment into the SAVED layout at O(increment): sketch
     * the increment, read back only the store partitions its keys hash
-    * into (bounded prefix collect), merge bucket counts, dynamically
-    * overwrite those partitions. Absorb == rebuild exactly — bucket
-    * counts are a commutative monoid.
+    * into (bounded prefix collect), merge bucket counts, swap those
+    * partitions in by one [[StagedSwap]] commit. Absorb == rebuild
+    * exactly — bucket counts are a commutative monoid.
     */
   def absorbIntoSaved(
       spark: org.apache.spark.sql.SparkSession,
@@ -176,17 +179,12 @@ object QuantileSketch {
       .persist()
     val touched = inc.select(col("__kp")).distinct().collect().map(_.getInt(0)).toSeq
     val slice = st.sketch.filter(col("__kp").isin(touched: _*)).drop("__kp")
-    // localCheckpoint cuts lineage to the store files so the dynamic
-    // overwrite neither re-reads the partitions it replaces nor trips
-    // the self-overwrite check (the AggStore absorb shape)
-    val staged = merge(slice, inc.drop("__kp"), st.keyCols)
-      .withColumn("__kp", kp(st.keyCols, st.prefixBuckets))
-      .repartition(col("__kp"))
-      .localCheckpoint(true)
-    staged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__kp").parquet(s"$path/sketch")
-    staged.unpersist(); inc.unpersist()
+    StagedSwap.overwritePartitions(spark, s"$path/sketch",
+      merge(slice, inc.drop("__kp"), st.keyCols)
+        .withColumn("__kp", kp(st.keyCols, st.prefixBuckets))
+        .repartition(col("__kp")),
+      Seq("__kp"))
+    inc.unpersist()
     ()
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.sources.StagedSwap
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -322,6 +323,7 @@ object UnigramLm {
     * round trip is value-identical to the trained artifact.
     */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): Vocab = {
+    StagedSwap.recover(spark, s"$path/words")
     val maxPieceLen = spark.read.parquet(s"$path/meta").head().getAs[Int]("maxPieceLen")
     val pieces = spark.read.parquet(s"$path/pieces")
       .collect()
@@ -373,7 +375,7 @@ object UnigramLm {
     * the vocabulary — the [[Bm25.absorbIntoSaved]] lifecycle for the
     * tokenizer: the increment is word-counted (the only corpus-sized
     * work), its counts merge into the word table's touched hash
-    * partitions only (directory-pruned read, dynamic overwrite — the
+    * partitions only (directory-pruned read, one staged swap — the
     * AggStore absorb shape), and seeding + EM re-run over the
     * VOCABULARY-sized merged word table. Because word counts are a
     * commutative monoid and everything downstream of the word table is
@@ -387,6 +389,7 @@ object UnigramLm {
       path: String,
       newDocs: DataFrame,
       textCol: String): Vocab = {
+    StagedSwap.recover(spark, s"$path/words")
     val p = spark.read.parquet(s"$path/params").head()
     val topMulti = p.getAs[Int]("topMulti")
     val emIters = p.getAs[Int]("emIters")
@@ -400,17 +403,15 @@ object UnigramLm {
     val touched = inc.select(col("__kp")).distinct().collect().map(_.getInt(0)).toSeq
     val slice = spark.read.parquet(s"$path/words")
       .filter(col("__kp").isin(touched: _*)).drop("__kp")
-    val staged = slice
-      .join(inc.drop("__kp").withColumnRenamed("wn", "__wn2"), Seq("w"), "full_outer")
-      .select(col("w"),
-        (coalesce(col("wn"), lit(0L)) + coalesce(col("__wn2"), lit(0L))).as("wn"))
-      .withColumn("__kp", kpW(col("w"), buckets))
-      .repartition(col("__kp"))
-      .localCheckpoint(true)
-    staged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__kp").parquet(s"$path/words")
-    staged.unpersist(); inc.unpersist()
+    StagedSwap.overwritePartitions(spark, s"$path/words",
+      slice
+        .join(inc.drop("__kp").withColumnRenamed("wn", "__wn2"), Seq("w"), "full_outer")
+        .select(col("w"),
+          (coalesce(col("wn"), lit(0L)) + coalesce(col("__wn2"), lit(0L))).as("wn"))
+        .withColumn("__kp", kpW(col("w"), buckets))
+        .repartition(col("__kp")),
+      Seq("__kp"))
+    inc.unpersist()
     val words = spark.read.parquet(s"$path/words").drop("__kp").persist()
     words.count()
     try {

@@ -204,9 +204,9 @@ object FileManifest {
   // — never re-read old footers) -----
 
   /** Persist a manifest, partitioned by stat column so per-column
-    * pruning reads only its directory. Written through the rename-
-    * aside staged swap: a reader never sees a half-written manifest
-    * and a crash leaves a complete copy under a recoverable name.
+    * pruning reads only its directory. Written through the staged
+    * swap ([[StagedSwap.rotateIn]]): a reader never sees a half-written
+    * manifest and a crash rolls back to the previous one.
     */
   def saveManifest(manifest: DataFrame, path: String): Unit = {
     val spark = manifest.sparkSession

@@ -2,49 +2,70 @@ package graft.sources
 
 import java.io.IOException
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The rename-aside staged-swap protocol shared by the persisted-store
-  * lifecycles (BM25 vacuum/rewrite, streaming-curation counters):
-  * write the replacement to `<live>__stage`, mark the stage complete
-  * with a root sentinel, rename live → `<live>__old`, rename stage →
-  * live, delete old. Unlike delete-then-rename, NO window leaves the
-  * store without a complete copy under a recoverable name: a crash
-  * before the live→old rename leaves live; between the two renames it
-  * leaves old AND stage (both complete); after it leaves live.
-  * [[recover]] heals each state mechanically. On object stores rename
-  * is copy+delete rather than atomic — the protocol still never
-  * deletes the last complete copy, but a reader racing the writer can
-  * observe a partially copied live dir; single-writer stores (these
-  * lifecycles' contract) are unaffected.
+/** The one commit protocol of every staged store — MergeEngine tables,
+  * the persisted BM25/aggregate/sketch/word stores, saved file
+  * manifests, compaction layouts, curation counters. It plays the
+  * role Delta's transaction log plays for the reference's per-batch
+  * MERGE (reference: src/kafka2delta/stream/stream.py:114-148): a
+  * write is visible completely or not at all, and a crashed write is
+  * rolled back so the replayed batch re-applies idempotently.
+  *
+  * A store is a `root` dir whose UNITS are paths relative to it — a
+  * partition dir, a data file, a store table dir. [[commit]] replaces
+  * some units and removes others in one transaction:
+  *   1. stage — the caller writes the replacement units to the fixed
+  *      sibling `<root>__staging`, laid out like `root`;
+  *   2. manifest — `_graft_txn.json` inside `root` (invisible to
+  *      parquet scans) records the touched and removed units and which
+  *      of them exist (tmp + rename, so a partial manifest is never
+  *      live);
+  *   3. backup — each existing unit is renamed into `<root>__backup`;
+  *   4. swap — each staged unit is renamed into place;
+  *   5. commit — deleting the manifest is the commit point; the backup
+  *      and staging dirs are then removed.
+  * Untouched units are never read or written. [[recover]] (run by
+  * every store reader and before every commit) decides by the
+  * manifest alone: a crash before step 2 leaves a stage it drops — a
+  * stage is never promoted; a crash in steps 2-4 is rolled back
+  * bit-for-bit; a crash after the commit point leaves debris it clears.
+  * Single writer per root, like the reference's one streaming query
+  * per table. On object stores rename is copy+delete, so a reader
+  * racing the writer can observe a partially copied unit.
   *
   * Every rename/delete is CHECKED: HDFS-style FileSystems report most
   * failures by returning false, not throwing, and a swallowed false
-  * breaks the protocol invariant silently — a failed live→old leaves
-  * stage→live failing too (dst exists) while the caller proceeds as if
-  * swapped, and in recovery a failed old→live followed by delete(old)
-  * would destroy the last complete copy. A false here is an
-  * [[IOException]] so callers abort instead of continuing.
+  * would let the protocol run its later steps against a state that
+  * does not exist — or, in recovery, delete a backup it failed to
+  * restore. A false here is an [[IOException]] so the caller aborts.
   */
 private[graft] object StagedSwap {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+  private val ManifestName = "_graft_txn.json"
 
-  /** Stage-root completion sentinel, written by [[rotateIn]] itself
-    * AFTER the whole write body returns. Job-commit `_SUCCESS` markers
-    * cannot gate promotion: a multi-dataset body commits each dataset
-    * with its own nested marker, so a crash after the FIRST dataset
-    * leaves a marker on a partial stage; and a deployment with
-    * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` writes
-    * none at all. The sentinel is independent of the committer config
-    * and appears only once nothing more will be written — exactly the
-    * "this stage may become live" fact promotion needs.
+  /** Roots with a commit IN FLIGHT in this JVM. Staging and a manifest
+    * on disk mean either an abandoned transaction (crashed writer —
+    * roll it back) or a LIVE one (rolling that back would delete dirs
+    * under the writer's feet). In the single-writer model the two are
+    * distinguishable per process: [[recover]] is a no-op while the
+    * writer is registered here. Cross-process concurrent access
+    * remains out of scope (see SCALE.md).
     */
-  private[graft] val completionSentinel = "_GRAFT_STAGE_COMPLETE"
+  private val inFlight =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** The checked rename, shared with the MergeEngine commit protocol. */
-  private[graft] def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit =
+  /** Test-only crash injection: [[commit]] invokes this hook at the
+    * named protocol points ("staged", "manifest", "backed-up",
+    * "mid-swap", "pre-commit"); a hook that throws simulates a kill at
+    * that point. No-op in production.
+    */
+  private[graft] object Failpoints {
+    @volatile var hook: String => Unit = _ => ()
+  }
+
+  private def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
       throw new IOException(s"rename($src, $dst) returned false — " +
         "aborting the swap; the data is intact under its pre-step name")
@@ -54,85 +75,176 @@ private[graft] object StagedSwap {
     if (fs.exists(p) && !fs.delete(p, true))
       throw new IOException(s"delete($p) returned false")
 
-  /** A stage dir is promotable only when its write body COMPLETED —
-    * i.e. [[rotateIn]] reached the point of writing the root
-    * [[completionSentinel]]. A stage without it is partial BY
-    * DEFINITION of the protocol (the sentinel write is the first thing
-    * after the body returns), no matter what `_SUCCESS` markers its
-    * subdirectories carry.
+  /** The durable record of an in-flight commit: written before the
+    * first rename, deleted as the commit point. Its presence on
+    * [[recover]] means "roll back".
     */
-  private def stageComplete(fs: FileSystem, stage: Path): Boolean =
-    fs.exists(new Path(stage, completionSentinel))
+  private case class Manifest(
+      touched: Seq[String], // units receiving staged data
+      removed: Seq[String], // units removed with nothing staged
+      existing: Seq[String]) // subset of touched ++ removed that pre-existed
 
-  /** Clear a leftover stage dir. An UNPROMOTABLE stage that might be
-    * the only surviving data (no live, no old) is never silently
-    * destroyed: it is renamed aside to `<live>__quarantine` for a
-    * human to inspect — promoting it could serve a partial table, and
-    * deleting it could destroy the sole remnant of a failed first
-    * write. If a previous quarantine already exists, the older one is
-    * kept (it is closer to the last known-good state) and the new
-    * stage is dropped.
-    */
-  private def clearStage(fs: FileSystem, live: Path, stage: Path): Unit = {
-    if (!fs.exists(stage)) return
-    if (!fs.exists(live) && !stageComplete(fs, stage)) {
-      val quarantine = new Path(s"${live}__quarantine")
-      if (fs.exists(quarantine)) {
-        log.warn(s"StagedSwap: dropping incomplete stage $stage; an earlier " +
-          s"quarantine $quarantine already preserves a prior remnant")
-        deleteOrThrow(fs, stage)
-      } else {
-        log.warn(s"StagedSwap: live table $live is missing and stage $stage has no " +
-          s"completion sentinel — quarantining it as $quarantine instead of " +
-          "promoting (possibly partial) or deleting (possibly the only copy)")
-        renameOrThrow(fs, stage, quarantine)
-      }
-    } else deleteOrThrow(fs, stage)
-  }
+  private object Manifest {
+    import org.json4s._
+    import org.json4s.jackson.{JsonMethods, Serialization}
+    private implicit val fmt: Formats = DefaultFormats
 
-  /** Swap `livePath` for whatever `write` produces at the stage path.
-    * Heals any prior crash state first ([[recover]]) — in particular a
-    * complete-but-unrotated stage is PROMOTED before the body runs, so
-    * a read-modify-write body (BM25 absorb) reads the most recent
-    * complete data, not a stale or missing live.
-    */
-  def rotateIn(spark: SparkSession, livePath: String)(write: String => Unit): Unit = {
-    recover(spark, livePath)
-    val live = new Path(livePath)
-    val stage = new Path(s"${livePath}__stage")
-    val old = new Path(s"${livePath}__old")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    write(stage.toString)
-    // the completion sentinel: the body returned, nothing more will be
-    // written under the stage — only now may a recovery promote it
-    fs.create(new Path(stage, completionSentinel), false).close()
-    if (fs.exists(live)) renameOrThrow(fs, live, old)
-    renameOrThrow(fs, stage, live)
-    deleteOrThrow(fs, new Path(live, completionSentinel))
-    deleteOrThrow(fs, old)
-  }
-
-  /** Heal a table a crashed [[rotateIn]] left mid-rotation: restore
-    * `__old` (or, failing that, a COMPLETE `__stage` — the root
-    * [[completionSentinel]] present) to live when live is missing,
-    * then clear stray stage/old dirs. A stage that is neither
-    * promotable nor redundant (live and old both missing) is
-    * quarantined, never deleted or promoted. Idempotent; a no-op on a
-    * healthy table.
-    */
-  def recover(spark: SparkSession, livePath: String): Unit = {
-    val live = new Path(livePath)
-    val stage = new Path(s"${livePath}__stage")
-    val old = new Path(s"${livePath}__old")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live) && fs.exists(old)) renameOrThrow(fs, old, live)
-    else if (!fs.exists(live) && fs.exists(stage) && stageComplete(fs, stage)) {
-      renameOrThrow(fs, stage, live)
-      // the sentinel is protocol metadata, not table data: drop it
-      // from the promoted live dir (parquet readers ignore _-prefixed
-      // files, but the manifest/stats surfaces should not see it)
-      deleteOrThrow(fs, new Path(live, completionSentinel))
+    def write(fs: FileSystem, root: Path, m: Manifest): Unit = {
+      val tmp = new Path(root, ManifestName + ".tmp")
+      val out = fs.create(tmp, true)
+      try out.write(Serialization.write(m).getBytes("UTF-8"))
+      finally out.close()
+      renameOrThrow(fs, tmp, new Path(root, ManifestName))
     }
-    clearStage(fs, live, stage); deleteOrThrow(fs, old)
+
+    def read(fs: FileSystem, p: Path): Manifest = {
+      val in = fs.open(p)
+      val bytes =
+        try {
+          val buf = new java.io.ByteArrayOutputStream()
+          val chunk = new Array[Byte](8192)
+          var n = in.read(chunk)
+          while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
+          buf.toByteArray
+        } finally in.close()
+      JsonMethods.parse(new String(bytes, "UTF-8")).extract[Manifest]
+    }
   }
+
+  private def fsOf(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Replace units of the store at `root` in one transaction. `stage`
+    * writes the replacement units under the staging dir it is handed
+    * and returns `(touched, removed)`: the staged units to swap in, and
+    * the live units to drop with nothing staged in their place. The
+    * writer is registered in flight from the stage write on, so a
+    * reader's [[recover]] never drops a stage being written. Heals a
+    * prior crash first. Returns the touched units.
+    */
+  def commit(spark: SparkSession, root: String)(
+      stage: String => (Seq[String], Seq[String])): Seq[String] = {
+    recover(spark, root)
+    val live = new Path(root)
+    val staging = new Path(s"${root}__staging")
+    val backup = new Path(s"${root}__backup")
+    val fs = fsOf(spark, live)
+    inFlight.add(live.toString)
+    // no tidy on failure: whatever a failed commit leaves is evidence
+    // for the next recover, exactly as after a kill
+    try {
+      val (touched, removed) = stage(staging.toString)
+      Failpoints.hook("staged")
+      val existing = (touched ++ removed).filter(u => fs.exists(new Path(live, u)))
+      if (touched.nonEmpty || existing.nonEmpty) {
+        fs.mkdirs(live) // first write on a brand-new root
+        Manifest.write(fs, live, Manifest(touched, removed, existing))
+        Failpoints.hook("manifest")
+        existing.foreach { u =>
+          val dst = new Path(backup, u)
+          fs.mkdirs(dst.getParent)
+          renameOrThrow(fs, new Path(live, u), dst)
+        }
+        Failpoints.hook("backed-up")
+        touched.zipWithIndex.foreach { case (u, i) =>
+          val dst = new Path(live, u)
+          fs.mkdirs(dst.getParent)
+          renameOrThrow(fs, new Path(staging, u), dst)
+          if (i == 0) Failpoints.hook("mid-swap")
+        }
+        Failpoints.hook("pre-commit")
+        deleteOrThrow(fs, new Path(live, ManifestName)) // the commit point
+      }
+      deleteOrThrow(fs, backup)
+      deleteOrThrow(fs, staging)
+      touched
+    } finally { inFlight.remove(live.toString); () }
+  }
+
+  /** Heal the store at `root`: roll back an uncommitted transaction —
+    * units already backed up are restored over whatever the swap put
+    * in their place, units the swap never reached are untouched, new
+    * units it renamed in are deleted — then drop the staging and backup
+    * dirs and the manifest. Returns true when a rollback was performed.
+    * Idempotent, so a crash mid-recovery is healed by re-running; a
+    * no-op on a healthy store and while this JVM's writer is in flight.
+    */
+  def recover(spark: SparkSession, root: String): Boolean = {
+    val live = new Path(root)
+    if (inFlight.contains(live.toString)) return false
+    val fs = fsOf(spark, live)
+    val manifest = new Path(live, ManifestName)
+    val backup = new Path(s"${root}__backup")
+    val rolledBack = fs.exists(manifest) && {
+      val m = Manifest.read(fs, manifest)
+      (m.touched ++ m.removed).distinct.foreach { u =>
+        val unit = new Path(live, u)
+        val saved = new Path(backup, u)
+        if (fs.exists(saved)) {
+          deleteOrThrow(fs, unit)
+          fs.mkdirs(unit.getParent)
+          renameOrThrow(fs, saved, unit)
+        } else if (!m.existing.contains(u)) deleteOrThrow(fs, unit)
+        // else: the original is still in place — the swap never reached it
+      }
+      true
+    }
+    // a refused restore above threw: the backup is still the only copy
+    deleteOrThrow(fs, new Path(s"${root}__staging"))
+    deleteOrThrow(fs, backup)
+    deleteOrThrow(fs, manifest)
+    deleteOrThrow(fs, new Path(live, ManifestName + ".tmp"))
+    rolledBack
+  }
+
+  /** Full replace: the store becomes exactly what `write` puts at the
+    * stage path — every staged top-level entry is swapped in and every
+    * live entry not staged is removed.
+    */
+  def rotateIn(spark: SparkSession, root: String)(write: String => Unit): Unit = {
+    val fs = fsOf(spark, new Path(root))
+    def entries(dir: String): Seq[String] =
+      if (!fs.exists(new Path(dir))) Seq.empty
+      else fs.listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
+    commit(spark, root) { staging =>
+      write(staging)
+      val touched = entries(staging)
+      (touched, entries(root).filterNot(touched.contains))
+    }
+    ()
+  }
+
+  /** Stage `df` partitioned by `partCols` and swap in exactly the units
+    * it produced — its partition dirs, or with no partition columns its
+    * data files — removing `removed(touched)` in the same transaction:
+    * the staged-partition write of MergeEngine tables and of the
+    * `__kp`-partitioned absorb stores. Returns the touched units.
+    */
+  def overwritePartitions(
+      spark: SparkSession,
+      root: String,
+      df: DataFrame,
+      partCols: Seq[String],
+      removed: Seq[String] => Seq[String] = _ => Nil): Seq[String] =
+    commit(spark, root) { staging =>
+      val w = df.write.mode("overwrite")
+      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(staging)
+      val fs = fsOf(spark, new Path(staging))
+      val base = fs.makeQualified(new Path(staging)).toString
+      val touched = units(fs, new Path(staging), partCols.size)
+        .map(u => fs.makeQualified(u.getPath).toString.stripPrefix(base).stripPrefix("/"))
+      (touched, removed(touched))
+    }
+
+  /** The leaf partition dirs `depth` levels below `dir`; at depth 0 its
+    * parquet data files.
+    */
+  private[graft] def units(fs: FileSystem, dir: Path, depth: Int): Seq[FileStatus] =
+    if (!fs.exists(dir)) Seq.empty
+    else if (depth == 0)
+      fs.listStatus(dir).toSeq.filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+    else {
+      val dirs = fs.listStatus(dir).toSeq.filter(_.isDirectory)
+      if (depth == 1) dirs else dirs.flatMap(d => units(fs, d.getPath, depth - 1))
+    }
 }

@@ -112,12 +112,10 @@ class CompactionSpec extends SparkSpec {
       .groupBy("__grp").agg(countDistinct("f").as("n")).collect()
     assert(outFiles.nonEmpty && outFiles.forall(_.getLong(1) == 1L),
       s"groups split across files: ${outFiles.mkString(";")}")
-    // the swap completed cleanly: live promoted, protocol dirs gone and
-    // the sentinel (protocol metadata, not table data) dropped from live
+    // the swap committed cleanly: live in place, no staging/backup
+    // sibling and no manifest left
     assert(new java.io.File(out).isDirectory)
-    assert(!new java.io.File(out + "__stage").exists())
-    assert(!new java.io.File(out + "__old").exists())
-    assert(!new java.io.File(out, "_GRAFT_STAGE_COMPLETE").exists())
+    assert(KillPoints.debris(out).isEmpty, KillPoints.debris(out).mkString(","))
   }
 
   test("execute with nothing to rewrite is a no-op") {

@@ -2,6 +2,7 @@ package graft
 
 import graft.config.TableConfig
 import graft.operators.{CdcDedup, MergeEngine}
+import graft.sources.StagedSwap
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -327,68 +328,156 @@ class MergeEngineSpec extends SparkSpec {
   }
 
   // ---------------------------------------------------------------------
-  // Crash atomicity: kill the writer at each protocol point, then read —
-  // recoverTable (invoked from readTable) must hand back the intact
-  // pre-merge table, and a replay must land the merge.
+  // Kill-point harness: every store that commits through StagedSwap,
+  // killed at every protocol point. The store's own reader must then
+  // hand back the pre-write files bit-for-bit, a replay must land the
+  // new state, and no staging/backup/manifest debris may survive.
   // ---------------------------------------------------------------------
 
-  private class InjectedCrash extends RuntimeException("injected crash")
+  private case class KillCase(
+      title: String,
+      root: String => String,
+      setup: String => Unit,
+      write: String => Unit,
+      read: String => Seq[String])
 
-  private def crashingAt(point: String)(body: => Unit): Unit = {
-    MergeEngine.Failpoints.hook = p => if (p == point) throw new InjectedCrash
-    try {
-      intercept[InjectedCrash](body)
-      ()
-    } finally MergeEngine.Failpoints.hook = _ => ()
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).toSeq.sorted
+
+  private def killTable(dir: String, partCols: String*) =
+    TableConfig("graft_test", "kill_tbl", s"$dir/t", partitionCols = partCols)
+
+  private def mergeCase(title: String, partCols: Seq[String])(
+      setup: TableConfig => Unit, write: TableConfig => Unit) =
+    KillCase(title, dir => s"$dir/t",
+      dir => setup(killTable(dir, partCols: _*)),
+      dir => write(killTable(dir, partCols: _*)),
+      dir => {
+        val t = MergeEngine.readTable(spark, killTable(dir).path).get
+        rowsOf(t) :+ s"files=${t.select(input_file_name()).distinct().count()}"
+      })
+
+  private val cols4 = Seq("id", "name", "year", "lsn")
+
+  private val bm25Corpus = Seq(
+    (1L, "spark catalyst optimizer rules"),
+    (2L, "parquet row groups and catalyst"),
+    (3L, "catalyst expression codegen"))
+
+  /** `n` ids written as an 8-file table, inventoried and planned for compaction. */
+  private def compactionPlan(dir: String, name: String, from: Long): DataFrame = {
+    val src = s"$dir/$name"
+    (from until from + 400L).map(i => (i, s"row-$i")).toDF("id", "payload")
+      .repartition(8).write.parquet(src)
+    val listed = new java.io.File(src).listFiles().filter(_.getName.endsWith(".parquet"))
+      .map(f => ("all", f.getAbsolutePath, f.length())).toSeq.toDF("part", "file", "bytes")
+    val total = listed.agg(sum("bytes")).head.getLong(0)
+    graft.operators.Compaction.plan(listed, "part", "file", "bytes", total / 2)
   }
 
-  private def crashPoints = Seq("manifest", "backed-up", "mid-swap", "pre-commit")
+  private val killCases = Seq(
+    mergeCase("crash between stage and swap: partitioned table rolls back bit-for-bit", Seq("year"))(
+      cfg => MergeEngine.upsert(spark, cfg,
+        Seq((1, "a", 2023, 10L), (2, "b", 2024, 11L)).toDF(cols4: _*), Seq("id"), "lsn"),
+      cfg => MergeEngine.upsert(spark, cfg,
+        Seq((2, "B2", 2024, 20L), (3, "c", 2025, 21L)).toDF(cols4: _*), Seq("id"), "lsn")),
+    mergeCase("crash between stage and swap: unpartitioned table rolls back bit-for-bit", Nil)(
+      cfg => MergeEngine.upsert(spark, cfg,
+        Seq((1, "a", 10L), (2, "b", 11L)).toDF("id", "name", "lsn"), Seq("id"), "lsn"),
+      cfg => MergeEngine.upsert(spark, cfg,
+        Seq((2, "B2", 20L)).toDF("id", "name", "lsn"), Seq("id"), "lsn")),
+    // deleting ids 1 and 3 empties year=2023 and rewrites year=2024
+    mergeCase("crash during a partition-dropping delete rolls back the removed partition", Seq("year"))(
+      cfg => MergeEngine.upsert(spark, cfg,
+        Seq((1, "a", 2023, 10L), (2, "b", 2024, 11L), (3, "c", 2024, 12L)).toDF(cols4: _*),
+        Seq("id"), "lsn"),
+      cfg => MergeEngine.delete(spark, cfg, Seq((1, 0L), (3, 0L)).toDF("id", "lsn"), Seq("id"))),
+    // a guaranteed-multi-file partition (an explicit repartition count
+    // defeats AQE coalescing)
+    mergeCase("crash during compaction rolls back; data and files intact", Seq("year"))(
+      cfg => Seq((0, "n0", 2024, 0L), (1, "n1", 2024, 1L), (2, "n2", 2024, 2L)).toDF(cols4: _*)
+        .repartition(3).write.partitionBy("year").mode("append").parquet(cfg.path),
+      cfg => assert(MergeEngine.compact(spark, cfg, targetFileBytes = 1L << 30,
+        maxFilesPerPartition = 1) == 1)),
+    KillCase("kill-point harness: FileManifest.vacuumManifest", dir => s"$dir/m",
+      dir => {
+        (1L to 30L).map(i => (i, s"v$i")).toDF("id", "v").repartition(3).write.parquet(s"$dir/tbl")
+        graft.sources.FileManifest.saveManifest(
+          graft.sources.FileManifest.build(spark, s"$dir/tbl", Seq("id")), s"$dir/m")
+        // a compaction rewrote one table file away
+        new java.io.File(s"$dir/tbl").listFiles().filter(_.getName.endsWith(".parquet"))
+          .minBy(_.getName).delete(); ()
+      },
+      dir => assert(graft.sources.FileManifest.vacuumManifest(spark, s"$dir/tbl", s"$dir/m") == 1L),
+      dir => rowsOf(graft.sources.FileManifest.loadManifest(spark, s"$dir/m").drop("file"))),
+    KillCase("kill-point harness: Compaction.execute", dir => s"$dir/out",
+      dir => {
+        graft.operators.Compaction.execute(spark, compactionPlan(dir, "src1", 0L), "part", "file", s"$dir/out")
+        compactionPlan(dir, "src2", 1000L).write.parquet(s"$dir/plan2")
+      },
+      dir => graft.operators.Compaction.execute(
+        spark, spark.read.parquet(s"$dir/plan2"), "part", "file", s"$dir/out"),
+      dir => { StagedSwap.recover(spark, s"$dir/out"); rowsOf(spark.read.parquet(s"$dir/out")) }),
+    KillCase("kill-point harness: Bm25.vacuumSaved", dir => s"$dir/store",
+      dir => {
+        graft.operators.Bm25.save(graft.operators.Bm25.build(bm25Corpus.toDF("id", "text"), "id", "text"),
+          s"$dir/store", prefixBuckets = 4)
+        graft.operators.Bm25.retractFromSaved(spark, s"$dir/store", Seq(2L).toDF("id"), "id")
+      },
+      dir => graft.operators.Bm25.vacuumSaved(spark, s"$dir/store"),
+      dir => {
+        val idx = graft.operators.Bm25.load(spark, s"$dir/store")
+        rowsOf(graft.operators.Bm25.search(idx, Seq("catalyst", "parquet"), 3)) ++
+          rowsOf(spark.read.parquet(s"$dir/store/docs")) :+
+          s"tombstones=${new java.io.File(s"$dir/store/tombstones").exists()}"
+      }),
+    KillCase("kill-point harness: AggStore.absorbIntoSaved", dir => s"$dir/s/groups",
+      dir => graft.operators.AggStore.save(graft.operators.AggStore.build(
+        (0 until 20).map(i => (s"k$i", i.toDouble)).toDF("k", "v"), Seq("k"), col("v")),
+        Seq("k"), s"$dir/s", prefixBuckets = 8),
+      dir => graft.operators.AggStore.absorbIntoSaved(spark, s"$dir/s",
+        Seq(("k1", 10.0), ("new", 4.0)).toDF("k", "v"), col("v")),
+      dir => rowsOf(graft.operators.AggStore.load(spark, s"$dir/s").groups)),
+    KillCase("kill-point harness: QuantileSketch.absorbIntoSaved", dir => s"$dir/s/sketch",
+      dir => graft.operators.QuantileSketch.save(graft.operators.QuantileSketch.build(
+        (1L to 40L).map(i => (s"k${i % 5}", i)).toDF("k", "v"), Seq("k"), col("v"), 7),
+        Seq("k"), 7, s"$dir/s", prefixBuckets = 8),
+      dir => graft.operators.QuantileSketch.absorbIntoSaved(spark, s"$dir/s",
+        Seq(("k1", 1000L), ("k9", 7L)).toDF("k", "v"), col("v")),
+      dir => rowsOf(graft.operators.QuantileSketch.load(spark, s"$dir/s").sketch)),
+    KillCase("kill-point harness: UnigramLm.absorbIntoSaved", dir => s"$dir/s/words",
+      dir => {
+        graft.operators.UnigramLm.trainAndSave(Seq((1L, "abab ab cd abcd")).toDF("doc_id", "text"),
+          "text", s"$dir/s", maxPieceLen = 3, topMulti = 4, emIters = 2, prefixBuckets = 8)
+        ()
+      },
+      dir => graft.operators.UnigramLm.absorbIntoSaved(spark, s"$dir/s",
+        Seq((2L, "abab abab cd"), (3L, "dd abcd ab")).toDF("doc_id", "text"), "text"),
+      dir => graft.operators.UnigramLm.load(spark, s"$dir/s").pieces.map(_.toString).sorted ++
+        rowsOf(spark.read.parquet(s"$dir/s/words"))))
 
-  test("crash between stage and swap: partitioned table rolls back bit-for-bit") {
-    crashPoints.foreach { point =>
-      val path = tmpDir(s"merge-crash-$point")
-      val cfg = TableConfig("graft_test", "crash_tbl", s"$path/t", partitionCols = Seq("year"))
-      val b1 = Seq((1, "a", 2023, 10L), (2, "b", 2024, 11L)).toDF("id", "name", "year", "lsn")
-      MergeEngine.upsert(spark, cfg, b1, Seq("id"), "lsn")
-      val before = filesUnder(s"$path/t")
-
-      val b2 = Seq((2, "B2", 2024, 20L), (3, "c", 2025, 21L)).toDF("id", "name", "year", "lsn")
-      crashingAt(point)(MergeEngine.upsert(spark, cfg, b2, Seq("id"), "lsn"))
-
-      // first read rolls back; table is its exact pre-merge version
-      val t = MergeEngine.readTable(spark, cfg.path).get
-      assert(t.select("id", "name").as[(Int, String)].collect().toMap
-        == Map(1 -> "a", 2 -> "b"), s"[$point] rollback lost/changed rows")
-      assert(filesUnder(s"$path/t") == before, s"[$point] rollback not bit-for-bit")
-      assert(!new java.io.File(s"$path/t/year=2025").exists(), s"[$point] new partition survived rollback")
-
-      // the replayed batch applies cleanly after recovery
-      MergeEngine.upsert(spark, cfg, b2, Seq("id"), "lsn")
-      val t2 = MergeEngine.readTable(spark, cfg.path).get
-      assert(t2.select("id", "name").as[(Int, String)].collect().toMap
-        == Map(1 -> "a", 2 -> "B2", 3 -> "c"), s"[$point] replay after recovery failed")
+  killCases.foreach { c =>
+    test(c.title) {
+      val clean = tmpDir("kill-clean")
+      c.setup(clean); c.write(clean)
+      val after = c.read(clean)
+      KillPoints.All.foreach { point =>
+        val dir = tmpDir(s"kill-$point")
+        val root = c.root(dir)
+        c.setup(dir)
+        val before = c.read(dir)
+        val files = KillPoints.snapshot(root)
+        assert(before != after, "the write must change the store")
+        KillPoints.crashingAt(point)(c.write(dir))
+        assert(KillPoints.debris(root).nonEmpty, s"[$point] the kill left no protocol state")
+        assert(c.read(dir) == before, s"[$point] the reader saw a torn write")
+        assert(KillPoints.snapshot(root) == files, s"[$point] rollback not bit-for-bit")
+        assert(KillPoints.debris(root).isEmpty, s"[$point] recovery left debris")
+        c.write(dir)
+        assert(c.read(dir) == after, s"[$point] the replay did not land the new state")
+        assert(KillPoints.debris(root).isEmpty, s"[$point] the commit left debris")
+      }
     }
-  }
-
-  test("crash during compaction rolls back; data and files intact") {
-    val path = tmpDir("merge-compact-crash")
-    val cfg = TableConfig("graft_test", "cc_tbl", s"$path/t", partitionCols = Seq("year"))
-    // seed a partition with a guaranteed-multi-file layout (explicit
-    // repartition count defeats AQE coalescing)
-    Seq((0, "n0", 2024, 0L), (1, "n1", 2024, 1L), (2, "n2", 2024, 2L))
-      .toDF("id", "name", "year", "lsn")
-      .repartition(3)
-      .write.partitionBy("year").mode("append").parquet(cfg.path)
-    val before = filesUnder(s"$path/t")
-    crashingAt("mid-swap")(
-      { MergeEngine.compact(spark, cfg, targetFileBytes = 1L << 30, maxFilesPerPartition = 1); () })
-    val t = MergeEngine.readTable(spark, cfg.path).get // triggers rollback
-    assert(t.select("id").as[Int].collect().sorted.toSeq == Seq(0, 1, 2))
-    assert(filesUnder(s"$path/t") == before, "aborted compaction changed the file set")
-    // retry compacts cleanly
-    assert(MergeEngine.compact(spark, cfg, targetFileBytes = 1L << 30, maxFilesPerPartition = 1) == 1)
-    assert(MergeEngine.readTable(spark, cfg.path).get
-      .select("id").as[Int].collect().sorted.toSeq == Seq(0, 1, 2))
   }
 
   test("a reader arriving mid-swap must NOT roll back the live transaction") {
@@ -398,64 +487,21 @@ class MergeEngineSpec extends SparkSpec {
     MergeEngine.upsert(spark, cfg, b1, Seq("id"), "lsn")
 
     // simulate a concurrent reader hitting recovery at every in-flight
-    // point: with the writer registered, recoverTable must be a no-op
+    // point: with the writer registered, recover must be a no-op
     val observed = scala.collection.mutable.Map[String, Boolean]()
-    MergeEngine.Failpoints.hook = p => observed(p) = MergeEngine.recoverTable(spark, cfg.path)
+    StagedSwap.Failpoints.hook = p => observed(p) = StagedSwap.recover(spark, cfg.path)
     val b2 = Seq((1, "A2", 2023, 20L), (2, "b", 2024, 21L)).toDF("id", "name", "year", "lsn")
     try MergeEngine.upsert(spark, cfg, b2, Seq("id"), "lsn")
-    finally MergeEngine.Failpoints.hook = _ => ()
+    finally StagedSwap.Failpoints.hook = _ => ()
 
+    assert(observed.keySet == KillPoints.All.toSet, s"failpoints passed: ${observed.keys}")
     assert(observed.values.forall(_ == false),
       s"reader rolled back a live transaction at: ${observed.filter(_._2).keys}")
     // the swap committed despite the concurrent recovery attempts
     val t = MergeEngine.readTable(spark, cfg.path).get
     assert(t.select("id", "name").as[(Int, String)].collect().toMap
       == Map(1 -> "A2", 2 -> "b"))
-    assert(!new java.io.File(s"$path/t/${"_graft_txn.json"}").exists())
-  }
-
-  test("crash between stage and swap: unpartitioned table rolls back bit-for-bit") {
-    crashPoints.foreach { point =>
-      val path = tmpDir(s"merge-crash-flat-$point")
-      val cfg = TableConfig("graft_test", "crash_flat_tbl", s"$path/t")
-      val b1 = Seq((1, "a", 10L), (2, "b", 11L)).toDF("id", "name", "lsn")
-      MergeEngine.upsert(spark, cfg, b1, Seq("id"), "lsn")
-      val before = filesUnder(s"$path/t")
-
-      val b2 = Seq((2, "B2", 20L)).toDF("id", "name", "lsn")
-      crashingAt(point)(MergeEngine.upsert(spark, cfg, b2, Seq("id"), "lsn"))
-
-      val t = MergeEngine.readTable(spark, cfg.path).get
-      assert(t.select("id", "name").as[(Int, String)].collect().toMap
-        == Map(1 -> "a", 2 -> "b"), s"[$point] rollback lost/changed rows")
-      assert(filesUnder(s"$path/t") == before, s"[$point] rollback not bit-for-bit")
-
-      MergeEngine.upsert(spark, cfg, b2, Seq("id"), "lsn")
-      assert(MergeEngine.readTable(spark, cfg.path).get
-        .filter(col("id") === 2).select("name").as[String].head() == "B2")
-    }
-  }
-
-  test("crash during a partition-dropping delete rolls back the removed partition") {
-    val path = tmpDir("merge-crash-del")
-    val cfg = TableConfig("graft_test", "crash_del_tbl", s"$path/t", partitionCols = Seq("year"))
-    val b1 = Seq((1, "a", 2023, 10L), (2, "b", 2024, 11L)).toDF("id", "name", "year", "lsn")
-    MergeEngine.upsert(spark, cfg, b1, Seq("id"), "lsn")
-    val before = filesUnder(s"$path/t")
-
-    // deleting id=1 empties year=2023 entirely; crash after its backup rename
-    crashingAt("backed-up")(
-      MergeEngine.delete(spark, cfg, Seq((1, 0L)).toDF("id", "lsn"), Seq("id")))
-    assert(filesUnder(s"$path/t") != before, "crash point did not interrupt the swap")
-
-    val t = MergeEngine.readTable(spark, cfg.path).get
-    assert(t.select("id").as[Int].collect().sorted.toSeq == Seq(1, 2))
-    assert(filesUnder(s"$path/t") == before)
-
-    // replay completes the delete, removing the emptied partition atomically
-    MergeEngine.delete(spark, cfg, Seq((1, 0L)).toDF("id", "lsn"), Seq("id"))
-    assert(MergeEngine.readTable(spark, cfg.path).get.select("id").as[Int].collect().toSeq == Seq(2))
-    assert(!new java.io.File(s"$path/t/year=2023").exists())
+    assert(KillPoints.debris(cfg.path).isEmpty)
   }
 
   test("recovery is idempotent and leaves no transaction debris") {
@@ -463,16 +509,15 @@ class MergeEngineSpec extends SparkSpec {
     val cfg = TableConfig("graft_test", "crash_idem_tbl", s"$path/t", partitionCols = Seq("year"))
     MergeEngine.upsert(spark, cfg,
       Seq((1, "a", 2023, 10L)).toDF("id", "name", "year", "lsn"), Seq("id"), "lsn")
-    crashingAt("mid-swap")(MergeEngine.upsert(spark, cfg,
+    KillPoints.crashingAt("mid-swap")(MergeEngine.upsert(spark, cfg,
       Seq((1, "a2", 2023, 20L), (2, "b", 2024, 21L)).toDF("id", "name", "year", "lsn"),
       Seq("id"), "lsn"))
-    assert(MergeEngine.recoverTable(spark, cfg.path), "first recover must roll back")
-    assert(!MergeEngine.recoverTable(spark, cfg.path), "second recover must be a no-op")
-    val parent = new java.io.File(path)
-    val debris = parent.listFiles().map(_.getName)
-      .filter(n => n.contains("__staging_") || n.contains("__backup_"))
-    assert(debris.isEmpty, s"leftover transaction dirs: ${debris.mkString(",")}")
-    assert(!new java.io.File(s"$path/t/_graft_txn.json").exists())
+    assert(KillPoints.debris(cfg.path).toSet == Set("t__staging", "t__backup", "_graft_txn.json"),
+      "the kill must leave staging, backup and manifest behind")
+    assert(StagedSwap.recover(spark, cfg.path), "first recover must roll back")
+    assert(!StagedSwap.recover(spark, cfg.path), "second recover must be a no-op")
+    assert(KillPoints.debris(cfg.path).isEmpty,
+      s"leftover transaction state: ${KillPoints.debris(cfg.path).mkString(",")}")
   }
 
   test("delete probe pushes a pk min/max range filter when files are pk-clustered") {
@@ -503,17 +548,6 @@ class MergeEngineSpec extends SparkSpec {
     val t = MergeEngine.readTable(spark, cfg.path).get
     assert(t.count() == 998)
     assert(t.filter(col("id").isin(42, 44)).count() == 0)
-  }
-
-  private def filesUnder(dir: String): Set[String] = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (!f.exists()) Seq.empty
-      else if (f.isFile) Seq(f)
-      else f.listFiles().toSeq.flatMap(walk)
-    walk(new java.io.File(dir))
-      .filter(_.getName.endsWith(".parquet"))
-      .map(f => f.getAbsolutePath.stripPrefix(dir) + ":" + f.length())
-      .toSet
   }
 
   private def listFiles(dir: String): Set[String] = {

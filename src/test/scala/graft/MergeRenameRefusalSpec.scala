@@ -2,6 +2,7 @@ package graft
 
 import graft.config.TableConfig
 import graft.operators.MergeEngine
+import graft.sources.StagedSwap
 
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 
@@ -21,7 +22,7 @@ object RefusingRenameFs {
   @volatile var refuse: (Path, Path) => Boolean = (_, _) => false
 }
 
-/** The merge commit protocol checks every rename: a refused one stops
+/** The commit protocol checks every rename: a refused one stops
   * the transaction at that step instead of running the steps after it
   * against a state that does not exist.
   */
@@ -50,7 +51,7 @@ class MergeRenameRefusalSpec extends SparkSpec {
   test("a refused backup rename aborts before the commit point; the table reads back unchanged") {
     val (_, cfg) = table("backup")
     MergeEngine.upsert(spark, cfg, b1.toDF("id", "name", "year", "lsn"), Seq("id"), "lsn")
-    refusing((_, dst) => dst.toString.contains("__backup_")) {
+    refusing((_, dst) => dst.toString.contains("/t__backup/")) {
       intercept[IOException](
         MergeEngine.upsert(spark, cfg, b2.toDF("id", "name", "year", "lsn"), Seq("id"), "lsn"))
     }
@@ -62,22 +63,18 @@ class MergeRenameRefusalSpec extends SparkSpec {
   test("a refused restore rename during recovery keeps the backup dir") {
     val (dir, cfg) = table("restore")
     MergeEngine.upsert(spark, cfg, b1.toDF("id", "name", "year", "lsn"), Seq("id"), "lsn")
-    MergeEngine.Failpoints.hook = p => if (p == "backed-up") throw new IllegalStateException("crash")
-    try intercept[IllegalStateException](
+    KillPoints.crashingAt("backed-up")(
       MergeEngine.upsert(spark, cfg, b2.toDF("id", "name", "year", "lsn"), Seq("id"), "lsn"))
-    finally MergeEngine.Failpoints.hook = _ => ()
-    def backedUp: Seq[File] = new File(dir).listFiles().toSeq
-      .filter(_.getName.contains("__backup_"))
-      .flatMap(b => Option(new File(b, "year=2024").listFiles()).toSeq.flatten)
+    def backedUp: Seq[File] = Option(new File(s"$dir/t__backup/year=2024").listFiles()).toSeq.flatten
       .filter(_.getName.endsWith(".parquet"))
     assert(backedUp.nonEmpty, "the crash did not leave the partition in the backup dir")
 
-    refusing((src, _) => src.toString.contains("__backup_")) {
-      intercept[IOException](MergeEngine.recoverTable(spark, cfg.path))
+    refusing((src, _) => src.toString.contains("/t__backup/")) {
+      intercept[IOException](StagedSwap.recover(spark, cfg.path))
     }
     assert(backedUp.nonEmpty, "recovery deleted the backup it could not restore")
 
-    assert(MergeEngine.recoverTable(spark, cfg.path))
+    assert(StagedSwap.recover(spark, cfg.path))
     assert(state(cfg) == Map(1 -> "a", 2 -> "b"))
   }
 }

@@ -7,11 +7,12 @@ import graft.sources.StagedSwap
 
 import org.apache.spark.sql.functions.col
 
-/** Crash-state matrix for the rename-aside staged-swap protocol: every
-  * state a killed [[StagedSwap.rotateIn]] can leave behind must heal
-  * to a complete live table (or, for a partial first-ever stage, to a
-  * clean absence — never a corrupt promote), and [[Bm25.recoverSaved]]
-  * must make a crashed store transparently loadable again.
+/** Crash states of the [[StagedSwap]] commit protocol through its
+  * full-replace form [[StagedSwap.rotateIn]]: whatever a killed
+  * rotation leaves behind must heal back to the complete previous
+  * table — a stage is never promoted — and a crashed BM25 store must
+  * load and rewrite transparently again. (Every store × failpoint is
+  * covered by MergeEngineSpec's kill-point harness.)
   */
 class StagedSwapSpec extends SparkSpec {
   import spark.implicits._
@@ -23,150 +24,99 @@ class StagedSwapSpec extends SparkSpec {
   private def readTag(path: String): String =
     spark.read.parquet(path).select(col("v")).distinct().as[String].collect().head
 
-  private def mv(a: String, b: String): Unit = {
-    Files.move(Paths.get(a), Paths.get(b)); ()
-  }
-
   test("rotateIn swaps content and leaves no stage/old dirs") {
     val live = tmpDir("swap") + "/t"
     writeTable(live, "v1")
     StagedSwap.rotateIn(spark, live)(stage => writeTable(stage, "v2"))
     assert(readTag(live) == "v2")
-    assert(!Files.exists(Paths.get(s"${live}__stage")) &&
-      !Files.exists(Paths.get(s"${live}__old")))
+    assert(KillPoints.debris(live).isEmpty, KillPoints.debris(live).mkString(","))
   }
 
   test("crash mid-write (partial stage, live intact): recover keeps live, drops stage") {
     val live = tmpDir("swap") + "/t"
     writeTable(live, "v1")
-    // a killed write leaves stage WITHOUT _SUCCESS
-    writeTable(s"${live}__stage", "partial")
-    Files.delete(Paths.get(s"${live}__stage/_SUCCESS"))
-    StagedSwap.recover(spark, live)
+    // the writer dies inside its write body: a partial stage, no manifest
+    intercept[KillPoints.InjectedCrash](StagedSwap.rotateIn(spark, live) { stage =>
+      writeTable(stage, "partial")
+      throw new KillPoints.InjectedCrash("write")
+    })
+    assert(KillPoints.debris(live) == Seq("t__staging"))
+    assert(!StagedSwap.recover(spark, live), "nothing was swapped, nothing to roll back")
     assert(readTag(live) == "v1")
-    assert(!Files.exists(Paths.get(s"${live}__stage")))
+    assert(KillPoints.debris(live).isEmpty)
   }
 
   test("crash between the renames (old + complete stage, live missing): recover restores old") {
     val live = tmpDir("swap") + "/t"
-    writeTable(s"${live}__old", "v1")
-    writeTable(s"${live}__stage", "v2")
-    StagedSwap.recover(spark, live)
-    // old is the committed copy; the staged v2 never fully rotated in
+    writeTable(live, "v1")
+    KillPoints.crashingAt("backed-up")(StagedSwap.rotateIn(spark, live)(stage => writeTable(stage, "v2")))
+    val dataLeft = new java.io.File(live).listFiles().map(_.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith("."))
+    assert(dataLeft.isEmpty, s"live data survived its backup: ${dataLeft.mkString(",")}")
+    assert(StagedSwap.recover(spark, live))
+    // the backup is the committed copy; the complete staged v2 is dropped
     assert(readTag(live) == "v1")
-    assert(!Files.exists(Paths.get(s"${live}__stage")) &&
-      !Files.exists(Paths.get(s"${live}__old")))
+    assert(KillPoints.debris(live).isEmpty)
   }
 
   test("crash after stage->live (old lingering): recover keeps new live, clears old") {
     val live = tmpDir("swap") + "/t"
     writeTable(live, "v2")
-    writeTable(s"${live}__old", "v1")
-    StagedSwap.recover(spark, live)
+    // a kill after the commit point (manifest deleted) leaves the
+    // backup and staging dirs behind
+    writeTable(s"${live}__backup", "v1")
+    writeTable(s"${live}__staging", "v2")
+    assert(!StagedSwap.recover(spark, live), "a committed swap is not rolled back")
     assert(readTag(live) == "v2")
-    assert(!Files.exists(Paths.get(s"${live}__old")))
+    assert(KillPoints.debris(live).isEmpty)
   }
 
-  private def markComplete(stagePath: String): Unit = {
-    Files.createFile(Paths.get(stagePath, StagedSwap.completionSentinel)); ()
-  }
-
-  test("first-ever rotation, crash after a COMPLETE stage write: recover promotes stage") {
-    val live = tmpDir("swap") + "/t"
-    // crash between rotateIn's sentinel write and its renames
-    writeTable(s"${live}__stage", "v1")
-    markComplete(s"${live}__stage")
-    StagedSwap.recover(spark, live)
-    assert(readTag(live) == "v1")
-    assert(!Files.exists(Paths.get(live, StagedSwap.completionSentinel)),
-      "the sentinel is protocol metadata and must not ride into the live dir")
-  }
-
-  test("first-ever rotation, crash MID stage write: recover quarantines, promotes nothing") {
-    val live = tmpDir("swap") + "/t"
-    writeTable(s"${live}__stage", "junk")
-    // no completion sentinel: rotateIn never got past the write body —
-    // the job-commit _SUCCESS the killed write may have left proves
-    // nothing about the BODY having finished
-    StagedSwap.recover(spark, live)
-    assert(!Files.exists(Paths.get(live)),
-      "a partial stage must never become the live table")
-    assert(!Files.exists(Paths.get(s"${live}__stage")))
-    assert(readTag(s"${live}__quarantine") == "junk",
-      "the sole remnant of a failed first write is preserved aside, not destroyed")
-  }
-
-  test("multi-dataset stage: sentinel gates promotion, nested _SUCCESS does not") {
-    val live = tmpDir("swap") + "/t"
-    // a rotateIn body producing several datasets commits each in its
-    // own subdirectory; the root sentinel appears only after the WHOLE
-    // body returned. Crash after the first dataset: its own _SUCCESS
-    // exists, but promoting would serve a table missing part_b.
-    writeTable(s"${live}__stage/part_a", "v1")
-    assert(Files.exists(Paths.get(s"${live}__stage/part_a/_SUCCESS")))
-    StagedSwap.recover(spark, live)
-    assert(!Files.exists(Paths.get(live)),
-      "a nested job-commit marker must not promote a partial multi-dataset stage")
-    assert(readTag(s"${live}__quarantine/part_a") == "v1")
-
-    // the complete body (both datasets + sentinel) promotes
-    val live2 = tmpDir("swap") + "/t2"
-    writeTable(s"${live2}__stage/part_a", "v1")
-    writeTable(s"${live2}__stage/part_b", "v1")
-    markComplete(s"${live2}__stage")
-    StagedSwap.recover(spark, live2)
-    assert(readTag(s"$live2/part_a") == "v1" && readTag(s"$live2/part_b") == "v1")
-  }
-
-  test("markers disabled (marksuccessfuljobs=false): the sentinel still gates the swap") {
+  test("markers disabled (marksuccessfuljobs=false): swaps, and a kill rolls back") {
     val live = tmpDir("swap") + "/t"
     val conf = spark.sparkContext.hadoopConfiguration
     conf.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", false)
     try {
-      // end-to-end rotation works with no _SUCCESS anywhere: the
-      // sentinel is rotateIn's own file, independent of committer conf
+      // the protocol never reads committer markers
       StagedSwap.rotateIn(spark, live)(stage => writeTable(stage, "v1"))
       assert(!Files.exists(Paths.get(live, "_SUCCESS")))
       assert(readTag(live) == "v1")
-      // and an ambiguous sentinel-less stage with NO live copy is
-      // quarantined — never silently promoted OR destroyed
-      val live2 = tmpDir("swap") + "/t2"
-      writeTable(s"${live2}__stage", "only-copy")
-      StagedSwap.recover(spark, live2)
-      assert(!Files.exists(Paths.get(live2)))
-      assert(readTag(s"${live2}__quarantine") == "only-copy",
-        "with markers disabled an ambiguous stage surfaces as quarantine, not a promote")
+      KillPoints.crashingAt("mid-swap")(StagedSwap.rotateIn(spark, live)(stage => writeTable(stage, "v2")))
+      assert(StagedSwap.recover(spark, live))
+      assert(readTag(live) == "v1")
+      assert(KillPoints.debris(live).isEmpty)
     } finally conf.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", true)
   }
 
   test("rotateIn heals a complete orphaned stage BEFORE its body reads live") {
     val live = tmpDir("swap") + "/t"
-    // prior run crashed after completing its stage but before rotating
-    writeTable(s"${live}__stage", "v2")
-    markComplete(s"${live}__stage")
-    // a read-modify-write body must see v2 as live, not a missing table
+    writeTable(live, "v1")
+    // prior run died with a complete stage and live backed up
+    KillPoints.crashingAt("backed-up")(StagedSwap.rotateIn(spark, live)(stage => writeTable(stage, "v2")))
+    // a read-modify-write body must see the restored v1, not a missing table
     var sawLive: String = null
     StagedSwap.rotateIn(spark, live) { stage =>
       sawLive = readTag(live)
       writeTable(stage, "v3")
     }
-    assert(sawLive == "v2")
+    assert(sawLive == "v1")
     assert(readTag(live) == "v3")
   }
 
   test("recover is idempotent and a no-op on a healthy table") {
     val live = tmpDir("swap") + "/t"
     writeTable(live, "v1")
-    StagedSwap.recover(spark, live)
-    StagedSwap.recover(spark, live)
+    assert(!StagedSwap.recover(spark, live))
+    assert(!StagedSwap.recover(spark, live))
     assert(readTag(live) == "v1")
   }
 
   test("rotateIn self-heals a table crashed between renames before swapping") {
     val live = tmpDir("swap") + "/t"
-    writeTable(s"${live}__old", "v1") // live missing: prior swap died mid-rotation
+    writeTable(live, "v1")
+    KillPoints.crashingAt("mid-swap")(StagedSwap.rotateIn(spark, live)(stage => writeTable(stage, "v2")))
     StagedSwap.rotateIn(spark, live)(stage => writeTable(stage, "v3"))
     assert(readTag(live) == "v3")
+    assert(KillPoints.debris(live).isEmpty)
   }
 
   private def bm25Corpus = Seq(
@@ -180,28 +130,35 @@ class StagedSwapSpec extends SparkSpec {
   test("Bm25.load transparently heals a store crashed between renames") {
     val path = tmpDir("bm25-crash") + "/store"
     Bm25.save(Bm25.build(bm25Corpus, "id", "text"), path, prefixBuckets = 4)
+    Bm25.retractFromSaved(spark, path, Seq(3L).toDF("id"), "id")
     val want = search(Bm25.load(spark, path), "catalyst")
-    assert(want.nonEmpty)
-    // simulate the crash window: postings live dir renamed aside, the
-    // second rename never ran
-    mv(s"$path/postings", s"$path/postings__old")
+    assert(want == Seq(1L))
+    // the vacuum dies with postings swapped in and docs still backed up
+    KillPoints.crashingAt("mid-swap")(Bm25.vacuumSaved(spark, path))
+    assert(!Files.exists(Paths.get(s"$path/docs")))
     val healed = search(Bm25.load(spark, path), "catalyst")
     assert(healed == want, s"healed store searched differently: $healed vs $want")
-    assert(!Files.exists(Paths.get(s"$path/postings__old")))
+    assert(Files.exists(Paths.get(s"$path/tombstones")), "the rolled-back vacuum kept its tombstones")
+    assert(KillPoints.debris(path).isEmpty)
   }
 
   test("Bm25.vacuumSaved and absorbIntoSaved heal a crashed store before reading it") {
     val path = tmpDir("bm25-crash") + "/store"
     Bm25.save(Bm25.build(bm25Corpus, "id", "text"), path, prefixBuckets = 4)
     Bm25.retractFromSaved(spark, path, Seq(2L).toDF("id"), "id")
-    mv(s"$path/docs", s"$path/docs__old")
+    KillPoints.crashingAt("backed-up")(Bm25.vacuumSaved(spark, path))
     Bm25.vacuumSaved(spark, path) // would throw path-not-found unhealed
     val afterVacuum = search(Bm25.load(spark, path), "catalyst")
     assert(afterVacuum.nonEmpty)
-    mv(s"$path/postings", s"$path/postings__old")
-    Bm25.absorbIntoSaved(spark, path,
-      Seq((4L, "fresh catalyst document")).toDF("id", "text"), "id", "text")
+    assert(!Files.exists(Paths.get(s"$path/tombstones")))
+    // re-absorbing a retracted id rewrites postings, docs and tombstones
+    // in one commit; kill it with all three backed up
+    Bm25.retractFromSaved(spark, path, Seq(3L).toDF("id"), "id")
+    val reuse = Seq((3L, "fresh catalyst document")).toDF("id", "text")
+    KillPoints.crashingAt("backed-up")(Bm25.absorbIntoSaved(spark, path, reuse, "id", "text"))
+    Bm25.absorbIntoSaved(spark, path, reuse, "id", "text")
     val afterAbsorb = search(Bm25.load(spark, path), "catalyst")
-    assert(afterAbsorb.contains(4L), s"absorbed doc missing: $afterAbsorb")
+    assert(afterAbsorb.contains(3L), s"absorbed doc missing: $afterAbsorb")
+    assert(KillPoints.debris(path).isEmpty)
   }
 }
