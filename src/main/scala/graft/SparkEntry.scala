@@ -260,6 +260,12 @@ private[graft] object BackoffLmCache
   * properties of a (session, dir) input — counting them once per
   * session replaces a full-table count job per query invocation. At
   * 100 TB the same seam is a manifest row-count read.
+  *
+  * The covenant: a count cached here only SIZES work — it may change
+  * how a result is computed, never what the result is. A count that
+  * feeds a result column (a verdict, a ratio, a flag) is recomputed on
+  * every call, so a stale or mis-keyed entry can cost time but cannot
+  * change an answer.
   */
 private[graft] object CountStageCache
     extends graft.util.SessionScopedCache[Long]
@@ -1251,13 +1257,11 @@ object SparkEntry {
     // the driver (the connectedComponents convergence-check pattern):
     // crossJoining four one-row aggregate subtrees instead measures
     // plan-composition overhead, not the pipeline.
-    // all three verdict counts are fixed properties of session-staged
-    // frames — cached per (session, dir) so a warm rep runs zero
-    // verdict jobs (r18 VERDICT #7 count-caching seam)
-    val hit = CountStageCache.getOrElseUpdate(s, dir + "#ccpm-hit")(
-      pairsExact.join(verified, Seq("id_a", "id_b"), "left_semi").count())
-    val tot = CountStageCache.getOrElseUpdate(s, dir + "#ccpm-tot")(pairsExact.count())
-    val es = CountStageCache.getOrElseUpdate(s, dir + "#ccpm-es")(survivors.count())
+    // the verdict counts decide the `minhash_ok` column, so they are
+    // recomputed on every call (CountStageCache holds sizing counts only)
+    val hit = pairsExact.join(verified, Seq("id_a", "id_b"), "left_semi").count()
+    val tot = pairsExact.count()
+    val es = survivors.count()
     val minhashOk = hit * 100 >= tot * 90 && math.abs(ms - es) * 100 <= es
     val out = curationSplitCounts(withExact, quality, exactKept, survivors)
       .withColumn("minhash_ok", lit(minhashOk))
@@ -1683,6 +1687,26 @@ object SparkEntry {
       Seq("o_custkey", "o_orderkey"), bits = 8, numFiles = 16)
       .orderBy(col("file_id"))
 
+  /** The session's z-bucketed copy of orders' keys (written once per
+    * (session, dir), [[ZWriteStageCache]]): one parquet dir per value-
+    * range file bucket. ONE file per bucket dir (the AggStore.save
+    * small-file guard): without the repartition every scan task writes
+    * every file_id it sees, so the layout carried tasks x buckets files
+    * — an AQE-task-count-dependent footer-read bill (measured 198 vs
+    * 497 CPU-s for the same sf1 bench across two r18 runs) and exactly
+    * the small-file shape guide S6 warns about. Per-bucket stats,
+    * pruning, and the oracle's closed-form replay are file-count-
+    * invariant, so results are unchanged.
+    */
+  private def zLayoutPath(s: SparkSession, dir: String, ordersKeys: DataFrame): String =
+    ZWriteStageCache.getOrElseUpdate(s, dir) {
+      val p = java.nio.file.Files.createTempDirectory("graft-zlayout").toString
+      graft.operators.ZOrder.withFileId(ordersKeys, Seq("o_custkey", "o_orderkey"))
+        .repartition(col("file_id"))
+        .write.mode("overwrite").partitionBy("file_id").parquet(p)
+      p
+    }
+
   /** Footer-derived manifest over a REAL z-bucketed parquet layout
     * ([[graft.sources.FileManifest]] + [[graft.operators.ZOrder
     * .withFileId]]): orders is written once per session partitioned
@@ -1696,21 +1720,7 @@ object SparkEntry {
     */
   private def fileManifestStats(s: SparkSession, dir: String): DataFrame = {
     val ordersKeys = Tables(s, dir, "orders").select(col("o_custkey"), col("o_orderkey"))
-    val path = ZWriteStageCache.getOrElseUpdate(s, dir) {
-      val p = java.nio.file.Files.createTempDirectory("graft-zlayout").toString
-      // ONE file per bucket dir (the AggStore.save small-file guard):
-      // without the repartition every scan task writes every file_id it
-      // sees, so the layout carried tasks x buckets files — an
-      // AQE-task-count-dependent footer-read bill (measured 198 vs 497
-      // CPU-s for the same sf1 bench across two r18 runs) and exactly
-      // the small-file shape guide S6 warns about. Per-bucket stats,
-      // pruning, and the oracle's closed-form replay are file-count-
-      // invariant, so results are unchanged.
-      graft.operators.ZOrder.withFileId(ordersKeys, Seq("o_custkey", "o_orderkey"))
-        .repartition(col("file_id"))
-        .write.mode("overwrite").partitionBy("file_id").parquet(p)
-      p
-    }
+    val path = zLayoutPath(s, dir, ordersKeys)
     val manifest = graft.sources.FileManifest
       .build(s, path, Seq("o_custkey", "o_orderkey"))
       .withColumn("file_id", regexp_extract(col("file"), "file_id=(\\d+)", 1).cast("long"))
@@ -1761,21 +1771,7 @@ object SparkEntry {
     */
   private def manifestPrunedRead(s: SparkSession, dir: String): DataFrame = {
     val ordersKeys = Tables(s, dir, "orders").select(col("o_custkey"), col("o_orderkey"))
-    val path = ZWriteStageCache.getOrElseUpdate(s, dir) {
-      val p = java.nio.file.Files.createTempDirectory("graft-zlayout").toString
-      // ONE file per bucket dir (the AggStore.save small-file guard):
-      // without the repartition every scan task writes every file_id it
-      // sees, so the layout carried tasks x buckets files — an
-      // AQE-task-count-dependent footer-read bill (measured 198 vs 497
-      // CPU-s for the same sf1 bench across two r18 runs) and exactly
-      // the small-file shape guide S6 warns about. Per-bucket stats,
-      // pruning, and the oracle's closed-form replay are file-count-
-      // invariant, so results are unchanged.
-      graft.operators.ZOrder.withFileId(ordersKeys, Seq("o_custkey", "o_orderkey"))
-        .repartition(col("file_id"))
-        .write.mode("overwrite").partitionBy("file_id").parquet(p)
-      p
-    }
+    val path = zLayoutPath(s, dir, ordersKeys)
     val manifest = graft.sources.FileManifest
       .build(s, path, Seq("o_custkey", "o_orderkey")).persist()
     manifest.count()

@@ -1,6 +1,7 @@
 package graft.multimodal
 
 import graft.operators.BinaryAnn
+import graft.sources.Store
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -151,9 +152,6 @@ object ImageDedup {
     */
   final case class HashStore(bands: DataFrame, prefixBuckets: Int)
 
-  private def bandPrefix(bj: Column, bv: Column, buckets: Int): Column =
-    pmod(xxhash64(bj, bv), lit(buckets.toLong)).cast("int")
-
   private[graft] def banded(hashes: DataFrame, idCol: String, hashCol: String): DataFrame = {
     val base = hashes.select(col(idCol).as("id"), col(hashCol).as("h"))
     base.select(col("id"), col("h"),
@@ -170,23 +168,29 @@ object ImageDedup {
       idCol: String,
       hashCol: String,
       path: String,
-      prefixBuckets: Int = 32): Unit = {
-    require(prefixBuckets > 0, "prefixBuckets must be positive")
-    val spark = hashes.sparkSession
-    import spark.implicits._
-    banded(hashes, idCol, hashCol)
-      .withColumn("__bp", bandPrefix(col("bj"), col("bv"), prefixBuckets))
-      .repartition(col("__bp"))
-      .write.mode("overwrite").partitionBy("__bp").parquet(s"$path/bands")
-    Seq(prefixBuckets).toDF("prefixBuckets")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+      prefixBuckets: Int = 32): Unit =
+    Store.write(hashes.sparkSession, path)(
+      hashOps(hashes, idCol, hashCol, prefixBuckets, append = false): _*)
+
+  /** The write of `hashes` into a store of `prefixBuckets` band-prefix
+    * buckets — the band table plus meta, or (`append`) new band files —
+    * for the store alone or nested in another.
+    */
+  private[multimodal] def hashOps(hashes: DataFrame, idCol: String, hashCol: String,
+      prefixBuckets: Int, append: Boolean): Seq[Store.Op] = {
+    val bands = banded(hashes, idCol, hashCol)
+      .withColumn("__bp", Store.prefix(prefixBuckets, col("bj"), col("bv")))
+    if (append) Seq(Store.Add("bands", bands, Some("__bp")))
+    else Seq(Store.Put("bands", bands.repartition(col("__bp")), Some("__bp")),
+      Store.meta(hashes.sparkSession, "prefixBuckets" -> prefixBuckets))
   }
 
   /** Load a persisted store (lazy — probes read only their prefixes). */
   def loadHashStore(spark: SparkSession, path: String): HashStore =
-    HashStore(
-      spark.read.parquet(s"$path/bands"),
-      spark.read.parquet(s"$path/meta").head().getAs[Int]("prefixBuckets"))
+    hashStore(Store(spark, path))
+
+  private[multimodal] def hashStore(st: Store): HashStore =
+    HashStore(st.read("bands"), st.meta.getAs[Int]("prefixBuckets"))
 
   /** Near-duplicate matches of an increment against the store:
     * (id, store_id, ham) for every incoming hash within `maxHamming`
@@ -233,10 +237,8 @@ object ImageDedup {
       store: HashStore,
       maxHamming: Int,
       maxBucketPairs: Long): DataFrame = {
-    val prefixes = inBands
-      .select(bandPrefix(col("bj"), col("bv"), store.prefixBuckets).as("__bp"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val storeBands = store.bands.filter(col("__bp").isin(prefixes: _*)).drop("__bp")
+    val storeBands = Store.pruned(store.bands, "__bp",
+      inBands.select(Store.prefix(store.prefixBuckets, col("bj"), col("bv")))).drop("__bp")
     val bounded = storeBands.join(
       storeBands.groupBy(col("bj"), col("bv"))
         .agg(count(lit(1)).as("__n"))
@@ -253,18 +255,15 @@ object ImageDedup {
       .filter(col("ham") <= maxHamming)
   }
 
-  /** Append an increment's hashes into the saved layout (dynamic
-    * append — only the band directories that receive rows gain files).
+  /** Add an increment's hashes to the saved layout in one store write
+    * (only the band directories that receive rows gain files).
     */
   def appendToStore(
       spark: SparkSession,
       path: String,
       hashes: DataFrame,
       idCol: String,
-      hashCol: String): Unit = {
-    val buckets = spark.read.parquet(s"$path/meta").head().getAs[Int]("prefixBuckets")
-    banded(hashes, idCol, hashCol)
-      .withColumn("__bp", bandPrefix(col("bj"), col("bv"), buckets))
-      .write.mode("append").partitionBy("__bp").parquet(s"$path/bands")
-  }
+      hashCol: String): Unit =
+    Store.write(spark, path)(hashOps(hashes, idCol, hashCol,
+      Store(spark, path).meta.getAs[Int]("prefixBuckets"), append = true): _*)
 }

@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import graft.sources.Store
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -165,37 +167,39 @@ object VideoDedup {
   }
 
   /** Persist a frame-hash corpus as a probe-able store. */
-  def saveFrameStore(frameHashes: DataFrame, path: String, prefixBuckets: Int = 32): Unit = {
-    val counts = frameHashes.groupBy(col("media_id"))
-      .agg(count(lit(1)).as("n_frames"))
-    ImageDedup.saveHashStore(packed(frameHashes), "fid", "hash",
-      s"$path/frames", prefixBuckets)
-    counts.repartition(1).write.mode("overwrite").parquet(s"$path/counts")
-  }
+  def saveFrameStore(frameHashes: DataFrame, path: String, prefixBuckets: Int = 32): Unit =
+    Store.write(frameHashes.sparkSession, path)(
+      ImageDedup.hashOps(packed(frameHashes), "fid", "hash", prefixBuckets, append = false)
+        .map(Store.nest("frames")) :+
+        Store.Put("counts", frameCounts(frameHashes).repartition(1)): _*)
+
+  private def frameCounts(frameHashes: DataFrame): DataFrame =
+    frameHashes.groupBy(col("media_id")).agg(count(lit(1)).as("n_frames"))
 
   /** Load a persisted frame store (lazy; probes prune by prefix). */
-  def loadFrameStore(spark: org.apache.spark.sql.SparkSession, path: String): FrameStore =
-    FrameStore(
-      ImageDedup.loadHashStore(spark, s"$path/frames"),
-      spark.read.parquet(s"$path/counts"))
+  def loadFrameStore(spark: org.apache.spark.sql.SparkSession, path: String): FrameStore = {
+    val st = Store(spark, path)
+    FrameStore(ImageDedup.hashStore(st.nested("frames")), st.read("counts"))
+  }
 
-  /** Append an increment's frame hashes into the saved layout —
-    * dynamic partition append for the bands, plain append for the
-    * counts; O(increment), no store read. A video whose frames arrive
-    * across SEVERAL appends accumulates count rows that
-    * [[probeFrameStore]] sums back together. Re-appending the SAME
-    * frames is not idempotent for the totals (the band rows collapse
-    * under the probe's distinct, the counts double) — retries must go
-    * through the caller's staged-swap recovery, the absorb contract
-    * every persisted store in this repo shares.
+  /** Add an increment's frame hashes to the saved layout — the band
+    * rows and the per-video count rows in ONE store write;
+    * O(increment), no store read. A video whose frames arrive across
+    * SEVERAL appends accumulates count rows that [[probeFrameStore]]
+    * sums back together. Re-appending the SAME frames is not
+    * idempotent for the totals (the band rows collapse under the
+    * probe's distinct, the counts double), so a killed append must not
+    * be half-applied: the one write rolls back whole and the retry
+    * re-applies it once.
     */
   def appendToFrameStore(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       frameHashes: DataFrame): Unit = {
-    ImageDedup.appendToStore(spark, s"$path/frames", packed(frameHashes), "fid", "hash")
-    frameHashes.groupBy(col("media_id")).agg(count(lit(1)).as("n_frames"))
-      .write.mode("append").parquet(s"$path/counts")
+    val frames = Store(spark, path).nested("frames")
+    Store.write(spark, path)(ImageDedup.hashOps(packed(frameHashes), "fid", "hash",
+      frames.meta.getAs[Int]("prefixBuckets"), append = true).map(Store.nest("frames")) :+
+      Store.Add("counts", frameCounts(frameHashes)): _*)
   }
 
   /** Match an increment's videos against the STORE — the ingest-time

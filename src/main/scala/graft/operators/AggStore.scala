@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.StagedSwap
+import graft.sources.{Store => Persisted}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -39,9 +39,6 @@ object AggStore {
     */
   final case class Store(groups: DataFrame, keyCols: Seq[String], prefixBuckets: Int)
 
-  private def kp(keyCols: Seq[String], buckets: Int): Column =
-    pmod(xxhash64(keyCols.map(col): _*), lit(buckets.toLong)).cast("int")
-
   /** One map-side-combinable aggregation of `df` to the group table
     * shape (without the partition column).
     */
@@ -75,35 +72,33 @@ object AggStore {
   /** Persist a group table hash-prefix-partitioned on its keys. */
   def save(groups: DataFrame, keyCols: Seq[String], path: String,
       prefixBuckets: Int = 64): Unit = {
-    require(prefixBuckets > 0, "prefixBuckets must be positive")
     val spark = groups.sparkSession
-    import spark.implicits._
     // repartition on the partition column: one file per __kp dir per
     // write instead of one per (dir x upstream task) — the small-file
     // guard every partitioned store write needs
-    groups.withColumn("__kp", kp(keyCols, prefixBuckets))
-      .repartition(col("__kp"))
-      .write.mode("overwrite").partitionBy("__kp").parquet(s"$path/groups")
-    Seq((prefixBuckets, keyCols.mkString("\u0001")))
-      .toDF("prefixBuckets", "keyCols")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+    Persisted.write(spark, path)(
+      Persisted.Put("groups",
+        groups.withColumn("__kp", Persisted.prefix(prefixBuckets, keyCols.map(col): _*))
+          .repartition(col("__kp")),
+        Some("__kp")),
+      Persisted.meta(spark,
+        "prefixBuckets" -> prefixBuckets, "keyCols" -> keyCols.mkString("\u0001")))
   }
 
   /** Load a persisted store (lazy — probes read only their prefixes). */
   def load(spark: SparkSession, path: String): Store = {
-    StagedSwap.recover(spark, s"$path/groups")
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val st = Persisted(spark, path)
     Store(
-      spark.read.parquet(s"$path/groups"),
-      meta.getAs[String]("keyCols").split('\u0001').toSeq,
-      meta.getAs[Int]("prefixBuckets"))
+      st.read("groups"),
+      st.meta.getAs[String]("keyCols").split('\u0001').toSeq,
+      st.meta.getAs[Int]("prefixBuckets"))
   }
 
   /** Fold an increment into the SAVED layout at O(increment): the
     * increment is aggregated, the store partitions its groups hash
     * into are read back (directory-pruned — bounded prefix collect,
     * same contract as the dedup stores), merged, and swapped in by one
-    * [[StagedSwap]] commit. Partitions no increment group touches are
+    * store write. Partitions no increment group touches are
     * neither read nor written.
     */
   def absorbIntoSaved(
@@ -112,16 +107,16 @@ object AggStore {
       increment: DataFrame,
       valueCol: Column): Unit = {
     val st = load(spark, path)
+    val kp = Persisted.prefix(st.prefixBuckets, st.keyCols.map(col): _*)
     val inc = build(increment, st.keyCols, valueCol)
-      .withColumn("__kp", kp(st.keyCols, st.prefixBuckets))
+      .withColumn("__kp", kp)
       .persist()
-    val touched = inc.select(col("__kp")).distinct().collect().map(_.getInt(0)).toSeq
-    val slice = st.groups.filter(col("__kp").isin(touched: _*)).drop("__kp")
-    StagedSwap.overwritePartitions(spark, s"$path/groups",
+    val slice = Persisted.pruned(st.groups, "__kp", inc.select(col("__kp")))
+    Persisted.write(spark, path)(Persisted.Patch("groups",
       merge(slice, inc.drop("__kp"), st.keyCols)
-        .withColumn("__kp", kp(st.keyCols, st.prefixBuckets))
+        .withColumn("__kp", kp)
         .repartition(col("__kp")),
-      Seq("__kp"))
+      "__kp"))
     inc.unpersist()
     ()
   }
@@ -130,13 +125,11 @@ object AggStore {
     * directory-pruned to the probe's prefixes, joined on the keys
     * (broadcast when the probe is small; never a full store scan).
     */
-  def probe(store: Store, keys: DataFrame): DataFrame = {
-    val probeKp = keys
-      .withColumn("__kp", kp(store.keyCols, store.prefixBuckets))
-    val prefixes = probeKp.select(col("__kp")).distinct().collect().map(_.getInt(0)).toSeq
-    store.groups.filter(col("__kp").isin(prefixes: _*)).drop("__kp")
+  def probe(store: Store, keys: DataFrame): DataFrame =
+    Persisted.pruned(store.groups, "__kp",
+        keys.select(Persisted.prefix(store.prefixBuckets, store.keyCols.map(col): _*)))
+      .drop("__kp")
       .join(keys.select(store.keyCols.map(col): _*), store.keyCols)
-  }
 
   /** Read-time presentation: micro-grid columns back to rounded
     * doubles (sum, min, max, avg).

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
-import graft.sources.StagedSwap
+import graft.sources.Store
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -79,9 +79,6 @@ object Bm25 {
     Index(postings, docs, totals.getAs[Long]("n"), totals.getAs[Long]("total"))
   }
 
-  private def hashPrefix(key: org.apache.spark.sql.Column, buckets: Int) =
-    pmod(xxhash64(key), lit(buckets.toLong)).cast("int")
-
   /** Top-k documents for `queryTerms`, ranked by the quantized BM25
     * sum (ties broken by ascending id — fully deterministic).
     *
@@ -105,10 +102,8 @@ object Bm25 {
     // would risk divergence).
     val matchedAll = index.prefixBuckets match {
       case Some(nb) =>
-        val prefixes = terms.toDF("term")
-          .select(hashPrefix(col("term"), nb).as("__tp"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        index.postings.filter(col("__tp").isin(prefixes: _*)).drop("__tp")
+        Store.pruned(index.postings, "__tp", terms.toDF("term").select(Store.prefix(nb, col("term"))))
+          .drop("__tp")
       case None => index.postings
     }
     // The matched postings feed BOTH the df aggregation and the
@@ -153,7 +148,7 @@ object Bm25 {
   def absorb(index: Index, increment: DataFrame, idCol: String, textCol: String): Index = {
     val inc = build(increment, idCol, textCol)
     val incPostings = index.prefixBuckets match {
-      case Some(nb) => inc.postings.withColumn("__tp", hashPrefix(col("term"), nb))
+      case Some(nb) => inc.postings.withColumn("__tp", Store.prefix(nb, col("term")))
       case None => inc.postings
     }
     val mergedPostings = index.postings.unionByName(incPostings).persist()
@@ -166,10 +161,10 @@ object Bm25 {
   }
 
   /** [[absorb]] for a PERSISTED index: tokenize the increment, then
-    * dynamic-partition-APPEND its postings into the saved term-prefix
-    * layout — only the prefixes that receive rows gain files, existing
-    * directories are untouched — append the new doc lengths, and
-    * rewrite the one-row meta with the summed exact totals. Cost is
+    * add its postings to the saved term-prefix layout — only the
+    * prefixes that receive rows gain files, existing files are
+    * untouched — add the new doc lengths, and rewrite the one-row meta
+    * with the summed exact totals, all in ONE store write. Cost is
     * O(increment); a subsequent [[load]] serves searches over the
     * merged corpus with the same partition-pruned reads.
     */
@@ -179,57 +174,47 @@ object Bm25 {
       increment: DataFrame,
       idCol: String,
       textCol: String): Unit = {
-    import spark.implicits._
-    // heal a crashed prior commit BEFORE any read plans resolve —
-    // the reads below would throw path-not-found on a store whose
-    // table dir is still backed up, making commit's own heal unreachable
-    StagedSwap.recover(spark, path)
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val nb = meta.getAs[Int]("prefixBuckets")
+    val st = Store(spark, path)
+    val nb = st.meta.getAs[Int]("prefixBuckets")
     val inc = build(increment, idCol, textCol)
+    val postings = inc.postings.withColumn("__tp", Store.prefix(nb, col("term")))
+    val docs = inc.docs.select(col("id"), col("dl"))
+    val meta = totals(spark, st, inc.nDocs, inc.totalDl)
     // A previously retracted id may legitimately re-enter the corpus.
     // Its tombstone must clear or load() would filter the fresh rows
-    // while the meta rewrite below counts them — but clearing alone
-    // would un-mask the id's OLD rows still on disk, so those rows are
-    // physically vacuumed first (a targeted rewrite, paid only when a
+    // while the meta counts them — but clearing alone would un-mask
+    // the id's OLD rows still on disk, so those rows are physically
+    // vacuumed in the same write (a targeted rewrite, paid only when a
     // batch actually re-uses a retracted id — rare by construction).
-    if (tombstonesExist(spark, path)) {
-      val tombs = spark.read.parquet(s"$path/tombstones").select(col("id")).distinct()
-        .persist()
-      val incIds = inc.docs.select(col("id")).distinct()
-      val reused = tombs.join(broadcast(incIds), Seq("id"), "left_semi").persist()
-      if (reused.count() > 0) StagedSwap.commit(spark, path) { stage =>
-        stageWithout(spark, path, stage, reused)
-        tombs.join(broadcast(reused), Seq("id"), "left_anti")
-          .repartition(1).write.parquet(s"$stage/tombstones")
-        (Seq("postings", "docs", "tombstones"), Nil)
-      }
-      reused.unpersist(); tombs.unpersist()
+    val tombs = Option.when(st.exists("tombstones"))(
+      st.read("tombstones").select(col("id")).distinct().persist())
+    val reused = tombs.map(
+      _.join(broadcast(docs.select(col("id")).distinct()), Seq("id"), "left_semi").persist())
+    reused.filterNot(_.isEmpty) match {
+      case None => Store.write(spark, path)(
+        Store.Add("postings", postings, Some("__tp")), Store.Add("docs", docs), meta)
+      case Some(ids) =>
+        Store.write(spark, path)(
+          Store.Put("postings", without(st.read("postings"), ids).unionByName(postings), Some("__tp")),
+          Store.Put("docs", without(st.read("docs"), ids).unionByName(docs)),
+          Store.Put("tombstones", without(tombs.get, ids).repartition(1)),
+          meta)
     }
-    inc.postings
-      .withColumn("__tp", hashPrefix(col("term"), nb))
-      .write.mode("append").partitionBy("__tp").parquet(s"$path/postings")
-    inc.docs.select(col("id"), col("dl"))
-      .write.mode("append").parquet(s"$path/docs")
-    Seq((meta.getAs[Long]("nDocs") + inc.nDocs, meta.getAs[Long]("totalDl") + inc.totalDl, nb))
-      .toDF("nDocs", "totalDl", "prefixBuckets")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
-    inc.unpersist()
+    reused.foreach(_.unpersist()); tombs.foreach(_.unpersist()); inc.unpersist()
   }
 
-  /** Stage the store's postings and docs without the rows of `ids` —
-    * the rewrite half of a one-transaction [[StagedSwap.commit]] on the
-    * store root.
+  /** The one-row meta with the store's exact totals moved by `dN` docs
+    * of `dDl` total length.
     */
-  private def stageWithout(spark: SparkSession, path: String, stage: String, ids: DataFrame): Unit = {
-    spark.read.parquet(s"$path/postings")
-      .select(col("term"), col("id"), col("tf"), col("__tp"))
-      .join(broadcast(ids), Seq("id"), "left_anti")
-      .write.partitionBy("__tp").parquet(s"$stage/postings")
-    spark.read.parquet(s"$path/docs").select(col("id"), col("dl"))
-      .join(broadcast(ids), Seq("id"), "left_anti")
-      .write.parquet(s"$stage/docs")
-  }
+  private def totals(spark: SparkSession, st: Store, dN: Long, dDl: Long): Store.Op =
+    Store.meta(spark,
+      "nDocs" -> (st.meta.getAs[Long]("nDocs") + dN),
+      "totalDl" -> (st.meta.getAs[Long]("totalDl") + dDl),
+      "prefixBuckets" -> st.meta.getAs[Int]("prefixBuckets"))
+
+  /** A postings or docs table without the rows of `ids`. */
+  private def without(table: DataFrame, ids: DataFrame): DataFrame =
+    table.join(broadcast(ids), Seq("id"), "left_anti")
 
   /** Physically drop tombstoned rows from a persisted index and reset
     * the tombstone table — the compaction half of the retract
@@ -240,22 +225,20 @@ object Bm25 {
     * keeps it at the survivors' exact totals, so searches before and
     * after a vacuum score bit-for-bit the same (Bm25Spec's
     * vacuum==retract differential). Postings and docs swap in and the
-    * tombstones leave in ONE [[StagedSwap.commit]] on the store root —
-    * a crash leaves the whole pre-vacuum store, never a vacuumed
-    * postings next to unvacuumed docs.
+    * tombstones leave in ONE store write — a crash leaves the whole
+    * pre-vacuum store, never a vacuumed postings next to unvacuumed
+    * docs.
     *
     * No-op when no tombstones exist.
     */
   def vacuumSaved(spark: SparkSession, path: String): Unit = {
-    StagedSwap.recover(spark, path)
-    if (!tombstonesExist(spark, path)) return
-    val tombs = spark.read.parquet(s"$path/tombstones").select(col("id")).distinct()
-      .persist()
-    tombs.count()
-    StagedSwap.commit(spark, path) { stage =>
-      stageWithout(spark, path, stage, tombs)
-      (Seq("postings", "docs"), Seq("tombstones"))
-    }
+    val st = Store(spark, path)
+    if (!st.exists("tombstones")) return
+    val tombs = st.read("tombstones").select(col("id")).distinct().persist()
+    Store.write(spark, path)(
+      Store.Put("postings", without(st.read("postings"), tombs), Some("__tp")),
+      Store.Put("docs", without(st.read("docs"), tombs)),
+      Store.Drop("tombstones"))
     tombs.unpersist()
     ()
   }
@@ -286,71 +269,55 @@ object Bm25 {
   /** [[retract]] for a PERSISTED index, the Lucene/Delta way: the
     * term-prefix layout is partitioned on the WRONG axis for doc
     * deletion (one doc's postings scatter across every term prefix),
-    * so instead of rewriting the store the removed ids append to a
+    * so instead of rewriting the store the removed ids are added to a
     * TOMBSTONE table and [[load]] anti-joins them out lazily; the one-
-    * row meta updates to the survivors' exact totals, so avgdl/idf
-    * score as if rebuilt. Fold tombstones away when they accumulate by
-    * `save(load(path), path2)` — the compaction half of the cycle.
+    * row meta updates to the survivors' exact totals in the same
+    * write, so avgdl/idf score as if rebuilt. Fold tombstones away
+    * when they accumulate with [[vacuumSaved]] — the compaction half
+    * of the cycle.
     */
   def retractFromSaved(
       spark: SparkSession,
       path: String,
       removeIds: DataFrame,
       idCol: String): Unit = {
-    import spark.implicits._
-    StagedSwap.recover(spark, path)
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val st = Store(spark, path)
     // Overlapping deletion batches are normal in right-to-be-forgotten
     // flows: ids already tombstoned must NOT subtract from the totals
     // again (the physical docs row is still on disk, so the join alone
     // can't tell a live doc from a previously retracted one).
     val raw = removeIds.select(col(idCol).as("id")).distinct()
-    val ids = (if (tombstonesExist(spark, path)) {
-      raw.join(
-        broadcast(spark.read.parquet(s"$path/tombstones").select(col("id")).distinct()),
-        Seq("id"), "left_anti")
-    } else raw).persist()
-    val gone = spark.read.parquet(s"$path/docs").join(ids, Seq("id"))
+    val ids = (if (st.exists("tombstones"))
+      raw.join(broadcast(st.read("tombstones").select(col("id")).distinct()), Seq("id"), "left_anti")
+    else raw).persist()
+    val gone = st.read("docs").join(ids, Seq("id"))
       .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("t")).head()
-    ids.write.mode("append").parquet(s"$path/tombstones")
-    Seq((meta.getAs[Long]("nDocs") - gone.getAs[Long]("n"),
-        meta.getAs[Long]("totalDl") - gone.getAs[Long]("t"),
-        meta.getAs[Int]("prefixBuckets")))
-      .toDF("nDocs", "totalDl", "prefixBuckets")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+    Store.write(spark, path)(
+      Store.Add("tombstones", ids),
+      totals(spark, st, -gone.getAs[Long]("n"), -gone.getAs[Long]("t")))
     ids.unpersist()
     ()
   }
 
-  private def tombstonesExist(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Persist the index: postings partitioned by a term hash prefix
     * (searches read only the query terms' directories), doc lengths
-    * plain, exact totals in a one-row meta parquet.
+    * plain, exact totals in a one-row meta parquet — one store write.
+    * The written frames have any tombstone filter already applied
+    * ([[load]] bakes it into the plan), so the write drops a tombstone
+    * table at the target: `save(load(path), path)` compacts a store in
+    * place, like [[vacuumSaved]].
     */
   def save(index: Index, path: String, prefixBuckets: Int = 64): Unit = {
-    require(prefixBuckets > 0, "prefixBuckets must be positive")
     val spark = index.postings.sparkSession
-    import spark.implicits._
-    index.postings.select(col("term"), col("id"), col("tf"))
-      .withColumn("__tp", hashPrefix(col("term"), prefixBuckets))
-      .write.mode("overwrite").partitionBy("__tp").parquet(s"$path/postings")
-    index.docs.select(col("id"), col("dl"))
-      .write.mode("overwrite").parquet(s"$path/docs")
-    Seq((index.nDocs, index.totalDl, prefixBuckets))
-      .toDF("nDocs", "totalDl", "prefixBuckets")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
-    // The written frames have any tombstone filter already applied
-    // (load() bakes it into the plan), so a leftover tombstone table
-    // at the target is stale — it would wrongly re-filter ids a later
-    // absorb re-ingests. In-place compaction of a LOADED store is
-    // [[vacuumSaved]]; save targets a fresh/other path (overwriting
-    // the very files a loaded index reads from is not supported).
-    val stale = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    StagedSwap.deleteOrThrow(stale.getFileSystem(spark.sparkContext.hadoopConfiguration), stale)
+    Store.write(spark, path)(
+      Store.Put("postings",
+        index.postings.select(col("term"), col("id"), col("tf"))
+          .withColumn("__tp", Store.prefix(prefixBuckets, col("term"))),
+        Some("__tp")),
+      Store.Put("docs", index.docs.select(col("id"), col("dl"))),
+      Store.meta(spark,
+        "nDocs" -> index.nDocs, "totalDl" -> index.totalDl, "prefixBuckets" -> prefixBuckets),
+      Store.Drop("tombstones"))
   }
 
   /** Load a persisted index; nothing is eagerly cached and searches
@@ -359,22 +326,17 @@ object Bm25 {
     * on the pruned postings read, never a store rewrite.
     */
   def load(spark: SparkSession, path: String): Index = {
-    StagedSwap.recover(spark, path)
-    val meta = spark.read.parquet(s"$path/meta").head()
-    var postings = spark.read.parquet(s"$path/postings")
-      .select(col("term"), col("id"), col("tf"), col("__tp"))
-    var docs = spark.read.parquet(s"$path/docs").select(col("id"), col("dl"))
-    val tombPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = tombPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(tombPath)) {
-      val tombs = spark.read.parquet(s"$path/tombstones").select(col("id")).distinct()
-      postings = postings.join(broadcast(tombs), Seq("id"), "left_anti")
-      docs = docs.join(broadcast(tombs), Seq("id"), "left_anti")
-    }
-    Index(postings, docs,
-      meta.getAs[Long]("nDocs"),
-      meta.getAs[Long]("totalDl"),
-      Some(meta.getAs[Int]("prefixBuckets")))
+    val st = Store(spark, path)
+    val postings = st.read("postings").select(col("term"), col("id"), col("tf"), col("__tp"))
+    val docs = st.read("docs").select(col("id"), col("dl"))
+    val tombs = Option.when(st.exists("tombstones"))(
+      st.read("tombstones").select(col("id")).distinct())
+    Index(
+      tombs.fold(postings)(without(postings, _)),
+      tombs.fold(docs)(without(docs, _)),
+      st.meta.getAs[Long]("nDocs"),
+      st.meta.getAs[Long]("totalDl"),
+      Some(st.meta.getAs[Int]("prefixBuckets")))
   }
 
   /** Exact phrase search via positional-posting intersection — the

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.Store
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -255,9 +257,6 @@ object Clustering {
       relabels: DataFrame,
       prefixBuckets: Int)
 
-  private def kpId(c: Column, buckets: Int): Column =
-    pmod(xxhash64(c), lit(buckets.toLong)).cast("int")
-
   /** Persist a (id, cluster) label table (e.g.
     * [[connectedComponents]]'s output) as a component store. Ids ride
     * as longs — the repo-wide key convention.
@@ -266,18 +265,20 @@ object Clustering {
       labels: DataFrame,
       path: String,
       prefixBuckets: Int = 64): Unit = {
-    require(prefixBuckets > 0, "prefixBuckets must be positive")
     val spark = labels.sparkSession
+    Store.write(spark, path)(labelOps(spark,
+      labels.select(col("id").cast("long").as("id"), col("cluster").cast("long").as("cluster")),
+      prefixBuckets) :+ Store.meta(spark, "prefixBuckets" -> prefixBuckets): _*)
+  }
+
+  /** A full label table and an empty forwarding table. */
+  private def labelOps(spark: SparkSession, labels: DataFrame, buckets: Int): Seq[Store.Op] = {
     import spark.implicits._
-    labels
-      .select(col("id").cast("long").as("id"), col("cluster").cast("long").as("cluster"))
-      .withColumn("__kp", kpId(col("id"), prefixBuckets))
-      .repartition(col("__kp"))
-      .write.mode("overwrite").partitionBy("__kp").parquet(s"$path/labels")
-    Seq.empty[(Long, Long)].toDF("old_cluster", "new_cluster")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/relabels")
-    Seq(prefixBuckets).toDF("prefixBuckets")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+    Seq(
+      Store.Put("labels",
+        labels.withColumn("__kp", Store.prefix(buckets, col("id"))).repartition(col("__kp")),
+        Some("__kp")),
+      Store.Put("relabels", Seq.empty[(Long, Long)].toDF("old_cluster", "new_cluster").repartition(1)))
   }
 
   /** Load a persisted component store (lazy — absorbs and probes read
@@ -285,11 +286,10 @@ object Clustering {
     * root-move-sized, broadcastable by construction until
     * [[compactClusters]] folds it away).
     */
-  def loadClusters(spark: SparkSession, path: String): ClusterStore =
-    ClusterStore(
-      spark.read.parquet(s"$path/labels"),
-      spark.read.parquet(s"$path/relabels"),
-      spark.read.parquet(s"$path/meta").head().getAs[Int]("prefixBuckets"))
+  def loadClusters(spark: SparkSession, path: String): ClusterStore = {
+    val st = Store(spark, path)
+    ClusterStore(st.read("labels"), st.read("relabels"), st.meta.getAs[Int]("prefixBuckets"))
+  }
 
   /** Fold new edges into the SAVED component store at O(increment):
     * components untouched by the increment are neither read, written,
@@ -320,10 +320,10 @@ object Clustering {
     * incremental` oracle gate both assert it.
     *
     * `autoCompactAtRelabels` > 0 bounds the forwarding table: when an
-    * absorb leaves more than that many relabel rows, the store
-    * compacts in place ([[compactClusters]]) before returning, so an
-    * arbitrarily long absorb sequence never outgrows the broadcast
-    * budget. 0 (the default) never auto-compacts.
+    * absorb would leave more than that many relabel rows, it writes
+    * the compacted store ([[compactClusters]]'s layout) in the same
+    * commit, so an arbitrarily long absorb sequence never outgrows the
+    * broadcast budget. 0 (the default) never auto-compacts.
     */
   def absorbEdges(
       spark: SparkSession,
@@ -340,10 +340,8 @@ object Clustering {
       .union(edges.select(col("b").as("id")))
       .distinct()
       .persist()
-    val prefixes = endpoints
-      .select(kpId(col("id"), st.prefixBuckets).as("__kp"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val known = st.labels.filter(col("__kp").isin(prefixes: _*))
+    val known = Store.pruned(st.labels, "__kp",
+        endpoints.select(Store.prefix(st.prefixBuckets, col("id"))))
       .join(endpoints, "id")
       .join(broadcast(st.relabels), col("cluster") === col("old_cluster"), "left")
       .select(col("id"), coalesce(col("new_cluster"), col("cluster")).as("root"))
@@ -362,9 +360,8 @@ object Clustering {
       .filter(col("newroot") =!= col("root"))
       .select(col("root").as("from_root"), col("newroot"))
     // compose the existing forwards through this round's root moves so
-    // resolution stays ONE broadcast hop, then stage through a lineage
-    // cut (the table is read lazily from the same path it overwrites)
-    val staged = st.relabels
+    // resolution stays ONE broadcast hop
+    val relabels = st.relabels
       .join(broadcast(rootMoves), col("new_cluster") === col("from_root"), "left")
       .select(col("old_cluster"),
         coalesce(col("newroot"), col("new_cluster")).as("new_cluster"))
@@ -372,25 +369,31 @@ object Clustering {
         col("from_root").as("old_cluster"), col("newroot").as("new_cluster")))
       .distinct()
       .repartition(1)
-      .localCheckpoint(true)
-    staged.write.mode("overwrite").parquet(s"$path/relabels")
+      .persist()
     val newLabels = endpoints
       .join(known.select(col("id")), Seq("id"), "left_anti")
       .join(comp, col("id") === col("node"), "left")
       .select(col("id"), coalesce(col("newroot"), col("id")).as("cluster"))
-      .withColumn("__kp", kpId(col("id"), st.prefixBuckets))
-    newLabels.repartition(col("__kp"))
-      .write.mode("append").partitionBy("__kp").parquet(s"$path/labels")
     // The forwarding table must stay broadcastable: when a long absorb
-    // sequence has grown it past the caller's budget, fold it into the
-    // label rows now (the MicroBatchMerger autoCompactEvery lifecycle,
-    // keyed on the durable store signal — relabel row count — instead
-    // of a per-JVM batch counter, so the trigger survives restarts and
-    // fires exactly when the broadcast actually grew). The count is
-    // free: `staged` is an eager localCheckpoint.
-    val compactNow = autoCompactAtRelabels > 0 && staged.count() > autoCompactAtRelabels
-    staged.unpersist(); known.unpersist(); endpoints.unpersist(); edges.unpersist()
-    if (compactNow) compactClusters(spark, path)
+    // sequence has grown it past the caller's budget, this absorb
+    // writes the compacted store instead (the MicroBatchMerger
+    // autoCompactEvery lifecycle, keyed on the durable store signal —
+    // relabel row count — instead of a per-JVM batch counter, so the
+    // trigger survives restarts and fires exactly when the broadcast
+    // actually grew).
+    val ops =
+      if (autoCompactAtRelabels > 0 && relabels.count() > autoCompactAtRelabels)
+        labelOps(spark, resolvedLabels(st.copy(
+          labels = st.labels.drop("__kp").unionByName(newLabels), relabels = relabels)),
+          st.prefixBuckets)
+      else Seq(
+        Store.Put("relabels", relabels),
+        Store.Add("labels",
+          newLabels.withColumn("__kp", Store.prefix(st.prefixBuckets, col("id")))
+            .repartition(col("__kp")),
+          Some("__kp")))
+    Store.write(spark, path)(ops: _*)
+    relabels.unpersist(); known.unpersist(); endpoints.unpersist(); edges.unpersist()
     ()
   }
 
@@ -408,15 +411,6 @@ object Clustering {
     */
   def compactClusters(spark: SparkSession, path: String): Unit = {
     val st = loadClusters(spark, path)
-    import spark.implicits._
-    val staged = resolvedLabels(st)
-      .withColumn("__kp", kpId(col("id"), st.prefixBuckets))
-      .repartition(col("__kp"))
-      .localCheckpoint(true)
-    staged.write.mode("overwrite").partitionBy("__kp").parquet(s"$path/labels")
-    Seq.empty[(Long, Long)].toDF("old_cluster", "new_cluster")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/relabels")
-    staged.unpersist()
-    ()
+    Store.write(spark, path)(labelOps(spark, resolvedLabels(st), st.prefixBuckets): _*)
   }
 }

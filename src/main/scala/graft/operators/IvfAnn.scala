@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{NearestCentroid, VectorFunctions}
+import graft.sources.Store
 
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnShim, SparkSession}
 import org.apache.spark.sql.functions._
@@ -239,11 +240,10 @@ object IvfAnn {
   }
 
   /** [[append]] for a PERSISTED index: assign against the saved
-    * centroids and append the new rows into the list-partitioned
-    * layout (dynamic-partition append — only the lists that receive
-    * vectors gain files; existing directories are untouched). The
-    * 100 TB ingest path: no rewrite, no retrain, probes keep pruning
-    * at the directory level.
+    * centroids and add the new rows to the list-partitioned layout in
+    * one store write (only the lists that receive vectors gain files;
+    * existing files are untouched). The 100 TB ingest path: no
+    * rewrite, no retrain, probes keep pruning at the directory level.
     */
   def appendToSaved(
       spark: SparkSession,
@@ -251,16 +251,12 @@ object IvfAnn {
       newVectors: DataFrame,
       idCol: String,
       vecCol: String): Unit = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-      .select(col("list"), col("centroid"))
-      .collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
-    newVectors
-      .select(col(idCol).as("__id"), col(vecCol).as("__vec"))
-      .select(col("__id"), col("__vec"),
-        nearestCentroid(col("__vec"), centroids).as("__list"))
-      .write.mode("append").partitionBy("__list").parquet(s"$path/assigned")
+    val centroids = savedCentroids(Store(spark, path))
+    Store.write(spark, path)(Store.Add("assigned",
+      newVectors
+        .select(col(idCol).as("__id"), col(vecCol).as("__vec"))
+        .select(col("__id"), col("__vec"), nearestCentroid(col("__vec"), centroids).as("__list")),
+      Some("__list")))
   }
 
   /** Persist a trained index: the assigned corpus is written
@@ -272,28 +268,33 @@ object IvfAnn {
     */
   def save(index: Index, path: String): Unit = {
     val spark = index.assigned.sparkSession
-    import spark.implicits._
-    index.assigned.write.mode("overwrite").partitionBy("__list").parquet(s"$path/assigned")
-    index.centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("list", "centroid")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
+    Store.write(spark, path)(
+      Store.Put("assigned", index.assigned, Some("__list")),
+      centroidsOp(spark, index.centroids))
   }
+
+  /** The centroid matrix as a (list, centroid) table. */
+  private[operators] def centroidsOp(spark: SparkSession, centroids: Array[Array[Double]]): Store.Op = {
+    import spark.implicits._
+    Store.Put("centroids", centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("list", "centroid").repartition(1))
+  }
+
+  private[operators] def savedCentroids(st: Store): Array[Array[Double]] =
+    st.read("centroids")
+      .select(col("list"), col("centroid"))
+      .collect()
+      .sortBy(_.getInt(0))
+      .map(_.getSeq[Double](1).toArray)
 
   /** Load a persisted index. The assigned table is NOT eagerly cached:
     * the point of the partitioned layout is that probes read only
     * their lists from disk.
     */
   def load(spark: SparkSession, path: String, idCol: String, vecCol: String): Index = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-      .select(col("list"), col("centroid"))
-      .collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
-    val assigned = spark.read.parquet(s"$path/assigned")
-      .select(col("__id"), col("__vec"), col("__list"))
-    Index(centroids, assigned, idCol, vecCol)
+    val st = Store(spark, path)
+    Index(savedCentroids(st),
+      st.read("assigned").select(col("__id"), col("__vec"), col("__list")), idCol, vecCol)
   }
 
   /** Farthest-first traversal: seed 0 is `sample(0)` (the lowest-hash

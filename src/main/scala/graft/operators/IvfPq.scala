@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.Store
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -155,29 +157,22 @@ object IvfPq {
     */
   def save(index: Index, path: String): Unit = {
     val spark = index.encoded.sparkSession
-    import spark.implicits._
-    index.encoded.select(col("__id"), col("codes"), col("__list"))
-      .write.mode("overwrite").partitionBy("__list").parquet(s"$path/encoded")
-    index.centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("list", "centroid")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
-    ProductQuantizer.save(index.cb, spark, s"$path/pq")
+    Store.write(spark, path)(Seq(
+      Store.Put("encoded", index.encoded.select(col("__id"), col("codes"), col("__list")),
+        Some("__list")),
+      IvfAnn.centroidsOp(spark, index.centroids)) ++
+      ProductQuantizer.ops(index.cb, spark).map(Store.nest("pq")): _*)
   }
 
   /** Load a persisted composed index. The encoded table is NOT
     * eagerly cached: probes read only their list directories.
     */
   def load(spark: org.apache.spark.sql.SparkSession, path: String, idCol: String): Index = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-      .select(col("list"), col("centroid"))
-      .collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
+    val st = Store(spark, path)
     Index(
-      centroids,
-      ProductQuantizer.load(spark, s"$path/pq"),
-      spark.read.parquet(s"$path/encoded").select(col("__id"), col("__list"), col("codes")),
+      IvfAnn.savedCentroids(st),
+      ProductQuantizer.open(st.nested("pq")),
+      st.read("encoded").select(col("__id"), col("__list"), col("codes")),
       idCol)
   }
 }

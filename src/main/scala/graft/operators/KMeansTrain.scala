@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.Store
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -176,8 +178,7 @@ object KMeansTrain {
       spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     import spark.implicits._
-    centroids.toDF("cl", "c")
-      .repartition(1).write.mode("overwrite").parquet(path)
+    Store.write(spark, path)(Store.Put("", centroids.toDF("cl", "c").repartition(1)))
   }
 
   /** Load a persisted centroid table, cluster-id ascending.
@@ -187,7 +188,7 @@ object KMeansTrain {
   def loadCentroids(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[(Int, Seq[Long])] =
-    spark.read.parquet(path)
+    Store(spark, path).read("")
       .collect() // bounded: k rows
       .map(r => (r.getInt(0), r.getSeq[Long](1)))
       .sortBy(_._1)

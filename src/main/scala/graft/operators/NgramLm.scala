@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.sources.Store
 
 import org.apache.spark.sql.{DataFrame, GraftColumnShim, SparkSession}
 import org.apache.spark.sql.functions._
@@ -174,25 +175,22 @@ object NgramLm {
     * stores), vocabulary size in a one-row meta parquet.
     */
   def save(model: Model, path: String, prefixBuckets: Int = 64): Unit = {
-    require(prefixBuckets > 0, "prefixBuckets must be positive")
     val spark = model.bigrams.sparkSession
-    import spark.implicits._
-    model.bigrams.select(col("ctx"), col("w"), col("c"))
-      .withColumn("__cp", pmod(xxhash64(col("ctx")), lit(prefixBuckets.toLong)).cast("int"))
-      .write.mode("overwrite").partitionBy("__cp").parquet(s"$path/bigrams")
-    model.contexts.select(col("ctx"), col("c_ctx"))
-      .withColumn("__cp", pmod(xxhash64(col("ctx")), lit(prefixBuckets.toLong)).cast("int"))
-      .write.mode("overwrite").partitionBy("__cp").parquet(s"$path/contexts")
-    Seq(model.vocabSize).toDF("vocabSize")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+    val cp = Store.prefix(prefixBuckets, col("ctx"))
+    Store.write(spark, path)(
+      Store.Put("bigrams", model.bigrams.select(col("ctx"), col("w"), col("c")).withColumn("__cp", cp),
+        Some("__cp")),
+      Store.Put("contexts", model.contexts.select(col("ctx"), col("c_ctx")).withColumn("__cp", cp),
+        Some("__cp")),
+      Store.meta(spark, "vocabSize" -> model.vocabSize))
   }
 
   /** Load a persisted model; nothing is eagerly cached. */
   def load(spark: SparkSession, path: String): Model = {
-    val vocab = spark.read.parquet(s"$path/meta").head().getAs[Long]("vocabSize")
+    val st = Store(spark, path)
     Model(
-      spark.read.parquet(s"$path/bigrams").select(col("ctx"), col("w"), col("c")),
-      spark.read.parquet(s"$path/contexts").select(col("ctx"), col("c_ctx")),
-      vocab)
+      st.read("bigrams").select(col("ctx"), col("w"), col("c")),
+      st.read("contexts").select(col("ctx"), col("c_ctx")),
+      st.meta.getAs[Long]("vocabSize"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.NearestCentroidL2
+import graft.sources.Store
 
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnShim}
 import org.apache.spark.sql.functions._
@@ -201,27 +202,32 @@ object ProductQuantizer {
     * session ([[IvfAnn.save]] is the sibling for the assigned-corpus
     * index; the books are a few KB, so layout is trivial).
     */
-  def save(cb: Codebooks, spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+  def save(cb: Codebooks, spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    Store.write(spark, path)(ops(cb, spark): _*)
+
+  /** [[save]]'s write, for a store nested in another. */
+  private[operators] def ops(cb: Codebooks, spark: org.apache.spark.sql.SparkSession): Seq[Store.Op] = {
     import spark.implicits._
-    cb.books.zipWithIndex
-      .flatMap { case (book, s) =>
-        book.zipWithIndex.map { case (c, code) => (s, code, c) }
-      }
-      .toDF("sub", "code", "centroid")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/books")
-    Seq((cb.m, cb.dsub)).toDF("m", "dsub")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+    Seq(
+      Store.Put("books", cb.books.zipWithIndex
+        .flatMap { case (book, s) =>
+          book.zipWithIndex.map { case (c, code) => (s, code, c) }
+        }
+        .toDF("sub", "code", "centroid").repartition(1)),
+      Store.meta(spark, "m" -> cb.m, "dsub" -> cb.dsub))
   }
 
   /** Load persisted codebooks; encoding with them is bit-identical to
     * encoding with the live [[train]] result (ProductQuantizerSpec
     * proves the round trip).
     */
-  def load(spark: org.apache.spark.sql.SparkSession, path: String): Codebooks = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val m = meta.getAs[Int]("m")
-    val dsub = meta.getAs[Int]("dsub")
-    val rows = spark.read.parquet(s"$path/books")
+  def load(spark: org.apache.spark.sql.SparkSession, path: String): Codebooks =
+    open(Store(spark, path))
+
+  private[operators] def open(st: Store): Codebooks = {
+    val m = st.meta.getAs[Int]("m")
+    val dsub = st.meta.getAs[Int]("dsub")
+    val rows = st.read("books")
       .collect() // bounded: m * ksub rows of dsub longs
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2)))
     val bySub = rows.groupBy(_._1)

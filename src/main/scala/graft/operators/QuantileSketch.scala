@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.StagedSwap
+import graft.sources.{Store => Persisted}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -125,9 +125,6 @@ object QuantileSketch {
       mantissaBits: Int,
       prefixBuckets: Int)
 
-  private def kp(keyCols: Seq[String], buckets: Int): Column =
-    pmod(xxhash64(keyCols.map(col): _*), lit(buckets.toLong)).cast("int")
-
   /** Persist a sketch key-hash-prefix-partitioned — the [[AggStore]]
     * layout: absorbs and probes touch only the partition directories
     * their keys hash into, never the whole store.
@@ -138,34 +135,32 @@ object QuantileSketch {
       mantissaBits: Int,
       path: String,
       prefixBuckets: Int = 64): Unit = {
-    require(prefixBuckets > 0, "prefixBuckets must be positive")
     val spark = sketch.sparkSession
-    import spark.implicits._
-    sketch.withColumn("__kp", kp(keyCols, prefixBuckets))
-      .repartition(col("__kp"))
-      .write.mode("overwrite").partitionBy("__kp").parquet(s"$path/sketch")
-    Seq((prefixBuckets, mantissaBits, keyCols.mkString("\u0001")))
-      .toDF("prefixBuckets", "mantissaBits", "keyCols")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+    Persisted.write(spark, path)(
+      Persisted.Put("sketch",
+        sketch.withColumn("__kp", Persisted.prefix(prefixBuckets, keyCols.map(col): _*))
+          .repartition(col("__kp")),
+        Some("__kp")),
+      Persisted.meta(spark, "prefixBuckets" -> prefixBuckets, "mantissaBits" -> mantissaBits,
+        "keyCols" -> keyCols.mkString("\u0001")))
   }
 
   /** Load a persisted store (lazy — absorbs/probes read only their
     * prefixes).
     */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): Store = {
-    StagedSwap.recover(spark, s"$path/sketch")
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val st = Persisted(spark, path)
     Store(
-      spark.read.parquet(s"$path/sketch"),
-      meta.getAs[String]("keyCols").split('\u0001').toSeq,
-      meta.getAs[Int]("mantissaBits"),
-      meta.getAs[Int]("prefixBuckets"))
+      st.read("sketch"),
+      st.meta.getAs[String]("keyCols").split('\u0001').toSeq,
+      st.meta.getAs[Int]("mantissaBits"),
+      st.meta.getAs[Int]("prefixBuckets"))
   }
 
   /** Fold an increment into the SAVED layout at O(increment): sketch
     * the increment, read back only the store partitions its keys hash
     * into (bounded prefix collect), merge bucket counts, swap those
-    * partitions in by one [[StagedSwap]] commit. Absorb == rebuild
+    * partitions in by one store write. Absorb == rebuild
     * exactly — bucket counts are a commutative monoid.
     */
   def absorbIntoSaved(
@@ -174,16 +169,16 @@ object QuantileSketch {
       increment: DataFrame,
       valueCol: Column): Unit = {
     val st = load(spark, path)
+    val kp = Persisted.prefix(st.prefixBuckets, st.keyCols.map(col): _*)
     val inc = build(increment, st.keyCols, valueCol, st.mantissaBits)
-      .withColumn("__kp", kp(st.keyCols, st.prefixBuckets))
+      .withColumn("__kp", kp)
       .persist()
-    val touched = inc.select(col("__kp")).distinct().collect().map(_.getInt(0)).toSeq
-    val slice = st.sketch.filter(col("__kp").isin(touched: _*)).drop("__kp")
-    StagedSwap.overwritePartitions(spark, s"$path/sketch",
-      merge(slice, inc.drop("__kp"), st.keyCols)
-        .withColumn("__kp", kp(st.keyCols, st.prefixBuckets))
+    val slice = Persisted.pruned(st.sketch, "__kp", inc.select(col("__kp")))
+    Persisted.write(spark, path)(Persisted.Patch("sketch",
+      merge(slice.drop("__kp"), inc.drop("__kp"), st.keyCols)
+        .withColumn("__kp", kp)
         .repartition(col("__kp")),
-      Seq("__kp"))
+      "__kp"))
     inc.unpersist()
     ()
   }

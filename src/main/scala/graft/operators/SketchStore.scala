@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.Store
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Persistence for the mergeable-sketch family ([[graft.functions
@@ -20,9 +22,9 @@ object SketchStore {
 
   /** Persist a one-row (or few-row) sketch DataFrame. */
   def save(sketch: DataFrame, path: String): Unit =
-    sketch.repartition(1).write.mode("overwrite").parquet(path)
+    Store.write(sketch.sparkSession, path)(Store.Put("", sketch.repartition(1)))
 
   /** Load a persisted sketch row for in-plan merging. */
   def load(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Store(spark, path).read("")
 }

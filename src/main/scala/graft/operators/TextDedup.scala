@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.sources.Store
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -572,13 +573,6 @@ object TextDedup {
     def unpersist(): Unit = { sigs.unpersist(); bands.unpersist() }
   }
 
-  /** Hash-prefix partition key shared by the store writers and the
-    * probe-side pruning: deterministic for any key type (long gram
-    * hashes, string grams, long or md5-string band hashes).
-    */
-  private def hashPrefix(key: Column, buckets: Int): Column =
-    pmod(xxhash64(key), lit(buckets.toLong)).cast("int")
-
   /** The store-side band read of [[minhashAgainstStore]]: for a
     * disk-backed store, pruned to the increment's band-hash prefixes.
     * The collect is bounded by prefixBuckets (<= 64 values) regardless
@@ -590,9 +584,8 @@ object TextDedup {
   private[graft] def prunedStoreBands(store: MinhashStore, inBands: DataFrame): DataFrame =
     store.prefixBuckets match {
       case Some(nb) =>
-        val prefixes = inBands.select(hashPrefix(col("band_hash"), nb).as("__bp"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        store.bands.filter(col("__bp").isin(prefixes: _*)).drop("__bp")
+        Store.pruned(store.bands, "__bp", inBands.select(Store.prefix(nb, col("band_hash"))))
+          .drop("__bp")
       case None => store.bands
     }
 
@@ -605,9 +598,7 @@ object TextDedup {
   private[graft] def prunedStoreGrams(store: SpanStore, incCounts: DataFrame): DataFrame = {
     val storeGrams = store.prefixBuckets match {
       case Some(nb) =>
-        val prefixes = incCounts.select(hashPrefix(col("gram"), nb).as("__gp"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        store.grams.filter(col("__gp").isin(prefixes: _*))
+        Store.pruned(store.grams, "__gp", incCounts.select(Store.prefix(nb, col("gram"))))
       case None => store.grams
     }
     storeGrams
@@ -694,30 +685,32 @@ object TextDedup {
     * layout); the signature table and a one-row meta parquet ride
     * along.
     */
-  def saveMinhashStore(store: MinhashStore, path: String, prefixBuckets: Int = 64): Unit = {
-    require(prefixBuckets > 0, "prefixBuckets must be positive")
-    val spark = store.sigs.sparkSession
-    import spark.implicits._
-    store.bands.select(col("id"), col("band"), col("band_hash"))
-      .withColumn("__bp", hashPrefix(col("band_hash"), prefixBuckets))
-      .write.mode("overwrite").partitionBy("__bp").parquet(s"$path/bands")
-    store.sigs.select(col("id"), col("sig"))
-      .write.mode("overwrite").parquet(s"$path/sigs")
-    Seq(prefixBuckets).toDF("prefixBuckets")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+  def saveMinhashStore(store: MinhashStore, path: String, prefixBuckets: Int = 64): Unit =
+    Store.write(store.sigs.sparkSession, path)(minhashOps(store, prefixBuckets, append = false): _*)
+
+  /** The write of `rows` into a store of `prefixBuckets` band-prefix
+    * buckets — whole tables plus meta, or (`append`) new data files —
+    * for the store alone or nested in another.
+    */
+  private[graft] def minhashOps(
+      rows: MinhashStore, prefixBuckets: Int, append: Boolean): Seq[Store.Op] = {
+    val bands = rows.bands.select(col("id"), col("band"), col("band_hash"))
+      .withColumn("__bp", Store.prefix(prefixBuckets, col("band_hash")))
+    val sigs = rows.sigs.select(col("id"), col("sig"))
+    if (append) Seq(Store.Add("bands", bands, Some("__bp")), Store.Add("sigs", sigs))
+    else Seq(Store.Put("bands", bands, Some("__bp")), Store.Put("sigs", sigs),
+      Store.meta(rows.sigs.sparkSession, "prefixBuckets" -> prefixBuckets))
   }
 
   /** Load a persisted [[MinhashStore]]. Nothing is eagerly cached: the
     * partitioned layout exists so probes read only their band-hash
     * prefixes from disk.
     */
-  def loadMinhashStore(spark: org.apache.spark.sql.SparkSession, path: String): MinhashStore = {
-    val nb = spark.read.parquet(s"$path/meta").head().getAs[Int]("prefixBuckets")
-    MinhashStore(
-      spark.read.parquet(s"$path/sigs"),
-      spark.read.parquet(s"$path/bands"),
-      Some(nb))
-  }
+  def loadMinhashStore(spark: org.apache.spark.sql.SparkSession, path: String): MinhashStore =
+    minhashStore(Store(spark, path))
+
+  private[graft] def minhashStore(st: Store): MinhashStore =
+    MinhashStore(st.read("sigs"), st.read("bands"), Some(st.meta.getAs[Int]("prefixBuckets")))
 
   /** Fold an ingest round's SURVIVORS (the increment rows that
     * [[minhashAgainstStore]] did not match) into the store without
@@ -742,7 +735,7 @@ object TextDedup {
     val newBands = store.prefixBuckets match {
       case Some(nb) =>
         bandTable(sigs, numHashes, bands, scheme)
-          .withColumn("__bp", hashPrefix(col("band_hash"), nb))
+          .withColumn("__bp", Store.prefix(nb, col("band_hash")))
       case None => bandTable(sigs, numHashes, bands, scheme)
     }
     val mergedSigs = store.sigs.unionByName(sigs).persist()
@@ -754,11 +747,10 @@ object TextDedup {
   }
 
   /** [[absorbIntoMinhashStore]] for a PERSISTED store: sign and band
-    * the survivors, then dynamic-partition-APPEND into the saved
-    * layout — only the band-hash prefixes that receive rows gain
-    * files; existing directories are untouched. The 100 TB ingest
-    * path: no store read, no rewrite, probes keep pruning at the
-    * directory level.
+    * the survivors, then add them to the saved layout in one store
+    * write — only the band-hash prefixes that receive rows gain files;
+    * existing files are untouched. The 100 TB ingest path: no store
+    * read, no rewrite, probes keep pruning at the directory level.
     */
   def appendToSavedMinhashStore(
       spark: org.apache.spark.sql.SparkSession,
@@ -770,14 +762,10 @@ object TextDedup {
       bands: Int = defaultBands,
       shingler: (Column, Column) => Column = (toks, _) => TextFunctions.ngramsFromTokens(toks, 3),
       scheme: MinhashScheme = XxHash64Scheme): Unit = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val nb = spark.read.parquet(s"$path/meta").head().getAs[Int]("prefixBuckets")
-    val (tokenized, shingled, sigs) = stagedSignatures(survivors, idCol, textCol, numHashes, shingler, scheme)
-    bandTable(sigs, numHashes, bands, scheme)
-      .withColumn("__bp", hashPrefix(col("band_hash"), nb))
-      .write.mode("append").partitionBy("__bp").parquet(s"$path/bands")
-    sigs.write.mode("append").parquet(s"$path/sigs")
-    tokenized.unpersist(); shingled.unpersist(); sigs.unpersist()
+    val inc = buildMinhashStore(survivors, idCol, textCol, numHashes, bands, shingler, scheme)
+    try Store.write(spark, path)(
+      minhashOps(inc, Store(spark, path).meta.getAs[Int]("prefixBuckets"), append = true): _*)
+    finally inc.unpersist()
   }
 
   /** Exact duplicated-SPAN removal — the substring-level dedup family
@@ -980,27 +968,26 @@ object TextDedup {
     * self-describing.
     */
   def saveSpanStore(store: SpanStore, path: String, prefixBuckets: Int = 64): Unit = {
-    require(prefixBuckets > 0, "prefixBuckets must be positive")
     val spark = store.grams.sparkSession
-    import spark.implicits._
-    store.grams.groupBy(col("gram")).agg(sum(col("n")).as("n"))
-      .withColumn("__gp", hashPrefix(col("gram"), prefixBuckets))
-      .write.mode("overwrite").partitionBy("__gp").parquet(s"$path/grams")
-    Seq((store.k, store.hashedGramKeys, prefixBuckets))
-      .toDF("k", "hashedGramKeys", "prefixBuckets")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+    Store.write(spark, path)(
+      Store.Put("grams",
+        store.grams.groupBy(col("gram")).agg(sum(col("n")).as("n"))
+          .withColumn("__gp", Store.prefix(prefixBuckets, col("gram"))),
+        Some("__gp")),
+      Store.meta(spark,
+        "k" -> store.k, "hashedGramKeys" -> store.hashedGramKeys, "prefixBuckets" -> prefixBuckets))
   }
 
   /** Load a persisted [[SpanStore]]. Nothing is eagerly cached: probes
     * prune the partitioned layout on disk.
     */
   def loadSpanStore(spark: org.apache.spark.sql.SparkSession, path: String): SpanStore = {
-    val m = spark.read.parquet(s"$path/meta").head()
+    val st = Store(spark, path)
     SpanStore(
-      spark.read.parquet(s"$path/grams"),
-      m.getAs[Int]("k"),
-      m.getAs[Boolean]("hashedGramKeys"),
-      Some(m.getAs[Int]("prefixBuckets")))
+      st.read("grams"),
+      st.meta.getAs[Int]("k"),
+      st.meta.getAs[Boolean]("hashedGramKeys"),
+      Some(st.meta.getAs[Int]("prefixBuckets")))
   }
 
   /** Fold an ingest round's increment into the store without
@@ -1021,7 +1008,7 @@ object TextDedup {
     val grams = stagedSpanGrams(toks, store.k, store.hashedGramKeys)
     val delta0 = grams.groupBy(col("gram")).agg(count(lit(1)).as("n"))
     val delta = store.prefixBuckets match {
-      case Some(nb) => delta0.withColumn("__gp", hashPrefix(col("gram"), nb))
+      case Some(nb) => delta0.withColumn("__gp", Store.prefix(nb, col("gram")))
       case None => delta0
     }
     val deltaP = delta.persist()
@@ -1032,8 +1019,8 @@ object TextDedup {
   }
 
   /** [[absorbIntoSpanStore]] for a PERSISTED store: count the
-    * increment's windows and dynamic-partition-APPEND the deltas into
-    * the saved layout — only the gram prefixes that receive rows gain
+    * increment's windows and add the deltas to the saved layout in one
+    * store write — only the gram prefixes that receive rows gain
     * files, nothing is read back or rewritten (the additive-counts
     * contract makes upsert unnecessary). Re-save via [[saveSpanStore]]
     * to compact when delta files accumulate.
@@ -1044,14 +1031,14 @@ object TextDedup {
       increment: DataFrame,
       idCol: String,
       textCol: String): Unit = {
-    val m = spark.read.parquet(s"$path/meta").head()
-    val nb = m.getAs[Int]("prefixBuckets")
+    val st = Store(spark, path)
     val toks = stagedSpanTokens(increment, idCol, textCol)
-    val grams = stagedSpanGrams(toks, m.getAs[Int]("k"), m.getAs[Boolean]("hashedGramKeys"))
-    grams.groupBy(col("gram")).agg(count(lit(1)).as("n"))
-      .withColumn("__gp", hashPrefix(col("gram"), nb))
-      .write.mode("append").partitionBy("__gp").parquet(s"$path/grams")
-    toks.unpersist(); grams.unpersist()
+    val grams = stagedSpanGrams(toks, st.meta.getAs[Int]("k"), st.meta.getAs[Boolean]("hashedGramKeys"))
+    try Store.write(spark, path)(Store.Add("grams",
+      grams.groupBy(col("gram")).agg(count(lit(1)).as("n"))
+        .withColumn("__gp", Store.prefix(st.meta.getAs[Int]("prefixBuckets"), col("gram"))),
+      Some("__gp")))
+    finally { toks.unpersist(); grams.unpersist(); () }
   }
 
   /** Persist + materialize `result`, then release the intermediate

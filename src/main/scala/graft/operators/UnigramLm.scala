@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
-import graft.sources.StagedSwap
+import graft.sources.Store
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -311,29 +311,27 @@ object UnigramLm {
     * artifact a training pipeline trains once and ships everywhere
     * (the [[ProductQuantizer.save]] lifecycle).
     */
-  def save(vocab: Vocab, spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+  def save(vocab: Vocab, spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    Store.write(spark, path)(vocabOps(vocab, spark): _*)
+
+  private def vocabOps(vocab: Vocab, spark: org.apache.spark.sql.SparkSession): Seq[Store.Op] = {
     import spark.implicits._
-    vocab.pieces.toDF("piece", "n", "lp")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/pieces")
-    Seq(Tuple1(vocab.maxPieceLen)).toDF("maxPieceLen")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+    Seq(
+      Store.Put("pieces", vocab.pieces.toDF("piece", "n", "lp").repartition(1)),
+      Store.meta(spark, "maxPieceLen" -> vocab.maxPieceLen))
   }
 
   /** Load a persisted vocabulary; piece order is canonicalized so the
     * round trip is value-identical to the trained artifact.
     */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): Vocab = {
-    StagedSwap.recover(spark, s"$path/words")
-    val maxPieceLen = spark.read.parquet(s"$path/meta").head().getAs[Int]("maxPieceLen")
-    val pieces = spark.read.parquet(s"$path/pieces")
+    val st = Store(spark, path)
+    val pieces = st.read("pieces")
       .collect()
       .map(r => (r.getAs[String]("piece"), r.getAs[Long]("n"), r.getAs[Long]("lp")))
       .sortBy(_._1)
-    Vocab(pieces.toSeq, maxPieceLen)
+    Vocab(pieces.toSeq, st.meta.getAs[Int]("maxPieceLen"))
   }
-
-  private def kpW(c: Column, buckets: Int): Column =
-    pmod(xxhash64(c), lit(buckets.toLong)).cast("int")
 
   /** Train AND persist the full train state: the vocabulary artifact
     * ([[save]]'s layout, so [[load]] serves it unchanged) plus the
@@ -354,19 +352,17 @@ object UnigramLm {
     require(maxPieceLen >= 1 && topMulti >= 0 && emIters >= 0 && prefixBuckets > 0,
       "bad unigram-LM params")
     val spark = docs.sparkSession
-    import spark.implicits._
     val words = wordTable(docs, textCol, maxWordLen).persist()
     words.count()
     try {
       val vocab = trainFromWords(words, maxPieceLen, topMulti, emIters, pruneMultiTo)
-      save(vocab, spark, path)
-      words.withColumn("__kp", kpW(col("w"), prefixBuckets))
-        .repartition(col("__kp"))
-        .write.mode("overwrite").partitionBy("__kp").parquet(s"$path/words")
-      Seq((topMulti, emIters, maxWordLen,
-          pruneMultiTo.map(_.toLong).map(java.lang.Long.valueOf).orNull, prefixBuckets))
-        .toDF("topMulti", "emIters", "maxWordLen", "pruneMultiTo", "prefixBuckets")
-        .repartition(1).write.mode("overwrite").parquet(s"$path/params")
+      Store.write(spark, path)(vocabOps(vocab, spark) ++ Seq(
+        Store.Put("words",
+          words.withColumn("__kp", Store.prefix(prefixBuckets, col("w"))).repartition(col("__kp")),
+          Some("__kp")),
+        Store.row(spark, "params", "topMulti" -> topMulti, "emIters" -> emIters,
+          "maxWordLen" -> maxWordLen, "pruneMultiTo" -> typedLit(pruneMultiTo.map(_.toLong)),
+          "prefixBuckets" -> prefixBuckets)): _*)
       vocab
     } finally { words.unpersist(); () }
   }
@@ -374,10 +370,11 @@ object UnigramLm {
   /** Fold a corpus increment into the SAVED train state and re-emit
     * the vocabulary — the [[Bm25.absorbIntoSaved]] lifecycle for the
     * tokenizer: the increment is word-counted (the only corpus-sized
-    * work), its counts merge into the word table's touched hash
-    * partitions only (directory-pruned read, one staged swap — the
-    * AggStore absorb shape), and seeding + EM re-run over the
-    * VOCABULARY-sized merged word table. Because word counts are a
+    * work), its counts merge into the VOCABULARY-sized word table,
+    * seeding + EM re-run over the merged table, and the touched word
+    * partitions, the pieces and the meta swap in by ONE store write —
+    * a killed absorb leaves the old words next to the old vocabulary,
+    * never new words next to an old one. Because word counts are a
     * commutative monoid and everything downstream of the word table is
     * a deterministic function of it, absorb-then-train equals
     * retraining on the full corpus EXACTLY (UnigramLmSpec's
@@ -389,36 +386,31 @@ object UnigramLm {
       path: String,
       newDocs: DataFrame,
       textCol: String): Vocab = {
-    StagedSwap.recover(spark, s"$path/words")
-    val p = spark.read.parquet(s"$path/params").head()
+    val st = Store(spark, path)
+    val p = st.read("params").head()
     val topMulti = p.getAs[Int]("topMulti")
     val emIters = p.getAs[Int]("emIters")
     val maxWordLen = p.getAs[Int]("maxWordLen")
     val pruneMultiTo = Option(p.getAs[java.lang.Long]("pruneMultiTo")).map(_.toInt)
     val buckets = p.getAs[Int]("prefixBuckets")
-    val maxPieceLen = spark.read.parquet(s"$path/meta").head().getAs[Int]("maxPieceLen")
     val inc = wordTable(newDocs, textCol, maxWordLen)
-      .withColumn("__kp", kpW(col("w"), buckets))
+      .withColumn("__kp", Store.prefix(buckets, col("w")))
       .persist()
-    val touched = inc.select(col("__kp")).distinct().collect().map(_.getInt(0)).toSeq
-    val slice = spark.read.parquet(s"$path/words")
-      .filter(col("__kp").isin(touched: _*)).drop("__kp")
-    StagedSwap.overwritePartitions(spark, s"$path/words",
-      slice
-        .join(inc.drop("__kp").withColumnRenamed("wn", "__wn2"), Seq("w"), "full_outer")
-        .select(col("w"),
-          (coalesce(col("wn"), lit(0L)) + coalesce(col("__wn2"), lit(0L))).as("wn"))
-        .withColumn("__kp", kpW(col("w"), buckets))
-        .repartition(col("__kp")),
-      Seq("__kp"))
-    inc.unpersist()
-    val words = spark.read.parquet(s"$path/words").drop("__kp").persist()
+    val words = st.read("words").drop("__kp")
+      .join(inc.drop("__kp").withColumnRenamed("wn", "__wn2"), Seq("w"), "full_outer")
+      .select(col("w"),
+        (coalesce(col("wn"), lit(0L)) + coalesce(col("__wn2"), lit(0L))).as("wn"))
+      .persist()
     words.count()
     try {
-      val vocab = trainFromWords(words, maxPieceLen, topMulti, emIters, pruneMultiTo)
-      save(vocab, spark, path)
+      val vocab = trainFromWords(words, st.meta.getAs[Int]("maxPieceLen"), topMulti, emIters,
+        pruneMultiTo)
+      val touched = Store.pruned(words.withColumn("__kp", Store.prefix(buckets, col("w"))),
+        "__kp", inc.select(col("__kp")))
+      Store.write(spark, path)(
+        vocabOps(vocab, spark) :+ Store.Patch("words", touched.repartition(col("__kp")), "__kp"): _*)
       vocab
-    } finally { words.unpersist(); () }
+    } finally { words.unpersist(); inc.unpersist(); () }
   }
 
   /** Segment a text column under a trained vocab: tokens above

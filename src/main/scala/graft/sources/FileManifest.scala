@@ -204,32 +204,26 @@ object FileManifest {
   // — never re-read old footers) -----
 
   /** Persist a manifest, partitioned by stat column so per-column
-    * pruning reads only its directory. Written through the staged
-    * swap ([[StagedSwap.rotateIn]]): a reader never sees a half-written
-    * manifest and a crash rolls back to the previous one.
+    * pruning reads only its directory. One store write: a reader never
+    * sees a half-written manifest and a crash rolls back to the
+    * previous one.
     */
-  def saveManifest(manifest: DataFrame, path: String): Unit = {
-    val spark = manifest.sparkSession
-    StagedSwap.rotateIn(spark, path) { stage =>
-      manifest.write.mode("overwrite").partitionBy("column").parquet(stage)
-      ()
-    }
-  }
+  def saveManifest(manifest: DataFrame, path: String): Unit =
+    Store.write(manifest.sparkSession, path)(Store.Put("", manifest, Some("column")))
 
-  /** Load a saved manifest (healing a crashed swap first). */
-  def loadManifest(spark: SparkSession, path: String): DataFrame = {
-    StagedSwap.recover(spark, path)
-    spark.read.parquet(path)
+  /** Load a saved manifest (healing a crashed write first). */
+  def loadManifest(spark: SparkSession, path: String): DataFrame =
+    Store(spark, path).read("")
       .select(col("file"), col("column"), col("n_rows"), col("min_v"),
         col("max_v"), col("min_s"), col("max_s"), col("n_nulls"))
-  }
 
   /** Incremental maintenance: stat ONLY the table files the saved
-    * manifest has not seen and append their rows — O(new files) footer
+    * manifest has not seen and add their rows — O(new files) footer
     * reads per ingest instead of a full rebuild, the table-format-log
-    * maintenance shape. Appends land per-column-partition; existing
-    * directories are untouched. The known-file set collects to the
-    * driver — the same memory class as the table's file listing.
+    * maintenance shape. New rows land per-column-partition as new
+    * files in one store write; existing files are untouched. The
+    * known-file set collects to the driver — the same memory class as
+    * the table's file listing.
     *
     * @return number of new files statted (0 = manifest already
     *         current; nothing written)
@@ -239,20 +233,18 @@ object FileManifest {
       tablePath: String,
       manifestPath: String,
       statCols: Seq[String]): Long = {
-    StagedSwap.recover(spark, manifestPath)
-    val known = spark.read.parquet(manifestPath)
+    val known = loadManifest(spark, manifestPath)
       .select(col("file")).distinct().collect().map(_.getString(0)).toSet
     val fresh = listParquetFiles(spark, tablePath).filterNot(known)
-    if (fresh.nonEmpty) {
-      buildForFiles(spark, fresh, statCols)
-        .write.mode("append").partitionBy("column").parquet(manifestPath)
-    }
+    if (fresh.nonEmpty)
+      Store.write(spark, manifestPath)(
+        Store.Add("", buildForFiles(spark, fresh, statCols), Some("column")))
     fresh.size.toLong
   }
 
   /** Drop manifest rows for files the table no longer has (compaction
     * / OPTIMIZE rewrote them): one listing, one anti-filter, one
-    * staged rewrite. Without this, [[readPruned]] over a saved
+    * store write. Without this, [[readPruned]] over a saved
     * manifest would address dead paths.
     *
     * @return number of files whose rows were dropped
@@ -262,28 +254,18 @@ object FileManifest {
       tablePath: String,
       manifestPath: String): Long = {
     import spark.implicits._
-    StagedSwap.recover(spark, manifestPath)
+    val saved = loadManifest(spark, manifestPath)
     val livingSeq = listParquetFiles(spark, tablePath)
     require(livingSeq.nonEmpty,
       s"vacuumManifest: $tablePath has no parquet files — an all-files vacuum " +
         "would leave an unreadable empty manifest; drop the manifest dir instead")
     val living = livingSeq.toSet
-    val saved = spark.read.parquet(manifestPath)
     val stale = saved.select(col("file")).distinct()
       .collect().map(_.getString(0)).filterNot(living)
-    if (stale.nonEmpty) {
-      val kept = saved
-        .join(spark.createDataset(livingSeq).toDF("file"), Seq("file"), "left_semi")
-        .select(col("file"), col("column"), col("n_rows"), col("min_v"),
-          col("max_v"), col("min_s"), col("max_s"), col("n_nulls"))
-        // the rewrite reads the very files it replaces: cut lineage
-        // BEFORE the swap deletes them out from under the plan
-        .localCheckpoint(true)
-      StagedSwap.rotateIn(spark, manifestPath) { stage =>
-        kept.write.mode("overwrite").partitionBy("column").parquet(stage)
-        ()
-      }
-    }
+    if (stale.nonEmpty)
+      saveManifest(
+        saved.join(spark.createDataset(livingSeq).toDF("file"), Seq("file"), "left_semi"),
+        manifestPath)
     stale.length.toLong
   }
 

@@ -6,8 +6,10 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one commit protocol of every staged store — MergeEngine tables,
-  * the persisted BM25/aggregate/sketch/word stores, saved file
-  * manifests, compaction layouts, curation counters. It plays the
+  * compaction layouts, and every persisted store through the store
+  * layer ([[Store.write]]: BM25, aggregate, sketch, word, cluster,
+  * dedup, media-hash, IVF/PQ/k-means, n-gram LM, file-manifest and
+  * curation stores, one commit per store operation). It plays the
   * role Delta's transaction log plays for the reference's per-batch
   * MERGE (reference: src/kafka2delta/stream/stream.py:114-148): a
   * write is visible completely or not at all, and a crashed write is
@@ -217,8 +219,8 @@ private[graft] object StagedSwap {
   /** Stage `df` partitioned by `partCols` and swap in exactly the units
     * it produced — its partition dirs, or with no partition columns its
     * data files — removing `removed(touched)` in the same transaction:
-    * the staged-partition write of MergeEngine tables and of the
-    * `__kp`-partitioned absorb stores. Returns the touched units.
+    * the staged-partition write of MergeEngine tables. Returns the
+    * touched units.
     */
   def overwritePartitions(
       spark: SparkSession,

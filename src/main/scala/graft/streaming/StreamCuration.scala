@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.functions.TextFunctions
 import graft.operators.TextDedup
+import graft.sources.Store
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,7 +15,8 @@ import org.apache.spark.sql.functions._
   * forever-running ingest keeps the same corpus a batch rerun would
   * rebuild.
   *
-  * Store layout at `path` (the AggStore/Bm25 absorb lifecycle):
+  * Store layout at `path` (a [[Store]]; each batch is ONE write, so a
+  * killed batch replays from the old state whole):
   * `seen/` is an append-only fingerprint table PARTITIONED by a
   * 64-bucket fingerprint-hash prefix (`__fpb` — the TextDedup band-
   * store pattern): each batch's anti-join probe derives an `isin`
@@ -27,8 +29,8 @@ import org.apache.spark.sql.functions._
   * fingerprint and that winner is either kept (fingerprint appended)
   * or was itself dropped against the store (fingerprint already
   * present). `counters/` is the one-row-per-split cumulative tally,
-  * folded monoidally (sum of sums) and rewritten through a lineage
-  * cut each batch — split rows, never corpus rows.
+  * folded monoidally (sum of sums) and replaced each batch — split
+  * rows, never corpus rows.
   *
   * Differential contract (StreamCurationSpec): after ANY sequence of
   * micro-batches, [[loadCounters]] equals [[batchChain]] over the
@@ -54,85 +56,42 @@ object StreamCuration {
     * store size while keeping per-directory file counts sane at scale.
     */
   private val SeenBuckets = 64
-  private def fpb(fp: Column): Column =
-    pmod(xxhash64(fp), lit(SeenBuckets.toLong)).cast("int")
-
-  /** Layout probe for the `seen/` store. `Partitioned` is the current
-    * `__fpb=` directory layout; `Flat` is the pre-prefix layout (plain
-    * parquet files at the root — still readable, migrated on the next
-    * append); `Absent` covers both a missing dir and the
-    * _temporary-only husk a crash during the very first append leaves
-    * (no committed data: treating it as absent is exactly right, and
-    * the stray dir is cleaned up by the next append's overwrite-free
-    * commit).
-    */
-  private sealed trait SeenLayout
-  private case object SeenAbsent extends SeenLayout
-  private case object SeenFlat extends SeenLayout
-  private case object SeenPartitioned extends SeenLayout
-
-  private def seenLayout(spark: SparkSession, path: String): SeenLayout = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/seen")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) SeenAbsent
-    else {
-      val entries = fs.listStatus(p)
-      if (entries.exists(e => e.isDirectory && e.getPath.getName.startsWith("__fpb=")))
-        SeenPartitioned
-      else if (entries.exists(e => e.isFile && e.getPath.getName.endsWith(".parquet")))
-        SeenFlat
-      else SeenAbsent // _SUCCESS/_temporary husk: nothing committed
-    }
-  }
 
   /** The store side of the exact-dedup anti-join, pruned to the
     * batch's fingerprint prefixes: the collect is bounded by
     * [[SeenBuckets]] values, and the resulting `isin` filter reaches
     * the scan as PartitionFilters (StreamCurationSpec plan-asserts
     * it) — per batch the store read is O(matching directories), never
-    * O(corpus). The store bootstraps on the first non-empty append,
-    * so a fresh store reads as an empty probe side.
+    * O(corpus). `seen/` appears with the first batch that keeps a
+    * document, so a fresh store reads as an empty probe side.
     */
-  private[graft] def prunedSeen(spark: SparkSession, path: String, probe: DataFrame): DataFrame = {
-    import spark.implicits._
-    seenLayout(spark, path) match {
-      case SeenAbsent => Seq.empty[String].toDF("fp")
-      case SeenFlat =>
-        // pre-prefix store: still correct, just unpruned (one full
-        // read); the next appendSeen migrates it to the partitioned
-        // layout so this branch is transient
-        spark.read.parquet(s"$path/seen").select(col("fp"))
-      case SeenPartitioned =>
-        val prefixes = probe.select(fpb(col("fp")).as("__fpb"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        spark.read.parquet(s"$path/seen")
-          .filter(col("__fpb").isin(prefixes: _*)).select(col("fp"))
-    }
-  }
+  private[graft] def prunedSeen(spark: SparkSession, path: String, probe: DataFrame): DataFrame =
+    prunedSeen(Store(spark, path), probe)
 
-  /** Dynamic-partition-append the survivors' fingerprints: only the
-    * prefixes that receive rows gain files. A zero-row append is
-    * SKIPPED — dynamic partitioning would write a file-less directory
-    * that breaks later schema inference. A legacy FLAT store migrates
-    * here first (one staged rewrite into the partitioned layout — a
-    * mixed root-files-plus-partition-dirs layout would break partition
-    * discovery outright).
+  private def prunedSeen(st: Store, probe: DataFrame): DataFrame =
+    if (!st.exists("seen")) probe.select(col("fp")).limit(0)
+    else Store.pruned(st.read("seen"), "__fpb", probe.select(Store.prefix(SeenBuckets, col("fp"))))
+      .select(col("fp"))
+
+  /** The survivors' fingerprints, added to `seen/`: only the prefixes
+    * that receive rows gain files, and a batch that keeps nothing
+    * writes nothing.
     */
-  private def appendSeen(spark: SparkSession, path: String, survivors: DataFrame): Unit = {
-    if (seenLayout(spark, path) == SeenFlat) {
-      val migrated = spark.read.parquet(s"$path/seen")
-        .select(col("fp"), fpb(col("fp")).as("__fpb"))
-        .localCheckpoint(true)
-      graft.sources.StagedSwap.rotateIn(spark, s"$path/seen") { stage =>
-        migrated.write.mode("overwrite").partitionBy("__fpb").parquet(stage)
-        ()
-      }
-    }
-    if (!survivors.isEmpty) {
-      survivors.select(col("fp"), fpb(col("fp")).as("__fpb"))
-        .write.mode("append").partitionBy("__fpb").parquet(s"$path/seen")
-    }
-  }
+  private def seenOp(survivors: DataFrame): Store.Op =
+    Store.Add("seen", survivors.select(col("fp"), Store.prefix(SeenBuckets, col("fp")).as("__fpb")),
+      Some("__fpb"))
+
+  /** The counter fold: the tally plus the kept docs' split counts. */
+  private def countersOp(st: Store, kept: DataFrame): Store.Op =
+    Store.Put("counters", st.read("counters")
+      .unionByName(kept
+        .select(splitOf(bucket(col("__id"))).as("split"),
+          size(col("__ws")).cast("long").as("__nt"))
+        .groupBy(col("split"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("__nt")).as("total_tokens")))
+      .groupBy(col("split"))
+      .agg(sum(col("n_docs")).as("n_docs"), sum(col("total_tokens")).as("total_tokens"))
+      .repartition(1))
 
   private def splitOf(b: Column): Column =
     when(b < 90, lit("train")).when(b < 95, lit("val")).otherwise(lit("test"))
@@ -151,10 +110,10 @@ object StreamCuration {
     */
   def init(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
-    val seen = new org.apache.hadoop.fs.Path(s"$path/seen")
-    seen.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(seen, true)
-    Seq.empty[(String, Long, Long)].toDF("split", "n_docs", "total_tokens")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/counters")
+    Store.write(spark, path)(
+      Store.Put("counters", Seq.empty[(String, Long, Long)].toDF("split", "n_docs", "total_tokens")
+        .repartition(1)),
+      Store.Drop("seen"), Store.Drop("minhash"))
   }
 
   /** Fold one micro-batch through the full chain: gate → in-batch
@@ -168,6 +127,7 @@ object StreamCuration {
       batch: DataFrame,
       idCol: String,
       textCol: String): Unit = {
+    val st = Store(spark, path)
     val gated = qualityGate(batch, textCol)
       .select(col(idCol).as("__id"), col("__ws"),
         TextFunctions.fingerprint(col(textCol)).as("fp"))
@@ -176,36 +136,25 @@ object StreamCuration {
     // come back as a semi-join, the batch pipeline's exact-dedup shape
     val winners = gated.select(col("fp"), col("__id"))
       .groupBy(col("fp")).agg(min(col("__id")).as("__id"))
-    // the lineage cut (not a mere persist) is load-bearing: the append
+    // the lineage cut (not a mere persist) is load-bearing: the write
     // below invalidates any cached plan that reads `seen/`, and a
-    // recompute after the append would anti-join the batch against its
-    // OWN fingerprints and emit nothing
+    // recompute after it would anti-join the batch against its OWN
+    // fingerprints and emit nothing
     val fresh = gated
       .join(winners, Seq("fp", "__id"), "left_semi")
-      .join(prunedSeen(spark, path, gated), Seq("fp"), "left_anti")
+      .join(prunedSeen(st, gated), Seq("fp"), "left_anti")
       .localCheckpoint(true)
-    appendSeen(spark, path, fresh)
-    val increment = fresh
-      .select(splitOf(bucket(col("__id"))).as("split"),
-        size(col("__ws")).cast("long").as("__nt"))
-      .groupBy(col("split"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("__nt")).as("total_tokens"))
-    // monoid fold + staged rewrite: the counters table reads the same
-    // files it overwrites, so the folded frame cuts lineage first
-    val folded = spark.read.parquet(s"$path/counters")
-      .unionByName(increment)
-      .groupBy(col("split"))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("total_tokens")).as("total_tokens"))
-      .repartition(1)
-      .localCheckpoint(true)
-    folded.write.mode("overwrite").parquet(s"$path/counters")
-    folded.unpersist(); fresh.unpersist(); gated.unpersist()
+    // the seen fingerprints and the counters move together: a killed
+    // batch rolls back whole, so its replay neither finds its own
+    // fingerprints nor misses its counts
+    Store.write(spark, path)(seenOp(fresh), countersOp(st, fresh))
+    fresh.unpersist(); gated.unpersist()
     ()
   }
 
   /** The cumulative per-split tally after the batches absorbed so far. */
   def loadCounters(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/counters")
+    Store(spark, path).read("counters")
       .select(col("split"), col("n_docs"), col("total_tokens"))
 
   /** The batch twin the stream must agree with: the same gate, the
@@ -242,11 +191,6 @@ object StreamCuration {
     init(spark, path)
   }
 
-  private def minhashStoreExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/minhash/meta")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** [[absorbBatch]] with a cross-batch NEAR-dup stage: after the
     * exact-fingerprint drop, the batch's remaining docs first dedup
     * among THEMSELVES (banded candidates → components → keep the
@@ -267,6 +211,7 @@ object StreamCuration {
       idCol: String,
       textCol: String,
       threshold: Double = 0.5): Unit = {
+    val st = Store(spark, path)
     val gated = qualityGate(batch, textCol)
       .select(col(idCol).as("__id"), col(textCol).as("__text"), col("__ws"),
         TextFunctions.fingerprint(col(textCol)).as("fp"))
@@ -275,7 +220,7 @@ object StreamCuration {
       .groupBy(col("fp")).agg(min(col("__id")).as("__id"))
     val fresh = gated
       .join(winners, Seq("fp", "__id"), "left_semi")
-      .join(prunedSeen(spark, path, gated), Seq("fp"), "left_anti")
+      .join(prunedSeen(st, gated), Seq("fp"), "left_anti")
       .localCheckpoint(true)
     gated.unpersist()
     // in-batch near-dups: keep each component's minimum id
@@ -289,40 +234,28 @@ object StreamCuration {
     // cross-batch: drop docs the persisted store matches; the store
     // read prunes to this batch's band prefixes. First batch: no
     // store yet, nothing to match.
-    val hasStore = minhashStoreExists(spark, path)
+    val minhash = st.nested("minhash")
+    val hasStore = minhash.exists("meta")
     val survivors = (if (hasStore) {
-      val store = TextDedup.loadMinhashStore(spark, s"$path/minhash")
       val matched = TextDedup.minhashAgainstStore(
-        inBatchKept, store, "__id", "__text", threshold = threshold)
+        inBatchKept, TextDedup.minhashStore(minhash), "__id", "__text", threshold = threshold)
         .select(col("id").as("__id")).distinct()
       inBatchKept.join(matched, Seq("__id"), "left_anti")
     } else inBatchKept)
       .localCheckpoint(true)
-    // appends AFTER the lineage cut (the absorbBatch invalidation rule)
-    appendSeen(spark, path, survivors)
-    if (hasStore)
-      TextDedup.appendToSavedMinhashStore(
-        spark, s"$path/minhash", survivors, "__id", "__text")
-    else if (!survivors.isEmpty)
-      // an all-dropped batch must NOT bootstrap: a meta row over an
-      // empty band-partitioned layout (dynamic partitioning writes no
-      // files for zero rows) would break the next batch's load
-      TextDedup.saveMinhashStore(
-        TextDedup.buildMinhashStore(survivors, "__id", "__text"),
-        s"$path/minhash")
-    val increment = survivors
-      .select(splitOf(bucket(col("__id"))).as("split"),
-        size(col("__ws")).cast("long").as("__nt"))
-      .groupBy(col("split"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("__nt")).as("total_tokens"))
-    val folded = spark.read.parquet(s"$path/counters")
-      .unionByName(increment)
-      .groupBy(col("split"))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("total_tokens")).as("total_tokens"))
-      .repartition(1)
-      .localCheckpoint(true)
-    folded.write.mode("overwrite").parquet(s"$path/counters")
-    folded.unpersist(); survivors.unpersist(); fresh.unpersist()
+    // an all-dropped batch must NOT bootstrap the MinHash store: a meta
+    // row over an empty band-partitioned layout (dynamic partitioning
+    // writes no files for zero rows) would break the next batch's load
+    val rows = Option.when(hasStore || !survivors.isEmpty)(
+      TextDedup.buildMinhashStore(survivors, "__id", "__text"))
+    val minhashOps = rows.toSeq.flatMap(r => TextDedup.minhashOps(r,
+      if (hasStore) minhash.meta.getAs[Int]("prefixBuckets") else 64, append = hasStore))
+    // ONE write for the batch: seen fingerprints, counters and MinHash
+    // rows (the absorbBatch rule), after the lineage cut
+    Store.write(spark, path)(
+      Seq(seenOp(survivors), countersOp(st, survivors)) ++ minhashOps.map(Store.nest("minhash")): _*)
+    rows.foreach(_.unpersist())
+    survivors.unpersist(); fresh.unpersist()
     ()
   }
 

@@ -40,9 +40,8 @@ object StreamQuantiles {
     val n = batch.count()
     if (n == 0L) return 0L
     val spark = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val exists = p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    if (exists) QuantileSketch.absorbIntoSaved(spark, path, batch, valueCol)
+    if (graft.sources.Store(spark, path).exists("meta"))
+      QuantileSketch.absorbIntoSaved(spark, path, batch, valueCol)
     else QuantileSketch.save(
       QuantileSketch.build(batch, keyCols, valueCol, mantissaBits),
       keyCols, mantissaBits, path, prefixBuckets)

@@ -375,6 +375,49 @@ class MergeEngineSpec extends SparkSpec {
     graft.operators.Compaction.plan(listed, "part", "file", "bytes", total / 2)
   }
 
+  private def bm25Save(dir: String, docs: Seq[(Long, String)]): Unit =
+    graft.operators.Bm25.save(graft.operators.Bm25.build(docs.toDF("id", "text"), "id", "text"),
+      s"$dir/store", prefixBuckets = 4)
+
+  private def bm25Read(dir: String): Seq[String] = {
+    val idx = graft.operators.Bm25.load(spark, s"$dir/store")
+    rowsOf(graft.operators.Bm25.search(idx, Seq("catalyst", "parquet"), 3)) ++
+      rowsOf(idx.docs) :+ s"n=${idx.nDocs} dl=${idx.totalDl}"
+  }
+
+  private def aggSave(dir: String, keys: Range): Unit =
+    graft.operators.AggStore.save(graft.operators.AggStore.build(
+      keys.map(i => (s"k$i", i.toDouble)).toDF("k", "v"), Seq("k"), col("v")),
+      Seq("k"), s"$dir/s", prefixBuckets = 8)
+
+  private def ulmTrain(dir: String, text: String) =
+    graft.operators.UnigramLm.trainAndSave(Seq((1L, text)).toDF("doc_id", "text"),
+      "text", s"$dir/s", maxPieceLen = 3, topMulti = 4, emIters = 2, prefixBuckets = 8)
+
+  private def clustersSave(dir: String): Unit =
+    graft.operators.Clustering.saveClusters(
+      Seq((1L, 1L), (2L, 1L), (10L, 10L), (11L, 10L)).toDF("id", "cluster"),
+      s"$dir/c", prefixBuckets = 4)
+
+  /** The raw store tables: a compaction changes them, not the labels. */
+  private def clustersRead(dir: String): Seq[String] = {
+    val st = graft.operators.Clustering.loadClusters(spark, s"$dir/c")
+    rowsOf(st.labels) ++ rowsOf(st.relabels)
+  }
+
+  private def ivfVectors(from: Long): DataFrame =
+    (0L until 8L).map(i => (from + i, Seq(1.0f + (i % 2) * 5, 1.0f + i))).toDF("id", "v")
+
+  /** A gate-passing document sharing no token with any other `i`. */
+  private def curationDoc(i: Long): String = (0 until 12).map(k => s"word${i}x$k").mkString(" ")
+
+  private def curationBatch(ids: Seq[Long]): DataFrame =
+    ids.map(i => (i, curationDoc(i))).toDF("id", "text")
+
+  private def curationRead(dir: String): Seq[String] =
+    rowsOf(graft.streaming.StreamCuration.loadCounters(spark, s"$dir/c")) ++
+      rowsOf(spark.read.parquet(s"$dir/c/seen"))
+
   private val killCases = Seq(
     mergeCase("crash between stage and swap: partitioned table rolls back bit-for-bit", Seq("year"))(
       cfg => MergeEngine.upsert(spark, cfg,
@@ -431,21 +474,21 @@ class MergeEngineSpec extends SparkSpec {
           rowsOf(spark.read.parquet(s"$dir/store/docs")) :+
           s"tombstones=${new java.io.File(s"$dir/store/tombstones").exists()}"
       }),
-    KillCase("kill-point harness: AggStore.absorbIntoSaved", dir => s"$dir/s/groups",
+    KillCase("kill-point harness: AggStore.absorbIntoSaved", dir => s"$dir/s",
       dir => graft.operators.AggStore.save(graft.operators.AggStore.build(
         (0 until 20).map(i => (s"k$i", i.toDouble)).toDF("k", "v"), Seq("k"), col("v")),
         Seq("k"), s"$dir/s", prefixBuckets = 8),
       dir => graft.operators.AggStore.absorbIntoSaved(spark, s"$dir/s",
         Seq(("k1", 10.0), ("new", 4.0)).toDF("k", "v"), col("v")),
       dir => rowsOf(graft.operators.AggStore.load(spark, s"$dir/s").groups)),
-    KillCase("kill-point harness: QuantileSketch.absorbIntoSaved", dir => s"$dir/s/sketch",
+    KillCase("kill-point harness: QuantileSketch.absorbIntoSaved", dir => s"$dir/s",
       dir => graft.operators.QuantileSketch.save(graft.operators.QuantileSketch.build(
         (1L to 40L).map(i => (s"k${i % 5}", i)).toDF("k", "v"), Seq("k"), col("v"), 7),
         Seq("k"), 7, s"$dir/s", prefixBuckets = 8),
       dir => graft.operators.QuantileSketch.absorbIntoSaved(spark, s"$dir/s",
         Seq(("k1", 1000L), ("k9", 7L)).toDF("k", "v"), col("v")),
       dir => rowsOf(graft.operators.QuantileSketch.load(spark, s"$dir/s").sketch)),
-    KillCase("kill-point harness: UnigramLm.absorbIntoSaved", dir => s"$dir/s/words",
+    KillCase("kill-point harness: UnigramLm.absorbIntoSaved", dir => s"$dir/s",
       dir => {
         graft.operators.UnigramLm.trainAndSave(Seq((1L, "abab ab cd abcd")).toDF("doc_id", "text"),
           "text", s"$dir/s", maxPieceLen = 3, topMulti = 4, emIters = 2, prefixBuckets = 8)
@@ -454,7 +497,114 @@ class MergeEngineSpec extends SparkSpec {
       dir => graft.operators.UnigramLm.absorbIntoSaved(spark, s"$dir/s",
         Seq((2L, "abab abab cd"), (3L, "dd abcd ab")).toDF("doc_id", "text"), "text"),
       dir => graft.operators.UnigramLm.load(spark, s"$dir/s").pieces.map(_.toString).sorted ++
-        rowsOf(spark.read.parquet(s"$dir/s/words"))))
+        rowsOf(spark.read.parquet(s"$dir/s/words"))),
+    KillCase("kill-point harness: Bm25.save over an existing store", dir => s"$dir/store",
+      dir => {
+        bm25Save(dir, bm25Corpus)
+        graft.operators.Bm25.retractFromSaved(spark, s"$dir/store", Seq(2L).toDF("id"), "id")
+      },
+      dir => bm25Save(dir, bm25Corpus.take(1) :+ ((7L, "parquet footers and catalyst"))),
+      bm25Read),
+    KillCase("kill-point harness: Bm25.absorbIntoSaved", dir => s"$dir/store",
+      dir => bm25Save(dir, bm25Corpus),
+      dir => graft.operators.Bm25.absorbIntoSaved(spark, s"$dir/store",
+        Seq((8L, "catalyst parquet codegen")).toDF("id", "text"), "id", "text"),
+      bm25Read),
+    KillCase("kill-point harness: Bm25.retractFromSaved", dir => s"$dir/store",
+      dir => bm25Save(dir, bm25Corpus),
+      dir => graft.operators.Bm25.retractFromSaved(spark, s"$dir/store", Seq(3L).toDF("id"), "id"),
+      bm25Read),
+    KillCase("kill-point harness: AggStore.save", dir => s"$dir/s",
+      dir => aggSave(dir, 0 until 20),
+      dir => aggSave(dir, 10 until 40),
+      dir => rowsOf(graft.operators.AggStore.load(spark, s"$dir/s").groups) :+
+        graft.operators.AggStore.load(spark, s"$dir/s").prefixBuckets.toString),
+    KillCase("kill-point harness: UnigramLm.trainAndSave", dir => s"$dir/s",
+      dir => { ulmTrain(dir, "abab ab cd abcd"); () },
+      dir => { ulmTrain(dir, "xyxy xy zz xyz"); () },
+      dir => graft.operators.UnigramLm.load(spark, s"$dir/s").pieces.map(_.toString).sorted ++
+        rowsOf(spark.read.parquet(s"$dir/s/words")) ++ rowsOf(spark.read.parquet(s"$dir/s/params"))),
+    KillCase("kill-point harness: Clustering.absorbEdges", dir => s"$dir/c",
+      dir => clustersSave(dir),
+      dir => graft.operators.Clustering.absorbEdges(spark, s"$dir/c",
+        Seq((2L, 10L), (11L, 12L)).toDF("a", "b"), "a", "b"),
+      clustersRead),
+    KillCase("kill-point harness: Clustering.compactClusters", dir => s"$dir/c",
+      dir => {
+        clustersSave(dir)
+        graft.operators.Clustering.absorbEdges(spark, s"$dir/c",
+          Seq((0L, 10L)).toDF("a", "b"), "a", "b")
+      },
+      dir => graft.operators.Clustering.compactClusters(spark, s"$dir/c"),
+      clustersRead),
+    KillCase("kill-point harness: TextDedup.appendToSavedMinhashStore", dir => s"$dir/m",
+      dir => graft.operators.TextDedup.saveMinhashStore(graft.operators.TextDedup.buildMinhashStore(
+        (1L to 3L).map(i => (i, curationDoc(i))).toDF("id", "text"), "id", "text"),
+        s"$dir/m", prefixBuckets = 8),
+      dir => graft.operators.TextDedup.appendToSavedMinhashStore(spark, s"$dir/m",
+        Seq((4L, curationDoc(4L))).toDF("id", "text"), "id", "text"),
+      dir => {
+        val st = graft.operators.TextDedup.loadMinhashStore(spark, s"$dir/m")
+        rowsOf(st.sigs) ++ rowsOf(st.bands)
+      }),
+    KillCase("kill-point harness: TextDedup.appendToSavedSpanStore", dir => s"$dir/g",
+      dir => graft.operators.TextDedup.saveSpanStore(graft.operators.TextDedup.buildSpanStore(
+        (1L to 3L).map(i => (i, curationDoc(i))).toDF("id", "text"), "id", "text", k = 3),
+        s"$dir/g", prefixBuckets = 8),
+      dir => graft.operators.TextDedup.appendToSavedSpanStore(spark, s"$dir/g",
+        Seq((4L, curationDoc(1L))).toDF("id", "text"), "id", "text"),
+      dir => rowsOf(graft.operators.TextDedup.loadSpanStore(spark, s"$dir/g").grams)),
+    KillCase("kill-point harness: ImageDedup.appendToStore", dir => s"$dir/h",
+      dir => graft.multimodal.ImageDedup.saveHashStore(
+        Seq((1L, Seq(11L, 12L)), (2L, Seq(21L, 22L))).toDF("media_id", "hash"),
+        "media_id", "hash", s"$dir/h", prefixBuckets = 8),
+      dir => graft.multimodal.ImageDedup.appendToStore(spark, s"$dir/h",
+        Seq((3L, Seq(31L, 32L))).toDF("media_id", "hash"), "media_id", "hash"),
+      dir => rowsOf(graft.multimodal.ImageDedup.loadHashStore(spark, s"$dir/h").bands)),
+    KillCase("kill-point harness: VideoDedup.appendToFrameStore", dir => s"$dir/v",
+      dir => graft.multimodal.VideoDedup.saveFrameStore(
+        Seq((1L, 0L, Seq(11L, 12L)), (1L, 2L, Seq(13L, 14L))).toDF("media_id", "frame_idx", "hash"),
+        s"$dir/v", prefixBuckets = 8),
+      dir => graft.multimodal.VideoDedup.appendToFrameStore(spark, s"$dir/v",
+        Seq((2L, 0L, Seq(21L, 22L))).toDF("media_id", "frame_idx", "hash")),
+      dir => {
+        val st = graft.multimodal.VideoDedup.loadFrameStore(spark, s"$dir/v")
+        rowsOf(st.hashes.bands) ++ rowsOf(st.counts)
+      }),
+    KillCase("kill-point harness: IvfAnn.appendToSaved", dir => s"$dir/ivf",
+      dir => graft.operators.IvfAnn.save(
+        graft.operators.IvfAnn.build(ivfVectors(0L), "id", "v", nlist = 2), s"$dir/ivf"),
+      dir => graft.operators.IvfAnn.appendToSaved(spark, s"$dir/ivf", ivfVectors(100L), "id", "v"),
+      dir => rowsOf(graft.operators.IvfAnn.load(spark, s"$dir/ivf", "id", "v").assigned)),
+    KillCase("kill-point harness: FileManifest.appendToManifest", dir => s"$dir/m",
+      dir => {
+        (1L to 30L).map(i => (i, s"v$i")).toDF("id", "v").repartition(3).write.parquet(s"$dir/tbl")
+        graft.sources.FileManifest.saveManifest(
+          graft.sources.FileManifest.build(spark, s"$dir/tbl", Seq("id")), s"$dir/m")
+        (31L to 40L).map(i => (i, s"v$i")).toDF("id", "v").repartition(1)
+          .write.mode("append").parquet(s"$dir/tbl")
+      },
+      dir => assert(graft.sources.FileManifest.appendToManifest(
+        spark, s"$dir/tbl", s"$dir/m", Seq("id")) == 1L),
+      dir => rowsOf(graft.sources.FileManifest.loadManifest(spark, s"$dir/m").drop("file"))),
+    KillCase("kill-point harness: StreamCuration.absorbBatch", dir => s"$dir/c",
+      dir => {
+        graft.streaming.StreamCuration.init(spark, s"$dir/c")
+        graft.streaming.StreamCuration.absorbBatch(
+          spark, s"$dir/c", curationBatch(1L to 4L), "id", "text")
+      },
+      dir => graft.streaming.StreamCuration.absorbBatch(spark, s"$dir/c",
+        curationBatch(Seq(2L, 5L, 6L)), "id", "text"),
+      curationRead),
+    KillCase("kill-point harness: StreamCuration.absorbBatchNearDup", dir => s"$dir/c",
+      dir => {
+        graft.streaming.StreamCuration.initNearDup(spark, s"$dir/c", "id", "text")
+        graft.streaming.StreamCuration.absorbBatchNearDup(spark, s"$dir/c",
+          curationBatch(1L to 4L), "id", "text")
+      },
+      dir => graft.streaming.StreamCuration.absorbBatchNearDup(spark, s"$dir/c",
+        curationBatch(Seq(2L, 5L, 6L)), "id", "text"),
+      dir => curationRead(dir) ++ rowsOf(spark.read.parquet(s"$dir/c/minhash/sigs"))))
 
   killCases.foreach { c =>
     test(c.title) {

@@ -186,39 +186,6 @@ class StreamCurationSpec extends SparkSpec {
       s"expected __fpb PartitionFilters in:\n$plan")
   }
 
-  test("a legacy FLAT seen store still dedups and migrates to the partitioned layout") {
-    implicit val sqlCtx = spark.sqlContext
-    val path = tmpDir("stream-curation-legacy")
-    StreamCuration.init(spark, path)
-    // plant a pre-prefix-layout store: batch 1's winning fingerprints
-    // as plain parquet at the root (what the old layout wrote)
-    val fps = b1.map(_._2).distinct
-      .map(t => t.toLowerCase.trim.replaceAll("\\s+", " "))
-      .map(t => java.security.MessageDigest.getInstance("MD5").digest(t.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString)
-    fps.toDF("fp").repartition(1).write.mode("overwrite").parquet(s"$path/seen")
-    val in = MemoryStream[(Long, String)]
-    val q = in.toDF().toDF("doc_id", "text").writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        StreamCuration.absorbBatch(batch.sparkSession, path, batch, "doc_id", "text")
-      }
-      .start()
-    try {
-      // replays of batch 1 must drop against the LEGACY store; one
-      // fresh doc survives
-      in.addData(Seq((500L, doc(10)), (501L, doc(15)), (502L, doc(999))): _*)
-      q.processAllAvailable()
-      val counters = StreamCuration.loadCounters(spark, path)
-        .as[(String, Long, Long)].collect()
-      assert(counters.map(_._2).sum == 1L, s"legacy store ignored: ${counters.toSeq}")
-      // and the store is now partitioned
-      val dirs = new java.io.File(s"$path/seen").listFiles().filter(_.isDirectory)
-      assert(dirs.nonEmpty && dirs.forall(_.getName.startsWith("__fpb=")),
-        s"store not migrated: ${dirs.map(_.getName).toSeq}")
-    } finally q.stop()
-  }
-
   test("duplicate-only and gate-only batches leave the counters unchanged") {
     implicit val sqlCtx = spark.sqlContext
     val path = tmpDir("stream-curation-noop")
