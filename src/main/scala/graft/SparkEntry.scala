@@ -6,6 +6,7 @@ import graft.multimodal.Multimodal
 import graft.operators.{AsOfJoin, BinaryAnn, CdcDedup, Clustering, CorpusDiff, Decontamination, IvfAnn, MergeEngine, ProductQuantizer => PQ, QualityClassifier, RangeJoin, SimilaritySearch, TextDedup}
 import graft.plans.PhysicalAsOf
 import graft.sources.Tables
+import graft.util.SessionScopedCache
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -27,249 +28,6 @@ import org.apache.spark.sql.functions._
   *   - raw event timestamps are never returned (testdata carries
   *     nanosecond precision; Spark truncates to microseconds).
   */
-/** Session-scoped cache of the LSH candidate stage — the expensive
-  * common prefix of `dedup_minhash_lsh` and `dedup_ngram_jaccard`.
-  * Computed once per (application, dir) and shared; without it the
-  * verify stage silently re-runs the entire signature+banding pipeline
-  * it just executed.
-  *
-  * Lifecycle: entries hold persisted DataFrames whose cached blocks die
-  * with their session, so the map entries are evicted when the owning
-  * application ends (SparkListener.onApplicationEnd) — a long-lived JVM
-  * hosting many sequential sessions cannot accumulate entries for dead
-  * applications.
-  */
-private[graft] object LshStageCache
-    extends graft.util.SessionScopedCache[(DataFrame, DataFrame)]
-
-/** Session-scoped cache of the curation pipelines' shared stages
-  * (quality-gated frame, exact-dedup survivors, lossless near-dup
-  * pairs, near-dup survivor set): the lossless and MinHash-banded
-  * pipeline variants both consume them — one staged prefix per
-  * (application, dir), the build-once/curate-many lifecycle a real
-  * pipeline has. The survivor set (connected components over the
-  * lossless pairs, anti-joined) is identical in both variants, so it
-  * is staged alongside the pairs it derives from. Frames are
-  * persisted; entries live for the session (the [[LshStageCache]]
-  * contract).
-  */
-private[graft] object CurationStageCache
-    extends graft.util.SessionScopedCache[(DataFrame, DataFrame, DataFrame, DataFrame)]
-
-/** Session-scoped cache of the MinHash-banded pipeline's verified pair
-  * table. The lossless variant's pair table (PPJoin) is staged in
-  * [[CurationStageCache]]; without this twin, the banded variant would
-  * re-run its LSH chain on every invocation while the lossless variant
-  * reads its pairs from cache — an asymmetric measurement of two
-  * interchangeable build artifacts. Built lazily by the minhash query
-  * only, so the lossless pipeline's cold run never pays for it. Holds
-  * (verified pairs, banded survivor count): the survivor set — the
-  * components-and-anti-join consumer of the pairs — is staged for the
-  * lossless variant too ([[CurationStageCache]]).
-  */
-private[graft] object MinhashPairsStageCache
-    extends graft.util.SessionScopedCache[(DataFrame, Long)]
-
-/** Session-scoped cache of the DEFAULT-strategy curation run — ONE
-  * [[graft.operators.Curation.curate]] call under the banded
-  * corpus-scale strategy (portable-md5 scheme so the oracle replays
-  * the DEFAULT chain bit-for-bit), stages persisted. Deliberately
-  * separate from [[CurationStageCache]]: the default gate exercises
-  * the one-call public composition end-to-end, while the lossless and
-  * strategy-agreement gates share the hand-staged prefix.
-  */
-private[graft] object BandedCuratedCache
-    extends graft.util.SessionScopedCache[graft.operators.Curation.Curated]
-
-/** Session-scoped cache of the z-bucketed orders layout's path: the
-  * `file_manifest_stats` gate writes the partitioned layout once per
-  * (application, dir) and every later probe reads only footers — the
-  * write-once/plan-many lifecycle a table layout has.
-  */
-private[graft] object ZWriteStageCache
-    extends graft.util.SessionScopedCache[String]
-
-/** Session-scoped cache of the range-laid-out documents copy (4 files,
-  * range-partitioned on `source`): the `manifest_pruned_read_string`
-  * gate writes it once per (application, dir); manifest builds and
-  * pruned reads only touch footers and the kept file subset after.
-  */
-private[graft] object SourceLayoutStageCache
-    extends graft.util.SessionScopedCache[String]
-
-/** Session-scoped cache of the compaction gate's PLANTED source
-  * layout (16 canonically-named small parquet files): the plant is
-  * the gate's INPUT, not the operator under test — staging it once
-  * per (application, dir) leaves warm reps measuring plan + execute
-  * (which still run per call, into a fresh outDir each time).
-  */
-private[graft] object CompactionLayoutStageCache
-    extends graft.util.SessionScopedCache[String]
-
-/** Session-scoped cache of the two-ingest manifest fixture: (table
-  * path, saved manifest path). The `manifest_incremental` gate stages
-  * both ingests + the incremental maintenance once per (application,
-  * dir); the query itself only loads, prunes, and audits.
-  */
-private[graft] object ManifestIncrStageCache
-    extends graft.util.SessionScopedCache[(String, String)]
-
-/** Session-scoped cache of the schema-evolution CDC table path: the
-  * `cdc_schema_evolution` gate runs the three-generation MergeEngine
-  * lifecycle (snapshot → ADD COLUMN → DROP COLUMN) once per
-  * (application, dir); the query itself reads the evolved table back.
-  */
-private[graft] object CdcEvolutionStageCache
-    extends graft.util.SessionScopedCache[String]
-
-/** Session-scoped cache of the persisted video frame-hash store path:
-  * the `video_dedup_incremental` gate hashes + saves the base corpus
-  * once per (application, dir); every later probe reads only the
-  * increment's band-prefix directories.
-  */
-private[graft] object VideoStoreStageCache
-    extends graft.util.SessionScopedCache[String]
-
-/** Session-scoped cache of the trained IVF index (centroids + assigned
-  * corpus): `ann_ivf_topk` trains once per (application, dir) and every
-  * later query pays only the probed scan — the shape a real deployment
-  * has, where the index is built at ingest and queried many times.
-  */
-private[graft] object IvfStageCache
-    extends graft.util.SessionScopedCache[IvfAnn.Index]
-
-/** Session-scoped cache of the trained PQ codebooks: `pq_encode` and
-  * `pq_topk` train once per (application, dir); encoding and ADC
-  * scans reuse the books — the train-once/encode-forever lifecycle PQ
-  * exists for.
-  */
-private[graft] object PqStageCache
-    extends graft.util.SessionScopedCache[PQ.Codebooks]
-
-/** Session-scoped cache of the incremental-dedup signature store: built
-  * once per (application, dir) and probed by every later increment —
-  * the shape the operator exists for (a store rebuilt per increment
-  * would be pairwise dedup with extra steps).
-  */
-private[graft] object MinhashStoreCache
-    extends graft.util.SessionScopedCache[TextDedup.MinhashStore]
-
-/** Session-scoped cache of the incremental SPAN-dedup gram store
-  * (same lifecycle argument as [[MinhashStoreCache]]: built once per
-  * (application, dir), probed by every later increment).
-  */
-private[graft] object SpanStoreCache
-    extends graft.util.SessionScopedCache[TextDedup.SpanStore]
-
-/** Session-scoped cache of the trained bigram LM (same lifecycle
-  * argument: the reference-corpus model is trained once and scores
-  * every later slice).
-  */
-private[graft] object NgramLmCache
-    extends graft.util.SessionScopedCache[graft.operators.NgramLm.Model]
-
-/** Session-scoped cache of the BM25 inverted index (same lifecycle
-  * argument: built once per (application, dir), searched by every
-  * later query).
-  */
-private[graft] object Bm25IndexCache
-    extends graft.util.SessionScopedCache[graft.operators.Bm25.Index]
-
-/** Session-scoped cache of the exact decimal-cosine top-20 over the
-  * planted-neighbor corpus — the SQL-replayable half both ANN recall
-  * gates (`ann_lsh_topk`, `ann_ivf_topk`) compare against; computing it
-  * once per (application, dir) saves each later gate a full corpus
-  * scan, and the persisted 20-row frame also feeds each gate's verdict
-  * semi-join without a recompute.
-  */
-private[graft] object ExactTopCache
-    extends graft.util.SessionScopedCache[DataFrame]
-
-/** Session-scoped cache of built suffix-array indexes: the
-  * suffix-consuming gates (`suffix_repeats`, `suffix_dedup_spans`)
-  * build their fixture's index once per (application, dir) and measure
-  * the CONSUMER (repeated-span discovery / corpus rewrite) — the
-  * build-at-ingest/query-many lifecycle the IVF and BM25 caches
-  * already model. `suffix_array_ranks` does NOT use this cache: there
-  * the build itself is the measured operator.
-  */
-private[graft] object SuffixIndexStageCache
-    extends graft.util.SessionScopedCache[graft.operators.SuffixArray.Index]
-
-/** Session-scoped cache of the portable-scheme classifier scores:
-  * `text_quality_classifier` reports them and `token_budget_select`
-  * selects on them — one scoring pass feeds both, the way a real
-  * pipeline scores once and reuses the column.
-  */
-private[graft] object ClassifierStageCache
-    extends graft.util.SessionScopedCache[DataFrame]
-
-/** Session-scoped cache of the SemDeDup quantizer centroids: trained
-  * once per (application, dir) on the planted corpus; the removal
-  * scan reuses them (train-once/assign-forever, the [[IvfStageCache]]
-  * lifecycle).
-  */
-private[graft] object SemDedupCache
-    extends graft.util.SessionScopedCache[Seq[(Int, Seq[Long])]]
-
-/** Session-scoped cache of the DSIR hashed-bucket log-ratio table
-  * (the trained importance model): built by one corpus scan per
-  * (application, dir), shipped in the closure of every later scoring
-  * pass.
-  */
-private[graft] object DsirStageCache
-    extends graft.util.SessionScopedCache[Array[Long]]
-
-/** Session-scoped cache of the composed IVF-PQ index: built once per
-  * (application, dir) from the ALREADY-CACHED coarse index and
-  * codebooks (one encode projection), probed by every later query.
-  */
-private[graft] object IvfPqStageCache
-    extends graft.util.SessionScopedCache[graft.operators.IvfPq.Index]
-
-/** Session-scoped cache of the RESIDUAL IVF-PQ index (the faiss IVFPQ
-  * form: codebooks over list-relative residuals) — same train-once
-  * lifecycle as [[IvfPqStageCache]].
-  */
-private[graft] object IvfPqResidualCache
-    extends graft.util.SessionScopedCache[graft.operators.IvfPq.ResidualIndex]
-
-/** Session-scoped cache of the trained BPE merge table: trained once
-  * per (application, dir), served by both the training query and the
-  * segmentation query (train-once/serve-forever, the tokenizer
-  * lifecycle).
-  */
-private[graft] object BpeStageCache
-    extends graft.util.SessionScopedCache[Seq[(Int, String, String, Long)]]
-
-/** Trained unigram-LM vocabulary for this (session, dir) — the same
-  * train-once/serve-forever lifecycle as [[BpeStageCache]].
-  */
-private[graft] object UlmStageCache
-    extends graft.util.SessionScopedCache[graft.operators.UnigramLm.Vocab]
-
-/** Trained stupid-backoff trigram counts (same train-once lifecycle
-  * as [[NgramLmCache]], its smoothed-bigram sibling).
-  */
-private[graft] object BackoffLmCache
-    extends graft.util.SessionScopedCache[graft.operators.BackoffLm.Model]
-
-/** Session-scoped cache of SIZING counts (r18 VERDICT #7): corpus
-  * cardinalities that parameterize operators (blocking-key depth, LSH
-  * operating points, stat-driven broadcast cutoffs) are fixed
-  * properties of a (session, dir) input — counting them once per
-  * session replaces a full-table count job per query invocation. At
-  * 100 TB the same seam is a manifest row-count read.
-  *
-  * The covenant: a count cached here only SIZES work — it may change
-  * how a result is computed, never what the result is. A count that
-  * feeds a result column (a verdict, a ratio, a flag) is recomputed on
-  * every call, so a stale or mis-keyed entry can cost time but cannot
-  * change an answer.
-  */
-private[graft] object CountStageCache
-    extends graft.util.SessionScopedCache[Long]
-
 object SparkEntry {
 
   /** Composite chunk-id stride for chunk-level retrieval: supports up
@@ -279,19 +37,32 @@ object SparkEntry {
     */
   private val ChunkIdMultiplier = 100000L
 
-  /** Temp directory for persisted-store gated queries, registered for
-    * recursive deletion at JVM exit so repeated (session, dir) runs
-    * don't leak parquet trees.
+  /** Temp directory for staged and persisted-store gated queries,
+    * registered for recursive deletion at JVM exit so repeated
+    * (session, dir) runs don't leak parquet trees. One shutdown hook,
+    * installed by the first call, deletes every registered dir.
     */
   private def scratchDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
+    scratchHook
+    val p = java.nio.file.Files.createTempDirectory(prefix).toString
+    scratchDirs.add(p)
+    p
+  }
+
+  private lazy val scratchDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  private lazy val scratchHook: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       def rm(f: java.io.File): Unit = {
         val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete(); ()
       }
-      rm(p.toFile)
+      scratchDirs.forEach(p => rm(new java.io.File(p)))
     }))
-    p.toString
+
+  /** The dirs registered for deletion at exit, for tests. */
+  private[graft] def registeredScratchDirs: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    scratchDirs.asScala.toSet
   }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
@@ -428,8 +199,8 @@ object SparkEntry {
     * middle generation only.
     */
   private def cdcSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    val path = CdcEvolutionStageCache.getOrElseUpdate(s, dir) {
-      val root = java.nio.file.Files.createTempDirectory("graft-cdcevo").toString
+    val path = SessionScopedCache.getOrElseUpdate(s, "cdc-evolution:" + dir) {
+      val root = scratchDir("graft-cdcevo")
       val cfg = graft.config.TableConfig("graft_test", "users_evo", s"$root/users_evo")
       val ev = Tables(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
@@ -1135,7 +906,7 @@ object SparkEntry {
       s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     val (withExact, qualityL) = curationPrefix(s, dir)
     val (quality, exactKept, pairsExact, survivors) =
-      CurationStageCache.getOrElseUpdate(s, dir) {
+      SessionScopedCache.getOrElseUpdate(s, "curation:" + dir) {
         // session-staged frames are SETTLED (eager localCheckpoint, see
         // graft.util.Staged): every warm rep of every consumer re-
         // analyzed and re-rendered this whole stacked lineage per
@@ -1177,7 +948,11 @@ object SparkEntry {
     */
   private def corpusCurationPipeline(s: SparkSession, dir: String): DataFrame = {
     val (withExact, _) = curationPrefix(s, dir)
-    val cur = BandedCuratedCache.getOrElseUpdate(s, dir) {
+    // ONE curate() call, deliberately separate from the "curation:"
+    // entry: this gate exercises the one-call public composition
+    // end-to-end, while the lossless and strategy-agreement gates share
+    // the hand-staged prefix
+    val cur = SessionScopedCache.getOrElseUpdate(s, "banded-curated:" + dir) {
       // quality/exactKept/pairs arrive persisted from curate(); all
       // four staged frames are SETTLED (lineage truncation, see
       // curationStages) so warm splitCounts reps plan over leaves
@@ -1232,7 +1007,7 @@ object SparkEntry {
     // shingle arrays (never re-shingling text) -> components -> drops.
     // The verified pair table is the banded build artifact — staged in
     // its own session cache exactly as the lossless PPJoin pairs are.
-    val (verified, ms) = MinhashPairsStageCache.getOrElseUpdate(s, dir) {
+    val (verified, ms) = SessionScopedCache.getOrElseUpdate(s, "minhash-pairs:" + dir) {
       val (cand, shingled) = TextDedup.minhashCandidatePairsAndShingles(
         exactKept, "doc_id", "text", threshold = 0.5)
       // settled (lineage truncation, see curationStages): the verdict
@@ -1258,7 +1033,7 @@ object SparkEntry {
     // crossJoining four one-row aggregate subtrees instead measures
     // plan-composition overhead, not the pipeline.
     // the verdict counts decide the `minhash_ok` column, so they are
-    // recomputed on every call (CountStageCache holds sizing counts only)
+    // recomputed on every call ("count:" entries hold sizing counts only)
     val hit = pairsExact.join(verified, Seq("id_a", "id_b"), "left_semi").count()
     val tot = pairsExact.count()
     val es = survivors.count()
@@ -1286,7 +1061,7 @@ object SparkEntry {
       .orderBy(col("id_a"), col("id_b"))
 
   private def minhashCandidates(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    LshStageCache.getOrElseUpdate(s, dir) {
+    SessionScopedCache.getOrElseUpdate(s, "lsh:" + dir) {
       val docs = docsWithNearDups(s, dir)
       // CORPUS-SIZE-AWARE operating point (r17 sf16 finding, mechanism
       // CORRECTED by this round's measurement). Two quadratic escapes
@@ -1416,7 +1191,10 @@ object SparkEntry {
     // stat count cached per (session, dir) — r18 VERDICT #7: the
     // candidate cardinality of the session-staged pair table is fixed,
     // and this decision ran a count job on every warm invocation
-    val nCands = CountStageCache.getOrElseUpdate(s, dir + "#lsh-cands")(cands.count())
+    // a "count:" entry only SIZES work — it may change how a result is
+    // computed, never what the result is; a count that feeds a result
+    // column is recomputed on every call
+    val nCands = SessionScopedCache.getOrElseUpdate(s, "count:" + dir + "#lsh-cands")(cands.count())
     val verified =
       if (nCands <= 100000L)
         broadcast(broadcast(pairs).join(shA, "id_a")).join(shB, "id_b")
@@ -1469,7 +1247,7 @@ object SparkEntry {
     // the base component labels are fixture prep (the store the
     // increment arrives AT); staged once — the measured lifecycle is
     // save -> absorb -> resolve, which runs in full every invocation
-    val baseLabels = ExactTopCache.getOrElseUpdate(s, dir + "#cluster-store-base") {
+    val baseLabels = SessionScopedCache.getOrElseUpdate(s, "exact-top:" + dir + "#cluster-store-base") {
       graft.util.Staged.settle(C.connectedComponents(base, "id_a", "id_b"))
     }
     C.saveClusters(baseLabels, path, prefixBuckets = 16)
@@ -1688,7 +1466,7 @@ object SparkEntry {
       .orderBy(col("file_id"))
 
   /** The session's z-bucketed copy of orders' keys (written once per
-    * (session, dir), [[ZWriteStageCache]]): one parquet dir per value-
+    * (session, dir), the "zlayout:" entry): one parquet dir per value-
     * range file bucket. ONE file per bucket dir (the AggStore.save
     * small-file guard): without the repartition every scan task writes
     * every file_id it sees, so the layout carried tasks x buckets files
@@ -1699,8 +1477,8 @@ object SparkEntry {
     * invariant, so results are unchanged.
     */
   private def zLayoutPath(s: SparkSession, dir: String, ordersKeys: DataFrame): String =
-    ZWriteStageCache.getOrElseUpdate(s, dir) {
-      val p = java.nio.file.Files.createTempDirectory("graft-zlayout").toString
+    SessionScopedCache.getOrElseUpdate(s, "zlayout:" + dir) {
+      val p = scratchDir("graft-zlayout")
       graft.operators.ZOrder.withFileId(ordersKeys, Seq("o_custkey", "o_orderkey"))
         .repartition(col("file_id"))
         .write.mode("overwrite").partitionBy("file_id").parquet(p)
@@ -1741,7 +1519,7 @@ object SparkEntry {
     // the REFERENCE side of the audit (what the footers must equal) is
     // a pure function of (session, dir) — staged once; the measured op
     // is the footer-read manifest build and the compare
-    val expected = ExactTopCache.getOrElseUpdate(s, dir + "#zlayout-file-ranges") {
+    val expected = SessionScopedCache.getOrElseUpdate(s, "exact-top:" + dir + "#zlayout-file-ranges") {
       graft.util.Staged.settle(graft.operators.ZOrder
         .fileRanges(ordersKeys, Seq("o_custkey", "o_orderkey"))
         .select(col("file_id"), col("n_rows"),
@@ -1760,7 +1538,7 @@ object SparkEntry {
   }
 
   /** The manifest→scan loop closed on an INTEGRAL key: prune the
-    * z-ordered orders layout ([[ZWriteStageCache]] — the same staged
+    * z-ordered orders layout ([[zLayoutPath]] — the same staged
     * copy `file_manifest_stats` audits) to the files whose
     * `o_custkey` window overlaps [100, 180], scan ONLY those, and
     * aggregate. Rows replay as a plain filtered aggregate over
@@ -1798,8 +1576,8 @@ object SparkEntry {
     * ['src2','src4'] window. Same verdict contract.
     */
   private def manifestPrunedReadString(s: SparkSession, dir: String): DataFrame = {
-    val path = SourceLayoutStageCache.getOrElseUpdate(s, dir) {
-      val p = java.nio.file.Files.createTempDirectory("graft-srclayout").toString
+    val path = SessionScopedCache.getOrElseUpdate(s, "source-layout:" + dir) {
+      val p = scratchDir("graft-srclayout")
       Tables(s, dir, "documents").select(col("doc_id"), col("source"), col("n_chars"))
         .repartitionByRange(4, col("source"), col("doc_id"))
         .sortWithinPartitions(col("source"), col("doc_id"))
@@ -1837,8 +1615,8 @@ object SparkEntry {
     */
   private def manifestIncremental(s: SparkSession, dir: String): DataFrame = {
     val keys = Tables(s, dir, "orders").select(col("o_custkey"), col("o_orderkey"))
-    val (table, mpath) = ManifestIncrStageCache.getOrElseUpdate(s, dir) {
-      val root = java.nio.file.Files.createTempDirectory("graft-mincr").toString
+    val (table, mpath) = SessionScopedCache.getOrElseUpdate(s, "manifest-incr:" + dir) {
+      val root = scratchDir("graft-mincr")
       val t = s"$root/t"; val m = s"$root/m"
       keys.filter(col("o_orderkey") % 2 === 0)
         .repartitionByRange(4, col("o_custkey")).sortWithinPartitions(col("o_custkey"))
@@ -2038,7 +1816,7 @@ object SparkEntry {
         col("label"))
     val corpus = emb.select(col("vec_id"), col("embedding"), col("label"))
       .unionByName(copies)
-    val index = IvfStageCache.getOrElseUpdate(s, dir + "#knn-classify") {
+    val index = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir + "#knn-classify") {
       // nlist sized to the corpus (mean list ~2000 vectors): candidate
       // volume stays ~nprobe/nlist of brute force as data grows. At
       // the oracle SFs this resolves to 8.
@@ -2138,7 +1916,7 @@ object SparkEntry {
     // below is the loud backstop.
     // sizing count cached per (session, dir) — r18 VERDICT #7: this
     // ran as a fresh count job on EVERY invocation (3 per bench run)
-    val nBase = CountStageCache.getOrElseUpdate(s, dir + "#entity-base")(base.count())
+    val nBase = SessionScopedCache.getOrElseUpdate(s, "count:" + dir + "#entity-base")(base.count())
     val depth = math.max(4, math.min(6,
       math.ceil(math.log10(math.max(nBase, 1L).toDouble / 10.0)).toInt))
     val blocked = base.withColumn("__bk", substring(col("c_name"), 19 - depth, depth))
@@ -2711,12 +2489,12 @@ object SparkEntry {
         .select((col("vec_id") + 3000L).as("id"), col("embedding").as("vec")))
     val simFn: (Column, Column) => Column =
       (a, b) => floor(VF.cosineDecimal(a, b) * lit(1e6)).cast("long")
-    val exact = ExactTopCache.getOrElseUpdate(s, dir + "#bitext-exact") {
+    val exact = SessionScopedCache.getOrElseUpdate(s, "exact-top:" + dir + "#bitext-exact") {
       graft.util.Staged.settle(graft.operators.BitextMine
         .marginMine(src, tgt, "id", "vec", k = 4, minMarginMicro = 1500000L,
           simFn = simFn, knownTgtCount = Some(34L)))
     }
-    val index = IvfStageCache.getOrElseUpdate(s, dir + "#bitext-tgt")(
+    val index = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir + "#bitext-tgt")(
       IvfAnn.build(tgt, "id", "vec", nlist = 4, iters = 3))
     // probe side scores with the native double cosine (the
     // knnGraphAnnQ argument): the ANN result contributes only the
@@ -2772,12 +2550,12 @@ object SparkEntry {
           x => x + col("__i").cast("float") * lit(0.0005f)).as("embedding"))
     val simFn: (Column, Column) => Column =
       (a, b) => floor(VF.cosineDecimal(a, b) * lit(1e6)).cast("long")
-    val exact = ExactTopCache.getOrElseUpdate(s, dir + "#knn-graph-clusters") {
+    val exact = SessionScopedCache.getOrElseUpdate(s, "exact-top:" + dir + "#knn-graph-clusters") {
       graft.util.Staged.settle(SimilaritySearch
         .mutualKnnGraph(nodes, "vec_id", "embedding", k = 5, simFn = simFn,
           knownNodeCount = Some(300L))) // 30 bases x 10 planted variants
     }
-    val index = IvfStageCache.getOrElseUpdate(s, dir + "#graph-clusters")(
+    val index = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir + "#graph-clusters")(
       IvfAnn.build(nodes, "vec_id", "embedding", nlist = 8, iters = 3))
     // the probe side ranks candidates with the NATIVE double cosine
     // (deterministic per row — fixed fold order): the production
@@ -2818,12 +2596,12 @@ object SparkEntry {
           x => x + col("__i").cast("float") * lit(0.0005f)).as("embedding"))
     val simFn: (Column, Column) => Column =
       (a, b) => floor(VF.cosineDecimal(a, b) * lit(1e6)).cast("long")
-    val exact = ExactTopCache.getOrElseUpdate(s, dir + "#knn-graph-clusters") {
+    val exact = SessionScopedCache.getOrElseUpdate(s, "exact-top:" + dir + "#knn-graph-clusters") {
       graft.util.Staged.settle(SimilaritySearch
         .mutualKnnGraph(nodes, "vec_id", "embedding", k = 5, simFn = simFn,
           knownNodeCount = Some(300L))) // 30 bases x 10 planted variants
     }
-    val index = IvfStageCache.getOrElseUpdate(s, dir + "#graph-clusters")(
+    val index = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir + "#graph-clusters")(
       IvfAnn.build(nodes, "vec_id", "embedding", nlist = 8, iters = 3))
     // probe side ranks with the native double cosine (the knnGraphAnnQ
     // argument): the ANN graph feeds components compared as member
@@ -2837,9 +2615,9 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_members"),
           array_join(sort_array(collect_list(col("id"))), ",").as("members"))
     // the exact side is the REFERENCE the ANN result is judged against
-    // — staged like the exact edges themselves (ExactTopCache); the
+    // — staged like the exact edges themselves ("exact-top:"); the
     // measured work is the ANN graph, its components, and the verdict
-    val em = ExactTopCache.getOrElseUpdate(s, dir + "#knn-graph-member-sets") {
+    val em = SessionScopedCache.getOrElseUpdate(s, "exact-top:" + dir + "#knn-graph-member-sets") {
       graft.util.Staged.settle(memberSets(exact))
     }
     val am = memberSets(ann)
@@ -3204,7 +2982,7 @@ object SparkEntry {
     * in QualityClassifierSpec.
     */
   private def scoredDocs(s: SparkSession, dir: String): DataFrame =
-    ClassifierStageCache.getOrElseUpdate(s, dir) {
+    SessionScopedCache.getOrElseUpdate(s, "classifier:" + dir) {
       graft.util.Staged.settle(QualityClassifier
         .score(Tables(s, dir, "documents"), "doc_id", "text", QualityClassifier.PortableMd5Scheme))
     }
@@ -3283,7 +3061,7 @@ object SparkEntry {
     val docs = Tables(s, dir, "documents")
     // the store is per-corpus state, built once per (session, dir) and
     // probed by every increment — the operator's deployment shape
-    val store = MinhashStoreCache.getOrElseUpdate(s, dir)(
+    val store = SessionScopedCache.getOrElseUpdate(s, "minhash-store:" + dir)(
       TextDedup.buildMinhashStore(docs, "doc_id", "text",
         scheme = TextDedup.PortableMd5Scheme))
     val incoming = docs.filter(col("doc_id") % 100 === 0)
@@ -3307,7 +3085,7 @@ object SparkEntry {
     */
   private def dedupIncrementalMinhashPersisted(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
-    val store = MinhashStoreCache.getOrElseUpdate(s, dir + "#minhash-persisted") {
+    val store = SessionScopedCache.getOrElseUpdate(s, "minhash-store:" + dir + "#minhash-persisted") {
       val live = TextDedup.buildMinhashStore(docs, "doc_id", "text",
         scheme = TextDedup.PortableMd5Scheme)
       val path = scratchDir("graft-minhash-store")
@@ -3419,6 +3197,8 @@ object SparkEntry {
     * must reproduce every rank bit-for-bit.
     */
   private def suffixArrayRanks(s: SparkSession, dir: String): DataFrame = {
+    // built per call, never served from a "suffix:" entry: here the
+    // build itself is the measured operator
     val ix = graft.operators.SuffixArray.build(
       Tables(s, dir, "documents").filter(col("doc_id") < 40),
       "doc_id", "text", maxTokens = 25)
@@ -3445,7 +3225,7 @@ object SparkEntry {
       .select(col("doc_id"),
         when(col("doc_id") % 10 === 1, concat(lit(boiler + " "), col("text")))
           .otherwise(col("text")).as("text"))
-    val ix = SuffixIndexStageCache.getOrElseUpdate(s, dir + "#repeats")(
+    val ix = SessionScopedCache.getOrElseUpdate(s, "suffix:" + dir + "#repeats")(
       graft.operators.SuffixArray.build(seeded, "doc_id", "text", maxTokens = 30))
     val out = graft.operators.SuffixArray.repeatedSpans(ix, minLen = 5)
       .orderBy(col("doc_a"), col("pos_a"), col("doc_b"), col("pos_b"))
@@ -3472,7 +3252,7 @@ object SparkEntry {
       .select(col("doc_id"),
         when(col("doc_id") % 10 === 1, concat(lit(boiler + " "), col("text")))
           .otherwise(col("text")).as("text"))
-    val ix = SuffixIndexStageCache.getOrElseUpdate(s, dir + "#dedup-spans")(
+    val ix = SessionScopedCache.getOrElseUpdate(s, "suffix:" + dir + "#dedup-spans")(
       graft.operators.SuffixArray.build(seeded, "doc_id", "text"))
     val out = graft.operators.SuffixArray
       .removeRepeatedSpans(ix, minLen = 8, keepCanonical = true)
@@ -3521,7 +3301,7 @@ object SparkEntry {
       col("doc_id"),
       when(col("doc_id") % 10 === 1, concat(lit(boiler + " "), col("text")))
         .otherwise(col("text")).as("text"))
-    val store = SpanStoreCache.getOrElseUpdate(s, dir + "#spans")(
+    val store = SessionScopedCache.getOrElseUpdate(s, "span-store:" + dir + "#spans")(
       TextDedup.buildSpanStore(seeded.filter(col("doc_id") % 50 =!= 7), "doc_id", "text",
         k = 8, hashedGramKeys = false))
     TextDedup
@@ -3543,7 +3323,7 @@ object SparkEntry {
       col("doc_id"),
       when(col("doc_id") % 10 === 1, concat(lit(boiler + " "), col("text")))
         .otherwise(col("text")).as("text"))
-    val store = SpanStoreCache.getOrElseUpdate(s, dir + "#spans-persisted") {
+    val store = SessionScopedCache.getOrElseUpdate(s, "span-store:" + dir + "#spans-persisted") {
       val live = TextDedup.buildSpanStore(seeded.filter(col("doc_id") % 50 =!= 7),
         "doc_id", "text", k = 8, hashedGramKeys = false)
       val path = scratchDir("graft-span-store")
@@ -3569,7 +3349,7 @@ object SparkEntry {
     */
   private def textPerplexity(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
-    val model = NgramLmCache.getOrElseUpdate(s, dir)(
+    val model = SessionScopedCache.getOrElseUpdate(s, "ngram-lm:" + dir)(
       graft.operators.NgramLm.train(docs.filter(col("doc_id") % 50 =!= 7), "doc_id", "text"))
     graft.operators.NgramLm
       .perplexity(docs.filter(col("doc_id") % 50 === 7), model, "doc_id", "text")
@@ -3586,7 +3366,7 @@ object SparkEntry {
     */
   private def textPerplexityInline(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
-    val model = NgramLmCache.getOrElseUpdate(s, dir)(
+    val model = SessionScopedCache.getOrElseUpdate(s, "ngram-lm:" + dir)(
       graft.operators.NgramLm.train(docs.filter(col("doc_id") % 50 =!= 7), "doc_id", "text"))
     val collected = graft.operators.NgramLm.collectModel(model)
     graft.operators.NgramLm
@@ -3632,7 +3412,7 @@ object SparkEntry {
     * doc_id), and the round(4) score all replay in SQL.
     */
   private def bm25Search(s: SparkSession, dir: String): DataFrame = {
-    val idx = Bm25IndexCache.getOrElseUpdate(s, dir)(
+    val idx = SessionScopedCache.getOrElseUpdate(s, "bm25:" + dir)(
       graft.operators.Bm25.build(Tables(s, dir, "documents"), "doc_id", "text"))
     graft.operators.Bm25.search(idx, Seq("vector", "merge", "stream"), k = 20)
       .select(col("id").as("doc_id"), col("n_terms"), col("score"))
@@ -3730,7 +3510,7 @@ object SparkEntry {
       dir: String,
       corpus: DataFrame,
       query: DataFrame): DataFrame =
-    ExactTopCache.getOrElseUpdate(s, dir + "#planted-top20") {
+    SessionScopedCache.getOrElseUpdate(s, "exact-top:" + dir + "#planted-top20") {
       val q = query.select(col("embedding").as("__qv"))
       graft.util.Staged.settle(corpus
         .crossJoin(broadcast(q))
@@ -3792,7 +3572,7 @@ object SparkEntry {
     // persisted via the top-k cache: the 20-row result feeds BOTH the
     // verdict semi-join and the output — without it the Hamming pool
     // scan (the whole corpus) runs twice
-    val top = ExactTopCache.getOrElseUpdate(s, dir + "#hamming-top20") {
+    val top = SessionScopedCache.getOrElseUpdate(s, "exact-top:" + dir + "#hamming-top20") {
       graft.util.Staged.settle(BinaryAnn.topK(corpus, query, "vec_id", "embedding",
         k = 20, poolSize = 64,
         cosineFn = (a, b) => round(VF.cosineDecimal(a, b), 3) + lit(0.0)))
@@ -3820,8 +3600,8 @@ object SparkEntry {
     val emb = Tables(s, dir, "embeddings")
     val corpus = embWithPlantedNeighbors(emb)
     val query = emb.filter(col("vec_id") === 0)
-    val index = IvfStageCache.getOrElseUpdate(s, dir + "#planted") {
-      val base = IvfStageCache.getOrElseUpdate(s, dir)(
+    val index = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir + "#planted") {
+      val base = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir)(
         IvfAnn.build(emb, "vec_id", "embedding", nlist = 16, iters = 3))
       IvfAnn.append(base, corpus.filter(col("vec_id") >= 1000000L))
     }
@@ -3870,7 +3650,7 @@ object SparkEntry {
     */
   private def annIvfFullprobe(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir, "embeddings")
-    val index = IvfStageCache.getOrElseUpdate(s, dir)(
+    val index = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir)(
       IvfAnn.build(emb, "vec_id", "embedding", nlist = 16, iters = 3))
     IvfAnn.topK(index, emb.filter(col("vec_id") === 0), k = 20, nprobe = 16,
         cosineFn = (a, b) => round(VF.cosineDecimal(a, b), 3) + lit(0.0))
@@ -3888,7 +3668,7 @@ object SparkEntry {
     */
   private def pqEncode(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir, "embeddings")
-    val cb = PqStageCache.getOrElseUpdate(s, dir)(
+    val cb = SessionScopedCache.getOrElseUpdate(s, "pq:" + dir)(
       PQ.train(emb, "vec_id", "embedding", m = 4, ksub = 16, iters = 2))
     PQ.encode(emb, "vec_id", "embedding", cb, keep = Seq("embedding"))
       .withColumn("recon_dist", PQ.reconDist(col("embedding"), cb))
@@ -3914,7 +3694,7 @@ object SparkEntry {
     val emb = Tables(s, dir, "embeddings")
     val corpus = embWithPlantedNeighbors(emb)
     val query = emb.filter(col("vec_id") === 0)
-    val cb = PqStageCache.getOrElseUpdate(s, dir)(
+    val cb = SessionScopedCache.getOrElseUpdate(s, "pq:" + dir)(
       PQ.train(emb, "vec_id", "embedding", m = 4, ksub = 16, iters = 2))
     val qQ = query.select(col("embedding")).head().getSeq[Float](0)
       .map(x => math.floor(x.toDouble * 1e6).toLong).toSeq
@@ -4163,7 +3943,7 @@ object SparkEntry {
       .select(year(col("o_orderdate")).as("part"),
         pmod(col("o_orderkey"), lit(8L)).as("slot"),
         col("o_orderkey"), col("o_totalprice"))
-    val srcDir = CompactionLayoutStageCache.getOrElseUpdate(s, dir) {
+    val srcDir = SessionScopedCache.getOrElseUpdate(s, "compaction-layout:" + dir) {
       val src = scratchDir("graft-compactsrc") + "/src"
       // one file per (part, slot) leaf: every slot's rows land in one
       // task before the partitioned write
@@ -4330,8 +4110,8 @@ object SparkEntry {
     import s.implicits._
     val docs = Tables(s, dir, "documents")
       .filter(col("doc_id") % 3 === 0 && col("doc_id") < 120)
-    val path = VideoStoreStageCache.getOrElseUpdate(s, dir) {
-      val p = java.nio.file.Files.createTempDirectory("graft-vstore").toString + "/store"
+    val path = SessionScopedCache.getOrElseUpdate(s, "video-store:" + dir) {
+      val p = scratchDir("graft-vstore") + "/store"
       VD.saveFrameStore(
         VD.frameHashes(Multimodal.syntheticVideosFromDocs(s, docs), stride = 2), p)
       p
@@ -4453,7 +4233,7 @@ object SparkEntry {
     // sf4 drill). At the oracle SFs (sf0.01/sf0.1: <= ~2k vectors)
     // sizedK resolves to exactly 8 — the value the Lloyd CTE program
     // replays — so the oracle is unchanged by the sizing.
-    val cents = SemDedupCache.getOrElseUpdate(s, dir) {
+    val cents = SessionScopedCache.getOrElseUpdate(s, "semdedup:" + dir) {
       val k = graft.operators.SemanticDedup.sizedK(corpus.count())
       graft.operators.KMeansTrain.train(corpus, "vec_id", "embedding", k = k, iters = 2)
     }
@@ -4475,8 +4255,8 @@ object SparkEntry {
     */
   private def pqEncodePersisted(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir, "embeddings")
-    val cb = PqStageCache.getOrElseUpdate(s, dir + "#persisted") {
-      val live = PqStageCache.getOrElseUpdate(s, dir)(
+    val cb = SessionScopedCache.getOrElseUpdate(s, "pq:" + dir + "#persisted") {
+      val live = SessionScopedCache.getOrElseUpdate(s, "pq:" + dir)(
         PQ.train(emb, "vec_id", "embedding", m = 4, ksub = 16, iters = 2))
       val path = scratchDir("graft-pq-books")
       PQ.save(live, s, path)
@@ -4505,10 +4285,10 @@ object SparkEntry {
         (col("vec_id") + 1000000L).as("vec_id"),
         transform(col("embedding"), x => x + lit(0.0005f)).as("embedding"))
     val corpus = emb.select(col("vec_id"), col("embedding")).unionByName(perturbed)
-    val cents = SemDedupCache.getOrElseUpdate(s, dir + "#persisted") {
+    val cents = SessionScopedCache.getOrElseUpdate(s, "semdedup:" + dir + "#persisted") {
       // same corpus-sized k as semantic_dedup (resolves to 8 at the
       // oracle SFs), so both gates share one trained artifact
-      val live = SemDedupCache.getOrElseUpdate(s, dir) {
+      val live = SessionScopedCache.getOrElseUpdate(s, "semdedup:" + dir) {
         val k = graft.operators.SemanticDedup.sizedK(corpus.count())
         graft.operators.KMeansTrain.train(corpus, "vec_id", "embedding", k = k, iters = 2)
       }
@@ -4546,7 +4326,7 @@ object SparkEntry {
     */
   private def dsirSelect(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
-    val ratios = DsirStageCache.getOrElseUpdate(s, dir)(
+    val ratios = SessionScopedCache.getOrElseUpdate(s, "dsir:" + dir)(
       graft.operators.Dsir.bucketLogRatios(docs, "text", col("lang") === "en", buckets = 128))
     graft.operators.Dsir.select(docs, "doc_id", "text", ratios, n = 50)
       .withColumnRenamed("id", "doc_id")
@@ -4560,7 +4340,7 @@ object SparkEntry {
     * fused integer scores hash-match exactly.
     */
   private def rrfFusion(s: SparkSession, dir: String): DataFrame = {
-    val idx = Bm25IndexCache.getOrElseUpdate(s, dir)(
+    val idx = SessionScopedCache.getOrElseUpdate(s, "bm25:" + dir)(
       graft.operators.Bm25.build(Tables(s, dir, "documents"), "doc_id", "text"))
     val sparse = graft.operators.Bm25.search(idx, Seq("vector", "merge", "stream"), k = 100)
       .select(col("id"),
@@ -4588,15 +4368,15 @@ object SparkEntry {
     * verdict, sharing the `ann_lsh_topk` oracle.
     */
   private def ivfpqPlantedIndex(s: SparkSession, dir: String): graft.operators.IvfPq.Index =
-    IvfPqStageCache.getOrElseUpdate(s, dir + "#planted") {
+    SessionScopedCache.getOrElseUpdate(s, "ivfpq:" + dir + "#planted") {
       val emb = Tables(s, dir, "embeddings")
       val corpus = embWithPlantedNeighbors(emb)
-      val ivf = IvfStageCache.getOrElseUpdate(s, dir + "#planted") {
-        val base = IvfStageCache.getOrElseUpdate(s, dir)(
+      val ivf = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir + "#planted") {
+        val base = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir)(
           IvfAnn.build(emb, "vec_id", "embedding", nlist = 16, iters = 3))
         IvfAnn.append(base, corpus.filter(col("vec_id") >= 1000000L))
       }
-      val cb = PqStageCache.getOrElseUpdate(s, dir)(
+      val cb = SessionScopedCache.getOrElseUpdate(s, "pq:" + dir)(
         PQ.train(emb, "vec_id", "embedding", m = 4, ksub = 16, iters = 2))
       graft.operators.IvfPq.fromParts(ivf, cb)
     }
@@ -4623,7 +4403,7 @@ object SparkEntry {
     val emb = Tables(s, dir, "embeddings")
     val corpus = embWithPlantedNeighbors(emb)
     val query = emb.filter(col("vec_id") === 0)
-    val index = IvfPqStageCache.getOrElseUpdate(s, dir + "#planted-persisted") {
+    val index = SessionScopedCache.getOrElseUpdate(s, "ivfpq:" + dir + "#planted-persisted") {
       val path = scratchDir("graft-ivfpq-index")
       graft.operators.IvfPq.save(ivfpqPlantedIndex(s, dir), path)
       graft.operators.IvfPq.load(s, path, "vec_id")
@@ -4655,9 +4435,9 @@ object SparkEntry {
     val emb = Tables(s, dir, "embeddings")
     val corpus = embWithPlantedNeighbors(emb)
     val query = emb.filter(col("vec_id") === 0)
-    val index = IvfPqResidualCache.getOrElseUpdate(s, dir + "#planted") {
-      val ivf = IvfStageCache.getOrElseUpdate(s, dir + "#planted") {
-        val base = IvfStageCache.getOrElseUpdate(s, dir)(
+    val index = SessionScopedCache.getOrElseUpdate(s, "ivfpq-residual:" + dir + "#planted") {
+      val ivf = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir + "#planted") {
+        val base = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir)(
           IvfAnn.build(emb, "vec_id", "embedding", nlist = 16, iters = 3))
         IvfAnn.append(base, corpus.filter(col("vec_id") >= 1000000L))
       }
@@ -4680,7 +4460,7 @@ object SparkEntry {
     * inverted).
     */
   private def bm25RetractSearch(s: SparkSession, dir: String): DataFrame = {
-    val idx = Bm25IndexCache.getOrElseUpdate(s, dir + "#retract") {
+    val idx = SessionScopedCache.getOrElseUpdate(s, "bm25:" + dir + "#retract") {
       val docs = Tables(s, dir, "documents")
       val path = scratchDir("graft-bm25-retract")
       graft.operators.Bm25.save(
@@ -4748,7 +4528,7 @@ object SparkEntry {
         (col("doc_id") * ChunkIdMultiplier + col("chunk_id") +
           coalesce(assert_true(col("chunk_id") < ChunkIdMultiplier), lit(0L))).as("cid"),
         col("chunk_text"))
-    val idx = Bm25IndexCache.getOrElseUpdate(s, dir + "#chunks")(
+    val idx = SessionScopedCache.getOrElseUpdate(s, "bm25:" + dir + "#chunks")(
       graft.operators.Bm25.build(chunks, "cid", "chunk_text"))
     graft.operators.Bm25.search(idx, Seq("vector", "merge", "stream"), k = 20)
       .select(
@@ -4763,7 +4543,7 @@ object SparkEntry {
     * .bpeTrain]].
     */
   private def bpeMerges(s: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
-    BpeStageCache.getOrElseUpdate(s, dir)(
+    SessionScopedCache.getOrElseUpdate(s, "bpe:" + dir)(
       graft.operators.Lexicon.bpeTrain(Tables(s, dir, "documents"), "text", nMerges = 6)
         .collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
@@ -4811,7 +4591,7 @@ object SparkEntry {
   private val UlmPruneTo = 8
 
   private def ulmVocab(s: SparkSession, dir: String): graft.operators.UnigramLm.Vocab =
-    UlmStageCache.getOrElseUpdate(s, dir)(
+    SessionScopedCache.getOrElseUpdate(s, "ulm:" + dir)(
       graft.operators.UnigramLm.train(Tables(s, dir, "documents"), "text",
         maxPieceLen = UlmMaxPieceLen, topMulti = UlmTopMulti,
         emIters = UlmEmIters, maxWordLen = UlmMaxWordLen))
@@ -4853,7 +4633,7 @@ object SparkEntry {
   private def ulmTrainPruned(s: SparkSession, dir: String): DataFrame =
     graft.operators.UnigramLm.vocabTable(
       Tables(s, dir, "documents"), "text",
-      UlmStageCache.getOrElseUpdate(s, dir + "#pruned")(
+      SessionScopedCache.getOrElseUpdate(s, "ulm:" + dir + "#pruned")(
         graft.operators.UnigramLm.train(Tables(s, dir, "documents"), "text",
           maxPieceLen = UlmMaxPieceLen, topMulti = UlmTopMulti,
           emIters = UlmEmIters, maxWordLen = UlmMaxWordLen,
@@ -4867,7 +4647,7 @@ object SparkEntry {
     * and walks it with a recursive CTE.
     */
   private def wordpieceSegment(s: SparkSession, dir: String): DataFrame = {
-    val v = UlmStageCache.getOrElseUpdate(s, dir + "#pruned")(
+    val v = SessionScopedCache.getOrElseUpdate(s, "ulm:" + dir + "#pruned")(
       graft.operators.UnigramLm.train(Tables(s, dir, "documents"), "text",
         maxPieceLen = UlmMaxPieceLen, topMulti = UlmTopMulti,
         emIters = UlmEmIters, maxWordLen = UlmMaxWordLen,
@@ -4890,7 +4670,7 @@ object SparkEntry {
     * verbatim).
     */
   private def ulmSegmentPersisted(s: SparkSession, dir: String): DataFrame = {
-    val v = UlmStageCache.getOrElseUpdate(s, dir + "#persisted") {
+    val v = SessionScopedCache.getOrElseUpdate(s, "ulm:" + dir + "#persisted") {
       val path = scratchDir("graft-ulm-vocab")
       graft.operators.UnigramLm.save(ulmVocab(s, dir), s, path)
       graft.operators.UnigramLm.load(s, path)
@@ -4919,7 +4699,7 @@ object SparkEntry {
     */
   private def ulmAbsorbTrain(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
-    val v = UlmStageCache.getOrElseUpdate(s, dir + "#absorb") {
+    val v = SessionScopedCache.getOrElseUpdate(s, "ulm:" + dir + "#absorb") {
       val path = scratchDir("graft-ulm-absorb")
       graft.operators.UnigramLm.trainAndSave(
         docs.filter(col("doc_id") % 2 === 0), "text", path,
@@ -4938,7 +4718,7 @@ object SparkEntry {
     * full rebuild yields) is itself oracle-checked, not just spec'd.
     */
   private def bm25AbsorbSearch(s: SparkSession, dir: String): DataFrame = {
-    val idx = Bm25IndexCache.getOrElseUpdate(s, dir + "#absorb") {
+    val idx = SessionScopedCache.getOrElseUpdate(s, "bm25:" + dir + "#absorb") {
       val docs = Tables(s, dir, "documents")
       val first = graft.operators.Bm25.build(
         docs.filter(col("doc_id") % 2 === 0), "doc_id", "text")
@@ -5502,7 +5282,7 @@ object SparkEntry {
     */
   private def textBackoffScore(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
-    val model = BackoffLmCache.getOrElseUpdate(s, dir)(
+    val model = SessionScopedCache.getOrElseUpdate(s, "backoff-lm:" + dir)(
       graft.operators.BackoffLm.train(docs.filter(col("doc_id") % 50 =!= 7), "doc_id", "text"))
     graft.operators.BackoffLm
       .score(docs.filter(col("doc_id") % 50 === 7), model, "doc_id", "text")
@@ -5520,7 +5300,7 @@ object SparkEntry {
     */
   private def textBackoffInline(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
-    val model = BackoffLmCache.getOrElseUpdate(s, dir)(
+    val model = SessionScopedCache.getOrElseUpdate(s, "backoff-lm:" + dir)(
       graft.operators.BackoffLm.train(docs.filter(col("doc_id") % 50 =!= 7), "doc_id", "text"))
     // 4M-row ceiling: the sf0.1 corpus sits under it; past that the
     // join form is the right shape anyway
@@ -5760,7 +5540,7 @@ object SparkEntry {
     // the base group table is fixture prep (the store the increment
     // arrives AT) — a pure aggregation, staged once; the measured
     // lifecycle is save -> absorb -> load -> audit, in full every rep
-    val baseGroups = ExactTopCache.getOrElseUpdate(s, dir + "#agg-store-base") {
+    val baseGroups = SessionScopedCache.getOrElseUpdate(s, "exact-top:" + dir + "#agg-store-base") {
       graft.util.Staged.settle(
         A.build(ev.filter(col("event_id") % 2 === 0), keys, col("value")))
     }

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.config.TableConfig
 import graft.sources.StagedSwap
+import graft.util.SessionScopedCache
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -70,11 +71,11 @@ object MergeEngine {
     * the table from another process requires [[invalidateSchema]] (or a
     * new session).
     */
-  private val schemaCache = new graft.util.SessionScopedCache[StructType]
+  private def schemaKey(path: String): String = "schema:" + path
 
   /** Drop the cached read schema for `path` (external schema change). */
   def invalidateSchema(spark: SparkSession, path: String): Unit =
-    schemaCache.remove(spark, path)
+    SessionScopedCache.remove(spark, schemaKey(path))
 
   /** All-nullable copy: files written before an evolution lack the new
     * columns, so a cached read schema must never claim non-nullability.
@@ -131,16 +132,16 @@ object MergeEngine {
     */
   def readTable(spark: SparkSession, path: String): Option[DataFrame] = {
     StagedSwap.recover(spark, path)
-    try Some(schemaCache.get(spark, path) match {
+    try Some(SessionScopedCache.get[StructType](spark, schemaKey(path)) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None =>
         val df = spark.read.option("mergeSchema", "true").parquet(path)
-        schemaCache.put(spark, path, nullableOf(df.schema)) // one footer sweep per session
+        SessionScopedCache.put(spark, schemaKey(path), nullableOf(df.schema)) // one footer sweep per session
         df
     })
     catch {
       case _: org.apache.spark.sql.AnalysisException =>
-        schemaCache.remove(spark, path) // table gone; don't trust the cache on recreate
+        SessionScopedCache.remove(spark, schemaKey(path)) // table gone; don't trust the cache on recreate
         None
     }
   }
@@ -156,7 +157,7 @@ object MergeEngine {
       // stale memo would skip the ALTER for a re-added partition and a
       // catalog reader would miss its data. The common per-batch call
       // (table exists) keeps the memo.
-      registeredPartitions.remove(spark, cfg.qualifiedName)
+      SessionScopedCache.remove(spark, partitionsKey(cfg))
       val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
       val writer = empty.write.format("parquet").mode("ignore").option("path", cfg.path)
       (if (cfg.partitionCols.nonEmpty) writer.partitionBy(cfg.partitionCols: _*) else writer)
@@ -277,8 +278,7 @@ object MergeEngine {
     * `DROP PARTITION` against a live session's table is not observed;
     * the memo is session-scoped, so a fresh session re-adds.
     */
-  private val registeredPartitions =
-    new graft.util.SessionScopedCache[java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]]
+  private def partitionsKey(cfg: TableConfig): String = "partitions:" + cfg.qualifiedName
 
   /** Keep a registered catalog table consistent with the path.
     *
@@ -293,7 +293,7 @@ object MergeEngine {
   private def syncCatalog(spark: SparkSession, cfg: TableConfig, touchedRels: Seq[String]): Unit =
     if (touchedRels.nonEmpty && spark.catalog.tableExists(cfg.qualifiedName)) {
       try {
-        val known = registeredPartitions.getOrElseUpdate(spark, cfg.qualifiedName)(
+        val known = SessionScopedCache.getOrElseUpdate(spark, partitionsKey(cfg))(
           new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean])
         val fresh = touchedRels.filterNot(known.containsKey)
         if (fresh.nonEmpty) {
@@ -342,7 +342,7 @@ object MergeEngine {
   private def truncate(spark: SparkSession, cfg: TableConfig): Unit = {
     val root = new Path(cfg.path)
     StagedSwap.deleteOrThrow(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
-    registeredPartitions.remove(spark, cfg.qualifiedName)
+    SessionScopedCache.remove(spark, partitionsKey(cfg))
   }
 
   /** Compact a merge table's small files (micro-batch CDC writes leave
@@ -458,13 +458,13 @@ object MergeEngine {
           // catalog ALTER (eviction is safe even if the swap fails: a
           // memo miss only costs one redundant idempotent ALTER)
           if (removed.nonEmpty)
-            registeredPartitions.get(spark, cfg.qualifiedName)
+            SessionScopedCache.get[java.util.Map[String, java.lang.Boolean]](spark, partitionsKey(cfg))
               .foreach(known => removed.foreach(known.remove))
           removed
         })
     // the committed schema is the table's new unified read schema
-    // (see schemaCache): steady-state reads skip the footer sweep
-    schemaCache.put(spark, cfg.path, nullableOf(df.schema))
+    // (see schemaKey): steady-state reads skip the footer sweep
+    SessionScopedCache.put(spark, schemaKey(cfg.path), nullableOf(df.schema))
     if (cfg.partitionCols.isEmpty) Nil else touched
   }
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -370,24 +371,6 @@ object FileManifest {
     }
   }
 
-  /** One hadoop-conf broadcast per SparkSession PER CONF FINGERPRINT,
-    * cached: the callers (listParquetFiles/buildForFiles) run once per
-    * micro-batch on a manifest-appending stream, and a fresh
-    * never-destroyed Broadcast per batch accumulates driver/executor
-    * blocks for the stream's lifetime with only GC + ContextCleaner to
-    * reclaim them. The conf is NOT assumed immutable: runtime
-    * mutations of `sparkContext.hadoopConfiguration` (credential/token
-    * refresh, feature toggles) are detected by fingerprinting the
-    * conf's entries on every call — a changed fingerprint destroys the
-    * stale broadcast and ships the current conf, so executors never
-    * keep listing with pre-refresh state. The fingerprint pass
-    * iterates the conf once (microseconds against a per-micro-batch
-    * listing of RPC calls).
-    */
-  private val hadoopConfBroadcasts =
-    new graft.util.SessionScopedCache[
-      (Long, org.apache.spark.broadcast.Broadcast[HadoopConfCarrier])]
-
   /** Order-independent 64-bit fingerprint of every conf entry. */
   private def confFingerprint(conf: org.apache.hadoop.conf.Configuration): Long = {
     var acc = 0L
@@ -403,16 +386,30 @@ object FileManifest {
     acc
   }
 
+  /** One hadoop-conf broadcast per SparkSession PER CONF FINGERPRINT,
+    * cached: the callers (listParquetFiles/buildForFiles) run once per
+    * micro-batch on a manifest-appending stream, and a fresh
+    * never-destroyed Broadcast per batch accumulates driver/executor
+    * blocks for the stream's lifetime with only GC + ContextCleaner to
+    * reclaim them. The conf is NOT assumed immutable: runtime
+    * mutations of `sparkContext.hadoopConfiguration` (credential/token
+    * refresh, feature toggles) are detected by fingerprinting the
+    * conf's entries on every call — a changed fingerprint destroys the
+    * stale broadcast and ships the current conf, so executors never
+    * keep listing with pre-refresh state. The fingerprint pass
+    * iterates the conf once (microseconds against a per-micro-batch
+    * listing of RPC calls).
+    */
   private[graft] def broadcastHadoopConf(spark: SparkSession)
-      : org.apache.spark.broadcast.Broadcast[HadoopConfCarrier] = synchronized {
+      : Broadcast[HadoopConfCarrier] = synchronized {
     val conf = spark.sparkContext.hadoopConfiguration
     val fp = confFingerprint(conf)
-    hadoopConfBroadcasts.get(spark, "hadoopConf") match {
+    graft.util.SessionScopedCache.get[(Long, Broadcast[HadoopConfCarrier])](spark, "hadoop-conf") match {
       case Some((cached, b)) if cached == fp => b
       case stale =>
         stale.foreach { case (_, b) => b.destroy() }
         val b = spark.sparkContext.broadcast(new HadoopConfCarrier(conf))
-        hadoopConfBroadcasts.put(spark, "hadoopConf", (fp, b))
+        graft.util.SessionScopedCache.put(spark, "hadoop-conf", (fp, b))
         b
     }
   }

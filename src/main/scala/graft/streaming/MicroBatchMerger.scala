@@ -4,6 +4,7 @@ import graft.avro.{AvroDecode, AvroSchemas}
 import graft.config.TableConfig
 import graft.debezium.{DebeziumCast, SchemaProvider}
 import graft.operators.{CdcDedup, MergeEngine}
+import graft.util.SessionScopedCache
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -29,18 +30,6 @@ object MicroBatchMerger {
 
   val DefaultDeletedCol = "__deleted"
   val DefaultVersionCol = "__log_sequence_number"
-
-  /** Per-(application, table) memo of [[MergeEngine.createTableIfNotExists]]:
-    * the ensure is idempotent DDL, so after the first success per session
-    * the two catalog roundtrips per micro-batch are pure fixed cost.
-    */
-  private val ensuredTables = new graft.util.SessionScopedCache[Boolean]
-
-  /** Per-(application, table) processed-batch counter driving
-    * [[TableConfig.autoCompactEvery]].
-    */
-  private val batchCounters =
-    new graft.util.SessionScopedCache[java.util.concurrent.atomic.AtomicLong]
 
   /** @param failFast true (reference parity): a malformed Avro payload
     *                  fails the batch (and so the query). false:
@@ -97,7 +86,10 @@ object MicroBatchMerger {
               val changes =
                 if (cfg.additionalCols.isEmpty) deduped
                 else deduped.select(deduped.columns.map(col).toSeq ++ cfg.additionalCols.map(expr): _*)
-              ensuredTables.getOrElseUpdate(spark, cfg.qualifiedName) {
+              // per-(application, table) memo: the ensure is idempotent
+              // DDL, so after the first success per session its two
+              // catalog roundtrips per micro-batch are pure fixed cost
+              SessionScopedCache.getOrElseUpdate(spark, "ensured:" + cfg.qualifiedName) {
                 MergeEngine.createTableIfNotExists(
                   spark, StructType(changes.schema.filterNot(_.name == deletedCol)), cfg)
                 true
@@ -105,8 +97,8 @@ object MicroBatchMerger {
               MergeEngine(spark, cfg, changes, pkCols, versionCol, deletedCol)
             }
             if (cfg.autoCompactEvery > 0) {
-              val n = batchCounters
-                .getOrElseUpdate(spark, cfg.qualifiedName)(new java.util.concurrent.atomic.AtomicLong)
+              val n = SessionScopedCache
+                .getOrElseUpdate(spark, "batches:" + cfg.qualifiedName)(new java.util.concurrent.atomic.AtomicLong)
                 .incrementAndGet()
               if (n % cfg.autoCompactEvery == 0) { MergeEngine.compact(spark, cfg); () }
             }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** Lineage truncation for SESSION-STAGED DataFrames (the frames held in
-  * [[SessionScopedCache]]s for the application lifetime).
+  * [[SessionScopedCache]] for the application lifetime).
   *
   * A persisted frame keeps its FULL logical plan: every later query
   * built on it re-analyzes, re-canonicalizes (for cache lookup) and

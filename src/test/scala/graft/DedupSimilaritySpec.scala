@@ -124,20 +124,42 @@ class DedupSimilaritySpec extends SparkSpec {
     ()
   }
 
-  test("LshStageCache: per-application entries, evicted when the application ends") {
+  test("SessionScopedCache: per-app entries, one listener, evicted at app end") {
+    val reg = graft.util.SessionScopedCache
     val appId = spark.sparkContext.applicationId
-    val before = LshStageCache.entryCount
-    val first = LshStageCache.getOrElseUpdate(spark, "/lsh-cache-test/dirA")((corpus, corpus))
-    val second = LshStageCache.getOrElseUpdate(spark, "/lsh-cache-test/dirA")((corpus.limit(1), corpus))
+    // start from a clean application: eviction drops every entry of the
+    // shared test session, and each one rebuilds on its next use
+    reg.evict(appId)
+    val others = reg.entryCount // entries of other applications, if any
+    val listeners0 = reg.listenersAdded
+    val misses0 = reg.totalMisses
+    val first = reg.getOrElseUpdate(spark, "lsh:/cache-test/dirA")((corpus, corpus))
+    assert(reg.totalMisses == misses0 + 1, "a build counts one miss")
+    val second = reg.getOrElseUpdate(spark, "lsh:/cache-test/dirA")((corpus.limit(1), corpus))
     assert(first._1 eq second._1, "second lookup must return the cached stage")
-    assert(LshStageCache.entryCount == before + 1)
+    assert(reg.totalMisses == misses0 + 1, "a hit counts no miss")
+    assert(reg.entryCount == others + 1)
+    // the same dir under two owners' prefixes is two entries
+    assert(reg.getOrElseUpdate(spark, "ivf:/cache-test/dirA")(1L) == 1L)
+    assert(reg.getOrElseUpdate(spark, "pq:/cache-test/dirA")(2L) == 2L)
+    assert(reg.get[Long](spark, "ivf:/cache-test/dirA").contains(1L))
+    assert(reg.entryCount == others + 3)
+    // any number of prefixes in one application: exactly one listener
+    Seq("count:", "schema:", "ensured:", "batches:", "exact-top:").foreach { p =>
+      reg.put(spark, p + "/cache-test/dirA", p)
+    }
+    assert(reg.listenersAdded == listeners0 + 1)
+    // another application's end leaves this application's entries alone
+    reg.evict(appId + "-other")
+    assert(reg.entryCount == others + 8)
+    assert(reg.get[String](spark, "schema:/cache-test/dirA").contains("schema:"))
     // what the registered onApplicationEnd listener fires:
-    LshStageCache.evict(appId)
-    assert(LshStageCache.entryCount == 0, "entries for the ended application must be gone")
+    reg.evict(appId)
+    assert(reg.entryCount == others, "entries for the ended application must be gone")
     // a later session (same or new appId) recomputes instead of double-holding
-    val third = LshStageCache.getOrElseUpdate(spark, "/lsh-cache-test/dirA")((corpus.limit(2), corpus))
+    val third = reg.getOrElseUpdate(spark, "lsh:/cache-test/dirA")((corpus.limit(2), corpus))
     assert(!(third._1 eq first._1), "evicted entry must be recomputed")
-    LshStageCache.evict(appId)
+    reg.evict(appId)
     ()
   }
 

@@ -245,4 +245,12 @@ class FileManifestSpec extends SparkSpec {
       assert(FileManifest.broadcastHadoopConf(spark).value.value.get(key) == "v2")
     } finally conf.unset(key)
   }
+
+  test("file_manifest_stats leaves its z-layout dir registered for deletion at exit") {
+    val dir = "/root/testdata/sf0.001"
+    SparkEntry.queries("file_manifest_stats")(spark, dir).collect()
+    val zlayout = graft.util.SessionScopedCache.get[String](spark, "zlayout:" + dir)
+    assert(zlayout.isDefined, "the z-layout path is staged per (session, dir)")
+    assert(SparkEntry.registeredScratchDirs.contains(zlayout.get))
+  }
 }
