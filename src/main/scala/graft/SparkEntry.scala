@@ -37,12 +37,13 @@ object SparkEntry {
     */
   private val ChunkIdMultiplier = 100000L
 
-  /** Temp directory for staged and persisted-store gated queries,
-    * registered for recursive deletion at JVM exit so repeated
-    * (session, dir) runs don't leak parquet trees. One shutdown hook,
-    * installed by the first call, deletes every registered dir.
+  /** Temp directory for staged and persisted-store gated queries (and
+    * the test suite's temp dirs), registered for recursive deletion at
+    * JVM exit so repeated (session, dir) runs don't leak parquet trees.
+    * One shutdown hook, installed by the first call, deletes every
+    * registered dir.
     */
-  private def scratchDir(prefix: String): String = {
+  private[graft] def scratchDir(prefix: String): String = {
     scratchHook
     val p = java.nio.file.Files.createTempDirectory(prefix).toString
     scratchDirs.add(p)

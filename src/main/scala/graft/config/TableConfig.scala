@@ -18,12 +18,13 @@ package graft.config
   *                  (poor man's clustering/Z-order for one dimension).
   * @param autoCompactEvery when > 0, [[graft.streaming.MicroBatchMerger]]
   *                  runs [[graft.operators.MergeEngine.compact]] on this
-  *                  table after every Nth processed micro-batch —
-  *                  micro-batch merges intentionally never repartition
-  *                  on write (an extra shuffle per batch), so file
-  *                  counts grow with batch count until compaction folds
-  *                  them (the OPTIMIZE model). 0 (default) = caller
-  *                  compacts explicitly.
+  *                  table after every Nth processed micro-batch: one
+  *                  read, one exchange and one commit that rewrite every
+  *                  oversized partition together. Micro-batch merges
+  *                  intentionally never repartition on write (an extra
+  *                  shuffle per batch), so file counts grow with batch
+  *                  count until compaction folds them (the OPTIMIZE
+  *                  model). 0 (default) = caller compacts explicitly.
   */
 final case class TableConfig(
     schema: String,

@@ -8,7 +8,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** Monotone-version MERGE engine over partitioned parquet tables.
   *
@@ -349,11 +350,13 @@ object MergeEngine {
     * one file set per touched partition per batch; at 100 TB the read
     * amplification from thousands of tiny files dominates scan cost).
     *
-    * Rewrites each partition whose file count exceeds
-    * `maxFilesPerPartition` into `ceil(bytes / targetFileBytes)` files
-    * via the same staged atomic-swap path the merge uses. Untouched
-    * partitions keep their files. Returns the number of partitions
-    * compacted.
+    * Every partition whose file count exceeds `maxFilesPerPartition`
+    * (an unpartitioned table: the root's file set) is rewritten into
+    * `ceil(bytes / targetFileBytes)` files by ONE transaction: one read
+    * filtered to those partitions, one `repartition(n)` exchange in
+    * which each output file is its own task, and one staged swap whose
+    * units are exactly the partitions it rewrites. Untouched partitions
+    * keep their files. Returns the number of partitions compacted.
     */
   def compact(
       spark: SparkSession,
@@ -363,34 +366,67 @@ object MergeEngine {
     val root = new Path(cfg.path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return 0
-
-    if (cfg.partitionCols.isEmpty) {
-      val files = StagedSwap.units(fs, root, 0)
-      if (files.size <= maxFilesPerPartition) 0
-      else {
-        val target = math.max(1, math.ceil(files.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
-        readTable(spark, cfg.path).foreach(t => writeStaged(spark, cfg, t.repartition(target)))
-        1
-      }
-    } else {
-      val oversized = StagedSwap.units(fs, root, cfg.partitionCols.size)
-        .map(d => d.getPath -> StagedSwap.units(fs, d.getPath, 0))
-        .filter(_._2.size > maxFilesPerPartition)
-      val qualifiedRoot = fs.makeQualified(root).toString
-      oversized.foreach { case (dir, files) =>
+    val qualifiedRoot = fs.makeQualified(root).toString
+    val dirs =
+      if (cfg.partitionCols.isEmpty) Seq(root)
+      else StagedSwap.units(fs, root, cfg.partitionCols.size).map(_.getPath)
+    // (predicate, target file count) per oversized partition dir
+    val oversized = dirs
+      .map(d => d -> StagedSwap.units(fs, d, 0))
+      .filter(_._2.size > maxFilesPerPartition)
+      .map { case (dir, files) =>
         val rel = fs.makeQualified(dir).toString.stripPrefix(qualifiedRoot).stripPrefix("/")
-        val pred = rel.split("/").map { seg =>
+        val pred = if (rel.isEmpty) lit(true) else rel.split("/").map { seg =>
           val Array(k, v) = seg.split("=", 2)
           if (v == "__HIVE_DEFAULT_PARTITION__") col(k).isNull
           else col(k) === lit(ExternalCatalogUtils.unescapePathName(v))
         }.reduce(_ && _)
-        val target = math.max(1, math.ceil(files.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
-        readTable(spark, cfg.path).foreach { t =>
-          writeStaged(spark, cfg, t.filter(pred).repartition(target))
-        }
+        pred -> math.max(1, math.ceil(files.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
       }
-      oversized.size
+    if (oversized.isEmpty) return 0
+    readTable(spark, cfg.path).foreach { t =>
+      // output file j of partition i is exchange slot base_i + j; its
+      // key is one the hash partitioner routes to that slot, so no two
+      // files share a task and each partition lands as exactly n_i files
+      val keys = slotKeys(oversized.map(_._2).sum)
+      val bases = oversized.scanLeft(0)(_ + _._2)
+      lazy val rowHash = xxhash64( // map columns are not hashable
+        t.schema.fields.filterNot(f => holdsMap(f.dataType)).map(f => col(f.name)).toSeq: _*)
+      val branches = oversized.zip(bases).map { case ((pred, n), base) =>
+        pred -> (if (n == 1) lit(keys(base))
+                 else element_at(typedLit(keys.slice(base, base + n).toSeq),
+                   (pmod(rowHash, lit(n)) + 1).cast("int")))
+      }
+      val fileKey = branches.tail.foldLeft(when(branches.head._1, branches.head._2)) {
+        case (w, (pred, key)) => w.when(pred, key)
+      }
+      writeStaged(spark, cfg,
+        t.filter(oversized.map(_._1).reduce(_ || _)).repartition(keys.length, fileKey))
     }
+    oversized.size
+  }
+
+  /** For each exchange slot `s < n`, an int key that `repartition(n, key)`
+    * routes to slot `s` (Spark's hash partitioning: `pmod(murmur3(key,
+    * seed 42), n)`), so `n` distinct slots fill `n` distinct tasks.
+    */
+  private def slotKeys(n: Int): Array[Int] = {
+    val keys = Array.fill(n)(-1)
+    var key = 0
+    var found = 0
+    while (found < n) {
+      val s = Math.floorMod(Murmur3_x86_32.hashInt(key, 42), n)
+      if (keys(s) < 0) { keys(s) = key; found += 1 }
+      key += 1
+    }
+    keys
+  }
+
+  private def holdsMap(t: DataType): Boolean = t match {
+    case _: MapType => true
+    case a: ArrayType => holdsMap(a.elementType)
+    case s: StructType => s.fields.exists(f => holdsMap(f.dataType))
+    case _ => false
   }
 
   // ---------------------------------------------------------------------
@@ -436,16 +472,21 @@ object MergeEngine {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // clustered: within-partition sort -> parquet row-group min/max
     // stats cluster on sortCols, so later point/range scans (incl. the
-    // delete probe) skip row groups. Deliberately NO repartition-on-
-    // write: routing rows to one task per partition value (plain or
+    // delete probe) skip row groups. The sort leads with the partition
+    // columns: the partitioned write needs its input ordered by them
+    // and would otherwise re-sort each task by them alone, dropping
+    // the sortCols order. Deliberately NO repartition-on-write for a
+    // merge: routing rows to one task per partition value (plain or
     // REBALANCE-hinted) costs an extra shuffle per micro-batch that
     // measured 25-40% ingest-rate regression at small batch sizes,
     // while AQE already coalesces the merge aggregation's output
     // shuffle. File-count growth is handled out of band by [[compact]]
-    // (the OPTIMIZE model), which [[graft.streaming.MicroBatchMerger]]
-    // can invoke on a cadence.
+    // (the OPTIMIZE model: one call is one such write and one commit
+    // for every oversized partition), which
+    // [[graft.streaming.MicroBatchMerger]] can invoke on a cadence.
     val clustered =
-      if (cfg.sortCols.isEmpty) df else df.sortWithinPartitions(cfg.sortCols.map(col): _*)
+      if (cfg.sortCols.isEmpty) df
+      else df.sortWithinPartitions((cfg.partitionCols ++ cfg.sortCols).map(col): _*)
     val touched = StagedSwap.overwritePartitions(spark, cfg.path, clustered, cfg.partitionCols,
       removed = staged =>
         if (cfg.partitionCols.isEmpty)

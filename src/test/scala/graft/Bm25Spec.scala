@@ -139,7 +139,7 @@ class Bm25Spec extends SparkSpec {
     val corpus = Seq(
       (1L, "cat dog cat fish"), (2L, "dog bird"),
       (3L, "fish fish fish"), (4L, "cat bird cat")).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("bm25-retract").toString
+    val path = tmpDir("bm25-retract")
     Bm25.save(Bm25.build(corpus, "doc_id", "text"), path, prefixBuckets = 8)
     Bm25.retractFromSaved(spark, path, Seq(2L, 4L).toDF("doc_id"), "doc_id")
     val loaded = Bm25.load(spark, path)
@@ -150,7 +150,7 @@ class Bm25Spec extends SparkSpec {
     val b = Bm25.search(rebuilt, Seq("cat", "fish", "bird"), k = 4).collect().toSeq
     assert(a == b)
     // compaction: re-saving the loaded index folds the tombstones away
-    val path2 = java.nio.file.Files.createTempDirectory("bm25-compact").toString
+    val path2 = tmpDir("bm25-compact")
     Bm25.save(loaded, path2, prefixBuckets = 8)
     val compacted = Bm25.load(spark, path2)
     assert(Bm25.search(compacted, Seq("cat", "fish", "bird"), k = 4).collect().toSeq == b)
@@ -161,7 +161,7 @@ class Bm25Spec extends SparkSpec {
     val corpus = Seq(
       (1L, "cat dog cat fish"), (2L, "dog bird"),
       (3L, "fish fish fish"), (4L, "cat bird cat")).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("bm25-overlap").toString
+    val path = tmpDir("bm25-overlap")
     Bm25.save(Bm25.build(corpus, "doc_id", "text"), path, prefixBuckets = 8)
     Bm25.retractFromSaved(spark, path, Seq(2L).toDF("doc_id"), "doc_id")
     // second batch re-lists id 2 (normal in right-to-be-forgotten
@@ -183,7 +183,7 @@ class Bm25Spec extends SparkSpec {
     val corpus = Seq(
       (1L, "cat dog cat fish"), (2L, "dog bird"),
       (3L, "fish fish fish")).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("bm25-reingest").toString
+    val path = tmpDir("bm25-reingest")
     Bm25.save(Bm25.build(corpus, "doc_id", "text"), path, prefixBuckets = 8)
     Bm25.retractFromSaved(spark, path, Seq(2L).toDF("doc_id"), "doc_id")
     // doc 2 re-enters the corpus with fresh text
@@ -206,7 +206,7 @@ class Bm25Spec extends SparkSpec {
     val corpus = Seq(
       (1L, "cat dog cat fish"), (2L, "dog bird"),
       (3L, "fish fish fish"), (4L, "cat bird cat")).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("bm25-vacuum").toString
+    val path = tmpDir("bm25-vacuum")
     Bm25.save(Bm25.build(corpus, "doc_id", "text"), path, prefixBuckets = 8)
     Bm25.retractFromSaved(spark, path, Seq(2L, 4L).toDF("doc_id"), "doc_id")
     val before = Bm25.search(Bm25.load(spark, path), Seq("cat", "fish", "bird"), k = 4)

@@ -36,7 +36,7 @@ class ClusterAbsorbPropertySpec extends SparkSpec {
         (rnd.nextInt(nNodes).toLong, rnd.nextInt(nNodes).toLong))
       val nBatches = 2 + rnd.nextInt(4)
       val batches = all.grouped(math.max(all.size / nBatches, 1)).toSeq
-      val dir = java.nio.file.Files.createTempDirectory(s"clprop$trial").toString
+      val dir = tmpDir(s"clprop$trial")
       Clustering.saveClusters(
         Clustering.connectedComponents(batches.head.toDF("a", "b"), "a", "b"),
         dir, prefixBuckets = 8)

@@ -91,7 +91,7 @@ class ClusteringSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
 
   test("absorbEdges == rebuild across batches with cross-component merges") {
-    val dir = java.nio.file.Files.createTempDirectory("clstore").toString
+    val dir = tmpDir("clstore")
     val rnd = new scala.util.Random(7)
     val all = Seq.fill(900)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
       .filter(e => e._1 != e._2)
@@ -113,7 +113,7 @@ class ClusteringSpec extends SparkSpec {
   }
 
   test("auto-compaction keeps the forwarding table bounded over a long absorb run") {
-    val dir = java.nio.file.Files.createTempDirectory("clstore-auto").toString
+    val dir = tmpDir("clstore-auto")
     // every batch links a new SMALLER id onto the chain, so each absorb
     // moves the component root and grows the forwarding table by a row
     // — the worst case for relabel accumulation
@@ -136,7 +136,7 @@ class ClusteringSpec extends SparkSpec {
   }
 
   test("absorbEdges handles intra-component and self edges as no-ops") {
-    val dir = java.nio.file.Files.createTempDirectory("clstore2").toString
+    val dir = tmpDir("clstore2")
     Clustering.saveClusters(
       Clustering.connectedComponents(
         Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b"), "a", "b"),
@@ -195,7 +195,7 @@ class ClusteringSpec extends SparkSpec {
   }
 
   test("absorbEdges bridges two existing components through a new node") {
-    val dir = java.nio.file.Files.createTempDirectory("clstore3").toString
+    val dir = tmpDir("clstore3")
     Clustering.saveClusters(
       Clustering.connectedComponents(
         Seq((5L, 6L), (20L, 21L)).toDF("a", "b"), "a", "b"),

@@ -50,7 +50,7 @@ class CompactionScaleSpec extends SparkSpec {
   }
 
   test("a ~2k-small-file layout compacts in one rewrite job, one file per group") {
-    val root = java.nio.file.Files.createTempDirectory("graft-compact-scale").toString
+    val root = tmpDir("graft-compact-scale")
     val src = s"$root/src"
     // 4 partitions x 512 shuffle tasks, each task writing one file per
     // partition value it holds -> ~2048 small files of ~60 rows

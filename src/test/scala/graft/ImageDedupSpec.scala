@@ -75,7 +75,7 @@ class ImageDedupSpec extends SparkSpec {
   }
 
   test("hash store: probe == full distance join, append is visible, read prunes") {
-    val path = java.nio.file.Files.createTempDirectory("phash-store").toString
+    val path = tmpDir("phash-store")
     val base = (0 until 20).map(s => (s.toLong, ImageDedup.dHash(img(20, 15, s)).toSeq))
     ImageDedup.saveHashStore(base.toDF("media_id", "hash"),
       "media_id", "hash", path, prefixBuckets = 8)

@@ -161,54 +161,109 @@ class MergeEngineSpec extends SparkSpec {
       "re-added partition missing from catalog (stale registration memo)")
   }
 
-  test("one mixed micro-batch on a partitioned table runs a pinned number of jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val topic = "pg.public.users"
-    val provider = new graft.debezium.InMemorySchemaProvider(Map(
-      1 -> AvroTestData.usersKeySchema, 10 -> AvroTestData.usersValueSchemaV1))
-    def batchOf(rows: (Int, Long, Boolean)*): DataFrame =
-      rows.zipWithIndex.map { case ((id, lsn, deleted), i) =>
-        val value = AvroTestData.encode(AvroTestData.usersValueSchemaV1, Map[String, Any](
-          "id" -> id, "name" -> s"n$id-$lsn", "email" -> s"$id@x.com",
-          "created_at" -> 19968, "updated_at" -> "2024-09-01T00:00:00Z",
-          "__deleted" -> deleted.toString,
-          "__timestamp" -> 1725148800000L, "__log_sequence_number" -> lsn))
-        (topic, 0, lsn * 100 + i, new java.sql.Timestamp(1725148800000L), 0, 1, 10, value)
-      }.toDF("topic", "partition", "offset", "timestamp", "timestampType",
-        "key_schema_id", "value_schema_id", "value_avro")
-    val path = tmpDir("merge-jobs")
-    val cfg = TableConfig("graft_test", "jobs_tbl", s"$path/t",
-      additionalCols = Seq("CAST(id % 3 AS INT) AS part"), partitionCols = Seq("part"))
-    val configs = Map(topic -> cfg)
-    graft.streaming.MicroBatchMerger.process(
-      batchOf((1 to 6).map(id => (id, 1L, false)): _*), configs, provider)
+  private val usersTopic = "pg.public.users"
 
-    val counter = new java.util.concurrent.atomic.AtomicInteger
+  private lazy val usersProvider = new graft.debezium.InMemorySchemaProvider(Map(
+    1 -> AvroTestData.usersKeySchema, 10 -> AvroTestData.usersValueSchemaV1))
+
+  /** One framed micro-batch of `users` changes, each `(id, lsn, deleted)`. */
+  private def usersBatch(rows: (Int, Long, Boolean)*): DataFrame =
+    rows.zipWithIndex.map { case ((id, lsn, deleted), i) =>
+      val value = AvroTestData.encode(AvroTestData.usersValueSchemaV1, Map[String, Any](
+        "id" -> id, "name" -> s"n$id-$lsn", "email" -> s"$id@x.com",
+        "created_at" -> 19968, "updated_at" -> "2024-09-01T00:00:00Z",
+        "__deleted" -> deleted.toString,
+        "__timestamp" -> 1725148800000L, "__log_sequence_number" -> lsn))
+      (usersTopic, 0, lsn * 100 + i, new java.sql.Timestamp(1725148800000L), 0, 1, 10, value)
+    }.toDF("topic", "partition", "offset", "timestamp", "timestampType",
+      "key_schema_id", "value_schema_id", "value_avro")
+
+  /** The Spark jobs and SQL executions `body` starts, read once the
+    * (asynchronous) listener bus has been quiet for a while.
+    */
+  private def sparkWorkOf(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val sqlExecs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { counter.incrementAndGet(); () }
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => sqlExecs.incrementAndGet(); ()
+        case _ => ()
+      }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      // update 1 and insert 7 (part 1), insert 8 (part 2), delete 3 (part 0)
-      graft.streaming.MicroBatchMerger.process(
-        batchOf((1, 2L, false), (7, 2L, false), (8, 2L, false), (3, 2L, true)), configs, provider)
-      // listener events are async: wait until the count has been stable
+      body
       var last = -1
       var stable = 0
       while (stable < 3) {
         Thread.sleep(100)
-        val now = counter.get
+        val now = jobs.get + sqlExecs.get
         if (now == last) stable += 1 else { stable = 0; last = now }
       }
     } finally spark.sparkContext.removeSparkListener(listener)
+    (jobs.get, sqlExecs.get)
+  }
 
-    val state = MergeEngine.readTable(spark, cfg.path).get
-      .select("id", "name").as[(Int, String)].collect().toMap
-    assert(state == Map(1 -> "n1-2", 2 -> "n2-1", 4 -> "n4-1", 5 -> "n5-1", 6 -> "n6-1",
+  /** The [[StagedSwap]] commits `body` stages. */
+  private def commitsOf(body: => Unit): Int = {
+    var staged = 0
+    StagedSwap.Failpoints.hook = p => if (p == "staged") staged += 1
+    try body finally StagedSwap.Failpoints.hook = _ => ()
+    staged
+  }
+
+  /** The `users` ids of a replica with each row's name. */
+  private def usersState(cfg: TableConfig): Map[Int, String] =
+    MergeEngine.readTable(spark, cfg.path).get.select("id", "name").as[(Int, String)].collect().toMap
+
+  test("one mixed micro-batch on a partitioned table runs a pinned number of jobs") {
+    val path = tmpDir("merge-jobs")
+    val cfg = TableConfig("graft_test", "jobs_tbl", s"$path/t",
+      additionalCols = Seq("CAST(id % 3 AS INT) AS part"), partitionCols = Seq("part"))
+    val configs = Map(usersTopic -> cfg)
+    graft.streaming.MicroBatchMerger.process(
+      usersBatch((1 to 6).map(id => (id, 1L, false)): _*), configs, usersProvider)
+    // update 1 and insert 7 (part 1), insert 8 (part 2), delete 3 (part 0)
+    val (jobs, _) = sparkWorkOf(graft.streaming.MicroBatchMerger.process(
+      usersBatch((1, 2L, false), (7, 2L, false), (8, 2L, false), (3, 2L, true)), configs, usersProvider))
+    assert(usersState(cfg) == Map(1 -> "n1-2", 2 -> "n2-1", 4 -> "n4-1", 5 -> "n5-1", 6 -> "n6-1",
       7 -> "n7-2", 8 -> "n8-2"))
     // metadata collect, routing, delete probe, staged write (AQE stages
     // included): one job more is a new pass over the batch
-    assert(counter.get <= JobsPerMixedBatch, s"${counter.get} jobs > $JobsPerMixedBatch")
+    assert(jobs <= JobsPerMixedBatch, s"$jobs jobs > $JobsPerMixedBatch")
+  }
+
+  test("a compacting micro-batch runs at most two jobs more than a mixed one") {
+    val path = tmpDir("merge-jobs-compact")
+    val cfg = TableConfig("graft_test", "jobs_compact_tbl", s"$path/t",
+      additionalCols = Seq("CAST(id % 3 AS INT) AS part"), partitionCols = Seq("part"),
+      autoCompactEvery = 1)
+    val configs = Map(usersTopic -> cfg)
+    // without partition coalescing every merge writes each table
+    // partition from most of the 8 shuffle tasks, so each batch leaves
+    // every partition above the compaction threshold
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    try {
+      graft.streaming.MicroBatchMerger.process(
+        usersBatch((1 to 60).map(id => (id, 1L, false)): _*), configs, usersProvider)
+      var commits = 0
+      val (jobs, _) = sparkWorkOf { commits = commitsOf(graft.streaming.MicroBatchMerger.process(
+        usersBatch((1, 2L, false), (70, 2L, false), (71, 2L, false), (3, 2L, true)),
+        configs, usersProvider)) }
+      assert(commits == 2, s"$commits commits: expected the merge's and one compaction's")
+      assert(usersState(cfg) == ((1 to 60).filterNot(_ == 3).map(id => id -> s"n$id-1").toMap
+        ++ Map(1 -> "n1-2", 70 -> "n70-2", 71 -> "n71-2")))
+      (0 to 2).foreach { part =>
+        val files = new java.io.File(s"$path/t/part=$part").listFiles().count(_.getName.endsWith(".parquet"))
+        assert(files == 1, s"part=$part holds $files files: the batch did not compact it")
+      }
+      // the compaction is one filtered read, one exchange and one write
+      assert(jobs <= JobsPerMixedBatch + 2, s"$jobs jobs > ${JobsPerMixedBatch + 2}")
+    } finally spark.conf.unset(coalesce)
   }
 
   test("fused mixed-batch merge on a partitioned table: one transaction, same end state") {
@@ -287,6 +342,48 @@ class MergeEngineSpec extends SparkSpec {
     assert(after.toSeq == before.toSeq, "compaction changed the data")
   }
 
+  test("compact: every oversized partition in one read, one exchange and one commit") {
+    val path = tmpDir("merge-compact-multi")
+    val cfg = TableConfig("graft_test", "compact_multi_tbl", s"$path/t", partitionCols = Seq("region"))
+    // raw appends, one file per partition each: "big" (wide rows), the
+    // null partition and a value that needs path escaping reach six
+    // files, "small" stays at two, under the threshold; `tags` is a map
+    // column, which the split of "big" into files cannot hash
+    (1 to 6).foreach { b =>
+      val rows = (1 to 300).map(i => (b * 1000 + i, "big" + "x" * 200 + i, Option("big"))) ++
+        (1 to 20).map(i => (b * 1000 + 500 + i, s"null$i", Option.empty[String])) ++
+        (1 to 20).map(i => (b * 1000 + 600 + i, s"esc$i", Option("a=b/c"))) ++
+        (if (b <= 2) (1 to 20).map(i => (b * 1000 + 700 + i, s"small$i", Option("small"))) else Nil)
+      rows.map { case (id, name, region) => (id, name, Map("b" -> b), region) }
+        .toDF("id", "name", "tags", "region").coalesce(1)
+        .write.mode("append").partitionBy("region").parquet(cfg.path)
+    }
+    def dirOf(region: String) = s"$path/t/region=$region"
+    def files(region: String) = new java.io.File(dirOf(region)).listFiles().filter(_.getName.endsWith(".parquet"))
+    val oversized = Seq("big", "__HIVE_DEFAULT_PARTITION__",
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName("a=b/c"))
+    assert(oversized.forall(files(_).length == 6) && files("small").length == 2)
+    // "big" lands as three files, every other partition as one
+    val target = files("big").map(_.length).sum / 5 * 2
+    val expected = oversized.map(r => r -> math.ceil(files(r).map(_.length).sum.toDouble / target).toInt).toMap
+    assert(expected("big") == 3 && expected.values.count(_ == 1) == 2, s"$expected")
+    val smallBefore = listFiles(dirOf("small"))
+    val before = MergeEngine.readTable(spark, cfg.path).get.orderBy("id").collect()
+
+    var compacted = 0
+    var commits = 0
+    val (_, sqlExecs) = sparkWorkOf { commits = commitsOf {
+      compacted = MergeEngine.compact(spark, cfg, targetFileBytes = target, maxFilesPerPartition = 4)
+    } }
+    assert(compacted == 3)
+    assert(commits == 1, s"$commits commits")
+    assert(sqlExecs == 1, s"$sqlExecs SQL executions")
+    oversized.foreach(r => assert(files(r).length == expected(r), s"region=$r: ${files(r).length} files"))
+    assert(listFiles(dirOf("small")) == smallBefore, "the partition under the threshold was rewritten")
+    val after = MergeEngine.readTable(spark, cfg.path).get.orderBy("id").collect()
+    assert(after.toSeq == before.toSeq, "compaction changed the data")
+  }
+
   test("null partition values: merge, update, delete and dir cleanup") {
     val path = tmpDir("merge-nullpart")
     val cfg = TableConfig("graft_test", "nullpart_tbl", s"$path/t", partitionCols = Seq("year"))
@@ -325,6 +422,32 @@ class MergeEngineSpec extends SparkSpec {
       val ids = rows.map(_._2).toSeq
       assert(ids == ids.sorted, "file not clustered by sort column")
     }
+  }
+
+  test("sortCols on a partitioned table: merge and compaction writes stay clustered") {
+    val path = tmpDir("merge-sort-part")
+    val cfg = TableConfig("graft_test", "sorted_part_tbl", s"$path/t",
+      partitionCols = Seq("part"), sortCols = Seq("id"))
+    def shuffled(seed: Int, ids: Seq[Int]) =
+      new scala.util.Random(seed).shuffle(ids).map(i => (i, s"n$i", i % 4, i.toLong))
+        .toDF("id", "name", "part", "lsn")
+    def assertClustered(write: String): Unit = {
+      val perFile = MergeEngine.readTable(spark, cfg.path).get
+        .select(input_file_name().as("f"), col("id"))
+        .as[(String, Int)].collect().groupBy(_._1).values
+      assert(perFile.size >= 4)
+      perFile.foreach { rows =>
+        val ids = rows.map(_._2).toSeq
+        assert(ids == ids.sorted, s"$write: file not clustered by sort column")
+      }
+    }
+    MergeEngine.upsert(spark, cfg, shuffled(7, 1 to 2000), Seq("id"), "lsn")
+    assertClustered("merge")
+    // unclustered raw appends push every partition over the threshold
+    (1 to 2).foreach(b => shuffled(b, (1 to 500).map(_ + 10000 * b)).coalesce(1)
+      .write.mode("append").partitionBy("part").parquet(cfg.path))
+    assert(MergeEngine.compact(spark, cfg, maxFilesPerPartition = 1) == 4)
+    assertClustered("compaction")
   }
 
   // ---------------------------------------------------------------------
@@ -435,13 +558,14 @@ class MergeEngineSpec extends SparkSpec {
         Seq((1, "a", 2023, 10L), (2, "b", 2024, 11L), (3, "c", 2024, 12L)).toDF(cols4: _*),
         Seq("id"), "lsn"),
       cfg => MergeEngine.delete(spark, cfg, Seq((1, 0L), (3, 0L)).toDF("id", "lsn"), Seq("id"))),
-    // a guaranteed-multi-file partition (an explicit repartition count
-    // defeats AQE coalescing)
+    // two partitions of two files each (one append per row): the one
+    // commit swaps both, so a kill at mid-swap leaves one swapped and
+    // one not, and the rollback must restore both
     mergeCase("crash during compaction rolls back; data and files intact", Seq("year"))(
-      cfg => Seq((0, "n0", 2024, 0L), (1, "n1", 2024, 1L), (2, "n2", 2024, 2L)).toDF(cols4: _*)
-        .repartition(3).write.partitionBy("year").mode("append").parquet(cfg.path),
+      cfg => (0 until 4).foreach(i => Seq((i, s"n$i", 2023 + i % 2, i.toLong)).toDF(cols4: _*)
+        .write.partitionBy("year").mode("append").parquet(cfg.path)),
       cfg => assert(MergeEngine.compact(spark, cfg, targetFileBytes = 1L << 30,
-        maxFilesPerPartition = 1) == 1)),
+        maxFilesPerPartition = 1) == 2)),
     KillCase("kill-point harness: FileManifest.vacuumManifest", dir => s"$dir/m",
       dir => {
         (1L to 30L).map(i => (i, s"v$i")).toDF("id", "v").repartition(3).write.parquet(s"$dir/tbl")

@@ -66,7 +66,7 @@ class PlanAuditSpec extends SparkSpec {
   test("store-probe partition prunes match their expectations' regex form") {
     // a tiny partitioned layout probed with isin — the same INSET/IN
     // PartitionFilters form the persisted-store expectations key on
-    val dir = java.nio.file.Files.createTempDirectory("graft-audit-prune").toString
+    val dir = tmpDir("graft-audit-prune")
     (1L to 40L).map(i => (i % 8, i)).toDF("__bp", "v")
       .write.mode("overwrite").partitionBy("__bp").parquet(dir)
     val probe = spark.read.parquet(dir).filter(col("__bp").isin(1L, 3L, 5L))

@@ -100,7 +100,7 @@ class QuantileSketchSpec extends SparkSpec {
   }
 
   test("persisted store: absorb == rebuild, untouched partitions unread") {
-    val dir = java.nio.file.Files.createTempDirectory("qsk-store").toString
+    val dir = tmpDir("qsk-store")
     val rnd = new scala.util.Random(3)
     val base = (1 to 3000).map(i => (s"k${i % 8}", math.abs(rnd.nextLong()) % 500000L + 1))
     val inc = (1 to 500).map(i => (s"k${i % 2}", math.abs(rnd.nextLong()) % 500000L + 1))

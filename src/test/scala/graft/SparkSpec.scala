@@ -12,7 +12,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", s"/tmp/graft-warehouse-${System.nanoTime()}")
+      .config("spark.sql.warehouse.dir", SparkEntry.scratchDir("graft-warehouse"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
@@ -23,6 +23,6 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh temp dir, deleted with everything in it at JVM exit. */
+  def tmpDir(prefix: String): String = SparkEntry.scratchDir(prefix)
 }

@@ -17,7 +17,7 @@ class StreamClusterSpec extends SparkSpec {
 
   test("foreachBatch absorbEdges over micro-batches == batch rebuild") {
     implicit val sqlCtx = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("stream-cluster").toString
+    val path = tmpDir("stream-cluster")
     val b1 = Seq((1L, 2L), (10L, 11L), (20L, 21L))
     Clustering.saveClusters(
       Clustering.connectedComponents(b1.toDF("a", "b"), "a", "b"),

@@ -25,7 +25,7 @@ class StreamPhashSpec extends SparkSpec {
 
   test("foreachBatch probe-then-append keeps first-seen reps and dedups the rest") {
     implicit val sqlCtx = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("stream-phash").toString
+    val path = tmpDir("stream-phash")
     ImageDedup.saveHashStore(
       (0 until 5).map(s => (s.toLong, ImageDedup.dHash(img(s)).toSeq))
         .toDF("media_id", "hash"),

@@ -16,7 +16,7 @@ class StreamUlmAbsorbSpec extends SparkSpec {
 
   test("foreachBatch absorb over micro-batches == full retrain") {
     implicit val sqlCtx = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("stream-ulm").toString
+    val path = tmpDir("stream-ulm")
     val b1 = Seq((1L, "abab ab cd abcd"))
     UnigramLm.trainAndSave(b1.toDF("doc_id", "text"), "text", path,
       maxPieceLen = 3, topMulti = 4, emIters = 2, prefixBuckets = 8)

@@ -134,7 +134,7 @@ class UnigramLmSpec extends SparkSpec {
   }
 
   test("absorbIntoSaved == full retrain, and segmentation agrees") {
-    val path = java.nio.file.Files.createTempDirectory("ulm-absorb").toString
+    val path = tmpDir("ulm-absorb")
     val base = Seq((1L, "abab ab cd abcd")).toDF("doc_id", "text")
     val inc = Seq((2L, "abab abab cd"), (3L, "dd abcd ab")).toDF("doc_id", "text")
     val full = base.unionByName(inc)
@@ -155,7 +155,7 @@ class UnigramLmSpec extends SparkSpec {
   }
 
   test("absorbIntoSaved preserves the prune parameter") {
-    val path = java.nio.file.Files.createTempDirectory("ulm-absorb-p").toString
+    val path = tmpDir("ulm-absorb-p")
     val base = Seq((1L, "abab ab cd abcd")).toDF("doc_id", "text")
     val inc = Seq((2L, "abab abab cd")).toDF("doc_id", "text")
     UnigramLm.trainAndSave(base, "text", path,
