@@ -87,26 +87,16 @@ object TextFunctions {
 
   /** Word n-grams from an already-computed token array column. Short
     * inputs (< n tokens) yield the whole text as one shingle.
-    * Native codegen'd expression ([[WordNgrams]]); the HOF twin below
-    * is kept as the differential reference.
+    * Native codegen'd expression ([[WordNgrams]]); its HOF twin is the
+    * differential reference in WordNgramsSpec.
     */
   def ngramsFromTokens(toks: Column, n: Int): Column =
     org.apache.spark.sql.GraftColumnShim.column(
       WordNgrams(org.apache.spark.sql.GraftColumnShim.expression(toks), n))
 
-  /** The original interpreted HOF form of [[ngramsFromTokens]] —
-    * retained ONLY as the differential-spec reference for the native
-    * expression's exact semantic mimicry (TextFunctionsSpec).
-    */
-  private[graft] def ngramsFromTokensHof(toks: Column, n: Int): Column =
-    when(
-      size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)), i => concat_ws(" ", slice(toks, i, lit(n)))))
-      .otherwise(array(concat_ws(" ", toks)))
-
   /** Character n-gram (shingle) array over the canonical form.
-    * Windowing is the native codegen'd [[CharShinglesExpr]]; the HOF
-    * twin below is the differential reference.
+    * Windowing is the native codegen'd [[CharShinglesExpr]]; its HOF
+    * twin is the differential reference in WordNgramsSpec.
     */
   def charShingles(text: Column, n: Int): Column =
     org.apache.spark.sql.GraftColumnShim.column(
@@ -114,18 +104,6 @@ object TextFunctions {
         org.apache.spark.sql.GraftColumnShim.expression(
           regexp_replace(lower(trim(text)), "\\s+", " ")),
         n))
-
-  /** The original interpreted HOF form of [[charShingles]] — retained
-    * ONLY as the differential-spec reference (WordNgramsSpec).
-    */
-  private[graft] def charShinglesHof(text: Column, n: Int): Column = {
-    val canon = regexp_replace(lower(trim(text)), "\\s+", " ")
-    when(
-      length(canon) < n,
-      array(canon)
-    ).otherwise(
-      transform(sequence(lit(1), length(canon) - (n - 1)), i => canon.substr(i, lit(n))))
-  }
 
   /** Language id via [[LangIdExpression]] — one tokenize pass + hash
     * lookups per row. Same semantics as [[langIdHof]] (LangIdSpec

@@ -80,13 +80,6 @@ object BinaryAnn {
                 .otherwise(lit(0L)))))
   }
 
-  /** HOF formulation of [[hammingWords]] (differential reference). */
-  private[graft] def hammingWordsHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
-      lit(0L),
-      (acc, x) => acc + x)
-
   /** Top-k by exact cosine over a Hamming-pruned candidate pool:
     * the `poolSize` corpus vectors nearest the query in sign-bit
     * Hamming distance (ties by id — deterministic) are reranked by

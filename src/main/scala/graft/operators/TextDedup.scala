@@ -1154,44 +1154,14 @@ object TextDedup {
 
   /** Native SimHash fold over a token-hash array
     * ([[graft.functions.SimHashFromHashes]] — `bits` integer ops per
-    * token on one primitive counter array). The interpreted
-    * two-`aggregate` twin below stays as the differential reference.
+    * token on one primitive counter array). Its interpreted
+    * two-`aggregate` twin is the differential reference in
+    * NativeHashTwinsSpec.
     */
   private def simhashFromHashes(tokenHashes: Column, bits: Int): Column =
     org.apache.spark.sql.GraftColumnShim.column(
       graft.functions.SimHashFromHashes(
         org.apache.spark.sql.GraftColumnShim.expression(tokenHashes), bits))
-
-  /** Per-bit one-counts over a token-hash array: ONE `aggregate` pass
-    * maintaining a `bits`-counter accumulator (per hash: extract the
-    * bits with a `transform` over bit indices, add into the
-    * accumulator). Retained ONLY as the differential reference for
-    * the native [[graft.functions.SimHashFromHashes]]
-    * (NativeHashTwinsSpec).
-    */
-  private def bitCounts(tokenHashes: Column, bits: Int): Column =
-    aggregate(
-      tokenHashes,
-      array_repeat(lit(0L), bits),
-      (acc, h) =>
-        zip_with(
-          acc,
-          transform(sequence(lit(0), lit(bits - 1)), i => call_function("shiftright", h, i).bitwiseAND(1)),
-          (a, b) => a + b))
-
-  /** Fold per-bit one-counts + total count into the signature: bit i is
-    * set when at least half the token hashes have bit i set.
-    */
-  private def sigFromCounts(counts: Column, n: Column, bits: Int): Column =
-    aggregate(
-      zip_with(counts, sequence(lit(0), lit(bits - 1)),
-        (c, i) => when(c * 2 >= n, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
-      lit(0L),
-      (acc, x) => acc.bitwiseOR(x))
-
-  /** HOF twin of [[simhashFromHashes]] — differential reference only. */
-  private[graft] def simhashFromHashesHof(tokenHashes: Column, bits: Int): Column =
-    sigFromCounts(bitCounts(tokenHashes, bits), size(tokenHashes), bits)
 
   /** SimHash over whitespace tokens: bit i is set when at least
     * half the token hashes have bit i set. Per-row (array ops only, no

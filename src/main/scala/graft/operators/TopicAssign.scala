@@ -81,24 +81,6 @@ object TopicAssign {
     element_at(array(sorted.map(c => lit(c._1)): _*), idx + 1)
   }
 
-  /** HOF twin of [[assigned]] — k interpreted distance folds + a
-    * struct-min argmin. Kept as the differential oracle for the native
-    * expression (the same pattern as langIdHof / the minhash HOF
-    * forms); the SQL gate replays this exact shape.
-    */
-  def assignedHof(vec: Column, centroids: Seq[(Int, Seq[Long])]): Column = {
-    require(centroids.nonEmpty, "need at least one centroid")
-    val q = quantize(vec)
-    val dists = centroids.sortBy(_._1).map { case (label, c) =>
-      val d = aggregate(
-        zip_with(q, typedLit(c), (a, b) => (a - b) * (a - b)),
-        lit(0L),
-        (acc, x) => acc + x)
-      struct(d.as("d"), lit(label).as("l"))
-    }
-    array_min(array(dists: _*)).getField("l")
-  }
-
   /** DataFrame form: id, label, assigned, correct — the evaluation
     * projection a bucketing pipeline gates on.
     */

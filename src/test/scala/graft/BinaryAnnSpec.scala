@@ -3,11 +3,19 @@ package graft
 import graft.functions.{VectorFunctions => VF}
 import graft.operators.BinaryAnn
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class BinaryAnnSpec extends SparkSpec {
 
   import spark.implicits._
+
+  /** HOF formulation of [[BinaryAnn.hammingWords]] (differential reference). */
+  private def hammingWordsHof(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
+      lit(0L),
+      (acc, x) => acc + x)
 
   private def vecsDF(vecs: Seq[(Long, Seq[Float])]) =
     vecs.toDF("vec_id", "embedding")
@@ -47,7 +55,7 @@ class BinaryAnnSpec extends SparkSpec {
         BinaryAnn.hammingWords(
           BinaryAnn.packSignBits(col("embedding")),
           BinaryAnn.packSignBits(col("qv"))).as("ham_native"),
-        BinaryAnn.hammingWordsHof(
+        hammingWordsHof(
           BinaryAnn.packSignBitsHof(col("embedding")),
           BinaryAnn.packSignBitsHof(col("qv"))).as("ham_hof"))
       .as[(Seq[Long], Seq[Long], Long, Long)]

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{TextDedup, Winnow}
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The r18 native hash/sweep expressions must be bit-for-bit identical
@@ -11,12 +12,43 @@ import org.apache.spark.sql.functions._
   *   - [[graft.functions.Md5Long60Array]] vs
   *     `transform(arr, g => conv(substring(md5(g),1,15),16,10))`
   *   - [[graft.functions.SimHashFromHashes]] vs the two-`aggregate`
-  *     bitCounts+sigFromCounts fold ([[TextDedup.simhashFromHashesHof]])
+  *     bitCounts+sigFromCounts fold (`simhashFromHashesHof` below)
   *   - [[graft.functions.WindowMinima]] vs the slice-per-window sweep
   *     ([[Winnow.fingerprintArrayFromHashesHof]])
   */
 class NativeHashTwinsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Per-bit one-counts over a token-hash array: ONE `aggregate` pass
+    * maintaining a `bits`-counter accumulator (per hash: extract the
+    * bits with a `transform` over bit indices, add into the
+    * accumulator).
+    */
+  private def bitCounts(tokenHashes: Column, bits: Int): Column =
+    aggregate(
+      tokenHashes,
+      array_repeat(lit(0L), bits),
+      (acc, h) =>
+        zip_with(
+          acc,
+          transform(sequence(lit(0), lit(bits - 1)), i => call_function("shiftright", h, i).bitwiseAND(1)),
+          (a, b) => a + b))
+
+  /** Fold per-bit one-counts + total count into the signature: bit i is
+    * set when at least half the token hashes have bit i set.
+    */
+  private def sigFromCounts(counts: Column, n: Column, bits: Int): Column =
+    aggregate(
+      zip_with(counts, sequence(lit(0), lit(bits - 1)),
+        (c, i) => when(c * 2 >= n, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
+      lit(0L),
+      (acc, x) => acc.bitwiseOR(x))
+
+  /** HOF twin of the native [[graft.functions.SimHashFromHashes]] fold
+    * — the differential reference.
+    */
+  private def simhashFromHashesHof(tokenHashes: Column, bits: Int): Column =
+    sigFromCounts(bitCounts(tokenHashes, bits), size(tokenHashes), bits)
 
   private def md5Long60Native(c: org.apache.spark.sql.Column) =
     org.apache.spark.sql.GraftColumnShim.column(
@@ -64,7 +96,7 @@ class NativeHashTwinsSpec extends SparkSpec {
     for (bits <- Seq(60, 64)) {
       data.select(col("id"),
         native(col("th"), bits).as("native"),
-        TextDedup.simhashFromHashesHof(col("th"), bits).as("hof"))
+        simhashFromHashesHof(col("th"), bits).as("hof"))
         .collect()
         .foreach(r => assert(r.getLong(1) == r.getLong(2),
           s"bits=$bits row ${r.getLong(0)}"))
@@ -73,12 +105,12 @@ class NativeHashTwinsSpec extends SparkSpec {
     val withNull = Seq((6L, Seq[java.lang.Long](1L, null, 2L))).toDF("id", "th")
     val nr = withNull.select(
       native(col("th"), 60).as("native"),
-      TextDedup.simhashFromHashesHof(col("th"), 60).as("hof")).collect().head
+      simhashFromHashesHof(col("th"), 60).as("hof")).collect().head
     assert(nr.getLong(0) == nr.getLong(1) && nr.getLong(0) == 0L)
     // null array -> null in both
     val na = Seq((7L, Option.empty[Seq[Long]])).toDF("id", "th")
       .select(native(col("th"), 60).as("n"),
-        TextDedup.simhashFromHashesHof(col("th"), 60).as("h")).collect().head
+        simhashFromHashesHof(col("th"), 60).as("h")).collect().head
     assert(na.isNullAt(0) && na.isNullAt(1))
   }
 

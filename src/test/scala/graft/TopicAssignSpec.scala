@@ -2,10 +2,28 @@ package graft
 
 import graft.operators.TopicAssign
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class TopicAssignSpec extends SparkSpec {
   import spark.implicits._
+
+  /** HOF twin of [[TopicAssign.assigned]] — k interpreted distance
+    * folds + a struct-min argmin: the differential reference for the
+    * native expression; the SQL gate replays this exact shape.
+    */
+  private def assignedHof(vec: Column, centroids: Seq[(Int, Seq[Long])]): Column = {
+    require(centroids.nonEmpty, "need at least one centroid")
+    val q = TopicAssign.quantize(vec)
+    val dists = centroids.sortBy(_._1).map { case (label, c) =>
+      val d = aggregate(
+        zip_with(q, typedLit(c), (a, b) => (a - b) * (a - b)),
+        lit(0L),
+        (acc, x) => acc + x)
+      struct(d.as("d"), lit(label).as("l"))
+    }
+    array_min(array(dists: _*)).getField("l")
+  }
 
   // three planted clusters around (1,0), (0,1), (-1,-1) with small
   // deterministic jitter; 2 dims keep the math inspectable
@@ -50,7 +68,7 @@ class TopicAssignSpec extends SparkSpec {
     val native = vecs.select(col("vec_id"),
       TopicAssign.assigned(col("embedding"), cents).as("a"))
     val hof = vecs.select(col("vec_id"),
-      TopicAssign.assignedHof(col("embedding"), cents).as("a"))
+      assignedHof(col("embedding"), cents).as("a"))
     assert(native.collect().map(_.toSeq).toSet == hof.collect().map(_.toSeq).toSet)
     val byId = native.as[(Long, Int)].collect().toMap
     assert(byId(3L) == 5, s"equidistant tie must take the lower label, got ${byId(3L)}")

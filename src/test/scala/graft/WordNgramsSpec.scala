@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.{TextFunctions, WordNgrams}
 
-import org.apache.spark.sql.{GraftColumnShim}
+import org.apache.spark.sql.{Column, GraftColumnShim}
 import org.apache.spark.sql.functions._
 
 /** The native [[WordNgrams]] expression must mimic the original HOF
@@ -12,6 +12,28 @@ import org.apache.spark.sql.functions._
   */
 class WordNgramsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The original interpreted HOF form of
+    * [[TextFunctions.ngramsFromTokens]]: the differential reference for
+    * the native expression's exact semantic mimicry.
+    */
+  private def ngramsFromTokensHof(toks: Column, n: Int): Column =
+    when(
+      size(toks) >= n,
+      transform(sequence(lit(1), size(toks) - (n - 1)), i => concat_ws(" ", slice(toks, i, lit(n)))))
+      .otherwise(array(concat_ws(" ", toks)))
+
+  /** The original interpreted HOF form of
+    * [[TextFunctions.charShingles]]: the differential reference.
+    */
+  private def charShinglesHof(text: Column, n: Int): Column = {
+    val canon = regexp_replace(lower(trim(text)), "\\s+", " ")
+    when(
+      length(canon) < n,
+      array(canon)
+    ).otherwise(
+      transform(sequence(lit(1), length(canon) - (n - 1)), i => canon.substr(i, lit(n))))
+  }
 
   private val cases = Seq(
     "the quick brown fox jumps over the lazy dog",
@@ -30,7 +52,7 @@ class WordNgramsSpec extends SparkSpec {
         .select(TextFunctions.tokens(col("text")).as("toks"))
         .select(
           TextFunctions.ngramsFromTokens(col("toks"), n).as("native"),
-          TextFunctions.ngramsFromTokensHof(col("toks"), n).as("hof"))
+          ngramsFromTokensHof(col("toks"), n).as("hof"))
       val rows = df.as[(Seq[String], Seq[String])].collect()
       rows.foreach { case (nat, hof) => assert(nat == hof, s"n=$n: $nat != $hof") }
     }
@@ -43,9 +65,9 @@ class WordNgramsSpec extends SparkSpec {
         array(lit("a"), when(col("id") < 0, lit("x")), lit("b"), lit("c")).as("holes"))
       .select(
         TextFunctions.ngramsFromTokens(col("nullarr"), 3).as("n1"),
-        TextFunctions.ngramsFromTokensHof(col("nullarr"), 3).as("h1"),
+        ngramsFromTokensHof(col("nullarr"), 3).as("h1"),
         TextFunctions.ngramsFromTokens(col("holes"), 2).as("n2"),
-        TextFunctions.ngramsFromTokensHof(col("holes"), 2).as("h2"))
+        ngramsFromTokensHof(col("holes"), 2).as("h2"))
     val r = df.as[(Seq[String], Seq[String], Seq[String], Seq[String])].collect().head
     assert(r._1 == r._2 && r._1 == Seq(""))
     assert(r._3 == r._4, s"${r._3} != ${r._4}")
@@ -67,7 +89,7 @@ class WordNgramsSpec extends SparkSpec {
       val df = cases.toDF("text")
         .select(
           TextFunctions.charShingles(col("text"), n).as("native"),
-          TextFunctions.charShinglesHof(col("text"), n).as("hof"))
+          charShinglesHof(col("text"), n).as("hof"))
       df.as[(Seq[String], Seq[String])].collect()
         .foreach { case (nat, hof) => assert(nat == hof, s"n=$n: $nat != $hof") }
     }
@@ -75,7 +97,7 @@ class WordNgramsSpec extends SparkSpec {
     val r = spark.range(1)
       .select(when(col("id") < 0, lit("x")).as("t"))
       .select(TextFunctions.charShingles(col("t"), 3).as("a"),
-        TextFunctions.charShinglesHof(col("t"), 3).as("b"))
+        charShinglesHof(col("t"), 3).as("b"))
       .collect().head
     assert(r.isNullAt(0) && r.isNullAt(1))
   }
