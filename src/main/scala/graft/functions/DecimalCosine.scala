@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
 
 /** Native decimal-accumulated cosine similarity — one fused loop
   * replacing the interpreted `zip_with`/`aggregate` chain of
-  * [[VectorFunctions.cosineDecimalHof]] (kept as the differential
-  * reference; DecimalCosineSpec asserts bit identity). HOFs are
+  * over [[VectorFunctions.dotDecimal]] (kept as the differential
+  * reference in DecimalCosineSpec, which asserts bit identity). HOFs are
   * interpreted AND eject the enclosing stage from whole-stage codegen,
   * so every exact-cosine scan (kNN graphs, MMR rounds, SemDeDup
   * verification, ANN ground truth) paid lambda dispatch per element

@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
 
 /** Native IEEE-double cosine similarity — one fused primitive loop
   * replacing the interpreted `zip_with`/`aggregate` composition of
-  * [[VectorFunctions.cosineHof]] (kept as the differential reference;
-  * DoubleCosineSpec asserts bit identity). The HOF form also
+  * `dot(a, b) / (l2Norm(a) * l2Norm(b))` (kept as the differential
+  * reference in DoubleCosineSpec, which asserts bit identity). The HOF form also
   * re-traverses both arrays THREE times (dot plus two norms); this is
   * one pass. Backs every brute-force cosine scan and the IVF
   * assignment loop — the hot inner product of the similarity-search

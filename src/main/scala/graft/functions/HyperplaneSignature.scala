@@ -10,8 +10,8 @@ import org.apache.spark.sql.types._
   * LSH) signature of a vector: bit i is the sign of the projection onto
   * pseudo-random hyperplane i.
   *
-  * Replaces the higher-order-function formulation (see
-  * [[VectorFunctions.hyperplaneSignatureHof]]): HOFs are interpreted
+  * Replaces the higher-order-function formulation (the differential
+  * reference in HyperplaneSignatureSpec): HOFs are interpreted
   * per element, so the O(bits x dims) loop paid lambda dispatch AND
   * re-derived every hyperplane component with `xxhash64` per row. Here
   * the component matrix for a given dimensionality is computed once per

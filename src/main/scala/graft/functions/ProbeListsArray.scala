@@ -9,8 +9,9 @@ import org.apache.spark.sql.types._
 /** Native per-row IVF probe-list selection: the indexes of the
   * `nprobe` centroids with the highest [[DoubleCosine]]-computed
   * cosine vs the row's vector, ties to the lower index — the native
-  * twin of [[graft.operators.IvfAnn.probeListsColHof]]'s interpreted
-  * `zip_with` + `array_sort` + `slice` composition, which paid
+  * twin of the interpreted `zip_with` + `array_sort` + `slice`
+  * composition (the differential reference in ProbeListsNativeSpec)
+  * that [[graft.operators.IvfAnn.probeListsCol]] replaced, which paid
   * O(nlist) interpreted lambda dispatch and a k-struct sort per row.
   * With `nlist` sized to the corpus (n/2000), that made probe
   * selection O(queries·nlist·d) = O(n²·d/100000) — the r18 sf16

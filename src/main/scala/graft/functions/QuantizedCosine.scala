@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
 
 /** Native integer-dot cosine over int8-quantized vectors — one fused
   * primitive loop replacing the interpreted `zip_with`/`aggregate`
-  * chain of [[VectorFunctions.cosineQuantizedHof]] (kept as the
-  * differential reference; QuantizedCosineSpec asserts bit identity).
+  * chain over [[VectorFunctions.intDot]] (kept as the differential
+  * reference in QuantizedCosineSpec, which asserts bit identity).
   * The quantized prefilter scan is the 100 TB first stage of two-stage
   * retrieval (`ann_quantized_rerank`): it touches EVERY corpus vector,
   * so lambda dispatch per element three times over is exactly the

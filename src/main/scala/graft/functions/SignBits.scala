@@ -11,8 +11,7 @@ import org.apache.spark.sql.types._
   * first, bit `i mod 32` of word `i / 32` set iff `vec[i] > 0`).
   *
   * Replaces the higher-order-function formulation
-  * ([[graft.operators.BinaryAnn.packSignBitsHof]], kept as the
-  * differential reference): Spark HOFs are interpreted AND eject the
+  * (kept as the differential reference in BinaryAnnSpec): Spark HOFs are interpreted AND eject the
   * enclosing stage from whole-stage codegen, so the binary-quantization
   * scan — the one pass that touches every raw vector — paid lambda
   * dispatch per element plus the stage-wide codegen loss. Here it is

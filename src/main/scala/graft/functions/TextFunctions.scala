@@ -106,30 +106,13 @@ object TextFunctions {
         n))
 
   /** Language id via [[LangIdExpression]] — one tokenize pass + hash
-    * lookups per row. Same semantics as [[langIdHof]] (LangIdSpec
-    * asserts agreement); this is the form for corpus-wide scans.
+    * lookups per row. Same semantics as the built-ins formulation
+    * LangIdSpec keeps as its differential reference (one interpreted
+    * `filter`/`array_contains` pass per language profile).
     */
   def langId(text: Column, profiles: Map[String, Seq[String]] = LangProfiles): Column =
     org.apache.spark.sql.GraftColumnShim.column(
       LangIdExpression(org.apache.spark.sql.GraftColumnShim.expression(text), profiles))
-
-  /** Language-id scores against per-language stopword profiles; returns
-    * the best-scoring language code or "und" when nothing matches.
-    * Built-ins-only formulation (kept as the differential oracle for
-    * [[langId]]): one interpreted `filter`/`array_contains` pass per
-    * language profile.
-    */
-  def langIdHof(text: Column, profiles: Map[String, Seq[String]] = LangProfiles): Column = {
-    val toks = tokens(text)
-    val scored = profiles.toSeq.sortBy(_._1).map { case (langCode, words) =>
-      val stops = array(words.map(lit): _*)
-      struct(
-        size(filter(toks, t => array_contains(stops, t))).as("score"),
-        lit(langCode).as("lang"))
-    }
-    val best = greatest(scored: _*)
-    when(best.getField("score") > 0, best.getField("lang")).otherwise(lit("und"))
-  }
 
   /** Redact email addresses and phone-number-shaped digit runs —
     * training-corpus PII scrubbing. Two codegen'd `regexp_replace`

@@ -22,21 +22,14 @@ object VectorFunctions {
   /** Cosine similarity in double precision.
     *
     * Native fused-loop expression ([[DoubleCosine]], real codegen, one
-    * pass instead of three); [[cosineHof]] is the differential
-    * reference (DoubleCosineSpec asserts bit identity).
+    * pass instead of three); DoubleCosineSpec holds the interpreted
+    * HOF form as the differential reference and asserts bit identity.
     */
   def cosine(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftColumnShim.column(
       DoubleCosine(
         org.apache.spark.sql.GraftColumnShim.expression(a),
         org.apache.spark.sql.GraftColumnShim.expression(b)))
-
-  /** The original interpreted HOF form of [[cosine]] — retained ONLY
-    * as the differential-spec reference for the native expression's
-    * exact semantic mimicry.
-    */
-  private[graft] def cosineHof(a: Column, b: Column): Column =
-    dot(a, b) / (l2Norm(a) * l2Norm(b))
 
   /** Dot product with each elementwise product cast to
     * `decimal(28,14)` before summing. Decimal sums are exact and
@@ -64,22 +57,14 @@ object VectorFunctions {
     * oracle computing the same formulation.
     *
     * Native fused-loop expression ([[DecimalCosine]], real codegen);
-    * the interpreted HOF composition below is the differential
-    * reference (DecimalCosineSpec asserts bit identity).
+    * DecimalCosineSpec holds the interpreted HOF composition as the
+    * differential reference and asserts bit identity.
     */
   def cosineDecimal(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftColumnShim.column(
       DecimalCosine(
         org.apache.spark.sql.GraftColumnShim.expression(a),
         org.apache.spark.sql.GraftColumnShim.expression(b)))
-
-  /** The original interpreted HOF form of [[cosineDecimal]] — retained
-    * ONLY as the differential-spec reference for the native
-    * expression's exact semantic mimicry.
-    */
-  private[graft] def cosineDecimalHof(a: Column, b: Column): Column =
-    dotDecimal(a, b).cast("double") /
-      (sqrt(dotDecimal(a, a).cast("double")) * sqrt(dotDecimal(b, b).cast("double")))
 
   /** Scalar int8 quantization scale: `max(|v_i|) / 127`, the symmetric
     * per-vector scale used below. 0 for the all-zero vector.
@@ -112,22 +97,14 @@ object VectorFunctions {
     * cross-engine.
     *
     * Native fused-loop expression ([[QuantizedCosine]], real codegen);
-    * [[cosineQuantizedHof]] is the differential reference
-    * (QuantizedCosineSpec asserts bit identity).
+    * QuantizedCosineSpec holds the interpreted HOF form as the
+    * differential reference and asserts bit identity.
     */
   def cosineQuantized(qa: Column, qb: Column): Column =
     org.apache.spark.sql.GraftColumnShim.column(
       QuantizedCosine(
         org.apache.spark.sql.GraftColumnShim.expression(qa),
         org.apache.spark.sql.GraftColumnShim.expression(qb)))
-
-  /** The original interpreted HOF form of [[cosineQuantized]] —
-    * retained ONLY as the differential-spec reference for the native
-    * expression's exact semantic mimicry.
-    */
-  private[graft] def cosineQuantizedHof(qa: Column, qb: Column): Column =
-    intDot(qa, qb).cast("double") /
-      (sqrt(intDot(qa, qa).cast("double")) * sqrt(intDot(qb, qb).cast("double")))
 
   /** Squared L2 distance. */
   def l2DistanceSq(a: Column, b: Column): Column =
@@ -155,32 +132,6 @@ object VectorFunctions {
   def hyperplaneSignature(vec: Column, bits: Int, seed: Int): Column =
     org.apache.spark.sql.GraftColumnShim.column(
       HyperplaneSignature(org.apache.spark.sql.GraftColumnShim.expression(vec), bits, seed))
-
-  /** Higher-order-function formulation of [[hyperplaneSignature]] —
-    * retained as the independently-derived reference the equivalence
-    * spec checks the native expression against. Do not use in hot
-    * paths: interpreted HOFs re-derive every component per row.
-    */
-  private[graft] def hyperplaneSignatureHof(vec: Column, bits: Int, seed: Int): Column = {
-    require(bits > 0 && bits < 64, "bits must be in [1, 63]")
-    val dims = size(vec)
-    val bitCols = (0 until bits).map { i =>
-      // projection_i = sum_j vec[j] * h(i, j)
-      val proj = aggregate(
-        zip_with(
-          vec,
-          sequence(lit(0), dims - 1),
-          (x, j) => x.cast("double") * hashToUnit(lit(i), j, lit(seed))),
-        lit(0.0),
-        (acc, x) => acc + x)
-      when(proj >= 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    bitCols.reduce(_.bitwiseOR(_))
-  }
-
-  /** Deterministic pseudo-random double in [-1, 1) from hash inputs. */
-  private def hashToUnit(i: Column, j: Column, seed: Column): Column =
-    (pmod(xxhash64(i, j, seed), lit(1000003L)).cast("double") / lit(500001.5)) - lit(1.0)
 
   /** Hamming distance between two long bit signatures. */
   def hammingDistance(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

@@ -10,8 +10,8 @@ import org.apache.spark.sql.types._
   * over an `array<long>` of gram hashes: the minimum of every `w`
   * consecutive elements — with the short-input rule that an array
   * shorter than one window yields the single minimum of what it has.
-  * Exactly [[graft.operators.Winnow.fingerprintArrayFromHashesHof]]'s
-  * semantics (that HOF stays as the differential reference):
+  * Exactly the semantics of the HOF sweep it replaced (the
+  * differential reference in NativeHashTwinsSpec):
   *
   *   when(size(h) < w, array(array_min(h)))
   *     .otherwise(transform(sequence(1, size(h)-w+1),

@@ -41,8 +41,8 @@ object BinaryAnn {
     * word `i / 32` set iff `vec[i] > 0`). 32 bits per word — not
     * 64 — so no value ever reaches a long's sign bit and the packed
     * words survive any engine's signed arithmetic unchanged. Native
-    * codegen'd expression ([[graft.functions.SignBits]]); the HOF
-    * formulation below is the differential reference.
+    * codegen'd expression ([[graft.functions.SignBits]]); BinaryAnnSpec
+    * keeps the HOF formulation as the differential reference.
     */
   def packSignBits(vec: Column): Column =
     org.apache.spark.sql.GraftColumnShim.column(
@@ -58,27 +58,6 @@ object BinaryAnn {
       graft.functions.HammingWords(
         org.apache.spark.sql.GraftColumnShim.expression(a),
         org.apache.spark.sql.GraftColumnShim.expression(b)))
-
-  /** Higher-order-function formulation of [[packSignBits]] — retained
-    * as the independently-derived reference BinaryAnnSpec checks the
-    * native expression against (interpreted; not for hot paths).
-    */
-  private[graft] def packSignBitsHof(vec: Column): Column = {
-    val nWords = ceil(size(vec).cast("double") / lit(32.0)).cast("int")
-    when(size(vec) === 0, array().cast("array<bigint>"))
-      .otherwise(
-        transform(sequence(lit(0), nWords - 1), w =>
-          aggregate(
-            sequence(w * 32, least(w * 32 + 31, size(vec) - 1)),
-            lit(0L),
-            (acc, j) => acc +
-              when(
-                element_at(vec, (j + 1).cast("int")).cast("double") > 0,
-                // 2^(j mod 32) — exact in double for exponents <= 31,
-                // and engine-portable (no column-shift builtin needed)
-                pow(lit(2.0), (j - w * 32).cast("double")).cast("long"))
-                .otherwise(lit(0L)))))
-  }
 
   /** Top-k by exact cosine over a Hamming-pruned candidate pool:
     * the `poolSize` corpus vectors nearest the query in sign-bit

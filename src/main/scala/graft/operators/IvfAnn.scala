@@ -193,28 +193,6 @@ object IvfAnn {
         centroids.map(_.toSeq).toSeq, nprobe))
   }
 
-  /** The original interpreted HOF form of [[probeListsCol]] — O(nlist)
-    * lambda dispatch plus a k-struct sort PER ROW, the r18 sf16
-    * superlinear term in `knn_classify_ann`'s warm path once `nlist`
-    * scales with the corpus. Retained ONLY as the differential-spec
-    * reference for [[graft.functions.ProbeListsArray]]
-    * (ProbeListsNativeSpec pins list-for-list identity, ties and
-    * corner semantics included).
-    */
-  private[graft] def probeListsColHof(
-      vec: Column,
-      centroids: Array[Array[Double]],
-      nprobe: Int): Column = {
-    require(nprobe > 0, "nprobe must be positive")
-    val cents = typedLit(centroids.map(_.toSeq).toSeq)
-    val idx = sequence(lit(0), lit(centroids.length - 1))
-    val scored = zip_with(cents, idx, (c, i) =>
-      struct((-VectorFunctions.cosine(vec, c)).as("negcos"), i.as("idx")))
-    transform(
-      slice(array_sort(scored), 1, math.min(nprobe, centroids.length)),
-      s => s.getField("idx"))
-  }
-
   /** Incremental ingest: assign `newVectors` to the EXISTING centroids
     * (one NearestCentroid projection — no retraining, no corpus
     * rescan) and return an index over the union. This is how a real

@@ -5,8 +5,10 @@ import graft.sources.StagedSwap
 import graft.util.SessionScopedCache
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
@@ -31,11 +33,13 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   *   - Partition pruning ≙ the reference's manual inclusion of partition
   *     columns in the merge keys (stream.py:116-117): upserts only read
   *     and rewrite partitions present in the source batch; deletes only
-  *     rewrite partitions that actually contained a matched key.
+  *     rewrite partitions that actually contained a matched key (or,
+  *     when the partition columns follow the pk, the partitions their
+  *     tombstones name).
   *
   * Physical design, chosen for the 100 TB case:
   *   - One transaction per change set ([[apply]], the body of the
-  *     reference's per-batch `foreachBatch`): ONE routing aggregation
+  *     reference's per-batch `foreachBatch`): ONE map-side routing pass
   *     over the deduplicated changes — per-(upsert/delete, partition)
   *     row counts — decides which sides run and which partitions the
   *     upserts touch; then ONE target read, one resolve chain (upsert,
@@ -177,7 +181,7 @@ object MergeEngine {
     * `deletedCol == "true"` marks tombstones, any other value an upsert
     * (written without `deletedCol`), null neither. The frame is cached
     * for the call — and unpersisted on return, so pass one the caller
-    * does not cache itself — and routed by ONE aggregation:
+    * does not cache itself — and routed by ONE map-side pass ([[route]]):
     * per-(side, partition) row counts, whose cardinality is sides x
     * touched partitions — small enough to collect by construction. The
     * counts say which sides are non-empty and which partitions the
@@ -185,13 +189,15 @@ object MergeEngine {
     * partition-discovery collect of its own.
     *
     * Only partitions the upserts touch or a deleted key occupies are read
-    * and rewritten. Deletes match on pk alone, so their partitions come
-    * from a probe of the pre-state ([[pkRangeFilter]] prunes it by
-    * row-group stats when files are pk-clustered); partitions the swap
-    * leaves empty are removed in the same transaction. Sequentially
-    * equivalent to upsert-then-delete: an upsert can add keys only
-    * inside its own touched partitions, so every row the delete could
-    * see is in the slice; even a key on both sides ends deleted.
+    * and rewritten. Deletes match on pk alone, so on a table whose
+    * partition columns are not known to follow the pk their partitions
+    * come from a probe of the pre-state ([[pkRangeFilter]] prunes it by
+    * row-group stats when files are pk-clustered, with the bounds the
+    * routing pass returns); partitions the swap leaves empty are removed
+    * in the same transaction. Sequentially equivalent to
+    * upsert-then-delete: an upsert can add keys only inside its own
+    * touched partitions, so every row the delete could see is in the
+    * slice; even a key on both sides ends deleted.
     */
   def apply(
       spark: SparkSession,
@@ -199,35 +205,51 @@ object MergeEngine {
       changes: DataFrame,
       pkCols: Seq[String],
       versionCol: String,
-      deletedCol: String): Unit = {
+      deletedCol: String): Unit =
+    apply(spark, cfg, changes, pkCols, versionCol, deletedCol, partitionsFollowPk = false)
+
+  /** [[apply]] for a caller that knows every partition column of
+    * `changes` is a deterministic function of the pk alone (as
+    * [[graft.streaming.MicroBatchMerger]] derives from its
+    * `additionalCols` projection): a deleted key then lives in the
+    * partition its tombstone names, so the deletes' partitions come
+    * straight from the routing pass and the pre-state probe — a target
+    * scan per change set — never runs.
+    */
+  private[graft] def apply(
+      spark: SparkSession,
+      cfg: TableConfig,
+      changes: DataFrame,
+      pkCols: Seq[String],
+      versionCol: String,
+      deletedCol: String,
+      partitionsFollowPk: Boolean): Unit = {
     val partCols = cfg.partitionCols
+    val probes = partCols.nonEmpty && !partitionsFollowPk
     changes.cache()
     try {
       val isDel = col(deletedCol) === "true"
-      val routed = changes
-        .groupBy(isDel.as("__is_del") +: partCols.map(col): _*)
-        .count()
-        .collect()
-        .filterNot(_.isNullAt(0))
-      val (delRows, upRows) = routed.partition(_.getBoolean(0))
+      val (counts, delBounds) =
+        route(changes, isDel, partCols, clusteredPk(pkCols, cfg.sortCols).filter(_ => probes))
+      val upParts = counts.keys.collect { case (false, p) => p }.toArray
+      val delParts = counts.keys.collect { case (true, p) => p }.toArray
       val upserts = changes.filter(!isDel).drop(deletedCol)
       val deletes = changes.filter(isDel)
       val target = readTable(spark, cfg.path)
-      if (target.isEmpty && upRows.isEmpty) return // nothing to delete from
+      if (target.isEmpty && upParts.isEmpty) return // nothing to delete from
       // the partitions to read and rewrite: those the upserts touch plus
-      // those holding a deleted key (probed on the pre-state)
+      // those holding a deleted key
       val rewrite: Array[Row] = target match {
         case Some(t) if partCols.nonEmpty =>
           val affected =
-            if (delRows.isEmpty) Array.empty[Row]
+            if (delParts.isEmpty || !probes) delParts
             else
-              pkRangeFilter(deletes, pkCols, cfg.sortCols).map(t.filter).getOrElse(t)
+              pkRangeFilter(pkCols, cfg.sortCols, delBounds).map(t.filter).getOrElse(t)
                 .join(deletes.select(pkCols.map(col): _*).distinct(), pkCols, "left_semi")
                 .select(partCols.map(col): _*)
                 .distinct()
                 .collect()
-          val touched = upRows.map(r => Row.fromSeq((1 to partCols.size).map(r.get)))
-          val union = (touched ++ affected).distinct
+          val union = (upParts ++ affected).distinct
           if (union.isEmpty) return
           union
         case _ => Array.empty
@@ -236,16 +258,56 @@ object MergeEngine {
         case None => upserts // brand-new table
         case Some(t) =>
           val slice = if (rewrite.isEmpty) t else t.filter(partitionPredicate(partCols, rewrite))
-          if (upRows.isEmpty) slice
+          if (upParts.isEmpty) slice
           else resolveUpsert(slice, upserts, (pkCols ++ partCols).distinct, versionCol)
       }
-      val resolved = if (delRows.isEmpty) merged else resolveDelete(merged, deletes, pkCols)
+      val resolved = if (delParts.isEmpty) merged else resolveDelete(merged, deletes, pkCols)
       // a delete that empties an unpartitioned table leaves no rows to stage
-      if (partCols.isEmpty && delRows.nonEmpty && target.isDefined && resolved.isEmpty)
+      if (partCols.isEmpty && delParts.nonEmpty && target.isDefined && resolved.isEmpty)
         truncate(spark, cfg)
       else syncCatalog(spark, cfg, writeStaged(spark, cfg, resolved, rewrite))
     } finally { changes.unpersist(); () }
   }
+
+  /** The routing of a change set in ONE map-side pass over `changes` (no
+    * exchange): each task counts its rows per (is-delete, partition
+    * values) and keeps the min and max of `boundCol` over its deletes;
+    * the driver sums the counts and folds the bounds. Rows whose side is
+    * null go to neither side; null bound values are skipped.
+    */
+  private def route(
+      changes: DataFrame,
+      isDel: Column,
+      partCols: Seq[String],
+      boundCol: Option[String]): (Map[(Boolean, Row), Long], Option[(Any, Any)]) = {
+    val sel = changes.select(isDel +: (partCols ++ boundCol).map(col): _*)
+    val boundType = boundCol.map(_ => sel.schema.last.dataType)
+    val b = 1 + partCols.size // index of the bound column
+    val perTask = sel.rdd.mapPartitions { rows =>
+      val ord = boundType.map(orderingOf)
+      val counts = scala.collection.mutable.HashMap.empty[(Boolean, Row), Long]
+      var bounds = Option.empty[(Any, Any)]
+      rows.filterNot(_.isNullAt(0)).foreach { r =>
+        val key = (r.getBoolean(0), Row.fromSeq(r.toSeq.slice(1, b)))
+        counts(key) = counts.getOrElse(key, 0L) + 1
+        for (o <- ord if key._1 && !r.isNullAt(b)) {
+          val v = r.get(b)
+          bounds = Some(bounds.fold((v, v)) { case (lo, hi) => (o.min(lo, v), o.max(hi, v)) })
+        }
+      }
+      Iterator.single((counts.toMap, bounds))
+    }.collect()
+    val counts = perTask.toSeq.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ + _)
+    val bounds = boundType.map(orderingOf).flatMap { o =>
+      val ends = perTask.toSeq.flatMap(_._2).flatMap { case (lo, hi) => Seq(lo, hi) }
+      if (ends.isEmpty) None else Some((ends.min(o), ends.max(o)))
+    }
+    (counts, bounds)
+  }
+
+  /** Catalyst's ordering of `t`, over the external values a Row holds. */
+  private def orderingOf(t: DataType): Ordering[Any] =
+    TypeUtils.getInterpretedOrdering(t).on(CatalystTypeConverters.createToCatalystConverter(t))
 
   /** MERGE-upsert `source` (one row per key) into the table at `cfg.path`. */
   def upsert(
@@ -258,8 +320,8 @@ object MergeEngine {
 
   /** MERGE-delete: remove the rows whose pk appears in `deletes`. Deletes
     * match on pk alone, so `deletes` may omit the partition columns
-    * (routed as null); with no upsert side the version column is never
-    * read.
+    * (routed as null, which is why this path always probes the
+    * pre-state); with no upsert side the version column is never read.
     */
   def delete(spark: SparkSession, cfg: TableConfig, deletes: DataFrame, pkCols: Seq[String]): Unit =
     apply(spark, cfg,
@@ -318,24 +380,27 @@ object MergeEngine {
 
   /** When the table clusters files on a single-column pk
     * (`sortCols` head == the pk), the probe for affected partitions can
-    * push `pk BETWEEN min(deletes) AND max(deletes)` into the scan:
-    * parquet row-group min/max stats then skip every file/row-group
-    * whose pk range cannot contain a deleted key — at 100 TB this turns
-    * the J2 full-table probe into a read of only the candidate row
-    * groups. Pruning is applied ONLY to the probe; the rewrite still
-    * reads complete affected partitions (survivors must keep every
-    * non-matched row).
+    * push `pk BETWEEN lo AND hi` into the scan, `bounds` being the
+    * deletes' min and max pk ([[route]] returns them): parquet row-group
+    * min/max stats then skip every file/row-group whose pk range cannot
+    * contain a deleted key — at 100 TB this turns the J2 full-table
+    * probe into a read of only the candidate row groups. Pruning is
+    * applied ONLY to the probe; the rewrite still reads complete
+    * affected partitions (survivors must keep every non-matched row).
     */
   private[graft] def pkRangeFilter(
-      deletes: DataFrame,
       pkCols: Seq[String],
-      sortCols: Seq[String]): Option[org.apache.spark.sql.Column] =
-    if (pkCols.size == 1 && sortCols.headOption.contains(pkCols.head)) {
-      val pk = pkCols.head
-      val bounds = deletes.agg(min(col(pk)).as("lo"), max(col(pk)).as("hi")).head()
-      if (bounds.isNullAt(0)) None
-      else Some(col(pk) >= lit(bounds.get(0)) && col(pk) <= lit(bounds.get(1)))
-    } else None
+      sortCols: Seq[String],
+      bounds: Option[(Any, Any)]): Option[Column] =
+    for ((pk, (lo, hi)) <- clusteredPk(pkCols, sortCols).zip(bounds))
+      yield col(pk) >= lit(lo) && col(pk) <= lit(hi)
+
+  /** The single pk column, when the table's files are clustered on it. */
+  private def clusteredPk(pkCols: Seq[String], sortCols: Seq[String]): Option[String] =
+    pkCols match {
+      case Seq(pk) if sortCols.headOption.contains(pk) => Some(pk)
+      case _ => None
+    }
 
   /** Remove all data for a table (used when a delete empties an
     * unpartitioned table).

@@ -49,29 +49,14 @@ object Winnow {
     * array column — the native O(L) monotonic-deque sweep
     * ([[graft.functions.WindowMinima]]). Documents shorter than one
     * full window keep the minimum of what they have — every document
-    * yields at least one fingerprint. The interpreted HOF twin below
-    * stays as the differential-spec reference.
+    * yields at least one fingerprint. NativeHashTwinsSpec keeps the
+    * interpreted HOF sweep as the differential reference.
     */
   def fingerprintArrayFromHashes(hashes: Column, w: Int): Column =
     array_distinct(
       org.apache.spark.sql.GraftColumnShim.column(
         graft.functions.WindowMinima(
           org.apache.spark.sql.GraftColumnShim.expression(hashes), w)))
-
-  /** The original interpreted HOF form of the window sweep — O(L·w)
-    * with a fresh w-slice per window (and the reason the hash array
-    * had to be a plain column reference: an interpreted HOF
-    * re-evaluates inlined subtrees per element — measured 80 s ->
-    * 0.9 s for the gated query when [[fingerprints]] staged its
-    * projections). Retained ONLY as the differential reference for
-    * [[graft.functions.WindowMinima]] (NativeHashTwinsSpec).
-    */
-  private[graft] def fingerprintArrayFromHashesHof(hashes: Column, w: Int): Column =
-    array_distinct(
-      when(size(hashes) < w, array(array_min(hashes)))
-        .otherwise(transform(
-          sequence(lit(1), size(hashes) - (w - 1)),
-          i => array_min(slice(hashes, i, lit(w))))))
 
   /** Array-level gram hashing: the two PUBLISHED schemes get native
     * twins (portable md5 -> [[graft.functions.Md5Long60Array]], one

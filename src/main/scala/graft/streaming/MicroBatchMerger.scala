@@ -6,7 +6,9 @@ import graft.debezium.{DebeziumCast, SchemaProvider}
 import graft.operators.{CdcDedup, MergeEngine}
 import graft.util.SessionScopedCache
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftPlanShim}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -15,16 +17,19 @@ import org.apache.spark.sql.types.StructType
   * (reference: stream.py:39-156, traced in SURVEY.md §3.2) but fewer
   * fixed per-batch jobs:
   *
-  * cache batch -> ONE distinct (topic, key_schema_id, value_schema_id)
-  * metadata collect (the reference runs a topics pass plus a pairs
-  * pass per topic) -> per topic, pairs in ascending registry order
-  * (older schema versions merge first — ids are monotone; the topic
-  * slice is additionally cached only when several pairs will re-read
-  * it) -> per pair: pk cols from the key schema, FAILFAST Avro decode,
-  * struct expansion, Debezium casts, W1 latest-per-key dedup,
-  * additional cols, memoized create-table, then ONE
-  * [[MergeEngine.apply]] — the change set's routing, strict-LSN upsert
-  * and pk-only delete in one transaction.
+  * cache batch -> ONE metadata job: a map-side pass (no exchange) that
+  * fills the batch cache while each task keeps its distinct (topic,
+  * key_schema_id, value_schema_id) triples, merged on the driver (the
+  * reference runs a topics pass plus a pairs pass per topic) -> per
+  * topic, pairs in ascending registry order (older schema versions
+  * merge first — ids are monotone; the topic slice is additionally
+  * cached only when several pairs will re-read it) -> per pair: pk cols
+  * from the key schema, FAILFAST Avro decode, struct expansion,
+  * Debezium casts, W1 latest-per-key dedup, additional cols, memoized
+  * create-table, then ONE [[MergeEngine.apply]] — the change set's
+  * routing, strict-LSN upsert and pk-only delete in one transaction,
+  * told whether the partition columns follow the pk
+  * ([[partitionsFollowPk]]), in which case it runs no delete probe.
   */
 object MicroBatchMerger {
 
@@ -46,15 +51,14 @@ object MicroBatchMerger {
     val spark = batch.sparkSession
     batch.cache()
     try {
-      // ONE metadata job for the whole batch: the reference runs a
-      // distinct-topics pass plus a distinct-schema-pairs pass per
-      // topic; collecting (topic, key_id, value_id) once gives the same
-      // driver-side plan with topics-many fewer jobs — pure fixed cost
-      // at small batch sizes.
-      val meta = batch
-        .select("topic", "key_schema_id", "value_schema_id")
-        .distinct()
+      // ONE metadata job for the whole batch, which also fills its
+      // cache: each task keeps its own distinct (topic, key_id,
+      // value_id) set, and the driver merges them — no exchange, where
+      // a distinct() adds a shuffle stage and its own job
+      val meta = batch.select("topic", "key_schema_id", "value_schema_id").rdd
+        .mapPartitions(_.toSet.iterator)
         .collect()
+        .distinct
       meta.groupBy(_.getString(0)).toSeq.sortBy(_._1).foreach { case (topic, rows) =>
         configs.get(topic).foreach { cfg =>
           // older schema versions merge first — registry ids are monotone
@@ -84,8 +88,7 @@ object MicroBatchMerger {
 
               val deduped = CdcDedup.latestPerKeyAgg(decoded, pkCols, versionCol)
               val changes =
-                if (cfg.additionalCols.isEmpty) deduped
-                else deduped.select(deduped.columns.map(col).toSeq ++ cfg.additionalCols.map(expr): _*)
+                deduped.select(deduped.columns.map(col).toSeq ++ cfg.additionalCols.map(expr): _*)
               // per-(application, table) memo: the ensure is idempotent
               // DDL, so after the first success per session its two
               // catalog roundtrips per micro-batch are pure fixed cost
@@ -94,7 +97,8 @@ object MicroBatchMerger {
                   spark, StructType(changes.schema.filterNot(_.name == deletedCol)), cfg)
                 true
               }
-              MergeEngine(spark, cfg, changes, pkCols, versionCol, deletedCol)
+              MergeEngine(spark, cfg, changes, pkCols, versionCol, deletedCol,
+                partitionsFollowPk(changes, cfg.partitionCols, pkCols))
             }
             if (cfg.autoCompactEvery > 0) {
               val n = SessionScopedCache
@@ -106,5 +110,38 @@ object MicroBatchMerger {
         }
       }
     } finally { batch.unpersist(); () }
+  }
+
+  /** True when every partition column of `changes` — the decoded,
+    * deduplicated frame under its `additionalCols` projection — is a
+    * deterministic function of the pk alone: a pk column itself, or an
+    * alias whose resolved expression is deterministic and whose leaves
+    * are pk columns and literals (a leaf such as `current_date()` reads
+    * the clock, so a later tombstone could name another partition).
+    * A deleted key then lives in the partition its tombstone names.
+    */
+  private[graft] def partitionsFollowPk(
+      changes: DataFrame,
+      partCols: Seq[String],
+      pkCols: Seq[String]): Boolean = {
+    val out = GraftPlanShim.analyzed(changes) match {
+      case p: Project => p.projectList
+      case p => p.output
+    }
+    partCols.forall { c =>
+      out.filter(_.name == c) match {
+        case Seq(e) =>
+          val body = e match {
+            case Alias(child, _) => child
+            case other => other
+          }
+          body.deterministic && body.collectLeaves().forall {
+            case a: Attribute => pkCols.contains(a.name)
+            case _: Literal => true
+            case _ => false
+          }
+        case _ => false
+      }
+    }
   }
 }

@@ -10,6 +10,24 @@ class BinaryAnnSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** HOF formulation of [[BinaryAnn.packSignBits]] (differential reference). */
+  private def packSignBitsHof(vec: Column): Column = {
+    val nWords = ceil(size(vec).cast("double") / lit(32.0)).cast("int")
+    when(size(vec) === 0, array().cast("array<bigint>"))
+      .otherwise(
+        transform(sequence(lit(0), nWords - 1), w =>
+          aggregate(
+            sequence(w * 32, least(w * 32 + 31, size(vec) - 1)),
+            lit(0L),
+            (acc, j) => acc +
+              when(
+                element_at(vec, (j + 1).cast("int")).cast("double") > 0,
+                // 2^(j mod 32) — exact in double for exponents <= 31,
+                // and engine-portable (no column-shift builtin needed)
+                pow(lit(2.0), (j - w * 32).cast("double")).cast("long"))
+                .otherwise(lit(0L)))))
+  }
+
   /** HOF formulation of [[BinaryAnn.hammingWords]] (differential reference). */
   private def hammingWordsHof(a: Column, b: Column): Column =
     aggregate(
@@ -51,13 +69,13 @@ class BinaryAnnSpec extends SparkSpec {
       .crossJoin(broadcast(q))
       .select(
         BinaryAnn.packSignBits(col("embedding")).as("native"),
-        BinaryAnn.packSignBitsHof(col("embedding")).as("hof"),
+        packSignBitsHof(col("embedding")).as("hof"),
         BinaryAnn.hammingWords(
           BinaryAnn.packSignBits(col("embedding")),
           BinaryAnn.packSignBits(col("qv"))).as("ham_native"),
         hammingWordsHof(
-          BinaryAnn.packSignBitsHof(col("embedding")),
-          BinaryAnn.packSignBitsHof(col("qv"))).as("ham_hof"))
+          packSignBitsHof(col("embedding")),
+          packSignBitsHof(col("qv"))).as("ham_hof"))
       .as[(Seq[Long], Seq[Long], Long, Long)]
       .collect()
     assert(rows.nonEmpty)

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.VectorFunctions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The native [[graft.functions.DecimalCosine]] must agree BIT FOR BIT
@@ -11,6 +12,14 @@ import org.apache.spark.sql.functions._
 class DecimalCosineSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The interpreted HOF form of [[VectorFunctions.cosineDecimal]]
+    * (differential reference).
+    */
+  private def cosineDecimalHof(a: Column, b: Column): Column =
+    VectorFunctions.dotDecimal(a, b).cast("double") /
+      (sqrt(VectorFunctions.dotDecimal(a, a).cast("double")) *
+        sqrt(VectorFunctions.dotDecimal(b, b).cast("double")))
+
   test("native == HOF bit identity over float-array pairs") {
     val df = (0 until 200).map { i =>
       val a = (0 until 16).map(j => ((i * 31 + j * 17) % 97 - 48) / 7.0f)
@@ -19,7 +28,7 @@ class DecimalCosineSpec extends SparkSpec {
     }.toDF("id", "a", "b")
     val got = df.select(
       VectorFunctions.cosineDecimal(col("a"), col("b")).as("n"),
-      VectorFunctions.cosineDecimalHof(col("a"), col("b")).as("h"))
+      cosineDecimalHof(col("a"), col("b")).as("h"))
       .as[(Double, Double)].collect()
     got.foreach { case (n, h) =>
       assert(java.lang.Double.doubleToRawLongBits(n)
@@ -32,7 +41,7 @@ class DecimalCosineSpec extends SparkSpec {
       .toDF("a", "b")
     val row = df.select(
       VectorFunctions.cosineDecimal(col("a"), col("b")).as("n"),
-      VectorFunctions.cosineDecimalHof(col("a"), col("b")).as("h")).head()
+      cosineDecimalHof(col("a"), col("b")).as("h")).head()
     assert(row.getDouble(0) == row.getDouble(1))
     assert(row.getDouble(0) == 1.0) // exact decimal self-cosine is exactly 1
   }
@@ -45,7 +54,7 @@ class DecimalCosineSpec extends SparkSpec {
       .toDF("a", "b")
     val got = df.select(
       VectorFunctions.cosineDecimal(col("a"), col("b")).as("n"),
-      VectorFunctions.cosineDecimalHof(col("a"), col("b")).as("h"))
+      cosineDecimalHof(col("a"), col("b")).as("h"))
       .collect()
     got.foreach { r => assert(r.isNullAt(0) && r.isNullAt(1), s"got $r") }
   }
@@ -64,7 +73,7 @@ class DecimalCosineSpec extends SparkSpec {
     val a = Seq(0.25f, -1.5f, 2.75f)
     val b = Seq(-0.125f, 0.5f, -3.0f)
     val interpreted = Seq((a, b)).toDF("a", "b")
-      .select(VectorFunctions.cosineDecimalHof(col("a"), col("b"))).head().getDouble(0)
+      .select(cosineDecimalHof(col("a"), col("b"))).head().getDouble(0)
     assert(java.lang.Double.doubleToRawLongBits(fromCodegen)
       == java.lang.Double.doubleToRawLongBits(interpreted))
   }
@@ -75,7 +84,7 @@ class DecimalCosineSpec extends SparkSpec {
       df.select(VectorFunctions.cosineDecimal(col("a"), col("b"))).head()
     }
     val h = intercept[Exception] {
-      df.select(VectorFunctions.cosineDecimalHof(col("a"), col("b"))).head()
+      df.select(cosineDecimalHof(col("a"), col("b"))).head()
     }
     assert(n.toString.contains("DIVIDE_BY_ZERO"), s"native threw $n")
     assert(h.toString.contains("DIVIDE_BY_ZERO"), s"hof threw $h")

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.VectorFunctions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The native HyperplaneSignature expression must be bit-for-bit
@@ -10,6 +11,26 @@ import org.apache.spark.sql.functions._
   */
 class HyperplaneSignatureSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Higher-order-function formulation of
+    * [[VectorFunctions.hyperplaneSignature]] (differential reference):
+    * bit i is the sign of the projection onto hyperplane i, whose
+    * components are `xxhash64(i, j, seed)` mapped to [-1, 1).
+    */
+  private def hyperplaneSignatureHof(vec: Column, bits: Int, seed: Int): Column = {
+    require(bits > 0 && bits < 64, "bits must be in [1, 63]")
+    def hashToUnit(i: Column, j: Column): Column =
+      (pmod(xxhash64(i, j, lit(seed)), lit(1000003L)).cast("double") / lit(500001.5)) - lit(1.0)
+    val bitCols = (0 until bits).map { i =>
+      // projection_i = sum_j vec[j] * h(i, j)
+      val proj = aggregate(
+        zip_with(vec, sequence(lit(0), size(vec) - 1), (x, j) => x.cast("double") * hashToUnit(lit(i), j)),
+        lit(0.0),
+        (acc, x) => acc + x)
+      when(proj >= 0, lit(1L << i)).otherwise(lit(0L))
+    }
+    bitCols.reduce(_.bitwiseOR(_))
+  }
 
   private def vectors(dims: Int, n: Int, seed: Int) = {
     val rnd = new scala.util.Random(seed)
@@ -24,7 +45,7 @@ class HyperplaneSignatureSpec extends SparkSpec {
       val mismatches = df
         .select(
           VectorFunctions.hyperplaneSignature(col("vec"), bits, seed = 41).as("native"),
-          VectorFunctions.hyperplaneSignatureHof(col("vec"), bits, seed = 41).as("hof"))
+          hyperplaneSignatureHof(col("vec"), bits, seed = 41).as("hof"))
         .filter(col("native") =!= col("hof"))
         .count()
       assert(mismatches == 0, s"dims=$dims bits=$bits: native != HOF")
@@ -55,7 +76,7 @@ class HyperplaneSignatureSpec extends SparkSpec {
     val out = withNullElem
       .select(col("id"),
         VectorFunctions.hyperplaneSignature(col("vec"), 8, 41).as("native"),
-        VectorFunctions.hyperplaneSignatureHof(col("vec"), 8, 41).as("hof"))
+        hyperplaneSignatureHof(col("vec"), 8, 41).as("hof"))
       .orderBy("id")
       .collect()
     out.filter(_.getLong(0) != 3L).foreach { r =>
@@ -74,7 +95,7 @@ class HyperplaneSignatureSpec extends SparkSpec {
     val dbl = Seq((1L, Array(0.1, -0.9, 0.4))).toDF("id", "vec")
       .select(
         VectorFunctions.hyperplaneSignature(col("vec"), 16, 41).as("native"),
-        VectorFunctions.hyperplaneSignatureHof(col("vec"), 16, 41).as("hof"))
+        hyperplaneSignatureHof(col("vec"), 16, 41).as("hof"))
       .collect().head
     assert(dbl.getLong(0) == dbl.getLong(1))
   }

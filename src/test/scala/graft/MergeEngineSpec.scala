@@ -11,7 +11,7 @@ class MergeEngineSpec extends SparkSpec {
   import spark.implicits._
 
   /** Jobs one mixed micro-batch on a partitioned table runs end to end. */
-  private val JobsPerMixedBatch = 15
+  private val JobsPerMixedBatch = 8
 
   /** One change set: `ups` and the tombstones `dels`, `op` marking the side. */
   private def changeSet(ups: DataFrame, dels: DataFrame): DataFrame =
@@ -178,18 +178,19 @@ class MergeEngineSpec extends SparkSpec {
     }.toDF("topic", "partition", "offset", "timestamp", "timestampType",
       "key_schema_id", "value_schema_id", "value_avro")
 
-  /** The Spark jobs and SQL executions `body` starts, read once the
-    * (asynchronous) listener bus has been quiet for a while.
+  /** The Spark jobs `body` starts and the physical plan of each SQL
+    * execution it starts, read once the (asynchronous) listener bus has
+    * been quiet for a while.
     */
-  private def sparkWorkOf(body: => Unit): (Int, Int) = {
+  private def sparkWorkOf(body: => Unit): (Int, Seq[String]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val sqlExecs = new java.util.concurrent.atomic.AtomicInteger
+    val sqlPlans = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case _: SparkListenerSQLExecutionStart => sqlExecs.incrementAndGet(); ()
+        case s: SparkListenerSQLExecutionStart => sqlPlans.add(s.physicalPlanDescription); ()
         case _ => ()
       }
     }
@@ -200,12 +201,17 @@ class MergeEngineSpec extends SparkSpec {
       var stable = 0
       while (stable < 3) {
         Thread.sleep(100)
-        val now = jobs.get + sqlExecs.get
+        val now = jobs.get + sqlPlans.size
         if (now == last) stable += 1 else { stable = 0; last = now }
       }
     } finally spark.sparkContext.removeSparkListener(listener)
-    (jobs.get, sqlExecs.get)
+    (jobs.get, sqlPlans.toArray(Array.empty[String]).toSeq)
   }
+
+  /** The delete probes among SQL execution plans: a merge's probe is
+    * its one left-semi join (the delete itself is a left-anti join).
+    */
+  private def probes(sqlPlans: Seq[String]): Int = sqlPlans.count(_.contains("LeftSemi"))
 
   /** The [[StagedSwap]] commits `body` stages. */
   private def commitsOf(body: => Unit): Int = {
@@ -231,8 +237,11 @@ class MergeEngineSpec extends SparkSpec {
       usersBatch((1, 2L, false), (7, 2L, false), (8, 2L, false), (3, 2L, true)), configs, usersProvider))
     assert(usersState(cfg) == Map(1 -> "n1-2", 2 -> "n2-1", 4 -> "n4-1", 5 -> "n5-1", 6 -> "n6-1",
       7 -> "n7-2", 8 -> "n8-2"))
-    // metadata collect, routing, delete probe, staged write (AQE stages
-    // included): one job more is a new pass over the batch
+    // metadata (1: the map-side pass that fills the batch cache),
+    // routing (3: the dedup exchange, the change-set cache fill and the
+    // map-side count pass) and the staged write (4, AQE stages included);
+    // the pk-derived partition runs no delete probe. One job more is a
+    // new pass over the batch
     assert(jobs <= JobsPerMixedBatch, s"$jobs jobs > $JobsPerMixedBatch")
   }
 
@@ -264,6 +273,87 @@ class MergeEngineSpec extends SparkSpec {
       // the compaction is one filtered read, one exchange and one write
       assert(jobs <= JobsPerMixedBatch + 2, s"$jobs jobs > ${JobsPerMixedBatch + 2}")
     } finally spark.conf.unset(coalesce)
+  }
+
+  test("partitions that follow the pk: no delete probe runs, and the delete lands") {
+    Seq(
+      ("pk_derived", Seq("CAST(id % 3 AS INT) AS part"), "part", "part=0"),
+      ("pk_column", Seq.empty[String], "id", "id=3")).foreach { case (name, additional, part, dirOf3) =>
+      val path = tmpDir(s"merge-noprobe-$name")
+      val cfg = TableConfig("graft_test", s"noprobe_${name}_tbl", s"$path/t",
+        additionalCols = additional, partitionCols = Seq(part))
+      val configs = Map(usersTopic -> cfg)
+      graft.streaming.MicroBatchMerger.process(
+        usersBatch((1 to 6).map(id => (id, 1L, false)): _*), configs, usersProvider)
+      val (_, sqlPlans) = sparkWorkOf(graft.streaming.MicroBatchMerger.process(
+        usersBatch((1, 2L, false), (7, 2L, false), (3, 2L, true)), configs, usersProvider))
+      assert(probes(sqlPlans) == 0, s"$name: a delete probe ran")
+      assert(usersState(cfg) == Map(1 -> "n1-2", 2 -> "n2-1", 4 -> "n4-1", 5 -> "n5-1", 6 -> "n6-1",
+        7 -> "n7-2"), name)
+      // id 3's partition was rewritten (part=0 keeps 6) or removed (id=3)
+      assert(new java.io.File(s"$path/t/$dirOf3").exists() == (name == "pk_derived"), name)
+    }
+  }
+
+  test("a partition over a non-pk column keeps the delete probe") {
+    // the tombstone for id 3 carries name n3-2; the row lives in name=n3-1
+    val path = tmpDir("merge-probe-nonpk")
+    val cfg = TableConfig("graft_test", "probe_nonpk_tbl", s"$path/t", partitionCols = Seq("name"))
+    val configs = Map(usersTopic -> cfg)
+    graft.streaming.MicroBatchMerger.process(
+      usersBatch((1 to 6).map(id => (id, 1L, false)): _*), configs, usersProvider)
+    val (_, sqlPlans) = sparkWorkOf(graft.streaming.MicroBatchMerger.process(
+      usersBatch((7, 2L, false), (3, 2L, true)), configs, usersProvider))
+    assert(probes(sqlPlans) >= 1, "no delete probe ran")
+    assert(usersState(cfg) == Map(1 -> "n1-1", 2 -> "n2-1", 4 -> "n4-1", 5 -> "n5-1", 6 -> "n6-1",
+      7 -> "n7-2"))
+    assert(!new java.io.File(s"$path/t/name=n3-1").exists(), "the deleted row's partition is still there")
+
+    // a tombstone with a null partition value is found in its real partition
+    val cfgY = TableConfig("graft_test", "probe_null_tbl", s"${tmpDir("merge-probe-null")}/t",
+      partitionCols = Seq("year"))
+    MergeEngine.upsert(spark, cfgY,
+      Seq((1, "a", 2023, 10L), (2, "b", 2024, 11L)).toDF("id", "name", "year", "lsn"), Seq("id"), "lsn")
+    val (_, plansY) = sparkWorkOf(MergeEngine(spark, cfgY, changeSet(
+      Seq((2, "b2", 2024, 20L)).toDF("id", "name", "year", "lsn"),
+      Seq((1, Option.empty[Int], 21L)).toDF("id", "year", "lsn")), Seq("id"), "lsn", "op"))
+    assert(probes(plansY) >= 1, "no delete probe ran")
+    assert(MergeEngine.readTable(spark, cfgY.path).get.select("id", "name").as[(Int, String)].collect().toMap
+      == Map(2 -> "b2"))
+    assert(!new java.io.File(s"${cfgY.path}/year=2023").exists())
+  }
+
+  test("MergeEngine.delete without partition columns still probes") {
+    val path = tmpDir("merge-probe-delete")
+    val cfg = TableConfig("graft_test", "probe_delete_tbl", s"$path/t",
+      partitionCols = Seq("part"))
+    MergeEngine.upsert(spark, cfg,
+      (1 to 6).map(id => (id, s"n$id", id % 3, 1L)).toDF("id", "name", "part", "lsn"), Seq("id"), "lsn")
+    val (_, sqlPlans) = sparkWorkOf(
+      MergeEngine.delete(spark, cfg, Seq(3, 4).toDF("id"), Seq("id")))
+    assert(probes(sqlPlans) >= 1, "no delete probe ran")
+    assert(MergeEngine.readTable(spark, cfg.path).get.select("id").as[Int].collect().toSet
+      == Set(1, 2, 5, 6))
+  }
+
+  test("partitionsFollowPk: deterministic expressions over pk columns and literals only") {
+    val decoded = Seq((1L, "a", 2L)).toDF("id", "name", "lsn")
+    def follows(partExpr: String, pk: Seq[String] = Seq("id")) =
+      graft.streaming.MicroBatchMerger.partitionsFollowPk(
+        decoded.select(decoded.columns.map(col).toSeq :+ expr(s"$partExpr AS part"): _*), Seq("part"), pk)
+    assert(follows("CAST(id % 3 AS INT)"))
+    assert(follows("CAST(pmod(id, 8) AS INT)"))
+    assert(follows("id"))
+    assert(follows("7"))
+    assert(!follows("CAST(rand() * 3 AS INT)"), "rand() is not a function of the pk")
+    assert(!follows("current_date()"), "the clock is not a function of the pk")
+    assert(!follows("name"))
+    assert(!follows("CAST(id % 3 + length(name) AS INT)"))
+    assert(!follows("CAST(id % 3 AS INT)", pk = Seq("name")))
+    // a pk column is itself a partition that follows the pk; a value column is not
+    val plain = decoded.select(decoded.columns.map(col).toSeq: _*)
+    assert(graft.streaming.MicroBatchMerger.partitionsFollowPk(plain, Seq("id"), Seq("id")))
+    assert(!graft.streaming.MicroBatchMerger.partitionsFollowPk(plain, Seq("id", "name"), Seq("id")))
   }
 
   test("fused mixed-batch merge on a partitioned table: one transaction, same end state") {
@@ -372,12 +462,12 @@ class MergeEngineSpec extends SparkSpec {
 
     var compacted = 0
     var commits = 0
-    val (_, sqlExecs) = sparkWorkOf { commits = commitsOf {
+    val (_, sqlPlans) = sparkWorkOf { commits = commitsOf {
       compacted = MergeEngine.compact(spark, cfg, targetFileBytes = target, maxFilesPerPartition = 4)
     } }
     assert(compacted == 3)
     assert(commits == 1, s"$commits commits")
-    assert(sqlExecs == 1, s"$sqlExecs SQL executions")
+    assert(sqlPlans.size == 1, s"${sqlPlans.size} SQL executions")
     oversized.foreach(r => assert(files(r).length == expected(r), s"region=$r: ${files(r).length} files"))
     assert(listFiles(dirOf("small")) == smallBefore, "the partition under the threshold was rewritten")
     val after = MergeEngine.readTable(spark, cfg.path).get.orderBy("id").collect()
@@ -795,15 +885,12 @@ class MergeEngineSpec extends SparkSpec {
   }
 
   test("delete probe pushes a pk min/max range filter when files are pk-clustered") {
-    val pred = MergeEngine.pkRangeFilter(
-      Seq((5, 0L), (9, 0L)).toDF("id", "lsn"), Seq("id"), Seq("id"))
+    val pred = MergeEngine.pkRangeFilter(Seq("id"), Seq("id"), Some((5, 9)))
     assert(pred.isDefined)
     assert(pred.get.toString.contains("5") && pred.get.toString.contains("9"))
     // not applicable: composite pk or no pk clustering
-    assert(MergeEngine.pkRangeFilter(
-      Seq((5, 0L)).toDF("id", "lsn"), Seq("id", "lsn"), Seq("id")).isEmpty)
-    assert(MergeEngine.pkRangeFilter(
-      Seq((5, 0L)).toDF("id", "lsn"), Seq("id"), Seq.empty).isEmpty)
+    assert(MergeEngine.pkRangeFilter(Seq("id", "lsn"), Seq("id"), Some((5, 5))).isEmpty)
+    assert(MergeEngine.pkRangeFilter(Seq("id"), Seq.empty, Some((5, 5))).isEmpty)
 
     // end-to-end: pk-clustered partitioned table, the probe's scan carries
     // the pushed range so parquet row-group stats can skip files
@@ -813,12 +900,17 @@ class MergeEngineSpec extends SparkSpec {
     val rows = (1 to 1000).map(i => (i, s"n$i", 2020 + i % 4, i.toLong))
     MergeEngine.upsert(spark, cfg, rows.toDF("id", "name", "year", "lsn"), Seq("id"), "lsn")
     val target = MergeEngine.readTable(spark, cfg.path).get
-    val probePlan = target.filter(MergeEngine.pkRangeFilter(
-      Seq((42, 0L), (44, 0L)).toDF("id", "lsn"), Seq("id"), cfg.sortCols).get)
+    val probePlan = target.filter(MergeEngine.pkRangeFilter(Seq("id"), cfg.sortCols, Some((42, 44))).get)
       .queryExecution.executedPlan.toString
     assert(probePlan.contains("GreaterThanOrEqual(id,42)") && probePlan.contains("LessThanOrEqual(id,44)"),
       s"range not pushed to scan:\n$probePlan")
-    MergeEngine.delete(spark, cfg, Seq((42, 0L), (44, 0L)).toDF("id", "lsn"), Seq("id"))
+    // the delete's own probe gets the same range from the routing pass,
+    // with no bounds query of its own
+    val (_, sqlPlans) = sparkWorkOf(
+      MergeEngine.delete(spark, cfg, Seq((42, 0L), (44, 0L)).toDF("id", "lsn"), Seq("id")))
+    assert(sqlPlans.exists(p => p.contains("LeftSemi") && p.contains("GreaterThanOrEqual(id,42)")
+      && p.contains("LessThanOrEqual(id,44)")), s"range not pushed to the probe:\n${sqlPlans.mkString("\n")}")
+    assert(!sqlPlans.exists(_.contains("min(id")), "a separate bounds query ran")
     val t = MergeEngine.readTable(spark, cfg.path).get
     assert(t.count() == 998)
     assert(t.filter(col("id").isin(42, 44)).count() == 0)

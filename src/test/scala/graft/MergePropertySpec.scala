@@ -13,7 +13,9 @@ import scala.util.Random
   * contract (per batch: W1 dedup keeps the max-LSN op per key; upserts
   * guarded by strict `target.lsn < op.lsn`; tombstone batch-winners
   * delete unconditionally), on an unpartitioned table and on one
-  * partitioned by `id % 3`.
+  * partitioned by `id % 3` — the fused changelogs on the latter also
+  * with the delete probe skipped, as [[graft.streaming.MicroBatchMerger]]
+  * skips it for partitions that follow the pk.
   *
   * Seeded RNG -> deterministic cases; payloads derive from (id, lsn) so
   * equal-LSN duplicates carry identical payloads (the engine's
@@ -47,13 +49,16 @@ class MergePropertySpec extends SparkSpec {
 
   /** Applies `batches` through the table-backed engine: as an upsert
     * pass then a delete pass, or `fused` as one change set per batch.
-    * `partitioned` lays the table out by `id % 3`.
+    * `partitioned` lays the table out by `id % 3`; `followPk` tells the
+    * fused merge that this partition follows the pk, so it skips the
+    * delete probe.
     */
   private def runEngine(
       batches: Seq[Seq[Op]],
       path: String,
       fused: Boolean,
-      partitioned: Boolean): Map[Int, (String, Long)] = {
+      partitioned: Boolean,
+      followPk: Boolean = false): Map[Int, (String, Long)] = {
     val cfg =
       if (partitioned) TableConfig("graft_test", "prop_part_tbl", path, partitionCols = Seq("part"))
       else TableConfig("graft_test", "prop_tbl", path)
@@ -63,7 +68,7 @@ class MergePropertySpec extends SparkSpec {
         val deduped = CdcDedup.latestPerKey(ops, Seq("id"), "lsn")
         if (fused)
           MergeEngine(spark, cfg, deduped.withColumn("deleted", col("deleted").cast("string")),
-            Seq("id"), "lsn", "deleted")
+            Seq("id"), "lsn", "deleted", partitionsFollowPk = followPk)
         else {
           MergeEngine.upsert(spark, cfg, deduped.filter(!col("deleted")).drop("deleted"), Seq("id"), "lsn")
           MergeEngine.delete(spark, cfg, deduped.filter(col("deleted")), Seq("id"))
@@ -110,10 +115,10 @@ class MergePropertySpec extends SparkSpec {
         }
       }
       val want = model(batches).map { case (k, op) => k -> ((op.name, op.lsn)) }
-      Seq(false, true).foreach { partitioned =>
-        val got = runEngine(batches, s"${tmpDir("merge-prop-fused")}/t", fused = true, partitioned)
-        assert(got == want,
-          s"fused case $caseNo (partitioned=$partitioned) mismatch:\n batches=$batches\n got=$got\n want=$want")
+      Seq((false, false), (true, false), (true, true)).foreach { case (partitioned, followPk) =>
+        val got = runEngine(batches, s"${tmpDir("merge-prop-fused")}/t", fused = true, partitioned, followPk)
+        assert(got == want, s"fused case $caseNo (partitioned=$partitioned, followPk=$followPk) mismatch:" +
+          s"\n batches=$batches\n got=$got\n want=$want")
       }
     }
   }

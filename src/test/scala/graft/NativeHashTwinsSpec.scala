@@ -14,10 +14,20 @@ import org.apache.spark.sql.functions._
   *   - [[graft.functions.SimHashFromHashes]] vs the two-`aggregate`
   *     bitCounts+sigFromCounts fold (`simhashFromHashesHof` below)
   *   - [[graft.functions.WindowMinima]] vs the slice-per-window sweep
-  *     ([[Winnow.fingerprintArrayFromHashesHof]])
+  *     (`fingerprintArrayFromHashesHof` below)
   */
 class NativeHashTwinsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The interpreted HOF form of [[Winnow.fingerprintArrayFromHashes]]'s
+    * window sweep (differential reference): a fresh w-slice per window.
+    */
+  private def fingerprintArrayFromHashesHof(hashes: Column, w: Int): Column =
+    array_distinct(
+      when(size(hashes) < w, array(array_min(hashes)))
+        .otherwise(transform(
+          sequence(lit(1), size(hashes) - (w - 1)),
+          i => array_min(slice(hashes, i, lit(w))))))
 
   /** Per-bit one-counts over a token-hash array: ONE `aggregate` pass
     * maintaining a `bits`-counter accumulator (per hash: extract the
@@ -126,7 +136,7 @@ class NativeHashTwinsSpec extends SparkSpec {
     for (w <- Seq(1, 3, 8)) {
       data.select(col("id"),
         Winnow.fingerprintArrayFromHashes(col("h"), w).as("native"),
-        Winnow.fingerprintArrayFromHashesHof(col("h"), w).as("hof"))
+        fingerprintArrayFromHashesHof(col("h"), w).as("hof"))
         .collect()
         .foreach(r => assert(
           r.getAs[scala.collection.Seq[Any]]("native") ==
@@ -139,7 +149,7 @@ class NativeHashTwinsSpec extends SparkSpec {
     for (w <- Seq(2, 3)) {
       val r = withNulls.select(
         Winnow.fingerprintArrayFromHashes(col("h"), w).as("native"),
-        Winnow.fingerprintArrayFromHashesHof(col("h"), w).as("hof")).collect().head
+        fingerprintArrayFromHashesHof(col("h"), w).as("hof")).collect().head
       assert(r.getAs[scala.collection.Seq[Any]]("native") ==
         r.getAs[scala.collection.Seq[Any]]("hof"), s"w=$w nulls")
     }
@@ -165,7 +175,7 @@ class NativeHashTwinsSpec extends SparkSpec {
       .select(col("id"), transform(col("__g"),
         g => conv(substring(md5(g), 1, 15), 16, 10).cast("long")).as("__h"))
       .select(col("id"),
-        explode(Winnow.fingerprintArrayFromHashesHof(col("__h"), 4)).as("fp"))
+        explode(fingerprintArrayFromHashesHof(col("__h"), 4)).as("fp"))
     assert(fps.orderBy("id", "fp").collect().toSeq ==
       hofFps.orderBy("id", "fp").collect().toSeq)
   }

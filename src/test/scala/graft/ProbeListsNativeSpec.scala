@@ -2,17 +2,33 @@ package graft
 
 import graft.operators.IvfAnn
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native [[graft.functions.ProbeListsArray]] must emit
   * LIST-FOR-LIST the probe lists of the interpreted HOF composition it
-  * replaced ([[IvfAnn.probeListsColHof]]): same members, same order,
+  * replaced (`probeListsColHof` below): same members, same order,
   * same ties-to-lower-index, same corner semantics. Differential over
   * DataFrames so both forms run their real (codegen) paths.
   */
 class ProbeListsNativeSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The interpreted HOF form of [[IvfAnn.probeListsCol]] (differential
+    * reference): cosine to every centroid, an array sort per row, the
+    * first `nprobe` indices.
+    */
+  private def probeListsColHof(vec: Column, centroids: Array[Array[Double]], nprobe: Int): Column = {
+    require(nprobe > 0, "nprobe must be positive")
+    val cents = typedLit(centroids.map(_.toSeq).toSeq)
+    val idx = sequence(lit(0), lit(centroids.length - 1))
+    val scored = zip_with(cents, idx, (c, i) =>
+      struct((-graft.functions.VectorFunctions.cosine(vec, c)).as("negcos"), i.as("idx")))
+    transform(
+      slice(array_sort(scored), 1, math.min(nprobe, centroids.length)),
+      s => s.getField("idx"))
+  }
 
   private def randCentroids(k: Int, dims: Int, seed: Long): Array[Array[Double]] = {
     val rng = new scala.util.Random(seed)
@@ -29,7 +45,7 @@ class ProbeListsNativeSpec extends SparkSpec {
     val df = vecs.toDF("id", "v")
     val native = df.select(col("id"), IvfAnn.probeListsCol(col("v"), cents, nprobe).as("p"))
       .as[(Long, Seq[Int])].collect().toMap
-    val hof = df.select(col("id"), IvfAnn.probeListsColHof(col("v"), cents, nprobe).as("p"))
+    val hof = df.select(col("id"), probeListsColHof(col("v"), cents, nprobe).as("p"))
       .as[(Long, Seq[Int])].collect().toMap
     (native, hof)
   }
@@ -68,7 +84,7 @@ class ProbeListsNativeSpec extends SparkSpec {
     ).toDF("id", "v")
     val native = df.select(col("id"), IvfAnn.probeListsCol(col("v"), cents, 3).as("p"))
       .as[(Long, Seq[Int])].collect().toMap
-    val hof = df.select(col("id"), IvfAnn.probeListsColHof(col("v"), cents, 3).as("p"))
+    val hof = df.select(col("id"), probeListsColHof(col("v"), cents, 3).as("p"))
       .as[(Long, Seq[Int])].collect().toMap
     assert(native == hof)
     assert(native(1L) == Seq(0, 1, 2)) // all-null cosines order by idx
@@ -81,7 +97,7 @@ class ProbeListsNativeSpec extends SparkSpec {
       zeros.select(IvfAnn.probeListsCol(col("v"), cents, 2)).collect()
     }
     val eH = intercept[Throwable] {
-      zeros.select(IvfAnn.probeListsColHof(col("v"), cents, 2)).collect()
+      zeros.select(probeListsColHof(col("v"), cents, 2)).collect()
     }
     def msg(t: Throwable): String =
       (Option(t.getMessage).toSeq ++ Option(t.getCause).map(_.getMessage).toSeq).mkString(" ")
