@@ -5,10 +5,10 @@ import graft.sources.StagedSwap
 import graft.util.SessionScopedCache
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
@@ -189,15 +189,20 @@ object MergeEngine {
     * partition-discovery collect of its own.
     *
     * Only partitions the upserts touch or a deleted key occupies are read
-    * and rewritten. Deletes match on pk alone, so on a table whose
-    * partition columns are not known to follow the pk their partitions
-    * come from a probe of the pre-state ([[pkRangeFilter]] prunes it by
-    * row-group stats when files are pk-clustered, with the bounds the
-    * routing pass returns); partitions the swap leaves empty are removed
-    * in the same transaction. Sequentially equivalent to
-    * upsert-then-delete: an upsert can add keys only inside its own
-    * touched partitions, so every row the delete could see is in the
-    * slice; even a key on both sides ends deleted.
+    * and rewritten; partitions the swap leaves empty are removed in the
+    * same transaction. Deletes match on pk alone, so where a deleted key
+    * lives comes from a probe of the pre-state ([[pkRangeFilter]] prunes
+    * it by row-group stats when files are pk-clustered) — unless every
+    * partition column follows the pk ([[partitionsFollowPk]]): a deleted
+    * key then lives in the partition its tombstone names. A change set
+    * with upserts rewrites those partitions with no probe (its write
+    * runs anyway; a partition that only tombstones of absent keys name
+    * is rewritten unchanged); a delete-only one probes just them, so
+    * tombstones of absent keys — replays, repeated deletes — commit
+    * nothing. Sequentially equivalent to upsert-then-delete: an upsert
+    * can add keys only inside its own touched partitions, so every row
+    * the delete could see is in the slice; even a key on both sides
+    * ends deleted.
     */
   def apply(
       spark: SparkSession,
@@ -205,32 +210,12 @@ object MergeEngine {
       changes: DataFrame,
       pkCols: Seq[String],
       versionCol: String,
-      deletedCol: String): Unit =
-    apply(spark, cfg, changes, pkCols, versionCol, deletedCol, partitionsFollowPk = false)
-
-  /** [[apply]] for a caller that knows every partition column of
-    * `changes` is a deterministic function of the pk alone (as
-    * [[graft.streaming.MicroBatchMerger]] derives from its
-    * `additionalCols` projection): a deleted key then lives in the
-    * partition its tombstone names, so the deletes' partitions come
-    * straight from the routing pass and the pre-state probe — a target
-    * scan per change set — never runs.
-    */
-  private[graft] def apply(
-      spark: SparkSession,
-      cfg: TableConfig,
-      changes: DataFrame,
-      pkCols: Seq[String],
-      versionCol: String,
-      deletedCol: String,
-      partitionsFollowPk: Boolean): Unit = {
+      deletedCol: String): Unit = {
     val partCols = cfg.partitionCols
-    val probes = partCols.nonEmpty && !partitionsFollowPk
     changes.cache()
     try {
       val isDel = col(deletedCol) === "true"
-      val (counts, delBounds) =
-        route(changes, isDel, partCols, clusteredPk(pkCols, cfg.sortCols).filter(_ => probes))
+      val counts = route(changes, isDel, partCols)
       val upParts = counts.keys.collect { case (false, p) => p }.toArray
       val delParts = counts.keys.collect { case (true, p) => p }.toArray
       val upserts = changes.filter(!isDel).drop(deletedCol)
@@ -241,10 +226,12 @@ object MergeEngine {
       // those holding a deleted key
       val rewrite: Array[Row] = target match {
         case Some(t) if partCols.nonEmpty =>
+          val follows = delParts.nonEmpty && partitionsFollowPk(changes, partCols, pkCols)
           val affected =
-            if (delParts.isEmpty || !probes) delParts
+            if (delParts.isEmpty || (follows && upParts.nonEmpty)) delParts
             else
-              pkRangeFilter(pkCols, cfg.sortCols, delBounds).map(t.filter).getOrElse(t)
+              (if (follows) t.filter(partitionPredicate(partCols, delParts))
+               else pkRangeFilter(deletes, pkCols, cfg.sortCols).map(t.filter).getOrElse(t))
                 .join(deletes.select(pkCols.map(col): _*).distinct(), pkCols, "left_semi")
                 .select(partCols.map(col): _*)
                 .distinct()
@@ -271,43 +258,60 @@ object MergeEngine {
 
   /** The routing of a change set in ONE map-side pass over `changes` (no
     * exchange): each task counts its rows per (is-delete, partition
-    * values) and keeps the min and max of `boundCol` over its deletes;
-    * the driver sums the counts and folds the bounds. Rows whose side is
-    * null go to neither side; null bound values are skipped.
+    * values), and the driver sums the counts. Rows whose side is null
+    * go to neither side.
     */
   private def route(
       changes: DataFrame,
       isDel: Column,
-      partCols: Seq[String],
-      boundCol: Option[String]): (Map[(Boolean, Row), Long], Option[(Any, Any)]) = {
-    val sel = changes.select(isDel +: (partCols ++ boundCol).map(col): _*)
-    val boundType = boundCol.map(_ => sel.schema.last.dataType)
-    val b = 1 + partCols.size // index of the bound column
-    val perTask = sel.rdd.mapPartitions { rows =>
-      val ord = boundType.map(orderingOf)
-      val counts = scala.collection.mutable.HashMap.empty[(Boolean, Row), Long]
-      var bounds = Option.empty[(Any, Any)]
-      rows.filterNot(_.isNullAt(0)).foreach { r =>
-        val key = (r.getBoolean(0), Row.fromSeq(r.toSeq.slice(1, b)))
-        counts(key) = counts.getOrElse(key, 0L) + 1
-        for (o <- ord if key._1 && !r.isNullAt(b)) {
-          val v = r.get(b)
-          bounds = Some(bounds.fold((v, v)) { case (lo, hi) => (o.min(lo, v), o.max(hi, v)) })
+      partCols: Seq[String]): Map[(Boolean, Row), Long] =
+    changes.select(isDel +: partCols.map(col): _*).rdd
+      .mapPartitions { rows =>
+        val counts = scala.collection.mutable.HashMap.empty[(Boolean, Row), Long]
+        rows.filterNot(_.isNullAt(0)).foreach { r =>
+          val key = (r.getBoolean(0), Row.fromSeq(r.toSeq.tail))
+          counts(key) = counts.getOrElse(key, 0L) + 1
         }
+        Iterator.single(counts.toMap)
       }
-      Iterator.single((counts.toMap, bounds))
-    }.collect()
-    val counts = perTask.toSeq.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ + _)
-    val bounds = boundType.map(orderingOf).flatMap { o =>
-      val ends = perTask.toSeq.flatMap(_._2).flatMap { case (lo, hi) => Seq(lo, hi) }
-      if (ends.isEmpty) None else Some((ends.min(o), ends.max(o)))
-    }
-    (counts, bounds)
-  }
+      .collect()
+      .toSeq.flatten.groupMapReduce(_._1)(_._2)(_ + _)
 
-  /** Catalyst's ordering of `t`, over the external values a Row holds. */
-  private def orderingOf(t: DataType): Ordering[Any] =
-    TypeUtils.getInterpretedOrdering(t).on(CatalystTypeConverters.createToCatalystConverter(t))
+  /** True when every partition column of `changes` is known, from its
+    * analyzed plan, to be a deterministic function of the pk alone: a pk
+    * column itself, or an alias in the top projection (such as a
+    * [[graft.config.TableConfig]]'s `additionalCols`) whose expression
+    * is deterministic, reads at least one column, and whose leaves are
+    * pk columns and literals. Any other leaf, such as the clock read
+    * `current_date()`, lets a later tombstone name another partition;
+    * a constant — the null [[delete]] fills in, or any placeholder —
+    * says nothing about where a key lives.
+    */
+  private[graft] def partitionsFollowPk(
+      changes: DataFrame,
+      partCols: Seq[String],
+      pkCols: Seq[String]): Boolean = {
+    val out = GraftPlanShim.analyzed(changes) match {
+      case p: Project => p.projectList
+      case p => p.output
+    }
+    partCols.forall { c =>
+      out.filter(_.name == c) match {
+        case Seq(e) =>
+          val body = e match {
+            case Alias(child, _) => child
+            case other => other
+          }
+          val leaves = body.collectLeaves()
+          body.deterministic && leaves.exists(_.isInstanceOf[Attribute]) && leaves.forall {
+            case a: Attribute => pkCols.contains(a.name)
+            case _: Literal => true
+            case _ => false
+          }
+        case _ => false
+      }
+    }
+  }
 
   /** MERGE-upsert `source` (one row per key) into the table at `cfg.path`. */
   def upsert(
@@ -320,7 +324,7 @@ object MergeEngine {
 
   /** MERGE-delete: remove the rows whose pk appears in `deletes`. Deletes
     * match on pk alone, so `deletes` may omit the partition columns
-    * (routed as null, which is why this path always probes the
+    * (routed as null, a constant, so this path always probes the
     * pre-state); with no upsert side the version column is never read.
     */
   def delete(spark: SparkSession, cfg: TableConfig, deletes: DataFrame, pkCols: Seq[String]): Unit =
@@ -380,27 +384,24 @@ object MergeEngine {
 
   /** When the table clusters files on a single-column pk
     * (`sortCols` head == the pk), the probe for affected partitions can
-    * push `pk BETWEEN lo AND hi` into the scan, `bounds` being the
-    * deletes' min and max pk ([[route]] returns them): parquet row-group
-    * min/max stats then skip every file/row-group whose pk range cannot
-    * contain a deleted key — at 100 TB this turns the J2 full-table
-    * probe into a read of only the candidate row groups. Pruning is
-    * applied ONLY to the probe; the rewrite still reads complete
-    * affected partitions (survivors must keep every non-matched row).
+    * push `pk BETWEEN min(deletes) AND max(deletes)` into the scan:
+    * parquet row-group min/max stats then skip every file/row-group
+    * whose pk range cannot contain a deleted key — at 100 TB this turns
+    * the J2 full-table probe into a read of only the candidate row
+    * groups. Pruning is applied ONLY to the probe; the rewrite still
+    * reads complete affected partitions (survivors must keep every
+    * non-matched row).
     */
   private[graft] def pkRangeFilter(
+      deletes: DataFrame,
       pkCols: Seq[String],
-      sortCols: Seq[String],
-      bounds: Option[(Any, Any)]): Option[Column] =
-    for ((pk, (lo, hi)) <- clusteredPk(pkCols, sortCols).zip(bounds))
-      yield col(pk) >= lit(lo) && col(pk) <= lit(hi)
-
-  /** The single pk column, when the table's files are clustered on it. */
-  private def clusteredPk(pkCols: Seq[String], sortCols: Seq[String]): Option[String] =
-    pkCols match {
-      case Seq(pk) if sortCols.headOption.contains(pk) => Some(pk)
-      case _ => None
-    }
+      sortCols: Seq[String]): Option[org.apache.spark.sql.Column] =
+    if (pkCols.size == 1 && sortCols.headOption.contains(pkCols.head)) {
+      val pk = pkCols.head
+      val bounds = deletes.agg(min(col(pk)).as("lo"), max(col(pk)).as("hi")).head()
+      if (bounds.isNullAt(0)) None
+      else Some(col(pk) >= lit(bounds.get(0)) && col(pk) <= lit(bounds.get(1)))
+    } else None
 
   /** Remove all data for a table (used when a delete empties an
     * unpartitioned table).

@@ -6,9 +6,7 @@ import graft.debezium.{DebeziumCast, SchemaProvider}
 import graft.operators.{CdcDedup, MergeEngine}
 import graft.util.SessionScopedCache
 
-import org.apache.spark.sql.{DataFrame, GraftPlanShim}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -28,8 +26,9 @@ import org.apache.spark.sql.types.StructType
   * Debezium casts, W1 latest-per-key dedup, additional cols, memoized
   * create-table, then ONE [[MergeEngine.apply]] — the change set's
   * routing, strict-LSN upsert and pk-only delete in one transaction,
-  * told whether the partition columns follow the pk
-  * ([[partitionsFollowPk]]), in which case it runs no delete probe.
+  * which runs no delete probe when the `additionalCols` projection
+  * derives every partition column from the pk
+  * ([[MergeEngine.partitionsFollowPk]]).
   */
 object MicroBatchMerger {
 
@@ -87,6 +86,8 @@ object MicroBatchMerger {
                 .select(DebeziumCast.castColumns(valueJson): _*)
 
               val deduped = CdcDedup.latestPerKeyAgg(decoded, pkCols, versionCol)
+              // one projection, also with no additionalCols: MergeEngine
+              // reads from it whether the partition columns follow the pk
               val changes =
                 deduped.select(deduped.columns.map(col).toSeq ++ cfg.additionalCols.map(expr): _*)
               // per-(application, table) memo: the ensure is idempotent
@@ -97,8 +98,7 @@ object MicroBatchMerger {
                   spark, StructType(changes.schema.filterNot(_.name == deletedCol)), cfg)
                 true
               }
-              MergeEngine(spark, cfg, changes, pkCols, versionCol, deletedCol,
-                partitionsFollowPk(changes, cfg.partitionCols, pkCols))
+              MergeEngine(spark, cfg, changes, pkCols, versionCol, deletedCol)
             }
             if (cfg.autoCompactEvery > 0) {
               val n = SessionScopedCache
@@ -110,38 +110,5 @@ object MicroBatchMerger {
         }
       }
     } finally { batch.unpersist(); () }
-  }
-
-  /** True when every partition column of `changes` — the decoded,
-    * deduplicated frame under its `additionalCols` projection — is a
-    * deterministic function of the pk alone: a pk column itself, or an
-    * alias whose resolved expression is deterministic and whose leaves
-    * are pk columns and literals (a leaf such as `current_date()` reads
-    * the clock, so a later tombstone could name another partition).
-    * A deleted key then lives in the partition its tombstone names.
-    */
-  private[graft] def partitionsFollowPk(
-      changes: DataFrame,
-      partCols: Seq[String],
-      pkCols: Seq[String]): Boolean = {
-    val out = GraftPlanShim.analyzed(changes) match {
-      case p: Project => p.projectList
-      case p => p.output
-    }
-    partCols.forall { c =>
-      out.filter(_.name == c) match {
-        case Seq(e) =>
-          val body = e match {
-            case Alias(child, _) => child
-            case other => other
-          }
-          body.deterministic && body.collectLeaves().forall {
-            case a: Attribute => pkCols.contains(a.name)
-            case _: Literal => true
-            case _ => false
-          }
-        case _ => false
-      }
-    }
   }
 }

@@ -240,8 +240,8 @@ class MergeEngineSpec extends SparkSpec {
     // metadata (1: the map-side pass that fills the batch cache),
     // routing (3: the dedup exchange, the change-set cache fill and the
     // map-side count pass) and the staged write (4, AQE stages included);
-    // the pk-derived partition runs no delete probe. One job more is a
-    // new pass over the batch
+    // a batch with upserts on a pk-derived partition runs no delete
+    // probe. One job more is a new pass over the batch
     assert(jobs <= JobsPerMixedBatch, s"$jobs jobs > $JobsPerMixedBatch")
   }
 
@@ -336,24 +336,49 @@ class MergeEngineSpec extends SparkSpec {
       == Set(1, 2, 5, 6))
   }
 
-  test("partitionsFollowPk: deterministic expressions over pk columns and literals only") {
+  test("partitionsFollowPk: deterministic expressions that read only pk columns") {
     val decoded = Seq((1L, "a", 2L)).toDF("id", "name", "lsn")
     def follows(partExpr: String, pk: Seq[String] = Seq("id")) =
-      graft.streaming.MicroBatchMerger.partitionsFollowPk(
+      MergeEngine.partitionsFollowPk(
         decoded.select(decoded.columns.map(col).toSeq :+ expr(s"$partExpr AS part"): _*), Seq("part"), pk)
     assert(follows("CAST(id % 3 AS INT)"))
     assert(follows("CAST(pmod(id, 8) AS INT)"))
     assert(follows("id"))
-    assert(follows("7"))
     assert(!follows("CAST(rand() * 3 AS INT)"), "rand() is not a function of the pk")
     assert(!follows("current_date()"), "the clock is not a function of the pk")
+    assert(!follows("7"), "a constant says nothing about where a key lives")
+    assert(!follows("CAST(NULL AS INT)"), "the null MergeEngine.delete fills in")
     assert(!follows("name"))
     assert(!follows("CAST(id % 3 + length(name) AS INT)"))
     assert(!follows("CAST(id % 3 AS INT)", pk = Seq("name")))
     // a pk column is itself a partition that follows the pk; a value column is not
     val plain = decoded.select(decoded.columns.map(col).toSeq: _*)
-    assert(graft.streaming.MicroBatchMerger.partitionsFollowPk(plain, Seq("id"), Seq("id")))
-    assert(!graft.streaming.MicroBatchMerger.partitionsFollowPk(plain, Seq("id", "name"), Seq("id")))
+    assert(MergeEngine.partitionsFollowPk(plain, Seq("id"), Seq("id")))
+    assert(!MergeEngine.partitionsFollowPk(plain, Seq("id", "name"), Seq("id")))
+  }
+
+  test("delete-only batch on a pk-derived partition: absent keys commit nothing") {
+    val path = tmpDir("merge-absent-del")
+    val cfg = TableConfig("graft_test", "absent_del_tbl", s"$path/t",
+      additionalCols = Seq("CAST(id % 3 AS INT) AS part"), partitionCols = Seq("part"))
+    val configs = Map(usersTopic -> cfg)
+    graft.streaming.MicroBatchMerger.process(
+      usersBatch((1 to 6).map(id => (id, 1L, false)): _*), configs, usersProvider)
+    val before = MergeEngine.readTable(spark, cfg.path).get.collect().toSet
+    val part0 = listFiles(s"$path/t/part=0")
+    // 9 and 12 would live in part=0, 10 in part=1, 11 in part=2
+    Seq(Seq((9, 2L, true), (12, 2L, true)), Seq((10, 2L, true), (11, 2L, true))).foreach { dels =>
+      assert(commitsOf(graft.streaming.MicroBatchMerger.process(usersBatch(dels: _*), configs, usersProvider))
+        == 0, s"absent-key tombstones $dels committed")
+    }
+    assert(MergeEngine.readTable(spark, cfg.path).get.collect().toSet == before)
+    assert(listFiles(s"$path/t/part=0") == part0, "part=0 was rewritten")
+    // a present key commits once; the replayed tombstone finds it gone
+    Seq(1, 0).foreach { want =>
+      assert(commitsOf(graft.streaming.MicroBatchMerger.process(
+        usersBatch((3, 2L, true), (9, 2L, true)), configs, usersProvider)) == want)
+    }
+    assert(usersState(cfg).keySet == Set(1, 2, 4, 5, 6))
   }
 
   test("fused mixed-batch merge on a partitioned table: one transaction, same end state") {
@@ -885,12 +910,15 @@ class MergeEngineSpec extends SparkSpec {
   }
 
   test("delete probe pushes a pk min/max range filter when files are pk-clustered") {
-    val pred = MergeEngine.pkRangeFilter(Seq("id"), Seq("id"), Some((5, 9)))
+    val pred = MergeEngine.pkRangeFilter(
+      Seq((5, 0L), (9, 0L)).toDF("id", "lsn"), Seq("id"), Seq("id"))
     assert(pred.isDefined)
     assert(pred.get.toString.contains("5") && pred.get.toString.contains("9"))
     // not applicable: composite pk or no pk clustering
-    assert(MergeEngine.pkRangeFilter(Seq("id", "lsn"), Seq("id"), Some((5, 5))).isEmpty)
-    assert(MergeEngine.pkRangeFilter(Seq("id"), Seq.empty, Some((5, 5))).isEmpty)
+    assert(MergeEngine.pkRangeFilter(
+      Seq((5, 0L)).toDF("id", "lsn"), Seq("id", "lsn"), Seq("id")).isEmpty)
+    assert(MergeEngine.pkRangeFilter(
+      Seq((5, 0L)).toDF("id", "lsn"), Seq("id"), Seq.empty).isEmpty)
 
     // end-to-end: pk-clustered partitioned table, the probe's scan carries
     // the pushed range so parquet row-group stats can skip files
@@ -900,17 +928,12 @@ class MergeEngineSpec extends SparkSpec {
     val rows = (1 to 1000).map(i => (i, s"n$i", 2020 + i % 4, i.toLong))
     MergeEngine.upsert(spark, cfg, rows.toDF("id", "name", "year", "lsn"), Seq("id"), "lsn")
     val target = MergeEngine.readTable(spark, cfg.path).get
-    val probePlan = target.filter(MergeEngine.pkRangeFilter(Seq("id"), cfg.sortCols, Some((42, 44))).get)
+    val probePlan = target.filter(MergeEngine.pkRangeFilter(
+      Seq((42, 0L), (44, 0L)).toDF("id", "lsn"), Seq("id"), cfg.sortCols).get)
       .queryExecution.executedPlan.toString
     assert(probePlan.contains("GreaterThanOrEqual(id,42)") && probePlan.contains("LessThanOrEqual(id,44)"),
       s"range not pushed to scan:\n$probePlan")
-    // the delete's own probe gets the same range from the routing pass,
-    // with no bounds query of its own
-    val (_, sqlPlans) = sparkWorkOf(
-      MergeEngine.delete(spark, cfg, Seq((42, 0L), (44, 0L)).toDF("id", "lsn"), Seq("id")))
-    assert(sqlPlans.exists(p => p.contains("LeftSemi") && p.contains("GreaterThanOrEqual(id,42)")
-      && p.contains("LessThanOrEqual(id,44)")), s"range not pushed to the probe:\n${sqlPlans.mkString("\n")}")
-    assert(!sqlPlans.exists(_.contains("min(id")), "a separate bounds query ran")
+    MergeEngine.delete(spark, cfg, Seq((42, 0L), (44, 0L)).toDF("id", "lsn"), Seq("id"))
     val t = MergeEngine.readTable(spark, cfg.path).get
     assert(t.count() == 998)
     assert(t.filter(col("id").isin(42, 44)).count() == 0)

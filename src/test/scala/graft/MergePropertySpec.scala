@@ -14,8 +14,9 @@ import scala.util.Random
   * guarded by strict `target.lsn < op.lsn`; tombstone batch-winners
   * delete unconditionally), on an unpartitioned table and on one
   * partitioned by `id % 3` — the fused changelogs on the latter also
-  * with the delete probe skipped, as [[graft.streaming.MicroBatchMerger]]
-  * skips it for partitions that follow the pk.
+  * with `part` computed from `id` in the change set's own projection,
+  * so the engine finds that the partition follows the pk and skips
+  * the delete probe.
   *
   * Seeded RNG -> deterministic cases; payloads derive from (id, lsn) so
   * equal-LSN duplicates carry identical payloads (the engine's
@@ -49,9 +50,10 @@ class MergePropertySpec extends SparkSpec {
 
   /** Applies `batches` through the table-backed engine: as an upsert
     * pass then a delete pass, or `fused` as one change set per batch.
-    * `partitioned` lays the table out by `id % 3`; `followPk` tells the
-    * fused merge that this partition follows the pk, so it skips the
-    * delete probe.
+    * `partitioned` lays the table out by `id % 3`, computed before the
+    * dedup — or, `followPk`, in the fused change set's top projection,
+    * where [[MergeEngine.partitionsFollowPk]] sees it is an expression
+    * over the pk.
     */
   private def runEngine(
       batches: Seq[Seq[Op]],
@@ -64,12 +66,16 @@ class MergePropertySpec extends SparkSpec {
       else TableConfig("graft_test", "prop_tbl", path)
     batches.foreach { batch =>
       if (batch.nonEmpty) {
-        val ops = if (partitioned) batch.toDF().withColumn("part", col("id") % 3) else batch.toDF()
+        val ops =
+          if (partitioned && !followPk) batch.toDF().withColumn("part", col("id") % 3) else batch.toDF()
         val deduped = CdcDedup.latestPerKey(ops, Seq("id"), "lsn")
-        if (fused)
-          MergeEngine(spark, cfg, deduped.withColumn("deleted", col("deleted").cast("string")),
-            Seq("id"), "lsn", "deleted", partitionsFollowPk = followPk)
-        else {
+        if (fused) {
+          val changes = deduped.withColumns(Map("deleted" -> col("deleted").cast("string"))
+            ++ (if (followPk) Map("part" -> col("id") % 3) else Map.empty))
+          assert(!partitioned
+            || MergeEngine.partitionsFollowPk(changes, cfg.partitionCols, Seq("id")) == followPk)
+          MergeEngine(spark, cfg, changes, Seq("id"), "lsn", "deleted")
+        } else {
           MergeEngine.upsert(spark, cfg, deduped.filter(!col("deleted")).drop("deleted"), Seq("id"), "lsn")
           MergeEngine.delete(spark, cfg, deduped.filter(col("deleted")), Seq("id"))
         }
