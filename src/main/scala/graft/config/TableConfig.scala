@@ -10,12 +10,12 @@ package graft.config
   * must be produced by `additionalCols` or exist in the decoded schema).
   *
   * `partitionCols` participate in the upsert merge keys so the merge can
-  * prune target partitions (reference: stream.py:116-117).
+  * prune target partitions (reference: stream.py:116-117). They must
+  * be fixed per key: derived from the pk (`CAST(pmod(id, 8) AS INT)`,
+  * which also spares a delete its pre-state probe) or from a column
+  * that never changes. An update that moves a key to another partition
+  * value leaves its old row behind.
   *
-  * @param sortCols optional within-partition sort applied on every
-  *                  write: clusters rows so parquet row-group min/max
-  *                  statistics prune point/range scans on those columns
-  *                  (poor man's clustering/Z-order for one dimension).
   * @param autoCompactEvery when > 0, [[graft.streaming.MicroBatchMerger]]
   *                  runs [[graft.operators.MergeEngine.compact]] on this
   *                  table after every Nth processed micro-batch: one
@@ -32,7 +32,6 @@ final case class TableConfig(
     path: String,
     additionalCols: Seq[String] = Seq.empty,
     partitionCols: Seq[String] = Seq.empty,
-    sortCols: Seq[String] = Seq.empty,
     autoCompactEvery: Int = 0) {
   require(schema.nonEmpty, "schema must be non-empty")
   require(tableName.nonEmpty, "tableName must be non-empty")

@@ -10,14 +10,14 @@ import org.apache.spark.sql.types._
   * columns into one long, so a single `ORDER BY` clusters rows along
   * ALL N dimensions at once.
   *
-  * Why: [[graft.config.TableConfig.sortCols]] clustering sorts on one
-  * leading column — parquet row-group min/max stats then prune scans
-  * on THAT column only; a filter on the second sort column reads
-  * everything. Sorting by the interleaved key gives every listed
-  * column row-group locality (each loses ~1/N of its bit precision,
-  * the classic Z-order trade), which is what a 100 TB table wants when
-  * queries filter on more than one dimension. Same mechanism as
-  * Delta/Iceberg OPTIMIZE ZORDER BY, as a plain Catalyst expression.
+  * Why: a plain multi-column sort clusters on its one leading column —
+  * parquet row-group min/max stats then prune scans on THAT column
+  * only; a filter on the second sort column reads everything. Sorting
+  * by the interleaved key gives every listed column row-group locality
+  * (each loses ~1/N of its bit precision, the classic Z-order trade),
+  * which is what a 100 TB table wants when queries filter on more than
+  * one dimension. Same mechanism as Delta/Iceberg OPTIMIZE ZORDER BY,
+  * as a plain Catalyst expression.
   *
   * Per-type monotone mapping to unsigned 64-bit space (order-preserving,
   * so interleaving top bits preserves per-dimension order):

@@ -9,6 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftPlanShim, Row, SparkSession
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.util.{escapeSingleQuotedString, quoteIdentifier}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
@@ -133,7 +134,8 @@ object MergeEngine {
     * transaction first ([[StagedSwap.recover]]), so a reader never observes a
     * torn write. `mergeSchema` handles files written before a schema
     * evolution (untouched partitions keep old schema). Returns None when
-    * the table has no data yet.
+    * the table was never written; an emptied table reads as an empty
+    * frame with its schema.
     */
   def readTable(spark: SparkSession, path: String): Option[DataFrame] = {
     StagedSwap.recover(spark, path)
@@ -152,7 +154,9 @@ object MergeEngine {
   }
 
   /** Create an empty, optionally partitioned, catalog-registered table if
-    * absent (reference: utils.py:37-58).
+    * absent (reference: utils.py:37-58). Registration writes no data
+    * file, so a table holds files only once a merge commits them: until
+    * then [[readTable]] returns None and a delete has nothing to rewrite.
     */
   def createTableIfNotExists(spark: SparkSession, schema: StructType, cfg: TableConfig): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${cfg.schema}")
@@ -163,10 +167,15 @@ object MergeEngine {
       // catalog reader would miss its data. The common per-batch call
       // (table exists) keeps the memo.
       SessionScopedCache.remove(spark, partitionsKey(cfg))
-      val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      val writer = empty.write.format("parquet").mode("ignore").option("path", cfg.path)
-      (if (cfg.partitionCols.nonEmpty) writer.partitionBy(cfg.partitionCols: _*) else writer)
-        .saveAsTable(cfg.qualifiedName)
+      val root = new Path(cfg.path)
+      // qualified: the catalog resolves a relative LOCATION against the
+      // database dir, the merge writes against the working dir
+      val location = root.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(root)
+      val partitioned =
+        if (cfg.partitionCols.isEmpty) ""
+        else cfg.partitionCols.map(quoteIdentifier).mkString(" PARTITIONED BY (", ", ", ")")
+      spark.sql(s"CREATE TABLE ${cfg.qualifiedName} (${nullableOf(schema).toDDL}) USING parquet" +
+        s"$partitioned LOCATION '${escapeSingleQuotedString(location.toString)}'")
     }
   }
 
@@ -188,21 +197,28 @@ object MergeEngine {
     * upserts touch, so no side pays an emptiness probe or a
     * partition-discovery collect of its own.
     *
+    * The upsert keys are pk + partition columns (stream.py:116-117), so
+    * a key's partition values must never change: derive them from the
+    * pk ([[partitionsFollowPk]]) or from an immutable column. An update
+    * that moves a key to another partition value inserts a second row
+    * and leaves the old one behind.
+    *
     * Only partitions the upserts touch or a deleted key occupies are read
     * and rewritten; partitions the swap leaves empty are removed in the
-    * same transaction. Deletes match on pk alone, so where a deleted key
-    * lives comes from a probe of the pre-state ([[pkRangeFilter]] prunes
-    * it by row-group stats when files are pk-clustered) — unless every
-    * partition column follows the pk ([[partitionsFollowPk]]): a deleted
-    * key then lives in the partition its tombstone names. A change set
-    * with upserts rewrites those partitions with no probe (its write
-    * runs anyway; a partition that only tombstones of absent keys name
-    * is rewritten unchanged); a delete-only one probes just them, so
-    * tombstones of absent keys — replays, repeated deletes — commit
-    * nothing. Sequentially equivalent to upsert-then-delete: an upsert
-    * can add keys only inside its own touched partitions, so every row
-    * the delete could see is in the slice; even a key on both sides
-    * ends deleted.
+    * same transaction, and a delete that empties an unpartitioned table
+    * swaps in one empty data file that keeps the schema: every outcome
+    * is one [[writeStaged]] commit. Deletes match on pk alone, so where
+    * a deleted key lives comes from a probe of the pre-state — unless
+    * every partition column follows the pk ([[partitionsFollowPk]]): a
+    * deleted key then lives in the partition its tombstone names. A
+    * change set with upserts rewrites those partitions with no probe
+    * (its write runs anyway; a partition that only tombstones of absent
+    * keys name is rewritten unchanged); a delete-only one probes just
+    * them, so tombstones of absent keys — replays, repeated deletes —
+    * commit nothing. Sequentially equivalent to upsert-then-delete: an
+    * upsert can add keys only inside its own touched partitions, so
+    * every row the delete could see is in the slice; even a key on both
+    * sides ends deleted.
     */
   def apply(
       spark: SparkSession,
@@ -230,8 +246,7 @@ object MergeEngine {
           val affected =
             if (delParts.isEmpty || (follows && upParts.nonEmpty)) delParts
             else
-              (if (follows) t.filter(partitionPredicate(partCols, delParts))
-               else pkRangeFilter(deletes, pkCols, cfg.sortCols).map(t.filter).getOrElse(t))
+              (if (follows) t.filter(partitionPredicate(partCols, delParts)) else t)
                 .join(deletes.select(pkCols.map(col): _*).distinct(), pkCols, "left_semi")
                 .select(partCols.map(col): _*)
                 .distinct()
@@ -249,10 +264,7 @@ object MergeEngine {
           else resolveUpsert(slice, upserts, (pkCols ++ partCols).distinct, versionCol)
       }
       val resolved = if (delParts.isEmpty) merged else resolveDelete(merged, deletes, pkCols)
-      // a delete that empties an unpartitioned table leaves no rows to stage
-      if (partCols.isEmpty && delParts.nonEmpty && target.isDefined && resolved.isEmpty)
-        truncate(spark, cfg)
-      else syncCatalog(spark, cfg, writeStaged(spark, cfg, resolved, rewrite))
+      syncCatalog(spark, cfg, writeStaged(spark, cfg, resolved, rewrite))
     } finally { changes.unpersist(); () }
   }
 
@@ -339,8 +351,8 @@ object MergeEngine {
     * IF NOT EXISTS PARTITION` is a catalog round trip — pure fixed cost
     * (NOTES' remaining CDC item). Entries are recorded only after the
     * ALTER succeeds, and evicted whenever the ENGINE itself invalidates
-    * them: a swap that removes partitions drops those rels, truncate
-    * and an actual table (re)creation drop the table's whole entry.
+    * them: a swap that removes partitions drops those rels, and an
+    * actual table (re)creation drops the table's whole entry.
     * Caveat (same class as the read-schema cache): an EXTERNAL
     * `DROP PARTITION` against a live session's table is not observed;
     * the memo is session-scoped, so a fresh session re-adds.
@@ -381,36 +393,6 @@ object MergeEngine {
           catch { case _: org.apache.spark.sql.AnalysisException => () }
       }
     }
-
-  /** When the table clusters files on a single-column pk
-    * (`sortCols` head == the pk), the probe for affected partitions can
-    * push `pk BETWEEN min(deletes) AND max(deletes)` into the scan:
-    * parquet row-group min/max stats then skip every file/row-group
-    * whose pk range cannot contain a deleted key — at 100 TB this turns
-    * the J2 full-table probe into a read of only the candidate row
-    * groups. Pruning is applied ONLY to the probe; the rewrite still
-    * reads complete affected partitions (survivors must keep every
-    * non-matched row).
-    */
-  private[graft] def pkRangeFilter(
-      deletes: DataFrame,
-      pkCols: Seq[String],
-      sortCols: Seq[String]): Option[org.apache.spark.sql.Column] =
-    if (pkCols.size == 1 && sortCols.headOption.contains(pkCols.head)) {
-      val pk = pkCols.head
-      val bounds = deletes.agg(min(col(pk)).as("lo"), max(col(pk)).as("hi")).head()
-      if (bounds.isNullAt(0)) None
-      else Some(col(pk) >= lit(bounds.get(0)) && col(pk) <= lit(bounds.get(1)))
-    } else None
-
-  /** Remove all data for a table (used when a delete empties an
-    * unpartitioned table).
-    */
-  private def truncate(spark: SparkSession, cfg: TableConfig): Unit = {
-    val root = new Path(cfg.path)
-    StagedSwap.deleteOrThrow(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
-    SessionScopedCache.remove(spark, partitionsKey(cfg))
-  }
 
   /** Compact a merge table's small files (micro-batch CDC writes leave
     * one file set per touched partition per batch; at 100 TB the read
@@ -518,12 +500,12 @@ object MergeEngine {
       .mkString("/")
 
   /** Crash-atomic write of `df` into the table at `cfg.path`: ONE
-    * [[StagedSwap]] commit that stages `df` (clustered on `sortCols`)
-    * with the target's partition layout and swaps in the partitions it
-    * produced — removing, in the same transaction, the
-    * `removeCandidates` partitions that received no rows (how [[apply]]
-    * drops emptied partitions). An unpartitioned table swaps its whole
-    * data-file set.
+    * [[StagedSwap]] commit that stages `df` with the target's partition
+    * layout and swaps in the partitions it produced — removing, in the
+    * same transaction, the `removeCandidates` partitions that received
+    * no rows (how [[apply]] drops emptied partitions). An unpartitioned
+    * table swaps its whole data-file set; an empty `df` stages one
+    * empty data file that keeps the schema.
     *
     * @return the touched partition rel-paths (e.g. `year=2024`) for a
     *         partitioned table — the caller's targeted catalog sync —
@@ -536,24 +518,15 @@ object MergeEngine {
       removeCandidates: Array[Row] = Array.empty): Seq[String] = {
     val root = new Path(cfg.path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // clustered: within-partition sort -> parquet row-group min/max
-    // stats cluster on sortCols, so later point/range scans (incl. the
-    // delete probe) skip row groups. The sort leads with the partition
-    // columns: the partitioned write needs its input ordered by them
-    // and would otherwise re-sort each task by them alone, dropping
-    // the sortCols order. Deliberately NO repartition-on-write for a
-    // merge: routing rows to one task per partition value (plain or
-    // REBALANCE-hinted) costs an extra shuffle per micro-batch that
-    // measured 25-40% ingest-rate regression at small batch sizes,
-    // while AQE already coalesces the merge aggregation's output
-    // shuffle. File-count growth is handled out of band by [[compact]]
-    // (the OPTIMIZE model: one call is one such write and one commit
-    // for every oversized partition), which
+    // Deliberately NO repartition-on-write for a merge: routing rows to
+    // one task per partition value (plain or REBALANCE-hinted) costs an
+    // extra shuffle per micro-batch that measured 25-40% ingest-rate
+    // regression at small batch sizes, while AQE already coalesces the
+    // merge aggregation's output shuffle. File-count growth is handled
+    // out of band by [[compact]] (the OPTIMIZE model: one call is one
+    // such write and one commit for every oversized partition), which
     // [[graft.streaming.MicroBatchMerger]] can invoke on a cadence.
-    val clustered =
-      if (cfg.sortCols.isEmpty) df
-      else df.sortWithinPartitions((cfg.partitionCols ++ cfg.sortCols).map(col): _*)
-    val touched = StagedSwap.overwritePartitions(spark, cfg.path, clustered, cfg.partitionCols,
+    val touched = StagedSwap.overwritePartitions(spark, cfg.path, df, cfg.partitionCols,
       removed = staged =>
         if (cfg.partitionCols.isEmpty)
           StagedSwap.units(fs, root, 0).map(_.getPath.getName).filterNot(staged.contains)

@@ -10,11 +10,10 @@ import scala.jdk.CollectionConverters._
   * data-skipping layer a lakehouse table format keeps in its log,
   * built here from the parquet FOOTERS the files already carry: one
   * footer read per file (O(files), never O(rows)), no data pages
-  * touched. Combined with a z-ordered or sorted write
-  * ([[graft.operators.ZOrder]], `TableConfig.sortCols`), the manifest
-  * turns a point/range predicate into a file subset long before any
-  * scan task launches — and [[readPruned]] closes the loop by
-  * scanning ONLY that subset.
+  * touched. Combined with a z-ordered write ([[graft.operators.ZOrder]]),
+  * the manifest turns a point/range predicate into a file subset long
+  * before any scan task launches — and [[readPruned]] closes the loop
+  * by scanning ONLY that subset.
   *
   * Scale shape: the file listing fans out per top-level subdirectory
   * as a Spark job (a partitioned table's million files list in

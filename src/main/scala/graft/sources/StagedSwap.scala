@@ -73,7 +73,7 @@ private[graft] object StagedSwap {
         "aborting the swap; the data is intact under its pre-step name")
 
   /** The checked recursive delete; a missing path is already deleted. */
-  private[graft] def deleteOrThrow(fs: FileSystem, p: Path): Unit =
+  private def deleteOrThrow(fs: FileSystem, p: Path): Unit =
     if (fs.exists(p) && !fs.delete(p, true))
       throw new IOException(s"delete($p) returned false")
 

@@ -14,8 +14,8 @@ import org.apache.spark.sql.DataFrame
   * spends). Readers prune with [[FileManifest.readPruned]] at any
   * point between batches; the first batch bootstraps the manifest.
   *
-  * Combined with a sorted/range-partitioned batch write (`sortCols` /
-  * z-order upstream), this is how a forever-running ingest keeps its
+  * Combined with a sorted/range-partitioned batch write (z-order
+  * upstream), this is how a forever-running ingest keeps its
   * table point-queryable at 100 TB without ever re-scanning old data.
   */
 object StreamIngest {

@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
 class MergeEngineSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Jobs one mixed micro-batch on a partitioned table runs end to end. */
+  /** Jobs one mixed micro-batch runs end to end, on a partitioned or an
+    * unpartitioned table.
+    */
   private val JobsPerMixedBatch = 8
 
   /** One change set: `ups` and the tombstones `dels`, `op` marking the side. */
@@ -227,22 +229,28 @@ class MergeEngineSpec extends SparkSpec {
 
   test("one mixed micro-batch on a partitioned table runs a pinned number of jobs") {
     val path = tmpDir("merge-jobs")
-    val cfg = TableConfig("graft_test", "jobs_tbl", s"$path/t",
-      additionalCols = Seq("CAST(id % 3 AS INT) AS part"), partitionCols = Seq("part"))
-    val configs = Map(usersTopic -> cfg)
-    graft.streaming.MicroBatchMerger.process(
-      usersBatch((1 to 6).map(id => (id, 1L, false)): _*), configs, usersProvider)
-    // update 1 and insert 7 (part 1), insert 8 (part 2), delete 3 (part 0)
-    val (jobs, _) = sparkWorkOf(graft.streaming.MicroBatchMerger.process(
-      usersBatch((1, 2L, false), (7, 2L, false), (8, 2L, false), (3, 2L, true)), configs, usersProvider))
-    assert(usersState(cfg) == Map(1 -> "n1-2", 2 -> "n2-1", 4 -> "n4-1", 5 -> "n5-1", 6 -> "n6-1",
-      7 -> "n7-2", 8 -> "n8-2"))
     // metadata (1: the map-side pass that fills the batch cache),
     // routing (3: the dedup exchange, the change-set cache fill and the
     // map-side count pass) and the staged write (4, AQE stages included);
     // a batch with upserts on a pk-derived partition runs no delete
-    // probe. One job more is a new pass over the batch
-    assert(jobs <= JobsPerMixedBatch, s"$jobs jobs > $JobsPerMixedBatch")
+    // probe, and an unpartitioned table's slice is the whole table, so
+    // its delete needs none either. One job more is a new pass over the
+    // batch or the merge result
+    Seq(
+      TableConfig("graft_test", "jobs_tbl", s"$path/t",
+        additionalCols = Seq("CAST(id % 3 AS INT) AS part"), partitionCols = Seq("part")),
+      TableConfig("graft_test", "jobs_flat_tbl", s"$path/flat")
+    ).foreach { cfg =>
+      val configs = Map(usersTopic -> cfg)
+      graft.streaming.MicroBatchMerger.process(
+        usersBatch((1 to 6).map(id => (id, 1L, false)): _*), configs, usersProvider)
+      // update 1 and insert 7 (part 1), insert 8 (part 2), delete 3 (part 0)
+      val (jobs, _) = sparkWorkOf(graft.streaming.MicroBatchMerger.process(
+        usersBatch((1, 2L, false), (7, 2L, false), (8, 2L, false), (3, 2L, true)), configs, usersProvider))
+      assert(usersState(cfg) == Map(1 -> "n1-2", 2 -> "n2-1", 4 -> "n4-1", 5 -> "n5-1", 6 -> "n6-1",
+        7 -> "n7-2", 8 -> "n8-2"))
+      assert(jobs <= JobsPerMixedBatch, s"${cfg.tableName}: $jobs jobs > $JobsPerMixedBatch")
+    }
   }
 
   test("a compacting micro-batch runs at most two jobs more than a mixed one") {
@@ -522,47 +530,19 @@ class MergeEngineSpec extends SparkSpec {
     assert(!new java.io.File(s"$path/t/year=__HIVE_DEFAULT_PARTITION__").exists())
   }
 
-  test("sortCols: writes are clustered within files for row-group skipping") {
-    val path = tmpDir("merge-sort")
-    val cfg = TableConfig("graft_test", "sorted_tbl", s"$path/t", sortCols = Seq("id"))
-    val df = new scala.util.Random(7).shuffle((1 to 2000).toList)
-      .map(i => (i, s"n$i", i.toLong)).toDF("id", "name", "lsn")
-    MergeEngine.upsert(spark, cfg, df, Seq("id"), "lsn")
-    // per physical file, ids must be non-decreasing
-    val perFile = MergeEngine.readTable(spark, cfg.path).get
-      .select(input_file_name().as("f"), col("id"))
-      .as[(String, Int)].collect().groupBy(_._1).values
-    assert(perFile.nonEmpty)
-    perFile.foreach { rows =>
-      val ids = rows.map(_._2).toSeq
-      assert(ids == ids.sorted, "file not clustered by sort column")
-    }
-  }
-
-  test("sortCols on a partitioned table: merge and compaction writes stay clustered") {
-    val path = tmpDir("merge-sort-part")
-    val cfg = TableConfig("graft_test", "sorted_part_tbl", s"$path/t",
-      partitionCols = Seq("part"), sortCols = Seq("id"))
-    def shuffled(seed: Int, ids: Seq[Int]) =
-      new scala.util.Random(seed).shuffle(ids).map(i => (i, s"n$i", i % 4, i.toLong))
-        .toDF("id", "name", "part", "lsn")
-    def assertClustered(write: String): Unit = {
-      val perFile = MergeEngine.readTable(spark, cfg.path).get
-        .select(input_file_name().as("f"), col("id"))
-        .as[(String, Int)].collect().groupBy(_._1).values
-      assert(perFile.size >= 4)
-      perFile.foreach { rows =>
-        val ids = rows.map(_._2).toSeq
-        assert(ids == ids.sorted, s"$write: file not clustered by sort column")
-      }
-    }
-    MergeEngine.upsert(spark, cfg, shuffled(7, 1 to 2000), Seq("id"), "lsn")
-    assertClustered("merge")
-    // unclustered raw appends push every partition over the threshold
-    (1 to 2).foreach(b => shuffled(b, (1 to 500).map(_ + 10000 * b)).coalesce(1)
-      .write.mode("append").partitionBy("part").parquet(cfg.path))
-    assert(MergeEngine.compact(spark, cfg, maxFilesPerPartition = 1) == 4)
-    assertClustered("compaction")
+  test("a delete that empties an unpartitioned table commits one empty file that keeps the schema") {
+    val path = tmpDir("merge-emptied")
+    val cfg = TableConfig("graft_test", "emptied_tbl", s"$path/t")
+    MergeEngine.upsert(spark, cfg,
+      Seq((1, "a", 10L), (2, "b", 11L)).toDF("id", "name", "lsn"), Seq("id"), "lsn")
+    assert(commitsOf(MergeEngine.delete(spark, cfg,
+      Seq((1, 0L), (2, 0L)).toDF("id", "lsn"), Seq("id"))) == 1)
+    assert(listFiles(cfg.path).size == 1, s"files left: ${listFiles(cfg.path)}")
+    // a reader without the cached schema gets it from that file's footer
+    MergeEngine.invalidateSchema(spark, cfg.path)
+    val emptied = MergeEngine.readTable(spark, cfg.path).get
+    assert(emptied.count() == 0)
+    assert(emptied.columns.sorted.toSeq == Seq("id", "lsn", "name"))
   }
 
   // ---------------------------------------------------------------------
@@ -592,7 +572,8 @@ class MergeEngineSpec extends SparkSpec {
       dir => write(killTable(dir, partCols: _*)),
       dir => {
         val t = MergeEngine.readTable(spark, killTable(dir).path).get
-        rowsOf(t) :+ s"files=${t.select(input_file_name()).distinct().count()}"
+        rowsOf(t) :+ s"files=${t.select(input_file_name()).distinct().count()}" :+
+          t.columns.sorted.mkString("columns=", ",", "")
       })
 
   private val cols4 = Seq("id", "name", "year", "lsn")
@@ -673,6 +654,12 @@ class MergeEngineSpec extends SparkSpec {
         Seq((1, "a", 2023, 10L), (2, "b", 2024, 11L), (3, "c", 2024, 12L)).toDF(cols4: _*),
         Seq("id"), "lsn"),
       cfg => MergeEngine.delete(spark, cfg, Seq((1, 0L), (3, 0L)).toDF("id", "lsn"), Seq("id"))),
+    // deleting both rows leaves nothing to stage but one empty data
+    // file, which the same one commit swaps in for the old files
+    mergeCase("crash during a delete that empties an unpartitioned table rolls back", Nil)(
+      cfg => MergeEngine.upsert(spark, cfg,
+        Seq((1, "a", 10L), (2, "b", 11L)).toDF("id", "name", "lsn"), Seq("id"), "lsn"),
+      cfg => MergeEngine.delete(spark, cfg, Seq((1, 0L), (2, 0L)).toDF("id", "lsn"), Seq("id"))),
     // two partitions of two files each (one append per row): the one
     // commit swaps both, so a kill at mid-swap leaves one swapped and
     // one not, and the rollback must restore both
@@ -907,36 +894,6 @@ class MergeEngineSpec extends SparkSpec {
     assert(!StagedSwap.recover(spark, cfg.path), "second recover must be a no-op")
     assert(KillPoints.debris(cfg.path).isEmpty,
       s"leftover transaction state: ${KillPoints.debris(cfg.path).mkString(",")}")
-  }
-
-  test("delete probe pushes a pk min/max range filter when files are pk-clustered") {
-    val pred = MergeEngine.pkRangeFilter(
-      Seq((5, 0L), (9, 0L)).toDF("id", "lsn"), Seq("id"), Seq("id"))
-    assert(pred.isDefined)
-    assert(pred.get.toString.contains("5") && pred.get.toString.contains("9"))
-    // not applicable: composite pk or no pk clustering
-    assert(MergeEngine.pkRangeFilter(
-      Seq((5, 0L)).toDF("id", "lsn"), Seq("id", "lsn"), Seq("id")).isEmpty)
-    assert(MergeEngine.pkRangeFilter(
-      Seq((5, 0L)).toDF("id", "lsn"), Seq("id"), Seq.empty).isEmpty)
-
-    // end-to-end: pk-clustered partitioned table, the probe's scan carries
-    // the pushed range so parquet row-group stats can skip files
-    val path = tmpDir("merge-prune-del")
-    val cfg = TableConfig("graft_test", "prune_del_tbl", s"$path/t",
-      partitionCols = Seq("year"), sortCols = Seq("id"))
-    val rows = (1 to 1000).map(i => (i, s"n$i", 2020 + i % 4, i.toLong))
-    MergeEngine.upsert(spark, cfg, rows.toDF("id", "name", "year", "lsn"), Seq("id"), "lsn")
-    val target = MergeEngine.readTable(spark, cfg.path).get
-    val probePlan = target.filter(MergeEngine.pkRangeFilter(
-      Seq((42, 0L), (44, 0L)).toDF("id", "lsn"), Seq("id"), cfg.sortCols).get)
-      .queryExecution.executedPlan.toString
-    assert(probePlan.contains("GreaterThanOrEqual(id,42)") && probePlan.contains("LessThanOrEqual(id,44)"),
-      s"range not pushed to scan:\n$probePlan")
-    MergeEngine.delete(spark, cfg, Seq((42, 0L), (44, 0L)).toDF("id", "lsn"), Seq("id"))
-    val t = MergeEngine.readTable(spark, cfg.path).get
-    assert(t.count() == 998)
-    assert(t.filter(col("id").isin(42, 44)).count() == 0)
   }
 
   private def listFiles(dir: String): Set[String] = {

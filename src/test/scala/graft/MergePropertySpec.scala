@@ -8,11 +8,12 @@ import org.apache.spark.sql.functions._
 import scala.util.Random
 
 /** Property-style check of the merge semantics: random CDC changelogs
-  * applied batch-by-batch through the real table-backed MergeEngine
-  * must match a trivial in-memory reference model of the same
-  * contract (per batch: W1 dedup keeps the max-LSN op per key; upserts
-  * guarded by strict `target.lsn < op.lsn`; tombstone batch-winners
-  * delete unconditionally), on an unpartitioned table and on one
+  * (and two fixed ones whose deletes empty the table) applied
+  * batch-by-batch through the real table-backed MergeEngine must match
+  * a trivial in-memory reference model of the same contract (per
+  * batch: W1 dedup keeps the max-LSN op per key; upserts guarded by
+  * strict `target.lsn < op.lsn`; tombstone batch-winners delete
+  * unconditionally), on an unpartitioned table and on one
   * partitioned by `id % 3` — the fused changelogs on the latter also
   * with `part` computed from `id` in the change set's own projection,
   * so the engine finds that the partition follows the pk and skips
@@ -89,10 +90,19 @@ class MergePropertySpec extends SparkSpec {
     }
   }
 
+  /** Changelogs whose deletes empty the table, which none of the seeded
+    * random ones does: one ends emptied, one is refilled by a later batch.
+    */
+  private val emptying: Seq[Seq[Seq[Op]]] = {
+    val filled = Seq(Op(1, "n1-1", false, 1L), Op(2, "n2-2", false, 2L))
+    val emptied = Seq(Op(1, "n1-3", true, 3L), Op(2, "n2-4", true, 4L))
+    Seq(Seq(filled, emptied), Seq(filled, emptied, Seq(Op(3, "n3-5", false, 5L))))
+  }
+
   test("table-backed merge matches the reference model on random changelogs") {
     val rng = new Random(42)
-    (1 to 12).foreach { caseNo =>
-      val batches = Seq.fill(1 + rng.nextInt(4)) {
+    val random = Seq.fill(12) {
+      Seq.fill(1 + rng.nextInt(4)) {
         Seq.fill(rng.nextInt(11)) {
           val id = 1 + rng.nextInt(8) // small key space -> collisions
           val lsn = 1L + rng.nextInt(40) // duplicate LSNs + replays likely
@@ -100,6 +110,8 @@ class MergePropertySpec extends SparkSpec {
           Op(id, s"n$id-$lsn", deleted, lsn)
         }
       }
+    }
+    (emptying ++ random).zipWithIndex.foreach { case (batches, caseNo) =>
       val want = model(batches).map { case (k, op) => k -> ((op.name, op.lsn)) }
       Seq(false, true).foreach { partitioned =>
         val got = runEngine(batches, s"${tmpDir("merge-prop")}/t", fused = false, partitioned)
@@ -111,8 +123,8 @@ class MergePropertySpec extends SparkSpec {
 
   test("fused mixed-batch merge matches the reference model on random changelogs") {
     val rng = new Random(7)
-    (1 to 12).foreach { caseNo =>
-      val batches = Seq.fill(1 + rng.nextInt(4)) {
+    val random = Seq.fill(12) {
+      Seq.fill(1 + rng.nextInt(4)) {
         Seq.fill(rng.nextInt(11)) {
           val id = 1 + rng.nextInt(8)
           val lsn = 1L + rng.nextInt(40)
@@ -120,6 +132,8 @@ class MergePropertySpec extends SparkSpec {
           Op(id, s"n$id-$lsn", deleted, lsn)
         }
       }
+    }
+    (emptying ++ random).zipWithIndex.foreach { case (batches, caseNo) =>
       val want = model(batches).map { case (k, op) => k -> ((op.name, op.lsn)) }
       Seq((false, false), (true, false), (true, true)).foreach { case (partitioned, followPk) =>
         val got = runEngine(batches, s"${tmpDir("merge-prop-fused")}/t", fused = true, partitioned, followPk)
