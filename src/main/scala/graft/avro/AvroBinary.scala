@@ -1,6 +1,5 @@
 package graft.avro
 
-import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.EncoderFactory
 
@@ -18,7 +17,7 @@ object AvroBinary {
     * at the schema's default/null.
     */
   def encode(schemaJson: String, values: Map[String, Any]): Array[Byte] = {
-    val schema = new Schema.Parser().parse(schemaJson)
+    val schema = AvroSchemas.parse(schemaJson)
     val rec: GenericRecord = new GenericData.Record(schema)
     schema.getFields.asScala.foreach { f =>
       values.get(f.name).foreach(v => rec.put(f.name, v))
@@ -44,28 +43,4 @@ object AvroBinary {
   /** Framed Confluent message for a schema id + record values. */
   def confluentMessage(schemaId: Int, schemaJson: String, values: Map[String, Any]): Array[Byte] =
     confluentFrame(schemaId, encode(schemaJson, values))
-
-  /** Reusable per-partition encoder: parses the schema once and reuses
-    * the datum writer across records (what an executor closure should
-    * hold — [[encode]] re-parses per call).
-    */
-  final class RecordEncoder(schemaJson: String) extends Serializable {
-    @transient private lazy val schema = new Schema.Parser().parse(schemaJson)
-    @transient private lazy val writer = new GenericDatumWriter[GenericRecord](schema)
-
-    def encode(values: Map[String, Any]): Array[Byte] = {
-      val rec: GenericRecord = new GenericData.Record(schema)
-      schema.getFields.asScala.foreach { f =>
-        values.get(f.name).foreach(v => rec.put(f.name, v))
-      }
-      val out = new ByteArrayOutputStream()
-      val encoder = EncoderFactory.get().binaryEncoder(out, null)
-      writer.write(rec, encoder)
-      encoder.flush()
-      out.toByteArray
-    }
-
-    def confluentMessage(schemaId: Int, values: Map[String, Any]): Array[Byte] =
-      confluentFrame(schemaId, encode(values))
-  }
 }

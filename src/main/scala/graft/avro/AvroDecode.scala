@@ -1,34 +1,29 @@
 package graft.avro
 
-import org.apache.avro.{Conversions, LogicalTypes, Schema}
-import org.apache.avro.generic.{GenericDatumReader, GenericFixed, GenericRecord}
+import org.apache.avro.Schema
+import org.apache.avro.generic.GenericDatumReader
 import org.apache.avro.io.{BinaryDecoder, DecoderFactory}
 import org.apache.spark.sql.{Column, GraftColumnShim}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-import java.nio.ByteBuffer
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** Native Catalyst expression decoding Avro binary -> Catalyst struct.
   *
   * The reference relies on PySpark's `from_avro` with FAILFAST
   * (reference: stream.py:26-37,86). Spark 4's built-in FROM_AVRO SQL
-  * function delegates to the external spark-avro module
-  * (`AvroDataToCatalyst`), which is not on this classpath, so this
-  * expression implements the decode directly on avro-1.12.1:
-  * `GenericDatumReader` + a recursive Avro->Catalyst converter covering
-  * the CDC type lattice (SURVEY.md §1.3): primitives, `["null", T]`
-  * unions, logical date/timestamp/decimal, string/enum/bytes/fixed,
-  * arrays, maps, nested records.
+  * function needs the external spark-avro module for its expression
+  * (`AvroDataToCatalyst`), which is not on this classpath. The value
+  * converters ship inside spark-sql, so this expression does what
+  * `AvroDataToCatalyst` does: `GenericDatumReader` into a reused record,
+  * then Spark's own `AvroDeserializer` to the type
+  * `SchemaConverters.toSqlType` derives ([[AvroSchemas.toDataType]]).
+  * Type and values come from one mapping.
   *
-  * Per-partition state (reader, decoder) is reused across rows, and
-  * the expression participates in whole-stage codegen (the decode is
+  * Per-partition state (reader, decoder, record) is reused across rows,
+  * and the expression participates in whole-stage codegen (the decode is
   * one JVM call on a referenced expression object — a CodegenFallback
   * here would eject the per-record hot loop of the entire CDC path
   * from generated code; same rationale as
@@ -41,9 +36,11 @@ import scala.util.control.NonFatal
 case class AvroDecode(child: Expression, schemaJson: String, failFast: Boolean)
     extends UnaryExpression {
 
-  @transient private lazy val avroSchema: Schema = new Schema.Parser().parse(schemaJson)
+  @transient private lazy val avroSchema: Schema = AvroSchemas.parse(schemaJson)
   @transient private lazy val reader = new GenericDatumReader[Any](avroSchema)
+  @transient private lazy val deserialize = GraftColumnShim.avroDeserializer(avroSchema, dataType)
   @transient private var decoder: BinaryDecoder = _
+  @transient private var record: Any = _
 
   override lazy val dataType: DataType = AvroSchemas.toDataType(avroSchema)
   override def nullable: Boolean = true
@@ -64,8 +61,8 @@ case class AvroDecode(child: Expression, schemaJson: String, failFast: Boolean)
   def decodeBytes(bytes: Array[Byte]): Any =
     try {
       decoder = DecoderFactory.get().binaryDecoder(bytes, 0, bytes.length, decoder)
-      val record = reader.read(null, decoder)
-      AvroDecode.toCatalyst(record, avroSchema, dataType)
+      record = reader.read(record, decoder)
+      deserialize(record).get
     } catch {
       case NonFatal(e) =>
         if (failFast)
@@ -105,91 +102,4 @@ object AvroDecode {
   /** `from_avro` equivalent over graft's native decoder. */
   def fromAvro(data: Column, schemaJson: String, failFast: Boolean = true): Column =
     GraftColumnShim.column(AvroDecode(GraftColumnShim.expression(data), schemaJson, failFast))
-
-  private lazy val decimalConversion = new Conversions.DecimalConversion()
-
-  /** Recursive Avro runtime value -> Catalyst internal value. */
-  private[avro] def toCatalyst(value: Any, schema: Schema, target: DataType): Any = {
-    if (value == null) return null
-    schema.getType match {
-      case Schema.Type.UNION =>
-        val branches = schema.getTypes.asScala.filterNot(_.getType == Schema.Type.NULL)
-        if (branches.size == 1) toCatalyst(value, branches.head, target)
-        else {
-          // general unions are not part of the CDC lattice; resolve by runtime type
-          val branch = branches
-            .find(b => matchesBranch(value, b))
-            .getOrElse(throw new IllegalArgumentException(
-              s"cannot resolve union branch for ${value.getClass} in $schema"))
-          toCatalyst(value, branch, target)
-        }
-      case Schema.Type.NULL => null
-      case Schema.Type.BOOLEAN | Schema.Type.INT | Schema.Type.LONG |
-          Schema.Type.FLOAT | Schema.Type.DOUBLE =>
-        (schema.getLogicalType, target) match {
-          case (_: LogicalTypes.TimestampMillis, TimestampType) =>
-            java.lang.Long.valueOf(value.asInstanceOf[java.lang.Long] * 1000L)
-          case (_: LogicalTypes.LocalTimestampMillis, TimestampNTZType) =>
-            java.lang.Long.valueOf(value.asInstanceOf[java.lang.Long] * 1000L)
-          case _ => value // date stays int-days; micros stay long; primitives as-is
-        }
-      case Schema.Type.STRING | Schema.Type.ENUM =>
-        UTF8String.fromString(value.toString)
-      case Schema.Type.BYTES =>
-        val buf = value.asInstanceOf[ByteBuffer]
-        target match {
-          case d: DecimalType =>
-            Decimal(decimalConversion.fromBytes(buf.duplicate(), schema, schema.getLogicalType),
-              d.precision, d.scale)
-          case _ =>
-            val bytes = new Array[Byte](buf.remaining())
-            buf.duplicate().get(bytes)
-            bytes
-        }
-      case Schema.Type.FIXED =>
-        val bytes = value.asInstanceOf[GenericFixed].bytes()
-        target match {
-          case d: DecimalType =>
-            Decimal(
-              decimalConversion.fromFixed(value.asInstanceOf[GenericFixed], schema, schema.getLogicalType),
-              d.precision, d.scale)
-          case _ => bytes.clone()
-        }
-      case Schema.Type.ARRAY =>
-        val at = target.asInstanceOf[ArrayType]
-        val elems = value.asInstanceOf[java.util.Collection[Any]].asScala
-          .map(v => toCatalyst(v, schema.getElementType, at.elementType))
-        new GenericArrayData(elems.toArray)
-      case Schema.Type.MAP =>
-        val mt = target.asInstanceOf[MapType]
-        val m = value.asInstanceOf[java.util.Map[Any, Any]].asScala
-        ArrayBasedMapData(
-          m.keys.map(k => UTF8String.fromString(k.toString)).toArray[Any],
-          m.values.map(v => toCatalyst(v, schema.getValueType, mt.valueType)).toArray[Any])
-      case Schema.Type.RECORD =>
-        val st = target.asInstanceOf[StructType]
-        val rec = value.asInstanceOf[GenericRecord]
-        val out = new Array[Any](st.length)
-        schema.getFields.asScala.zipWithIndex.foreach { case (f, i) =>
-          out(i) = toCatalyst(rec.get(f.pos()), f.schema(), st(i).dataType)
-        }
-        InternalRow.fromSeq(out.toIndexedSeq)
-    }
-  }
-
-  private def matchesBranch(value: Any, branch: Schema): Boolean = branch.getType match {
-    case Schema.Type.BOOLEAN => value.isInstanceOf[java.lang.Boolean]
-    case Schema.Type.INT => value.isInstanceOf[java.lang.Integer]
-    case Schema.Type.LONG => value.isInstanceOf[java.lang.Long]
-    case Schema.Type.FLOAT => value.isInstanceOf[java.lang.Float]
-    case Schema.Type.DOUBLE => value.isInstanceOf[java.lang.Double]
-    case Schema.Type.STRING => value.isInstanceOf[CharSequence]
-    case Schema.Type.BYTES => value.isInstanceOf[ByteBuffer]
-    case Schema.Type.RECORD => value.isInstanceOf[GenericRecord]
-    case Schema.Type.ARRAY => value.isInstanceOf[java.util.Collection[_]]
-    case Schema.Type.MAP => value.isInstanceOf[java.util.Map[_, _]]
-    case Schema.Type.ENUM => value.isInstanceOf[org.apache.avro.generic.GenericEnumSymbol[_]]
-    case Schema.Type.FIXED => value.isInstanceOf[GenericFixed]
-    case _ => false
-  }
 }

@@ -1,25 +1,23 @@
 package graft.avro
 
-import org.apache.avro.{Conversions, Schema}
-import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.avro.Schema
+import org.apache.avro.generic.GenericDatumWriter
 import org.apache.avro.io.{BinaryEncoder, EncoderFactory}
 import org.apache.spark.sql.{Column, GraftColumnShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import java.io.ByteArrayOutputStream
-import java.nio.ByteBuffer
-import scala.jdk.CollectionConverters._
 
 /** Native Catalyst expression encoding a Catalyst struct -> Avro binary
-  * (`to_avro` parity; the built-in TO_AVRO, like FROM_AVRO, delegates
-  * to the absent spark-avro module). Inverse of [[AvroDecode]]; used
-  * for in-plan production of CDC feeds (fixtures, backfills,
-  * Kafka-bound writes on clusters with the connector).
+  * (`to_avro` parity). The built-in TO_AVRO, like FROM_AVRO, needs the
+  * absent spark-avro module for its expression (`CatalystDataToAvro`);
+  * the value converter is Spark's own `AvroSerializer`, which ships
+  * inside spark-sql. Inverse of [[AvroDecode]]; used for in-plan
+  * production of CDC feeds (fixtures, backfills, Kafka-bound writes on
+  * clusters with the connector).
   *
   * The input struct's fields are matched to the Avro record's fields BY
   * POSITION (the struct should be built from the same schema, e.g. via
@@ -32,7 +30,9 @@ import scala.jdk.CollectionConverters._
 case class AvroEncode(child: Expression, schemaJson: String)
     extends UnaryExpression {
 
-  @transient private lazy val avroSchema: Schema = new Schema.Parser().parse(schemaJson)
+  @transient private lazy val avroSchema: Schema = AvroSchemas.parse(schemaJson)
+  @transient private lazy val serialize =
+    GraftColumnShim.avroSerializer(child.dataType, avroSchema, child.nullable)
   @transient private lazy val writer = new GenericDatumWriter[Any](avroSchema)
   @transient private lazy val out = new ByteArrayOutputStream()
   @transient private var encoder: BinaryEncoder = _
@@ -53,11 +53,9 @@ case class AvroEncode(child: Expression, schemaJson: String)
 
   /** public: called from generated code via an expression reference */
   def encodeRow(row: InternalRow): Array[Byte] = {
-    val avroValue =
-      AvroEncode.toAvro(row, child.dataType, avroSchema)
     out.reset()
     encoder = EncoderFactory.get().binaryEncoder(out, encoder)
-    writer.write(avroValue, encoder)
+    writer.write(serialize(row), encoder)
     encoder.flush()
     out.toByteArray
   }
@@ -78,76 +76,4 @@ object AvroEncode {
   /** `to_avro` equivalent over graft's native encoder. */
   def toAvroColumn(data: Column, schemaJson: String): Column =
     GraftColumnShim.column(AvroEncode(GraftColumnShim.expression(data), schemaJson))
-
-  private lazy val decimalConversion = new Conversions.DecimalConversion()
-
-  /** Recursive Catalyst internal value -> Avro runtime value. */
-  private[avro] def toAvro(value: Any, sqlType: DataType, schema: Schema): Any = {
-    if (value == null) return null
-    val target =
-      if (schema.getType == Schema.Type.UNION) {
-        val branches = schema.getTypes.asScala.filterNot(_.getType == Schema.Type.NULL)
-        if (branches.size == 1) branches.head
-        else throw new IllegalArgumentException(s"cannot encode into general union $schema")
-      } else schema
-    (sqlType, target.getType) match {
-      case (_: StructType, Schema.Type.RECORD) =>
-        val st = sqlType.asInstanceOf[StructType]
-        val row = value.asInstanceOf[InternalRow]
-        val rec: GenericRecord = new GenericData.Record(target)
-        target.getFields.asScala.zipWithIndex.foreach { case (f, i) =>
-          val fieldVal =
-            if (row.isNullAt(i)) null
-            else toAvro(row.get(i, st(i).dataType), st(i).dataType, f.schema())
-          rec.put(f.pos(), fieldVal)
-        }
-        rec
-      case (StringType, Schema.Type.STRING) => value.asInstanceOf[UTF8String].toString
-      case (StringType, Schema.Type.ENUM) =>
-        new GenericData.EnumSymbol(target, value.asInstanceOf[UTF8String].toString)
-      case (BinaryType, Schema.Type.BYTES) => ByteBuffer.wrap(value.asInstanceOf[Array[Byte]])
-      case (BinaryType, Schema.Type.FIXED) =>
-        new GenericData.Fixed(target, value.asInstanceOf[Array[Byte]])
-      case (d: DecimalType, Schema.Type.BYTES) =>
-        decimalConversion.toBytes(
-          value.asInstanceOf[org.apache.spark.sql.types.Decimal].toJavaBigDecimal,
-          target, target.getLogicalType)
-      case (TimestampType, Schema.Type.LONG) | (TimestampNTZType, Schema.Type.LONG) =>
-        target.getLogicalType match {
-          case _: org.apache.avro.LogicalTypes.TimestampMillis |
-              _: org.apache.avro.LogicalTypes.LocalTimestampMillis =>
-            java.lang.Long.valueOf(value.asInstanceOf[Long] / 1000L)
-          case _ => java.lang.Long.valueOf(value.asInstanceOf[Long]) // micros
-        }
-      case (DateType, Schema.Type.INT) => java.lang.Integer.valueOf(value.asInstanceOf[Int])
-      case (IntegerType, Schema.Type.INT) | (LongType, Schema.Type.LONG) |
-          (FloatType, Schema.Type.FLOAT) | (DoubleType, Schema.Type.DOUBLE) |
-          (BooleanType, Schema.Type.BOOLEAN) => value
-      case (IntegerType, Schema.Type.LONG) => java.lang.Long.valueOf(value.asInstanceOf[Int].toLong)
-      case (at: ArrayType, Schema.Type.ARRAY) =>
-        val arr = value.asInstanceOf[ArrayData]
-        val out = new java.util.ArrayList[Any](arr.numElements())
-        (0 until arr.numElements()).foreach { i =>
-          out.add(
-            if (arr.isNullAt(i)) null
-            else toAvro(arr.get(i, at.elementType), at.elementType, target.getElementType))
-        }
-        out
-      case (mt: MapType, Schema.Type.MAP) =>
-        val m = value.asInstanceOf[MapData]
-        val out = new java.util.HashMap[String, Any](m.numElements())
-        val keys = m.keyArray()
-        val vals = m.valueArray()
-        (0 until m.numElements()).foreach { i =>
-          val k = keys.get(i, StringType).asInstanceOf[UTF8String].toString
-          val v =
-            if (vals.isNullAt(i)) null
-            else toAvro(vals.get(i, mt.valueType), mt.valueType, target.getValueType)
-          out.put(k, v)
-        }
-        out
-      case (st, at) =>
-        throw new IllegalArgumentException(s"cannot encode Catalyst $st as Avro $at")
-    }
-  }
 }

@@ -134,23 +134,26 @@ object MergeEngine {
     * transaction first ([[StagedSwap.recover]]), so a reader never observes a
     * torn write. `mergeSchema` handles files written before a schema
     * evolution (untouched partitions keep old schema). Returns None when
-    * the table was never written; an emptied table reads as an empty
-    * frame with its schema.
+    * the table was never written, without asking Spark to read a
+    * missing root; an emptied table reads as an empty frame with its
+    * schema.
     */
   def readTable(spark: SparkSession, path: String): Option[DataFrame] = {
     StagedSwap.recover(spark, path)
-    try Some(SessionScopedCache.get[StructType](spark, schemaKey(path)) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None =>
-        val df = spark.read.option("mergeSchema", "true").parquet(path)
-        SessionScopedCache.put(spark, schemaKey(path), nullableOf(df.schema)) // one footer sweep per session
-        df
-    })
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        SessionScopedCache.remove(spark, schemaKey(path)) // table gone; don't trust the cache on recreate
-        None
-    }
+    val root = new Path(path)
+    val table =
+      if (!root.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(root)) None
+      else
+        try Some(SessionScopedCache.get[StructType](spark, schemaKey(path)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.option("mergeSchema", "true").parquet(path)
+            SessionScopedCache.put(spark, schemaKey(path), nullableOf(df.schema)) // one footer sweep per session
+            df
+        })
+        catch { case _: org.apache.spark.sql.AnalysisException => None }
+    if (table.isEmpty) SessionScopedCache.remove(spark, schemaKey(path)) // table gone; don't trust the cache on recreate
+    table
   }
 
   /** Create an empty, optionally partitioned, catalog-registered table if
