@@ -22,139 +22,88 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object GraftFunctions {
 
-  def registerAll(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("get_schema_id", exprs => schemaIdExpr(exprs.head), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "get_confluent_avro_value", exprs => payloadExpr(exprs.head), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "avro_decode",
-      exprs => AvroDecode(exprs.head, constantString(exprs(1), "avro_decode(_, schemaJson)"), failFast = true),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "avro_encode",
-      exprs => AvroEncode(exprs.head, constantString(exprs(1), "avro_encode(_, schemaJson)")),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "deterministic_sample",
-      exprs => DeterministicSample(exprs.head, constantInt(exprs(1), "deterministic_sample(_, k)")),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "lang_id",
-      exprs => LangIdExpression(exprs.head, TextFunctions.LangProfiles), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "scrub_pii",
-      // raw catalyst tree (the Column API's lazy ColumnNodes don't
-      // resolve through the registry path), same regexes as the
-      // Column-level TextFunctions.scrubPii
-      exprs => RegExpReplace(
-        RegExpReplace(exprs.head, Literal(TextFunctions.EmailRe), Literal("<EMAIL>")),
-        Literal(TextFunctions.PhoneRe), Literal("<PHONE>")),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "interleave_bits", exprs => InterleaveBits(exprs), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "hyperplane_signature",
-      exprs => HyperplaneSignature(
-        exprs.head,
-        constantInt(exprs(1), "hyperplane_signature(_, bits, seed)"),
-        constantInt(exprs(2), "hyperplane_signature(_, bits, seed)")),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "minhash_signature",
-      exprs => MinHashSignature(
-        exprs.head,
-        constantInt(exprs(1), "minhash_signature(_, numHashes)")),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "hashed_linear_score",
-      exprs => HashedLinearScore(
-        exprs.head,
-        graft.operators.QualityClassifier.NumBuckets,
-        graft.operators.QualityClassifier.A,
-        graft.operators.QualityClassifier.C,
-        graft.operators.QualityClassifier.M),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "array_hit_count",
-      exprs => graft.functions.ArrayHitCount(
-        exprs.head,
-        constantStringArray(exprs(1), "array_hit_count(_, array('a','b',...))")),
-      "scala_udf")
+  /** Every graft SQL function, by name: the one table that both
+    * [[registerAll]] and the `spark.sql.extensions` registration
+    * ([[graft.plans.GraftExtensions]]) install.
+    */
+  private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("get_schema_id", exprs => schemaIdExpr(exprs.head)),
+    ("get_confluent_avro_value", exprs => payloadExpr(exprs.head)),
+    ("avro_decode", exprs =>
+      AvroDecode(exprs.head, constantString(exprs(1), "avro_decode(_, schemaJson)"), failFast = true)),
+    ("avro_encode", exprs =>
+      AvroEncode(exprs.head, constantString(exprs(1), "avro_encode(_, schemaJson)"))),
+    ("deterministic_sample", exprs =>
+      DeterministicSample(exprs.head, constantInt(exprs(1), "deterministic_sample(_, k)"))),
+    ("lang_id", exprs => LangIdExpression(exprs.head, TextFunctions.LangProfiles)),
+    // raw catalyst tree (the Column API's lazy ColumnNodes don't
+    // resolve through the registry path), same regexes as the
+    // Column-level TextFunctions.scrubPii
+    ("scrub_pii", exprs => RegExpReplace(
+      RegExpReplace(exprs.head, Literal(TextFunctions.EmailRe), Literal("<EMAIL>")),
+      Literal(TextFunctions.PhoneRe), Literal("<PHONE>"))),
+    ("interleave_bits", exprs => InterleaveBits(exprs)),
+    ("hyperplane_signature", exprs => HyperplaneSignature(
+      exprs.head,
+      constantInt(exprs(1), "hyperplane_signature(_, bits, seed)"),
+      constantInt(exprs(2), "hyperplane_signature(_, bits, seed)"))),
+    ("minhash_signature", exprs => MinHashSignature(
+      exprs.head,
+      constantInt(exprs(1), "minhash_signature(_, numHashes)"))),
+    ("hashed_linear_score", exprs => HashedLinearScore(
+      exprs.head,
+      graft.operators.QualityClassifier.NumBuckets,
+      graft.operators.QualityClassifier.A,
+      graft.operators.QualityClassifier.C,
+      graft.operators.QualityClassifier.M)),
+    ("array_hit_count", exprs => graft.functions.ArrayHitCount(
+      exprs.head,
+      constantStringArray(exprs(1), "array_hit_count(_, array('a','b',...))"))),
     // named cm_sketch: count_min_sketch is taken by Spark's built-in
     // (eps/confidence/seed geometry, non-deterministic layout)
-    registry.createOrReplaceTempFunction(
-      "cm_sketch",
-      exprs => graft.functions.CountMinSketchAgg(
-        exprs.head,
-        constantInt(exprs(1), "cm_sketch(_, depth, width)"),
-        constantInt(exprs(2), "cm_sketch(_, depth, width)")),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "hll_sketch",
-      exprs => graft.functions.HyperLogLogAgg(
-        exprs.head,
-        constantInt(exprs(1), "hll_sketch(_, p)")),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "sign_bits", exprs => graft.functions.SignBits(exprs.head), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "hamming_words",
-      exprs => graft.functions.HammingWords(exprs.head, exprs(1)), "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "normalize_text",
-      exprs => graft.functions.NormalizeText(
-        exprs.head, constantString(exprs(1), "normalize_text(_, form)")),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "bloom_agg",
-      exprs => graft.functions.BloomFilterAgg(
-        exprs.head,
-        constantInt(exprs(1), "bloom_agg(_, numBits, numHashes)"),
-        constantInt(exprs(2), "bloom_agg(_, numBits, numHashes)")),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "bloom_contains",
-      exprs => graft.functions.BloomContains(
-        exprs.head, exprs(1),
-        constantInt(exprs(2), "bloom_contains(words, v, numBits, numHashes)"),
-        constantInt(exprs(3), "bloom_contains(words, v, numBits, numHashes)")),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "multi_pattern_count",
-      exprs => graft.functions.MultiPatternCount(
-        exprs.head,
-        constantStringArray(exprs(1), "multi_pattern_count(_, array('a','b'))")),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "scrub_lines",
-      exprs => graft.functions.ScrubLines(
-        exprs.head,
-        constantStringArray(exprs(1), "scrub_lines(_, array('l1'), sep)"),
-        constantString(exprs(2), "scrub_lines(_, lines, sep)")),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "hist_sketch",
-      exprs => graft.functions.HistogramSketchAgg(
-        exprs.head,
-        constantInt(exprs(1), "hist_sketch(_, numBuckets, lo, hi)"),
-        constantDouble(exprs(2), "hist_sketch(_, numBuckets, lo, hi)"),
-        constantDouble(exprs(3), "hist_sketch(_, numBuckets, lo, hi)")),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "word_ngrams",
-      exprs => graft.functions.WordNgrams(
-        exprs.head, constantInt(exprs(1), "word_ngrams(toks, n)")),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "char_shingles",
-      exprs => graft.functions.CharShinglesExpr(
-        exprs.head, constantInt(exprs(1), "char_shingles(canon, n)")),
-      "scala_udf")
-    registry.createOrReplaceTempFunction(
-      "decimal_cosine",
-      exprs => graft.functions.DecimalCosine(exprs.head, exprs(1)), "scala_udf")
-    ()
+    ("cm_sketch", exprs => graft.functions.CountMinSketchAgg(
+      exprs.head,
+      constantInt(exprs(1), "cm_sketch(_, depth, width)"),
+      constantInt(exprs(2), "cm_sketch(_, depth, width)"))),
+    ("hll_sketch", exprs => graft.functions.HyperLogLogAgg(
+      exprs.head,
+      constantInt(exprs(1), "hll_sketch(_, p)"))),
+    ("sign_bits", exprs => graft.functions.SignBits(exprs.head)),
+    ("hamming_words", exprs => graft.functions.HammingWords(exprs.head, exprs(1))),
+    ("normalize_text", exprs => graft.functions.NormalizeText(
+      exprs.head, constantString(exprs(1), "normalize_text(_, form)"))),
+    ("bloom_agg", exprs => graft.functions.BloomFilterAgg(
+      exprs.head,
+      constantInt(exprs(1), "bloom_agg(_, numBits, numHashes)"),
+      constantInt(exprs(2), "bloom_agg(_, numBits, numHashes)"))),
+    ("bloom_contains", exprs => graft.functions.BloomContains(
+      exprs.head, exprs(1),
+      constantInt(exprs(2), "bloom_contains(words, v, numBits, numHashes)"),
+      constantInt(exprs(3), "bloom_contains(words, v, numBits, numHashes)"))),
+    ("multi_pattern_count", exprs => graft.functions.MultiPatternCount(
+      exprs.head,
+      constantStringArray(exprs(1), "multi_pattern_count(_, array('a','b'))"))),
+    ("scrub_lines", exprs => graft.functions.ScrubLines(
+      exprs.head,
+      constantStringArray(exprs(1), "scrub_lines(_, array('l1'), sep)"),
+      constantString(exprs(2), "scrub_lines(_, lines, sep)"))),
+    ("hist_sketch", exprs => graft.functions.HistogramSketchAgg(
+      exprs.head,
+      constantInt(exprs(1), "hist_sketch(_, numBuckets, lo, hi)"),
+      constantDouble(exprs(2), "hist_sketch(_, numBuckets, lo, hi)"),
+      constantDouble(exprs(3), "hist_sketch(_, numBuckets, lo, hi)"))),
+    ("word_ngrams", exprs => graft.functions.WordNgrams(
+      exprs.head, constantInt(exprs(1), "word_ngrams(toks, n)"))),
+    ("char_shingles", exprs => graft.functions.CharShinglesExpr(
+      exprs.head, constantInt(exprs(1), "char_shingles(canon, n)"))),
+    ("decimal_cosine", exprs => graft.functions.DecimalCosine(exprs.head, exprs(1)))
+  )
+
+  def registerAll(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    builders.foreach { case (name, build) =>
+      registry.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
   }
 
   /** Confluent schema id: bytes [1,5) big-endian -> int (same tree as

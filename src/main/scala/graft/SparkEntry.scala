@@ -27,11 +27,12 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
-  /** Temp directory for staged and persisted-store gated queries (and
-    * the test suite's temp dirs), registered for recursive deletion at
-    * JVM exit so repeated (session, dir) runs don't leak parquet trees.
-    * One shutdown hook, installed by the first call, deletes every
-    * registered dir.
+  /** A fresh temp directory, registered for recursive deletion at JVM
+    * exit. One shutdown hook, installed by the first call, deletes
+    * every registered dir. Each call makes a new dir: state built once
+    * per (session, dir) takes one here inside its `SessionScopedCache`
+    * build, and the test suite takes its temp dirs here; a query that
+    * rewrites its store on every call takes [[sessionScratchDir]].
     */
   private[graft] def scratchDir(prefix: String): String = {
     scratchHook
@@ -40,15 +41,36 @@ object SparkEntry {
     p
   }
 
+  /** The one scratch tree of a store-gate query for this (session,
+    * `dir`, `prefix`), emptied on every call: the first call creates it
+    * through [[scratchDir]] and memoizes the path in
+    * `SessionScopedCache` (through `put`, so it counts no staged build),
+    * every later call gets the same path with its contents deleted. So
+    * each call starts from an empty tree, as with a fresh dir, and N
+    * calls leave one tree, not N. Two concurrent calls of the same
+    * query in one session would share the tree; Bench, Verify and
+    * perfbench call queries one at a time.
+    */
+  private[graft] def sessionScratchDir(s: SparkSession, dir: String, prefix: String): String = {
+    val key = "scratch:" + prefix + ":" + dir
+    val p = graft.util.SessionScopedCache.get[String](s, key).getOrElse {
+      val fresh = scratchDir(prefix)
+      graft.util.SessionScopedCache.put(s, key, fresh)
+      fresh
+    }
+    Option(new java.io.File(p).listFiles()).foreach(_.foreach(rm))
+    p
+  }
+
+  private def rm(f: java.io.File): Unit = {
+    val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete(); ()
+  }
+
   private lazy val scratchDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   private lazy val scratchHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete(); ()
-      }
-      scratchDirs.forEach(p => rm(new java.io.File(p)))
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      scratchDirs.forEach(p => rm(new java.io.File(p)))))
 
   /** The dirs registered for deletion at exit, for tests. */
   private[graft] def registeredScratchDirs: Set[String] = {

@@ -12,7 +12,6 @@ import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.catalyst.util.{escapeSingleQuotedString, quoteIdentifier}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
-import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** Monotone-version MERGE engine over partitioned parquet tables.
   *
@@ -165,15 +164,21 @@ object MergeEngine {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS ${cfg.schema}")
     if (!spark.catalog.tableExists(cfg.qualifiedName)) {
       // an ACTUAL (re)creation invalidates any memoized partition
-      // registrations from a previous life of this table name — a
-      // stale memo would skip the ALTER for a re-added partition and a
-      // catalog reader would miss its data. The common per-batch call
-      // (table exists) keeps the memo.
+      // registrations and read schema from a previous life of this
+      // table name — a stale memo would skip the ALTER for a re-added
+      // partition and a catalog reader would miss its data, and a
+      // stale schema would read the new empty root as a table. The
+      // common per-batch call (table exists) keeps the memos.
       SessionScopedCache.remove(spark, partitionsKey(cfg))
+      SessionScopedCache.remove(spark, schemaKey(cfg.path))
       val root = new Path(cfg.path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // an existing LOCATION: on a missing one, CREATE TABLE's
+      // metadata-dir check logs a FileNotFoundException trace
+      fs.mkdirs(root)
       // qualified: the catalog resolves a relative LOCATION against the
       // database dir, the merge writes against the working dir
-      val location = root.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(root)
+      val location = fs.makeQualified(root)
       val partitioned =
         if (cfg.partitionCols.isEmpty) ""
         else cfg.partitionCols.map(quoteIdentifier).mkString(" PARTITIONED BY (", ", ", ")")
@@ -404,7 +409,7 @@ object MergeEngine {
     * Every partition whose file count exceeds `maxFilesPerPartition`
     * (an unpartitioned table: the root's file set) is rewritten into
     * `ceil(bytes / targetFileBytes)` files by ONE transaction: one read
-    * filtered to those partitions, one `repartition(n)` exchange in
+    * filtered to those partitions, one `repartitionById` exchange in
     * which each output file is its own task, and one staged swap whose
     * units are exactly the partitions it rewrites. Untouched partitions
     * keep their files. Returns the number of partitions compacted.
@@ -436,41 +441,22 @@ object MergeEngine {
       }
     if (oversized.isEmpty) return 0
     readTable(spark, cfg.path).foreach { t =>
-      // output file j of partition i is exchange slot base_i + j; its
-      // key is one the hash partitioner routes to that slot, so no two
-      // files share a task and each partition lands as exactly n_i files
-      val keys = slotKeys(oversized.map(_._2).sum)
+      // output file j of partition i is exchange slot base_i + j, so no
+      // two files share a task and each partition lands as exactly n_i
+      // files
       val bases = oversized.scanLeft(0)(_ + _._2)
       lazy val rowHash = xxhash64( // map columns are not hashable
         t.schema.fields.filterNot(f => holdsMap(f.dataType)).map(f => col(f.name)).toSeq: _*)
       val branches = oversized.zip(bases).map { case ((pred, n), base) =>
-        pred -> (if (n == 1) lit(keys(base))
-                 else element_at(typedLit(keys.slice(base, base + n).toSeq),
-                   (pmod(rowHash, lit(n)) + 1).cast("int")))
+        pred -> (if (n == 1) lit(base) else (lit(base) + pmod(rowHash, lit(n))).cast("int"))
       }
-      val fileKey = branches.tail.foldLeft(when(branches.head._1, branches.head._2)) {
-        case (w, (pred, key)) => w.when(pred, key)
+      val slot = branches.tail.foldLeft(when(branches.head._1, branches.head._2)) {
+        case (w, (pred, s)) => w.when(pred, s)
       }
       writeStaged(spark, cfg,
-        t.filter(oversized.map(_._1).reduce(_ || _)).repartition(keys.length, fileKey))
+        t.filter(oversized.map(_._1).reduce(_ || _)).repartitionById(bases.last, slot))
     }
     oversized.size
-  }
-
-  /** For each exchange slot `s < n`, an int key that `repartition(n, key)`
-    * routes to slot `s` (Spark's hash partitioning: `pmod(murmur3(key,
-    * seed 42), n)`), so `n` distinct slots fill `n` distinct tasks.
-    */
-  private def slotKeys(n: Int): Array[Int] = {
-    val keys = Array.fill(n)(-1)
-    var key = 0
-    var found = 0
-    while (found < n) {
-      val s = Math.floorMod(Murmur3_x86_32.hashInt(key, 42), n)
-      if (keys(s) < 0) { keys(s) = key; found += 1 }
-      key += 1
-    }
-    keys
   }
 
   private def holdsMap(t: DataType): Boolean = t match {

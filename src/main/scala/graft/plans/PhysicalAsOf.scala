@@ -63,25 +63,21 @@ object AsOfJoinStrategy extends SparkStrategy {
 }
 
 /** `spark.sql.extensions=graft.plans.GraftExtensions` registration:
-  * the as-of planner strategy plus the graft SQL functions (the
+  * the as-of planner strategy plus every graft SQL function (the
   * config-based twin of `GraftFunctions.registerAll`, for sessions the
-  * library user doesn't construct).
+  * library user doesn't construct; both install
+  * `GraftFunctions.builders`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("lang_id"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.LangIdExpression].getName, "lang_id"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.LangIdExpression(exprs.head, graft.functions.TextFunctions.LangProfiles)))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("interleave_bits"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.InterleaveBits].getName, "interleave_bits"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.InterleaveBits(exprs)))
+    graft.GraftFunctions.builders.foreach { case (name, build) =>
+      e.injectFunction((
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
+          graft.GraftFunctions.getClass.getName, name),
+        build))
+    }
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkEntry.scratchDir
+import graft.SparkEntry.{scratchDir, sessionScratchDir}
 import graft.avro.{AvroDecode, AvroEncode}
 import graft.functions.ConfluentWire
 import graft.operators.{CdcDedup, MergeEngine}
@@ -332,7 +332,7 @@ object Cdc {
     val keys = Seq("user_id", "event_type")
     val ev = Tables(s, dir, "events")
       .select(col("user_id"), col("event_type"), col("event_id"), col("value"))
-    val path = scratchDir("graft-agg-store")
+    val path = sessionScratchDir(s, dir, "graft-agg-store")
     // the base group table is fixture prep (the store the increment
     // arrives AT) — a pure aggregation, staged once; the measured
     // lifecycle is save -> absorb -> load -> audit, in full every rep

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkEntry.scratchDir
+import graft.SparkEntry.{scratchDir, sessionScratchDir}
 import graft.functions.{TextFunctions => TF}
 import graft.operators.{Clustering, TextDedup}
 import graft.sources.Tables
@@ -1472,7 +1472,7 @@ object Dedup {
       .unionByName(ids.filter(col("i") % 20 === 4)
         .select(col("i").as("id_a"), (col("i") + 6).as("id_b")))
     val C = graft.operators.Clustering
-    val path = scratchDir("graft-cluster-store")
+    val path = sessionScratchDir(s, dir, "graft-cluster-store")
     // the base component labels are fixture prep (the store the
     // increment arrives AT); staged once — the measured lifecycle is
     // save -> absorb -> resolve, which runs in full every invocation

@@ -249,6 +249,18 @@ object LanguageModels {
     Query.sharing("text_backoff_inline", textBackoffInline, oracleOf = "text_backoff_score"),
   )
 
+  /** The bigram LM of the doc_id % 50 != 7 reference slice. */
+  private def ngramLm(s: SparkSession, dir: String): graft.operators.NgramLm.Model =
+    SessionScopedCache.getOrElseUpdate(s, "ngram-lm:" + dir)(
+      graft.operators.NgramLm.train(
+        Tables(s, dir, "documents").filter(col("doc_id") % 50 =!= 7), "doc_id", "text"))
+
+  /** The stupid-backoff counts of [[ngramLm]]'s reference slice. */
+  private def backoffLm(s: SparkSession, dir: String): graft.operators.BackoffLm.Model =
+    SessionScopedCache.getOrElseUpdate(s, "backoff-lm:" + dir)(
+      graft.operators.BackoffLm.train(
+        Tables(s, dir, "documents").filter(col("doc_id") % 50 =!= 7), "doc_id", "text"))
+
   /** Bigram-LM perplexity scoring (the CCNet-class quality signal):
     * the model trains on the doc_id % 50 != 7 reference slice, the
     * held-out 2% slice is scored against it — same train/probe split
@@ -260,10 +272,8 @@ object LanguageModels {
     */
   private def textPerplexity(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
-    val model = SessionScopedCache.getOrElseUpdate(s, "ngram-lm:" + dir)(
-      graft.operators.NgramLm.train(docs.filter(col("doc_id") % 50 =!= 7), "doc_id", "text"))
     graft.operators.NgramLm
-      .perplexity(docs.filter(col("doc_id") % 50 === 7), model, "doc_id", "text")
+      .perplexity(docs.filter(col("doc_id") % 50 === 7), ngramLm(s, dir), "doc_id", "text")
       .select(col("id").as("doc_id"), col("n_bigrams"), col("avg_logp"), col("perplexity"))
       .orderBy(col("doc_id"))
   }
@@ -277,9 +287,7 @@ object LanguageModels {
     */
   private def textPerplexityInline(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
-    val model = SessionScopedCache.getOrElseUpdate(s, "ngram-lm:" + dir)(
-      graft.operators.NgramLm.train(docs.filter(col("doc_id") % 50 =!= 7), "doc_id", "text"))
-    val collected = graft.operators.NgramLm.collectModel(model)
+    val collected = graft.operators.NgramLm.collectModel(ngramLm(s, dir))
     graft.operators.NgramLm
       .perplexityInline(docs.filter(col("doc_id") % 50 === 7), collected, "doc_id", "text")
       .select(col("id").as("doc_id"), col("n_bigrams"), col("avg_logp"), col("perplexity"))
@@ -359,6 +367,14 @@ object LanguageModels {
         maxPieceLen = UlmMaxPieceLen, topMulti = UlmTopMulti,
         emIters = UlmEmIters, maxWordLen = UlmMaxWordLen))
 
+  /** [[ulmVocab]] with the SentencePiece prune ([[UlmPruneTo]]). */
+  private def ulmPruned(s: SparkSession, dir: String): graft.operators.UnigramLm.Vocab =
+    SessionScopedCache.getOrElseUpdate(s, "ulm:" + dir + "#pruned")(
+      graft.operators.UnigramLm.train(Tables(s, dir, "documents"), "text",
+        maxPieceLen = UlmMaxPieceLen, topMulti = UlmTopMulti,
+        emIters = UlmEmIters, maxWordLen = UlmMaxWordLen,
+        pruneMultiTo = Some(UlmPruneTo)))
+
   /** Trained unigram-LM vocabulary (Kudo 2018; SentencePiece's model):
     * substring-seeded, 2 hard-EM rounds over the distinct-word table —
     * (piece, n, lp) with the floor-quantized log-prob, count desc.
@@ -396,11 +412,7 @@ object LanguageModels {
   private def ulmTrainPruned(s: SparkSession, dir: String): DataFrame =
     graft.operators.UnigramLm.vocabTable(
       Tables(s, dir, "documents"), "text",
-      SessionScopedCache.getOrElseUpdate(s, "ulm:" + dir + "#pruned")(
-        graft.operators.UnigramLm.train(Tables(s, dir, "documents"), "text",
-          maxPieceLen = UlmMaxPieceLen, topMulti = UlmTopMulti,
-          emIters = UlmEmIters, maxWordLen = UlmMaxWordLen,
-          pruneMultiTo = Some(UlmPruneTo))))
+      ulmPruned(s, dir))
 
   /** WordPiece-style greedy longest-match segmentation of the first
     * 10 documents under the PRUNED unigram-LM vocabulary (membership
@@ -410,11 +422,7 @@ object LanguageModels {
     * and walks it with a recursive CTE.
     */
   private def wordpieceSegment(s: SparkSession, dir: String): DataFrame = {
-    val v = SessionScopedCache.getOrElseUpdate(s, "ulm:" + dir + "#pruned")(
-      graft.operators.UnigramLm.train(Tables(s, dir, "documents"), "text",
-        maxPieceLen = UlmMaxPieceLen, topMulti = UlmTopMulti,
-        emIters = UlmEmIters, maxWordLen = UlmMaxWordLen,
-        pruneMultiTo = Some(UlmPruneTo)))
+    val v = ulmPruned(s, dir)
     Tables(s, dir, "documents")
       .filter(col("doc_id") < 10)
       .select(
@@ -483,10 +491,8 @@ object LanguageModels {
     */
   private def textBackoffScore(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
-    val model = SessionScopedCache.getOrElseUpdate(s, "backoff-lm:" + dir)(
-      graft.operators.BackoffLm.train(docs.filter(col("doc_id") % 50 =!= 7), "doc_id", "text"))
     graft.operators.BackoffLm
-      .score(docs.filter(col("doc_id") % 50 === 7), model, "doc_id", "text")
+      .score(docs.filter(col("doc_id") % 50 === 7), backoffLm(s, dir), "doc_id", "text")
       .select(col("id").as("doc_id"), col("n_tokens"), col("n_tri"),
         col("n_big"), col("n_uni"), col("avg_logs"))
       .orderBy(col("doc_id"))
@@ -501,11 +507,9 @@ object LanguageModels {
     */
   private def textBackoffInline(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
-    val model = SessionScopedCache.getOrElseUpdate(s, "backoff-lm:" + dir)(
-      graft.operators.BackoffLm.train(docs.filter(col("doc_id") % 50 =!= 7), "doc_id", "text"))
     // 4M-row ceiling: the sf0.1 corpus sits under it; past that the
     // join form is the right shape anyway
-    val collected = graft.operators.BackoffLm.collectModel(model, maxRows = 4000000L)
+    val collected = graft.operators.BackoffLm.collectModel(backoffLm(s, dir), maxRows = 4000000L)
     graft.operators.BackoffLm
       .scoreInline(docs.filter(col("doc_id") % 50 === 7), collected, "doc_id", "text")
       .select(col("id").as("doc_id"), col("n_tokens"), col("n_tri"),

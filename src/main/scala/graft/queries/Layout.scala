@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkEntry.scratchDir
+import graft.SparkEntry.{scratchDir, sessionScratchDir}
 import graft.sources.Tables
 import graft.util.SessionScopedCache
 
@@ -395,7 +395,7 @@ object Layout {
     */
   private def bucketJoinQ(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Bucketing
-    val scratch = scratchDir("graft_bdemo")
+    val scratch = sessionScratchDir(s, dir, "graft_bdemo")
     val o = Tables(s, dir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"))
       .filter(col("o_orderkey") <= 3000)
@@ -465,7 +465,7 @@ object Layout {
     * multi-file or row-dropping execution cannot pass.
     */
   private def compactionExecute(s: SparkSession, dir: String): DataFrame = {
-    val outDir = scratchDir("graft-compactexec") + "/out"
+    val outDir = sessionScratchDir(s, dir, "graft-compactexec") + "/out"
     val base = Tables(s, dir, "orders")
       .filter(col("o_orderdate") >= lit("1995-01-01").cast("date") &&
         col("o_orderdate") < lit("1997-01-01").cast("date"))

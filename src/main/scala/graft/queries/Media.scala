@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkEntry.scratchDir
+import graft.SparkEntry.{scratchDir, sessionScratchDir}
 import graft.multimodal.Multimodal
 import graft.sources.Tables
 import graft.util.SessionScopedCache
@@ -574,7 +574,7 @@ object Media {
     val docs = Tables(s, dir, "documents")
       .filter(col("doc_id") % 3 === 0 && col("doc_id") < 120)
     val media = Multimodal.syntheticMediaFromDocs(s, docs)
-    val path = scratchDir("graft-phash-store")
+    val path = sessionScratchDir(s, dir, "graft-phash-store")
     ID.saveHashStore(ID.dHashes(media), "media_id", "hash", path,
       prefixBuckets = 16)
     val resized = Multimodal.resize(media.filter(_.media_id % 30 == 0), 72, 72)

@@ -508,6 +508,11 @@ object Search {
       .orderBy(col("vec_id"))
   }
 
+  /** The BM25 index over the documents, built once per (session, dir). */
+  private def bm25Index(s: SparkSession, dir: String): graft.operators.Bm25.Index =
+    SessionScopedCache.getOrElseUpdate(s, "bm25:" + dir)(
+      graft.operators.Bm25.build(Tables(s, dir, "documents"), "doc_id", "text"))
+
   /** BM25 top-20 retrieval over the documents corpus (the lookup side
     * of decontamination audits / corpus inspection). Oracle-gated
     * end-to-end: tf/df/dl/N are exact counts, idf and the length
@@ -517,12 +522,9 @@ object Search {
     * per-doc sum — ranking, tie-breaks (by the exact sum then
     * doc_id), and the round(4) score all replay in SQL.
     */
-  private def bm25Search(s: SparkSession, dir: String): DataFrame = {
-    val idx = SessionScopedCache.getOrElseUpdate(s, "bm25:" + dir)(
-      graft.operators.Bm25.build(Tables(s, dir, "documents"), "doc_id", "text"))
-    graft.operators.Bm25.search(idx, Seq("vector", "merge", "stream"), k = 20)
+  private def bm25Search(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Bm25.search(bm25Index(s, dir), Seq("vector", "merge", "stream"), k = 20)
       .select(col("id").as("doc_id"), col("n_terms"), col("score"))
-  }
 
   /** Hybrid retrieval: BM25 top-100 (terms "vector merge stream") and
     * dense decimal-cosine top-100 around vec_id=0 fused by
@@ -532,9 +534,8 @@ object Search {
     * fused integer scores hash-match exactly.
     */
   private def rrfFusion(s: SparkSession, dir: String): DataFrame = {
-    val idx = SessionScopedCache.getOrElseUpdate(s, "bm25:" + dir)(
-      graft.operators.Bm25.build(Tables(s, dir, "documents"), "doc_id", "text"))
-    val sparse = graft.operators.Bm25.search(idx, Seq("vector", "merge", "stream"), k = 100)
+    val sparse = graft.operators.Bm25
+      .search(bm25Index(s, dir), Seq("vector", "merge", "stream"), k = 100)
       .select(col("id"),
         row_number().over(Window.orderBy(col("score").desc, col("id"))).cast("long").as("rank"))
     val emb = Tables(s, dir, "embeddings")

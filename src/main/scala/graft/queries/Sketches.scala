@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkEntry.scratchDir
+import graft.SparkEntry.sessionScratchDir
 import graft.functions.{TextFunctions => TF}
 import graft.sources.Tables
 
@@ -213,7 +213,7 @@ object Sketches {
       BF.sketch(col("term")).as("bloom" + suffix),
       CM.sketch(col("term")).as("cms" + suffix),
       H.sketch(col("n_chars"), nb, lo, hi).as("hist" + suffix))
-    val path = scratchDir("graft-sketch-store")
+    val path = sessionScratchDir(s, dir, "graft-sketch-store")
     graft.operators.SketchStore.save(sketches(base, ""), path)
     val loaded = graft.operators.SketchStore.load(s, path)
     val allSk = toks.agg(
@@ -447,7 +447,7 @@ object Sketches {
     val Q = graft.operators.QuantileSketch
     val vals = sketchQuantileValues(s, dir)
     val m = 7
-    val path = scratchDir("graft-qsk-store")
+    val path = sessionScratchDir(s, dir, "graft-qsk-store")
     Q.save(Q.build(vals.filter(col("cents") % 2 === 0), Seq("prio"), col("cents"), m),
       Seq("prio"), m, path, prefixBuckets = 8)
     Q.absorbIntoSaved(s, path, vals.filter(col("cents") % 2 =!= 0), col("cents"))

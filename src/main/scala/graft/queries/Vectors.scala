@@ -1107,6 +1107,35 @@ object Vectors {
       .select(col("id_a"), col("id_b"), col("sim").as("sim_micro"))
       .orderBy(col("id_a"), col("id_b"))
 
+  /** The planted 30x10 cluster corpus of the ANN graph gates: each of
+    * the first 30 embeddings plus 9 copies shifted by `i * 0.0005f`.
+    */
+  private def plantedClusterNodes(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "embeddings").filter(col("vec_id") < 30)
+      .select(col("vec_id").as("__b"),
+        explode(sequence(lit(0L), lit(9L))).as("__i"), col("embedding"))
+      .select((col("__b") * 10 + col("__i")).as("vec_id"),
+        transform(col("embedding"),
+          x => x + col("__i").cast("float") * lit(0.0005f)).as("embedding"))
+
+  /** The exact mutual 5-NN graph over [[plantedClusterNodes]]
+    * (micro-scaled decimal cosine), staged once per (session, dir).
+    */
+  private def graphExact(s: SparkSession, dir: String): DataFrame =
+    SessionScopedCache.getOrElseUpdate(s, "exact-top:" + dir + "#knn-graph-clusters") {
+      graft.util.Staged.settle(SimilaritySearch
+        .mutualKnnGraph(plantedClusterNodes(s, dir), "vec_id", "embedding", k = 5,
+          simFn = (a, b) => floor(VF.cosineDecimal(a, b) * lit(1e6)).cast("long"),
+          knownNodeCount = Some(300L))) // 30 bases x 10 planted variants
+    }
+
+  /** The IVF index (nlist 8) over [[plantedClusterNodes]], trained
+    * once per (session, dir).
+    */
+  private def graphIndex(s: SparkSession, dir: String): IvfAnn.Index =
+    SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir + "#graph-clusters")(
+      IvfAnn.build(plantedClusterNodes(s, dir), "vec_id", "embedding", nlist = 8, iters = 3))
+
   /** ANN-backed mutual k-NN graph over a planted-cluster corpus (30
     * base vectors x 10 float-exact shifted variants = 300 nodes in 30
     * tight clusters — the near-dup-cluster regime the kNN graph exists
@@ -1124,21 +1153,8 @@ object Vectors {
     * is a fixed number for a fixed dataset, not a statistical bound.
     */
   private def knnGraphAnnQ(s: SparkSession, dir: String): DataFrame = {
-    val nodes = Tables(s, dir, "embeddings").filter(col("vec_id") < 30)
-      .select(col("vec_id").as("__b"),
-        explode(sequence(lit(0L), lit(9L))).as("__i"), col("embedding"))
-      .select((col("__b") * 10 + col("__i")).as("vec_id"),
-        transform(col("embedding"),
-          x => x + col("__i").cast("float") * lit(0.0005f)).as("embedding"))
-    val simFn: (Column, Column) => Column =
-      (a, b) => floor(VF.cosineDecimal(a, b) * lit(1e6)).cast("long")
-    val exact = SessionScopedCache.getOrElseUpdate(s, "exact-top:" + dir + "#knn-graph-clusters") {
-      graft.util.Staged.settle(SimilaritySearch
-        .mutualKnnGraph(nodes, "vec_id", "embedding", k = 5, simFn = simFn,
-          knownNodeCount = Some(300L))) // 30 bases x 10 planted variants
-    }
-    val index = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir + "#graph-clusters")(
-      IvfAnn.build(nodes, "vec_id", "embedding", nlist = 8, iters = 3))
+    val exact = graphExact(s, dir)
+    val index = graphIndex(s, dir)
     // the probe side ranks candidates with the NATIVE double cosine
     // (deterministic per row — fixed fold order): the production
     // shape. Decimal arithmetic exists for values an oracle replays;
@@ -1170,21 +1186,8 @@ object Vectors {
     * member-for-member by the ANN-composed clustering.
     */
   private def semanticClustersAnn(s: SparkSession, dir: String): DataFrame = {
-    val nodes = Tables(s, dir, "embeddings").filter(col("vec_id") < 30)
-      .select(col("vec_id").as("__b"),
-        explode(sequence(lit(0L), lit(9L))).as("__i"), col("embedding"))
-      .select((col("__b") * 10 + col("__i")).as("vec_id"),
-        transform(col("embedding"),
-          x => x + col("__i").cast("float") * lit(0.0005f)).as("embedding"))
-    val simFn: (Column, Column) => Column =
-      (a, b) => floor(VF.cosineDecimal(a, b) * lit(1e6)).cast("long")
-    val exact = SessionScopedCache.getOrElseUpdate(s, "exact-top:" + dir + "#knn-graph-clusters") {
-      graft.util.Staged.settle(SimilaritySearch
-        .mutualKnnGraph(nodes, "vec_id", "embedding", k = 5, simFn = simFn,
-          knownNodeCount = Some(300L))) // 30 bases x 10 planted variants
-    }
-    val index = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir + "#graph-clusters")(
-      IvfAnn.build(nodes, "vec_id", "embedding", nlist = 8, iters = 3))
+    val exact = graphExact(s, dir)
+    val index = graphIndex(s, dir)
     // probe side ranks with the native double cosine (the knnGraphAnnQ
     // argument): the ANN graph feeds components compared as member
     // SETS; the emitted rows come from the exact side
@@ -1333,6 +1336,28 @@ object Vectors {
       .orderBy(col("cos").desc, col("vec_id"))
   }
 
+  /** The IVF index (nlist 16) over the embeddings, trained once per
+    * (session, dir).
+    */
+  private def ivfBase(s: SparkSession, dir: String): IvfAnn.Index =
+    SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir)(
+      IvfAnn.build(Tables(s, dir, "embeddings"), "vec_id", "embedding", nlist = 16, iters = 3))
+
+  /** [[ivfBase]] with the planted neighbors of [[embWithPlantedNeighbors]]
+    * appended (assign-only), once per (session, dir).
+    */
+  private def ivfPlanted(s: SparkSession, dir: String): IvfAnn.Index =
+    SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir + "#planted")(
+      IvfAnn.append(ivfBase(s, dir),
+        embWithPlantedNeighbors(Tables(s, dir, "embeddings")).filter(col("vec_id") >= 1000000L)))
+
+  /** The PQ codebooks (m 4, ksub 16, 2 iterations) over the embeddings,
+    * trained once per (session, dir).
+    */
+  private def pqBook(s: SparkSession, dir: String): PQ.Codebooks =
+    SessionScopedCache.getOrElseUpdate(s, "pq:" + dir)(
+      PQ.train(Tables(s, dir, "embeddings"), "vec_id", "embedding", m = 4, ksub = 16, iters = 2))
+
   /** IVF-Flat ANN top-20 around vec_id=0 over the planted-neighbor
     * corpus (nprobe=4 of nlist=16 — a 4x scan reduction), oracle-gated
     * via the in-plan recall verdict (k-means training itself is not
@@ -1348,12 +1373,7 @@ object Vectors {
     val emb = Tables(s, dir, "embeddings")
     val corpus = embWithPlantedNeighbors(emb)
     val query = emb.filter(col("vec_id") === 0)
-    val index = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir + "#planted") {
-      val base = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir)(
-        IvfAnn.build(emb, "vec_id", "embedding", nlist = 16, iters = 3))
-      IvfAnn.append(base, corpus.filter(col("vec_id") >= 1000000L))
-    }
-    val approx = IvfAnn.topK(index, query, k = 20, nprobe = 4)
+    val approx = IvfAnn.topK(ivfPlanted(s, dir), query, k = 20, nprobe = 4)
     exactTopWithRecallVerdict(exactTop20(s, dir, corpus, query), approx)
   }
 
@@ -1398,9 +1418,7 @@ object Vectors {
     */
   private def annIvfFullprobe(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir, "embeddings")
-    val index = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir)(
-      IvfAnn.build(emb, "vec_id", "embedding", nlist = 16, iters = 3))
-    IvfAnn.topK(index, emb.filter(col("vec_id") === 0), k = 20, nprobe = 16,
+    IvfAnn.topK(ivfBase(s, dir), emb.filter(col("vec_id") === 0), k = 20, nprobe = 16,
         cosineFn = (a, b) => round(VF.cosineDecimal(a, b), 3) + lit(0.0))
       .select(col("vec_id"), col("cos"))
   }
@@ -1414,10 +1432,13 @@ object Vectors {
     * ([[pqSubspaceSql]]) and hash-matches every code and the exact
     * integer reconstruction distance.
     */
-  private def pqEncode(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir, "embeddings")
-    val cb = SessionScopedCache.getOrElseUpdate(s, "pq:" + dir)(
-      PQ.train(emb, "vec_id", "embedding", m = 4, ksub = 16, iters = 2))
+  private def pqEncode(s: SparkSession, dir: String): DataFrame =
+    pqCodes(Tables(s, dir, "embeddings"), pqBook(s, dir))
+
+  /** Each vector's four PQ codes and its exact integer reconstruction
+    * distance under `cb` — the rows both PQ encode gates emit.
+    */
+  private def pqCodes(emb: DataFrame, cb: PQ.Codebooks): DataFrame =
     PQ.encode(emb, "vec_id", "embedding", cb, keep = Seq("embedding"))
       .withColumn("recon_dist", PQ.reconDist(col("embedding"), cb))
       .select(
@@ -1428,7 +1449,6 @@ object Vectors {
         element_at(col("codes"), 4).as("code3"),
         col("recon_dist"))
       .orderBy(col("vec_id"))
-  }
 
   /** PQ ADC top-20 around vec_id=0 over the planted-neighbor corpus,
     * oracle-gated via the in-plan recall verdict (the
@@ -1442,8 +1462,7 @@ object Vectors {
     val emb = Tables(s, dir, "embeddings")
     val corpus = embWithPlantedNeighbors(emb)
     val query = emb.filter(col("vec_id") === 0)
-    val cb = SessionScopedCache.getOrElseUpdate(s, "pq:" + dir)(
-      PQ.train(emb, "vec_id", "embedding", m = 4, ksub = 16, iters = 2))
+    val cb = pqBook(s, dir)
     val qQ = query.select(col("embedding")).head().getSeq[Float](0)
       .map(x => math.floor(x.toDouble * 1e6).toLong).toSeq
     val approx = PQ.adcTopK(
@@ -1507,34 +1526,47 @@ object Vectors {
     * cluster-size guard, the in-cluster pair join, and the decimal
     * cosine threshold bit-for-bit.
     */
-  private def semanticDedup(s: SparkSession, dir: String): DataFrame = {
+  private def semanticDedup(s: SparkSession, dir: String): DataFrame =
+    semDedupRemovals(s, dir, semDedupCents(s, dir))
+
+  /** The embeddings plus a +0.0005 copy of every 100th vector. */
+  private def semDedupCorpus(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir, "embeddings")
     val perturbed = emb
       .filter(col("vec_id") % 100 === 0)
       .select(
         (col("vec_id") + 1000000L).as("vec_id"),
         transform(col("embedding"), x => x + lit(0.0005f)).as("embedding"))
-    val corpus = emb.select(col("vec_id"), col("embedding")).unionByName(perturbed)
-    // k sized to the corpus (SemanticDedup.sizedK: ~n/300, floor 8) —
-    // the quadratic in-cluster search is bounded by MEAN CLUSTER SIZE,
-    // so a pinned k melts at rehearsal scale (k=8 over 80k vectors =
-    // 10k-vector clusters = ~400M prefilter cosines, 322 s cold at the
-    // sf4 drill). At the oracle SFs (sf0.01/sf0.1: <= ~2k vectors)
-    // sizedK resolves to exactly 8 — the value the Lloyd CTE program
-    // replays — so the oracle is unchanged by the sizing.
-    val cents = SessionScopedCache.getOrElseUpdate(s, "semdedup:" + dir) {
+    emb.select(col("vec_id"), col("embedding")).unionByName(perturbed)
+  }
+
+  /** The k-means centroids over [[semDedupCorpus]], trained once per
+    * (session, dir). k is sized to the corpus (SemanticDedup.sizedK:
+    * ~n/300, floor 8) — the quadratic in-cluster search is bounded by
+    * MEAN CLUSTER SIZE, so a pinned k melts at rehearsal scale (k=8
+    * over 80k vectors = 10k-vector clusters = ~400M prefilter cosines,
+    * 322 s cold at the sf4 drill). At the oracle SFs (sf0.01/sf0.1:
+    * <= ~2k vectors) sizedK resolves to exactly 8 — the value the Lloyd
+    * CTE program replays — so the oracle is unchanged by the sizing.
+    */
+  private def semDedupCents(s: SparkSession, dir: String): Seq[(Int, Seq[Long])] =
+    SessionScopedCache.getOrElseUpdate(s, "semdedup:" + dir) {
+      val corpus = semDedupCorpus(s, dir)
       val k = graft.operators.SemanticDedup.sizedK(corpus.count())
       graft.operators.KMeansTrain.train(corpus, "vec_id", "embedding", k = k, iters = 2)
     }
+
+  /** The removal list of [[semDedupCorpus]] under the centroids `cents`. */
+  private def semDedupRemovals(
+      s: SparkSession, dir: String, cents: Seq[(Int, Seq[Long])]): DataFrame =
     graft.operators.SemanticDedup
-      .removalList(corpus, "vec_id", "embedding", cents, minCosine = 0.98,
+      .removalList(semDedupCorpus(s, dir), "vec_id", "embedding", cents, minCosine = 0.98,
         cosineFn = (a, b) => round(VF.cosineDecimal(a, b), 3),
         // round-3 exact gate passes cosineDecimal >= 0.9795; 1e-4 slack
         prefilterMin = Some(0.9794))
       .select(col("id").as("vec_id"), col("cluster").cast("int").as("cluster"),
         col("dup_of"), col("n_dups"), col("cos_max"))
       .orderBy(col("vec_id"))
-  }
 
   /** [[pqEncode]] through a codebook save/load cycle: the books are
     * trained once, persisted, reloaded, and the encode runs on the
@@ -1543,56 +1575,24 @@ object Vectors {
     * `dedup_incremental_*_persisted` convention).
     */
   private def pqEncodePersisted(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir, "embeddings")
     val cb = SessionScopedCache.getOrElseUpdate(s, "pq:" + dir + "#persisted") {
-      val live = SessionScopedCache.getOrElseUpdate(s, "pq:" + dir)(
-        PQ.train(emb, "vec_id", "embedding", m = 4, ksub = 16, iters = 2))
       val path = scratchDir("graft-pq-books")
-      PQ.save(live, s, path)
+      PQ.save(pqBook(s, dir), s, path)
       PQ.load(s, path)
     }
-    PQ.encode(emb, "vec_id", "embedding", cb, keep = Seq("embedding"))
-      .withColumn("recon_dist", PQ.reconDist(col("embedding"), cb))
-      .select(
-        col("vec_id"),
-        element_at(col("codes"), 1).as("code0"),
-        element_at(col("codes"), 2).as("code1"),
-        element_at(col("codes"), 3).as("code2"),
-        element_at(col("codes"), 4).as("code3"),
-        col("recon_dist"))
-      .orderBy(col("vec_id"))
+    pqCodes(Tables(s, dir, "embeddings"), cb)
   }
 
   /** [[semanticDedup]] through a centroid save/load cycle (same
     * persistence-invisibility contract; shares the oracle verbatim).
     */
   private def semanticDedupPersisted(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(s, dir, "embeddings")
-    val perturbed = emb
-      .filter(col("vec_id") % 100 === 0)
-      .select(
-        (col("vec_id") + 1000000L).as("vec_id"),
-        transform(col("embedding"), x => x + lit(0.0005f)).as("embedding"))
-    val corpus = emb.select(col("vec_id"), col("embedding")).unionByName(perturbed)
     val cents = SessionScopedCache.getOrElseUpdate(s, "semdedup:" + dir + "#persisted") {
-      // same corpus-sized k as semantic_dedup (resolves to 8 at the
-      // oracle SFs), so both gates share one trained artifact
-      val live = SessionScopedCache.getOrElseUpdate(s, "semdedup:" + dir) {
-        val k = graft.operators.SemanticDedup.sizedK(corpus.count())
-        graft.operators.KMeansTrain.train(corpus, "vec_id", "embedding", k = k, iters = 2)
-      }
       val path = scratchDir("graft-kmeans-cents")
-      graft.operators.KMeansTrain.saveCentroids(live, s, path)
+      graft.operators.KMeansTrain.saveCentroids(semDedupCents(s, dir), s, path)
       graft.operators.KMeansTrain.loadCentroids(s, path)
     }
-    graft.operators.SemanticDedup
-      .removalList(corpus, "vec_id", "embedding", cents, minCosine = 0.98,
-        cosineFn = (a, b) => round(VF.cosineDecimal(a, b), 3),
-        // round-3 exact gate passes cosineDecimal >= 0.9795; 1e-4 slack
-        prefilterMin = Some(0.9794))
-      .select(col("id").as("vec_id"), col("cluster").cast("int").as("cluster"),
-        col("dup_of"), col("n_dups"), col("cos_max"))
-      .orderBy(col("vec_id"))
+    semDedupRemovals(s, dir, cents)
   }
 
   /** IVF-PQ ANN top-20 over the planted-neighbor corpus — the faiss
@@ -1605,18 +1605,8 @@ object Vectors {
     * verdict, sharing the `ann_lsh_topk` oracle.
     */
   private def ivfpqPlantedIndex(s: SparkSession, dir: String): graft.operators.IvfPq.Index =
-    SessionScopedCache.getOrElseUpdate(s, "ivfpq:" + dir + "#planted") {
-      val emb = Tables(s, dir, "embeddings")
-      val corpus = embWithPlantedNeighbors(emb)
-      val ivf = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir + "#planted") {
-        val base = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir)(
-          IvfAnn.build(emb, "vec_id", "embedding", nlist = 16, iters = 3))
-        IvfAnn.append(base, corpus.filter(col("vec_id") >= 1000000L))
-      }
-      val cb = SessionScopedCache.getOrElseUpdate(s, "pq:" + dir)(
-        PQ.train(emb, "vec_id", "embedding", m = 4, ksub = 16, iters = 2))
-      graft.operators.IvfPq.fromParts(ivf, cb)
-    }
+    SessionScopedCache.getOrElseUpdate(s, "ivfpq:" + dir + "#planted")(
+      graft.operators.IvfPq.fromParts(ivfPlanted(s, dir), pqBook(s, dir)))
 
   private def annIvfpqTopk(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables(s, dir, "embeddings")
@@ -1661,14 +1651,8 @@ object Vectors {
     val emb = Tables(s, dir, "embeddings")
     val corpus = embWithPlantedNeighbors(emb)
     val query = emb.filter(col("vec_id") === 0)
-    val index = SessionScopedCache.getOrElseUpdate(s, "ivfpq-residual:" + dir + "#planted") {
-      val ivf = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir + "#planted") {
-        val base = SessionScopedCache.getOrElseUpdate(s, "ivf:" + dir)(
-          IvfAnn.build(emb, "vec_id", "embedding", nlist = 16, iters = 3))
-        IvfAnn.append(base, corpus.filter(col("vec_id") >= 1000000L))
-      }
-      graft.operators.IvfPq.fromPartsResidual(ivf, m = 4, ksub = 16, iters = 2)
-    }
+    val index = SessionScopedCache.getOrElseUpdate(s, "ivfpq-residual:" + dir + "#planted")(
+      graft.operators.IvfPq.fromPartsResidual(ivfPlanted(s, dir), m = 4, ksub = 16, iters = 2))
     val approx = graft.operators.IvfPq
       .topKResidual(index, query, "embedding", k = 20, nprobe = 4)
     exactTopWithRecallVerdict(exactTop20(s, dir, corpus, query), approx)

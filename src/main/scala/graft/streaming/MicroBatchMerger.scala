@@ -32,6 +32,7 @@ import org.apache.spark.sql.types.StructType
   */
 object MicroBatchMerger {
 
+  /** The decoded value's tombstone flag and version (LSN) columns. */
   val DefaultDeletedCol = "__deleted"
   val DefaultVersionCol = "__log_sequence_number"
 
@@ -44,8 +45,6 @@ object MicroBatchMerger {
       batch: DataFrame,
       configs: Map[String, TableConfig],
       provider: SchemaProvider,
-      deletedCol: String = DefaultDeletedCol,
-      versionCol: String = DefaultVersionCol,
       failFast: Boolean = true): Unit = {
     val spark = batch.sparkSession
     batch.cache()
@@ -85,7 +84,7 @@ object MicroBatchMerger {
                 .select(col("value.*"))
                 .select(DebeziumCast.castColumns(valueJson): _*)
 
-              val deduped = CdcDedup.latestPerKeyAgg(decoded, pkCols, versionCol)
+              val deduped = CdcDedup.latestPerKeyAgg(decoded, pkCols, DefaultVersionCol)
               // one projection, also with no additionalCols: MergeEngine
               // reads from it whether the partition columns follow the pk
               val changes =
@@ -95,10 +94,10 @@ object MicroBatchMerger {
               // catalog roundtrips per micro-batch are pure fixed cost
               SessionScopedCache.getOrElseUpdate(spark, "ensured:" + cfg.qualifiedName) {
                 MergeEngine.createTableIfNotExists(
-                  spark, StructType(changes.schema.filterNot(_.name == deletedCol)), cfg)
+                  spark, StructType(changes.schema.filterNot(_.name == DefaultDeletedCol)), cfg)
                 true
               }
-              MergeEngine(spark, cfg, changes, pkCols, versionCol, deletedCol)
+              MergeEngine(spark, cfg, changes, pkCols, DefaultVersionCol, DefaultDeletedCol)
             }
             if (cfg.autoCompactEvery > 0) {
               val n = SessionScopedCache

@@ -44,8 +44,6 @@ object StreamPipeline {
       checkpointLocation: String,
       provider: SchemaProvider,
       trigger: Trigger = Trigger.ProcessingTime(0),
-      deletedCol: String = MicroBatchMerger.DefaultDeletedCol,
-      versionCol: String = MicroBatchMerger.DefaultVersionCol,
       failFast: Boolean = true): StreamingQuery = {
     val projected = projectEnvelope(source.load(spark))
     val query = projected.writeStream
@@ -54,7 +52,7 @@ object StreamPipeline {
       .outputMode("update")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        MicroBatchMerger.process(batch, configs, provider, deletedCol, versionCol, failFast)
+        MicroBatchMerger.process(batch, configs, provider, failFast)
       }
       .start()
     if (!query.isActive)

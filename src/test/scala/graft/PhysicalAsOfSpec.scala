@@ -125,8 +125,11 @@ class PhysicalAsOfSpec extends SparkSpec {
     assert(GraftPlanShim.buildStrategies(ext, spark).contains(graft.plans.AsOfJoinStrategy))
     val registry = GraftPlanShim.registerFunctions(
       ext, org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin.clone())
-    assert(registry.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("lang_id")))
-    assert(registry.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("interleave_bits")))
+    val names = graft.GraftFunctions.builders.map(_._1)
+    assert(names.size == 25 && names.distinct == names)
+    names.foreach { n =>
+      assert(registry.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)), n)
+    }
   }
 
   test("physical asOf: plan contains AsOfJoinExec and reuses key partitioning") {

@@ -143,4 +143,19 @@ class StorePersistenceSpec extends SparkSpec {
     assert(spanRows(inc2, reloaded) == incremental)
     store.unpersist()
   }
+
+  test("store-gate queries reuse one scratch tree per (session, dir); rows stay the same") {
+    val dir = "/root/testdata/sf0.001"
+    Seq("dedup_clusters_incremental", "bucket_join", "compaction_execute", "sketch_absorb",
+      "sketch_quantiles_persisted", "image_dedup_incremental", "agg_store_absorb").foreach { q =>
+      def rows = SparkEntry.queries(q)(spark, dir).collect().map(_.toString).sorted.toSeq
+      // the first call may also stage once-per-session trees
+      // (compaction_execute's source layout); calls 2 and 3 add none
+      val first = rows
+      val afterFirst = SparkEntry.registeredScratchDirs
+      assert((2 to 3).forall(_ => rows == first), s"$q: rows differ between calls")
+      val grown = SparkEntry.registeredScratchDirs -- afterFirst
+      assert(grown.isEmpty, s"$q: calls 2 and 3 left ${grown.size} new scratch trees: $grown")
+    }
+  }
 }
