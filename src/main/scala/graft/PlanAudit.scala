@@ -46,7 +46,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   * collect) — join SHAPE is decided by the same static planning
   * either way. Building a query's DataFrame runs its driver-side
   * staging (bounded collects, store builds) — and for the queries
-  * that eagerly materialize their result (`TextDedup.materialized`
+  * that eagerly materialize their result (`Staged.materialized`
   * persist+count callers, `compaction_execute`'s plan+rewrite+recount
   * lifecycle) building IS executing, so the audit runs at sf0.001
   * where that work is trivial; the "staging only" framing is a cost

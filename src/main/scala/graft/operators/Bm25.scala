@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.TextFunctions
 import graft.sources.Store
+import graft.util.Staged
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -122,7 +123,7 @@ object Bm25 {
       .join(broadcast(dfreq), Seq("term"))
       .join(index.docs, Seq("id"))
       .select(col("id"), floor(idf * norm * ScoreScale).cast("long").as("lp"))
-    TextDedup.materialized(
+    Staged.materialized(
       contrib.groupBy(col("id"))
         .agg(count(lit(1)).as("n_terms"), sum(col("lp")).as("lp_sum"))
         .orderBy(col("lp_sum").desc, col("id"))
@@ -417,7 +418,7 @@ object Bm25 {
           .as("sim"))
       .orderBy(col("sim").desc, col("id"))
       .limit(k)
-    TextDedup.materialized(out, Seq(w, norms))
+    Staged.materialized(out, Seq(w, norms))
   }
 
   def phraseSearch(

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.util.Staged
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -40,7 +41,7 @@ object CorpusDrift {
     */
   def drift(corpusA: DataFrame, corpusB: DataFrame, textCol: String): DataFrame = {
     val (out, staged) = driftStaged(corpusA, corpusB, textCol)
-    TextDedup.materialized(out, Seq(staged))
+    Staged.materialized(out, Seq(staged))
   }
 
   /** The drift table plus the persisted (token, c_a, c_b) stage it
@@ -84,7 +85,7 @@ object CorpusDrift {
       k: Int): DataFrame = {
     require(k > 0, "k must be positive")
     val (d, staged) = driftStaged(corpusA, corpusB, textCol)
-    TextDedup.materialized(
+    Staged.materialized(
       d.orderBy(abs(col("lp_ab")).desc, col("token"))
         .limit(k)
         .select(col("token"), col("c_a"), col("c_b"),
@@ -101,7 +102,7 @@ object CorpusDrift {
       corpusB: DataFrame,
       textCol: String): DataFrame = {
     val (d, staged) = driftStaged(corpusA, corpusB, textCol)
-    TextDedup.materialized(
+    Staged.materialized(
       d.agg(
         count(lit(1)).as("vocab"),
         sum(col("c_a")).as("total_a"),

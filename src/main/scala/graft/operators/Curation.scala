@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.util.Staged
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -121,7 +122,7 @@ object Curation {
         .withColumn("__i", size(array_intersect(col("__sa"), col("__sb"))).cast("long"))
         .filter(expr(s"__i * 1000000 div (size(__sa) + size(__sb) - __i)") >= minJaccardMicro)
         .select(col("id_a"), col("id_b"))
-      val out = TextDedup.materialized(verified, Seq(shingled))
+      val out = Staged.materialized(verified, Seq(shingled))
       cand.unpersist()
       out
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.util.Staged
 
 /** Benchmark decontamination — flag training documents that share any
   * word n-gram with an evaluation/benchmark set, so they can be dropped
@@ -62,7 +63,7 @@ object Decontamination {
         col("n_grams"),
         coalesce(col("eval_hits"), lit(0L)).as("eval_hits"))
       .withColumn("contaminated", col("eval_hits") > 0L)
-    TextDedup.materialized(out, Seq(grams))
+    Staged.materialized(out, Seq(grams))
   }
 
   /** Streaming-safe form: the eval n-gram set is materialized to the
@@ -170,7 +171,7 @@ object Decontamination {
         coalesce(col("bloom_hits"), lit(0L)).as("bloom_hits"))
       .withColumn("contaminated", col("eval_hits") > 0L)
       .withColumn("bloom_contaminated", col("bloom_hits") > 0L)
-    TextDedup.materialized(out, Seq(grams))
+    Staged.materialized(out, Seq(grams))
   }
 
   /** Streaming/production bloom probe: the eval bloom words are

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.util.Staged
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -105,7 +107,7 @@ object Graphs {
       .unionAll(triangles.select(col("c").as("id")))
       .groupBy(col("id"))
       .agg(count(lit(1)).as("triangles"))
-    val out = TextDedup.materialized(perNode, Seq(triangles))
+    val out = Staged.materialized(perNode, Seq(triangles))
     e.unpersist()
     out
   }
@@ -128,7 +130,7 @@ object Graphs {
         expr("CASE WHEN degree >= 2 THEN " +
           "coalesce(triangles, 0L) * 2000000 div (degree * (degree - 1)) " +
           "ELSE 0L END").as("lcc_micro"))
-    TextDedup.materialized(out, Seq(e))
+    Staged.materialized(out, Seq(e))
   }
 
   /** k-core of the graph: the maximal subgraph in which every node
@@ -491,7 +493,7 @@ object Graphs {
             .select(col("a"), col("b"))
             .localCheckpoint(true)
           nEdges = pruned.count()
-          SuffixArray.releaseCheckpoint(edges)
+          Staged.release(edges)
           edges = pruned
         }
         deg.unpersist()
@@ -503,7 +505,7 @@ object Graphs {
         .select(col("id"), lit(k - 1L).cast("long").as("coreness"))
         .localCheckpoint(true)
       phases += dropped
-      SuffixArray.releaseCheckpoint(live)
+      Staged.release(live)
       live = survivors
       // advance only when the phase COMPLETED: everything still alive
       // then has degree >= minDeg, so jump past the no-op thresholds.
@@ -551,6 +553,6 @@ object Graphs {
         expr("__t3 div 3").as("n_triangles"),
         expr("CASE WHEN n_wedges > 0 THEN __t3 * 1000000 div n_wedges " +
           "ELSE 0L END").as("gcc_micro"))
-    TextDedup.materialized(out, Seq(e))
+    Staged.materialized(out, Seq(e))
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.util.Staged
 
 /** Corpus-vocabulary operators for a training-data pipeline: build a
   * bounded top-V vocabulary, measure per-document out-of-vocabulary
@@ -182,7 +183,7 @@ object Lexicon {
       .select(
         col("id"), col("term"), col("tf"), col("df"),
         round(col("__sq").cast("double") / IdfScale, 4).as("score"))
-    TextDedup.materialized(top, Seq(tf))
+    Staged.materialized(top, Seq(tf))
   }
 
   /** End-of-word marker for [[bpePairStats]] (the standard BPE word
@@ -404,7 +405,7 @@ object Lexicon {
         pmiMicro.as("pmi_micro"))
       .orderBy(col("pmi_micro").desc, col("bigram").asc)
       .limit(topK)
-    TextDedup.materialized(out, Seq(toks, uni))
+    Staged.materialized(out, Seq(toks, uni))
   }
 
   /** Zipf rank-frequency fit over the top-`topR` tokens: the OLS slope

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.util.Staged
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -58,6 +60,6 @@ object MarketBasket {
         expr(s"n_pairs * ${nBaskets}L * 1000000 div (n_a * n_b)").as("lift_micro"))
       .orderBy(col("n_pairs").desc, col("item_a"), col("item_b"))
       .limit(topK)
-    TextDedup.materialized(out, Seq(items))
+    Staged.materialized(out, Seq(items))
   }
 }

@@ -6,6 +6,7 @@ import graft.util.SessionScopedCache
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, GraftPlanShim, Row, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.Project
@@ -272,7 +273,7 @@ object MergeEngine {
           else resolveUpsert(slice, upserts, (pkCols ++ partCols).distinct, versionCol)
       }
       val resolved = if (delParts.isEmpty) merged else resolveDelete(merged, deletes, pkCols)
-      syncCatalog(spark, cfg, writeStaged(spark, cfg, resolved, rewrite))
+      writeStaged(spark, cfg, resolved, rewrite)
     } finally { changes.unpersist(); () }
   }
 
@@ -367,19 +368,30 @@ object MergeEngine {
     */
   private def partitionsKey(cfg: TableConfig): String = "partitions:" + cfg.qualifiedName
 
-  /** Keep a registered catalog table consistent with the path.
-    *
-    * The merge writes partitions directly to the path, so a registered
-    * catalog table must learn about NEW partition dirs: ONE targeted
-    * `ALTER TABLE ... ADD IF NOT EXISTS PARTITION` registers exactly
-    * the swapped-in partitions NOT yet known to this session — O(new
-    * per batch). `recoverPartitions` (the MSCK-equivalent fallback for
-    * tables that reject the ALTER) lists the ENTIRE table tree, a cost
-    * that grows with table size, not batch size.
+  /** Keep a registered catalog table consistent with a commit to its
+    * path, which the merge and compaction write directly:
+    *   - NEW partition dirs: ONE targeted `ALTER TABLE ... ADD IF NOT
+    *     EXISTS PARTITION` for the swapped-in partitions not yet known
+    *     to this session — O(new per batch); `recoverPartitions` (the
+    *     MSCK-equivalent fallback for tables that reject the ALTER)
+    *     lists the ENTIRE table tree, a cost that grows with table size;
+    *   - columns the committed read schema adds: `ALTER TABLE ... ADD
+    *     COLUMNS`;
+    *   - replaced files: the session catalog's `refreshTable` drops the
+    *     cached relation, with the file list of its first read, in the
+    *     committing session and in the default session a streaming
+    *     query's session is cloned from (other sessions run `REFRESH
+    *     TABLE` themselves).
+    * A commit that adds no partition and no column runs no Spark job and
+    * no SQL execution here: the column check reads catalog metadata.
     */
-  private def syncCatalog(spark: SparkSession, cfg: TableConfig, touchedRels: Seq[String]): Unit =
-    if (touchedRels.nonEmpty && spark.catalog.tableExists(cfg.qualifiedName)) {
-      try {
+  private def syncCatalog(
+      spark: SparkSession,
+      cfg: TableConfig,
+      committed: StructType,
+      touchedRels: Seq[String]): Unit =
+    if (spark.catalog.tableExists(cfg.qualifiedName)) {
+      if (touchedRels.nonEmpty) try {
         val known = SessionScopedCache.getOrElseUpdate(spark, partitionsKey(cfg))(
           new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean])
         val fresh = touchedRels.filterNot(known.containsKey)
@@ -400,6 +412,13 @@ object MergeEngine {
           try spark.catalog.recoverPartitions(cfg.qualifiedName)
           catch { case _: org.apache.spark.sql.AnalysisException => () }
       }
+      val ident = TableIdentifier(cfg.tableName, Some(cfg.schema))
+      val registered = spark.sessionState.catalog.getTableMetadata(ident).schema.fieldNames
+      val added = committed.filterNot(f => registered.exists(_.equalsIgnoreCase(f.name)))
+      if (added.nonEmpty)
+        spark.sql(s"ALTER TABLE ${cfg.qualifiedName} ADD COLUMNS (${StructType(added).toDDL})")
+      (spark +: SparkSession.getDefaultSession.filter(_ ne spark).toSeq)
+        .foreach(_.sessionState.catalog.refreshTable(ident))
     }
 
   /** Compact a merge table's small files (micro-batch CDC writes leave
@@ -496,15 +515,14 @@ object MergeEngine {
     * table swaps its whole data-file set; an empty `df` stages one
     * empty data file that keeps the schema.
     *
-    * @return the touched partition rel-paths (e.g. `year=2024`) for a
-    *         partitioned table — the caller's targeted catalog sync —
-    *         or Nil for unpartitioned / nothing-to-swap.
+    * A registered table's catalog entry then follows the commit
+    * ([[syncCatalog]]).
     */
   private def writeStaged(
       spark: SparkSession,
       cfg: TableConfig,
       df: DataFrame,
-      removeCandidates: Array[Row] = Array.empty): Seq[String] = {
+      removeCandidates: Array[Row] = Array.empty): Unit = {
     val root = new Path(cfg.path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Deliberately NO repartition-on-write for a merge: routing rows to
@@ -533,7 +551,8 @@ object MergeEngine {
         })
     // the committed schema is the table's new unified read schema
     // (see schemaKey): steady-state reads skip the footer sweep
-    SessionScopedCache.put(spark, schemaKey(cfg.path), nullableOf(df.schema))
-    if (cfg.partitionCols.isEmpty) Nil else touched
+    val committed = nullableOf(df.schema)
+    SessionScopedCache.put(spark, schemaKey(cfg.path), committed)
+    syncCatalog(spark, cfg, committed, if (cfg.partitionCols.isEmpty) Nil else touched)
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.TextFunctions
 import graft.sources.Store
+import graft.util.Staged
 
 import org.apache.spark.sql.{DataFrame, GraftColumnShim, SparkSession}
 import org.apache.spark.sql.functions._
@@ -116,7 +117,7 @@ object NgramLm {
       .select(col("id"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
         col("avg_logp"), col("perplexity"))
-    TextDedup.materialized(out, Seq(toks))
+    Staged.materialized(out, Seq(toks))
   }
 
   /** A driver-collected model for the stateless serving path — bounded

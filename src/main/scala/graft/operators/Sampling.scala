@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.util.Staged
 
 /** Deterministic sampling for training-data pipelines.
   *
@@ -14,12 +15,6 @@ import graft.functions.TextFunctions
   */
 object Sampling {
 
-  /** Deterministic stratified sample: the `k` rows with the smallest
-    * `xxhash64(idCols)` per group. Physically a rank-limit window —
-    * Spark 4 pushes a partial top-k before the shuffle
-    * (WindowGroupLimit), so each map task ships at most `k` rows per
-    * group.
-    */
   /** Weighted sampling without replacement (Efraimidis & Spirakis
     * 2006), deterministic: each row draws a hash-derived uniform
     * `u = (hex60(md5(id)) mod 1e6 + 1) / 1e6` and the k rows with the
@@ -48,6 +43,12 @@ object Sampling {
       .limit(k)
   }
 
+  /** Deterministic stratified sample: the `k` rows with the smallest
+    * `xxhash64(idCols)` per group. Physically a rank-limit window —
+    * Spark 4 pushes a partial top-k before the shuffle
+    * (WindowGroupLimit), so each map task ships at most `k` rows per
+    * group.
+    */
   def samplePerGroup(
       df: DataFrame,
       groupCols: Seq[String],
@@ -301,7 +302,7 @@ object Sampling {
         round(weight, 4).as("weight"),
         target.as("target_tokens"),
         round(target.cast("double") / col("tokens"), 4).as("epochs"))
-    TextDedup.materialized(out, Seq(per))
+    Staged.materialized(out, Seq(per))
   }
 
   /** Materialize a mixture plan: repeat each row `sixteenths/16`

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
+import graft.util.Staged
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -53,7 +54,7 @@ object SemanticDedup {
   /** Within-cluster near-duplicate candidate pairs:
     * (cluster, id_a, id_b, cos) with id_a < id_b and
     * `cos >= minCosine`. Eagerly materialized (the
-    * [[TextDedup.materialized]] lifecycle).
+    * [[graft.util.Staged.materialized]] lifecycle).
     */
   /** Broadcast the vector join-backs only while `rows * dim * 8`
     * bytes (8 = float payload + array/row overhead, measured ~2x
@@ -147,7 +148,7 @@ object SemanticDedup {
       .select(col("cluster"), col("id_a"), col("id_b"),
         cosineFn(col("vec_a"), col("vec_b")).as("cos"))
       .filter(col("cos") >= minCosine)
-    TextDedup.materialized(scored, Seq(assigned, sizes))
+    Staged.materialized(scored, Seq(assigned, sizes))
   }
 
   /** SemDeDup removal list: one row per document that has at least one

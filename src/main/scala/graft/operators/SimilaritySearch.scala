@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
+import graft.util.Staged
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -393,7 +394,7 @@ object SimilaritySearch {
       }
     }
     val out = picks.map(_.drop("__v")).reduce(_ unionByName _)
-    val result = TextDedup.materialized(out, Nil)
+    val result = Staged.materialized(out, Nil)
     (cached ++ picks).foreach(_.unpersist(blocking = false))
     result
   }
@@ -604,7 +605,7 @@ object SimilaritySearch {
         round(col("__d2").cast("double") /
           (col("__n") * col("__n")).cast("double") / lit(g.toDouble * g.toDouble), 4)
           .as("dist_sq"))
-    TextDedup.materialized(out, Seq(quant, dists))
+    Staged.materialized(out, Seq(quant, dists))
   }
 
   /** Per-group within-class scatter of an embedding column: the trace
@@ -740,6 +741,6 @@ object SimilaritySearch {
       .select(col("id_a"), col("id_b"),
         cosineFn(col("vec_a"), col("vec_b")).as("cos"))
       .filter(col("cos") >= minCosine)
-    TextDedup.materialized(result, Seq(sigs))
+    Staged.materialized(result, Seq(sigs))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.util.Staged
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -62,26 +63,12 @@ object SuffixArray {
     }
     @volatile private var lcpMaterialized = false
     def unpersist(): Unit = {
-      releaseCheckpoint(sa); releaseCheckpoint(positions)
-      ranksByLen.foreach(r => releaseCheckpoint(r._2))
-      if (lcpMaterialized) releaseCheckpoint(lcp)
+      Staged.release(sa); Staged.release(positions)
+      ranksByLen.foreach(r => Staged.release(r._2))
+      if (lcpMaterialized) Staged.release(lcp)
       ()
     }
   }
-
-  /** Release the RDD blocks behind a localCheckpointed frame NOW:
-    * `Dataset.unpersist` only clears CacheManager entries, so a
-    * checkpoint's blocks otherwise linger until the GC-driven
-    * ContextCleaner notices the RDD is unreachable. Matches only a
-    * frame whose ROOT is the checkpoint (never a derived plan, whose
-    * tree would contain some OTHER live checkpoint's LogicalRDD);
-    * no-op on anything else.
-    */
-  private[operators] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** Ordinal of each distinct key row in range-sorted order — the
     * distributed dense-rank: range-repartition the distinct keys,
@@ -205,8 +192,8 @@ object SuffixArray {
       // the superseded round's checkpoint is dead once `next` is
       // materialized (eager) — release its blocks instead of leaking
       // them until GC; the first `pairs` is a derived plan, which
-      // releaseCheckpoint leaves alone by construction
-      releaseCheckpoint(pairs)
+      // Staged.release leaves alone by construction
+      Staged.release(pairs)
       pairs = next
     }
     // clamp the equal-suffix overshoot to the true tail lengths

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.TextFunctions
 import graft.sources.Store
+import graft.util.Staged
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -417,7 +418,7 @@ object TextDedup {
       .select(col("id_a"), col("id_b"), estimatedJaccard(col("sig_a"), col("sig_b")).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
     // `shingled` stays persisted for the caller's verify stage
-    (materialized(result, Seq(tokenized, sigs, bucketCounts, candidates)), shingled)
+    (Staged.materialized(result, Seq(tokenized, sigs, bucketCounts, candidates)), shingled)
   }
 
   /** The staged signature pipeline shared by the pairwise and the
@@ -673,7 +674,7 @@ object TextDedup {
         col("id"), col("store_id"),
         estimatedJaccard(col("sig_new"), col("sig_store")).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
-    materialized(result, Seq(tokenized, shingled, sigs))
+    Staged.materialized(result, Seq(tokenized, shingled, sigs))
   }
 
   /** Persist a [[MinhashStore]] to parquet — the state a restarted
@@ -817,7 +818,7 @@ object TextDedup {
       .filter(col("__n") >= minOccurrences)
       .select(col("gram"))
     val out = cleanedFromCoveredGrams(toks, grams, dupGrams, k)
-    materialized(out, Seq(toks, grams))
+    Staged.materialized(out, Seq(toks, grams))
   }
 
   /** Persisted `(id, toks)` projection shared by the span-dedup forms. */
@@ -916,7 +917,7 @@ object TextDedup {
     val toks = stagedSpanTokens(corpus, idCol, textCol)
     val grams = stagedSpanGrams(toks, k, hashedGramKeys)
     val counts = grams.groupBy(col("gram")).agg(count(lit(1)).as("n"))
-    val store = materialized(counts, Seq(toks, grams))
+    val store = Staged.materialized(counts, Seq(toks, grams))
     SpanStore(store, k, hashedGramKeys)
   }
 
@@ -957,7 +958,7 @@ object TextDedup {
       .filter(col("__inc_n") + coalesce(col("__store_n"), lit(0L)) >= minOccurrences)
       .select(col("gram"))
     val out = cleanedFromCoveredGrams(toks, grams, dupGrams, store.k)
-    materialized(out, Seq(toks, grams, incCounts))
+    Staged.materialized(out, Seq(toks, grams, incCounts))
   }
 
   /** Persist a [[SpanStore]] to parquet, COMPACTED to one row per gram
@@ -1041,20 +1042,6 @@ object TextDedup {
     finally { toks.unpersist(); grams.unpersist(); () }
   }
 
-  /** Persist + materialize `result`, then release the intermediate
-    * cached stages — long-lived sessions calling the pair operators
-    * repeatedly would otherwise accumulate cached blocks until storage
-    * eviction pressure builds. The returned DataFrame is persisted
-    * (candidate-pair sets are small relative to the corpus); callers
-    * owning the last reference may `.unpersist()` it.
-    */
-  private[operators] def materialized(result: DataFrame, intermediates: Seq[DataFrame]): DataFrame = {
-    val out = result.persist()
-    out.count() // force evaluation while the intermediate caches are alive
-    intermediates.foreach(_.unpersist())
-    out
-  }
-
   /** Exact n-gram Jaccard similarity between two text columns (the
     * verification stage after LSH candidate generation). Prefer
     * [[jaccardFromShingles]] over staged arrays when the shingles
@@ -1116,7 +1103,7 @@ object TextDedup {
         col("n_grams"),
         coalesce(col("dup_grams"), lit(0L)).as("dup_grams"))
       .withColumn("dup_frac", col("dup_grams").cast("double") / col("n_grams"))
-    materialized(out, Seq(grams))
+    Staged.materialized(out, Seq(grams))
   }
 
   /** Pluggable token-hash family for SimHash. [[XxHash64Simhash]]
@@ -1239,7 +1226,7 @@ object TextDedup {
         bit_count(col("__sa").bitwiseXOR(col("__sb"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
-    materialized(result, Seq(hashed, sigs))
+    Staged.materialized(result, Seq(hashed, sigs))
   }
 
   /** Quality-aware canonical selection over exact-duplicate clusters:
@@ -1335,7 +1322,7 @@ object TextDedup {
         col("sz_a").cast("long").as("sz_a"),
         col("sz_b").cast("long").as("sz_b"),
         col("containment_micro"))
-    materialized(out, Seq(grams, kept))
+    Staged.materialized(out, Seq(grams, kept))
   }
 
   /** PPJoin-style prefix-filtered exact-Jaccard similarity join
@@ -1456,6 +1443,6 @@ object TextDedup {
         col("sz_a").cast("long").as("sz_a"),
         col("sz_b").cast("long").as("sz_b"),
         col("inter"), col("jaccard_micro"))
-    materialized(out, Seq(grams, sets))
+    Staged.materialized(out, Seq(grams, sets))
   }
 }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.util.Staged
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -77,7 +79,7 @@ object TimeSeries {
           .otherwise(col("__pv") +
             expr("((__nv - __pv) * (__t - __pt)) div (__nt - __pt)"))
           .as("v_milli"))
-    TextDedup.materialized(out, Seq(obs))
+    Staged.materialized(out, Seq(obs))
   }
 
   /** Per-key lag-1 autocorrelation of a milli-grid value series —

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.util.Staged
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -126,6 +128,6 @@ object Winnow {
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-    TextDedup.materialized(pairs, Seq(inv))
+    Staged.materialized(pairs, Seq(inv))
   }
 }

@@ -20,44 +20,15 @@ object Corpus {
     // per doc, eval-gram set from the planted doc_id % 50 == 7 subset,
     // per-doc overlap count, contaminated = any overlap
     Query("decontaminate", decontaminate)(
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    list_distinct(
-        |      CASE WHEN len(ws) >= 4
-        |           THEN [array_to_string(ws[i:i+3], ' ') for i in range(1, len(ws) - 2)]
-        |           ELSE [array_to_string(ws, ' ')]
-        |      END) AS gs
-        |  FROM t),
-        |e AS (SELECT doc_id, unnest(gs) AS gram FROM g),
-        |ev AS (SELECT DISTINCT gram FROM e WHERE doc_id % 50 = 7),
-        |hits AS (
-        |  SELECT e.doc_id, count(*) AS eval_hits
-        |  FROM e JOIN ev USING (gram) GROUP BY e.doc_id)
-        |SELECT g.doc_id,
-        |  CAST(len(g.gs) AS BIGINT) AS n_grams,
-        |  CAST(coalesce(h.eval_hits, 0) AS BIGINT) AS eval_hits,
-        |  coalesce(h.eval_hits, 0) > 0 AS contaminated
+      s"""$decontaminationSql
         |FROM g LEFT JOIN hits h ON g.doc_id = h.doc_id
         |ORDER BY g.doc_id""".stripMargin),
     // full replay of the hashed-linear quality score: 60-bit md5 token
     // hash -> bucket -> LCG integer weight, exact integer sum per doc,
     // one float conversion at the end, integer-compare keep gate
     Query("text_quality_classifier", textQualityClassifier)(
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(ws) AS tk FROM t),
-        |f AS (
-        |  SELECT doc_id,
-        |    ((CAST('0x' || substr(md5(tk), 1, 15) AS BIGINT) % 4096)
-        |      * 1103515245 + 12345) % 1000003 AS v
-        |  FROM tok),
-        |a AS (
-        |  SELECT doc_id, CAST(sum(v) AS BIGINT) AS s, count(*) AS n
-        |  FROM f GROUP BY doc_id)
+      s"""$docWordsSql
+        |$hashedQualitySql)
         |SELECT doc_id,
         |  CAST(n AS BIGINT) AS n_tokens,
         |  s AS feat_sum,
@@ -70,9 +41,7 @@ object Corpus {
     // rationals, so the double sums match Spark's element_at path
     // bit-for-bit regardless of summation order
     Query("text_quality_trained", textQualityTrained)(
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws
-        |  FROM documents),
+      s"""$docWordsSql
         |tok AS (SELECT doc_id, unnest(ws) AS tk FROM t),
         |f AS (
         |  SELECT doc_id,
@@ -94,18 +63,8 @@ object Corpus {
     // (score desc, doc_id asc); the Spark side reproduces the same
     // order via per-score prefix + within-score window
     Query("token_budget_select", tokenBudgetSelect)(
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(ws) AS tk FROM t),
-        |f AS (
-        |  SELECT doc_id,
-        |    ((CAST('0x' || substr(md5(tk), 1, 15) AS BIGINT) % 4096)
-        |      * 1103515245 + 12345) % 1000003 AS v
-        |  FROM tok),
-        |a AS (
-        |  SELECT doc_id, CAST(sum(v) AS BIGINT) AS s, count(*) AS n
-        |  FROM f GROUP BY doc_id),
+      s"""$docWordsSql
+        |$hashedQualitySql),
         |sc AS (
         |  SELECT doc_id,
         |    round(CAST(s AS DOUBLE) / (CAST(n AS DOUBLE) * 500001.5) - 1.0, 4) + 0.0 AS score,
@@ -173,7 +132,7 @@ object Corpus {
         |FROM r WHERE rk <= 10
         |ORDER BY domain, rk""".stripMargin),
     Query("pipeline_training_data", pipelineTrainingData)(
-      """WITH scored AS (
+      raw"""WITH scored AS (
         |  SELECT doc_id, source, text,
         |    len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens,
         |    round((
@@ -184,16 +143,7 @@ object Corpus {
         |          t -> list_contains(['the','a','of','and','to','in','is','for','on','with'], t))) * 1.0
         |          / len(regexp_split_to_array(lower(trim(text)), '\s+'))) * 5.0, 1.0)
         |    ) / 3.0, 4) AS q,
-        |    len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-        |      t -> list_contains(['der','die','das','und','ist','nicht','ein','mit','für','auf','zu','den'], t))) AS s_de,
-        |    len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-        |      t -> list_contains(['the','a','of','and','to','in','is','for','on','with','that','it'], t))) AS s_en,
-        |    len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-        |      t -> list_contains(['el','la','los','las','y','es','un','una','para','en','que','de'], t))) AS s_es,
-        |    len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-        |      t -> list_contains(['le','la','les','et','est','un','une','pour','dans','que','des','du'], t))) AS s_fr,
-        |    len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-        |      t -> list_contains(['il','la','gli','e','è','un','una','per','che','di','non','con'], t))) AS s_it
+        |${Text.langIdScoresSql}
         |  FROM documents),
         |gated AS (
         |  SELECT doc_id, source, n_tokens, q,
@@ -254,26 +204,7 @@ object Corpus {
     // oracle; the sketch gates via the in-plan no-false-negative and
     // false-positive-bound verdicts
     Query("bloom_decontaminate", bloomDecontaminate)(
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    list_distinct(
-        |      CASE WHEN len(ws) >= 4
-        |           THEN [array_to_string(ws[i:i+3], ' ') for i in range(1, len(ws) - 2)]
-        |           ELSE [array_to_string(ws, ' ')]
-        |      END) AS gs
-        |  FROM t),
-        |e AS (SELECT doc_id, unnest(gs) AS gram FROM g),
-        |ev AS (SELECT DISTINCT gram FROM e WHERE doc_id % 50 = 7),
-        |hits AS (
-        |  SELECT e.doc_id, count(*) AS eval_hits
-        |  FROM e JOIN ev USING (gram) GROUP BY e.doc_id)
-        |SELECT g.doc_id,
-        |  CAST(len(g.gs) AS BIGINT) AS n_grams,
-        |  CAST(coalesce(h.eval_hits, 0) AS BIGINT) AS eval_hits,
-        |  coalesce(h.eval_hits, 0) > 0 AS contaminated,
+      s"""$decontaminationSql,
         |  true AS bloom_no_fn,
         |  true AS fp_ok
         |FROM g LEFT JOIN hits h ON g.doc_id = h.doc_id
@@ -281,9 +212,7 @@ object Corpus {
     // corpus overlap: exact halves + intersection replay; the HLL
     // inclusion-exclusion estimate gates via the 25% verdict
     Query("corpus_overlap", corpusOverlap)(
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws
-        |  FROM documents),
+      s"""$docWordsSql
         |gr AS (
         |  SELECT doc_id,
         |         unnest(CASE WHEN len(ws) >= 2
@@ -299,29 +228,7 @@ object Corpus {
     // clean->gate->floor->sample composition: every stage's replay
     // chained in one oracle
     Query("pipeline_clean_sample", pipelineCleanSample)(
-      """WITH docs2 AS (
-        |  SELECT doc_id,
-        |         '=== ' || source || ' header ===' || chr(10) ||
-        |         text || chr(10) ||
-        |         CASE WHEN doc_id % 3 = 0 THEN 'subscribe to our newsletter'
-        |              ELSE 'contact us at ' || source || '.example' END AS text
-        |  FROM documents),
-        |lines AS (
-        |  SELECT doc_id,
-        |         unnest(str_split(text, chr(10))) AS line,
-        |         unnest(range(1, len(str_split(text, chr(10))) + 1)) AS pos
-        |  FROM docs2),
-        |freq AS (
-        |  SELECT line FROM (
-        |    SELECT line, count(DISTINCT doc_id) AS nd FROM lines GROUP BY line)
-        |  WHERE nd >= 10),
-        |flagged AS (
-        |  SELECT l.doc_id, l.pos, l.line, f.line IS NOT NULL AS hit
-        |  FROM lines l LEFT JOIN freq f USING (line)),
-        |rebuilt AS (
-        |  SELECT doc_id,
-        |         coalesce(string_agg(line, chr(10) ORDER BY pos)
-        |                    FILTER (WHERE NOT hit), '') AS text,
+      raw"""${Text.lineDedupSql}
         |         CAST(sum(CASE WHEN NOT hit THEN 1 ELSE 0 END) AS BIGINT) AS kept_lines
         |  FROM flagged GROUP BY doc_id),
         |blkc AS (
@@ -359,6 +266,38 @@ object Corpus {
         |SELECT doc_id, kept_lines, n_tokens, entropy_micro, key_micro
         |FROM keyed ORDER BY key_micro DESC, doc_id LIMIT 20""".stripMargin),
   )
+
+  /** The oracles' lowercase whitespace tokens `t(doc_id, ws)` of every
+    * document, as `TextFunctions.tokens` splits them.
+    */
+  private[queries] val docWordsSql =
+    raw"""WITH t AS (
+         |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws
+         |  FROM documents),""".stripMargin
+
+  /** The decontamination oracles' replay of [[decontaminate]] up to
+    * the `contaminated` column: distinct word 4-grams per doc, the
+    * planted eval set and each doc's overlap count.
+    */
+  private[queries] val decontaminationSql =
+    s"""$docWordsSql
+       |g AS (
+       |  SELECT doc_id,
+       |    list_distinct(
+       |      CASE WHEN len(ws) >= 4
+       |           THEN [array_to_string(ws[i:i+3], ' ') for i in range(1, len(ws) - 2)]
+       |           ELSE [array_to_string(ws, ' ')]
+       |      END) AS gs
+       |  FROM t),
+       |e AS (SELECT doc_id, unnest(gs) AS gram FROM g),
+       |ev AS (SELECT DISTINCT gram FROM e WHERE doc_id % 50 = 7),
+       |hits AS (
+       |  SELECT e.doc_id, count(*) AS eval_hits
+       |  FROM e JOIN ev USING (gram) GROUP BY e.doc_id)
+       |SELECT g.doc_id,
+       |  CAST(len(g.gs) AS BIGINT) AS n_grams,
+       |  CAST(coalesce(h.eval_hits, 0) AS BIGINT) AS eval_hits,
+       |  coalesce(h.eval_hits, 0) > 0 AS contaminated""".stripMargin
 
   /** Benchmark decontamination: the "eval set" is a planted exact
     * subset of the corpus (every doc_id % 50 == 7), so those documents
@@ -442,6 +381,21 @@ object Corpus {
         col("fp_ok"))
       .orderBy(col("doc_id"))
   }
+
+  /** The quality oracles' replay of [[scoredDocs]]' hashed-linear
+    * features over [[docWordsSql]]: per-token LCG weights `f` and each
+    * doc's exact integer sum `a`, without the closing parenthesis.
+    */
+  private[queries] val hashedQualitySql =
+    """tok AS (SELECT doc_id, unnest(ws) AS tk FROM t),
+      |f AS (
+      |  SELECT doc_id,
+      |    ((CAST('0x' || substr(md5(tk), 1, 15) AS BIGINT) % 4096)
+      |      * 1103515245 + 12345) % 1000003 AS v
+      |  FROM tok),
+      |a AS (
+      |  SELECT doc_id, CAST(sum(v) AS BIGINT) AS s, count(*) AS n
+      |  FROM f GROUP BY doc_id""".stripMargin
 
   /** Hashed-feature linear quality score per document, oracle-gated via
     * the portable md5 hash scheme: bucket, LCG weight, exact integer

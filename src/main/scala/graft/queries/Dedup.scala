@@ -26,41 +26,7 @@ object Dedup {
     // shingle hashes, 32 running minimums, 8 band hashes, bucket-size
     // guard, and k/32 signature-agreement estimate as the Spark plan
     Query("dedup_minhash_lsh", dedupMinhashLsh)(
-      """WITH base AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text || ' near duplicate tail'
-        |  FROM documents WHERE doc_id % 50 = 0),
-        |toks AS (
-        |  SELECT doc_id AS id, string_split_regex(lower(trim(text)), '\s+') AS t FROM base),
-        |grams AS (
-        |  SELECT id,
-        |    CASE WHEN len(t) >= 3
-        |      THEN list_transform(generate_series(1, len(t)-2), i -> array_to_string(t[i:i+2], ' '))
-        |      ELSE [array_to_string(t, ' ')] END AS g
-        |  FROM toks),
-        |shing AS (SELECT DISTINCT id, unnest(g) AS sh FROM grams),
-        |minh AS (
-        |  SELECT id, s.seed, min(md5(s.seed::varchar || ':' || sh)) AS mh
-        |  FROM shing CROSS JOIN generate_series(0, 31) s(seed)
-        |  GROUP BY id, s.seed),
-        |sigs AS (SELECT id, list(mh ORDER BY seed) AS sig FROM minh GROUP BY id),
-        |banded AS (
-        |  SELECT id, b.band,
-        |    md5(array_to_string(sig[b.band*4+1 : b.band*4+4], '|')) AS bh
-        |  FROM sigs CROSS JOIN generate_series(0, 7) b(band)),
-        |buck AS (SELECT band, bh FROM banded GROUP BY band, bh HAVING count(*) <= 2000),
-        |bounded AS (SELECT banded.id, banded.band, banded.bh FROM banded JOIN buck USING (band, bh)),
-        |cand AS (
-        |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        |  FROM bounded a JOIN bounded b USING (band, bh)
-        |  WHERE a.id < b.id),
-        |est AS (
-        |  SELECT c.id_a, c.id_b,
-        |    len(list_filter(generate_series(1, 32), i -> sa.sig[i] = sb.sig[i])) / 32.0 AS est_jaccard
-        |  FROM cand c
-        |  JOIN sigs sa ON sa.id = c.id_a
-        |  JOIN sigs sb ON sb.id = c.id_b)
+      s"""$minhashLshSql)
         |SELECT id_a, id_b, est_jaccard FROM est
         |WHERE est_jaccard >= 0.5
         |ORDER BY id_a, id_b""".stripMargin),
@@ -68,26 +34,8 @@ object Dedup {
     // LSH-candidates-then-verify result because every true pair sits far
     // above the LSH recall band (min true jaccard 0.85 at sf0.01)
     Query("dedup_ngram_jaccard", dedupNgramJaccard)(
-      """WITH docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text || ' near duplicate tail' AS text
-        |  FROM documents WHERE doc_id % 50 = 0),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(
-        |      CASE WHEN len(regexp_split_to_array(lower(trim(text)), '\s+')) >= 3
-        |           THEN [array_to_string(regexp_split_to_array(lower(trim(text)), '\s+')[i:i+2], ' ')
-        |                 for i in range(1, len(regexp_split_to_array(lower(trim(text)), '\s+')) - 1)]
-        |           ELSE [array_to_string(regexp_split_to_array(lower(trim(text)), '\s+'), ' ')]
-        |      END) AS s
-        |  FROM docs),
-        |g AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        |sz AS (SELECT doc_id, len(s) AS n FROM sh),
-        |common AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-        |  FROM g a JOIN g b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
+      s"""WITH docs AS (
+        |$ngramCommonSql
         |SELECT id_a, id_b, jaccard FROM (
         |  SELECT id_a, id_b, round(c * 1.0 / (sa.n + sb.n - c), 3) AS jaccard
         |  FROM common
@@ -96,26 +44,8 @@ object Dedup {
         |WHERE jaccard >= 0.5
         |ORDER BY id_a, id_b""".stripMargin),
     Query("dedup_clusters", dedupClusters)(
-      """WITH RECURSIVE docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text || ' near duplicate tail' AS text
-        |  FROM documents WHERE doc_id % 50 = 0),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(
-        |      CASE WHEN len(regexp_split_to_array(lower(trim(text)), '\s+')) >= 3
-        |           THEN [array_to_string(regexp_split_to_array(lower(trim(text)), '\s+')[i:i+2], ' ')
-        |                 for i in range(1, len(regexp_split_to_array(lower(trim(text)), '\s+')) - 1)]
-        |           ELSE [array_to_string(regexp_split_to_array(lower(trim(text)), '\s+'), ' ')]
-        |      END) AS s
-        |  FROM docs),
-        |g AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        |sz AS (SELECT doc_id, len(s) AS n FROM sh),
-        |common AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-        |  FROM g a JOIN g b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
+      s"""WITH RECURSIVE docs AS (
+        |$ngramCommonSql,
         |pairs AS (
         |  SELECT id_a, id_b FROM common
         |  JOIN sz sa ON id_a = sa.doc_id
@@ -124,17 +54,14 @@ object Dedup {
         |edges AS (
         |  SELECT id_a AS src, id_b AS dst FROM pairs
         |  UNION SELECT id_b, id_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id)
+        |$reachSql
         |SELECT id AS doc_id, min(r) AS cluster_id
         |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin),
     // absorb == rebuild: the oracle closes base ∪ increment edges
     // transitively from scratch; the Spark side reaches the same
     // labels through the persisted store's absorb path
     Query("dedup_clusters_incremental", dedupClustersIncremental)(
-      """WITH RECURSIVE ids AS (
+      s"""WITH RECURSIVE ids AS (
         |  SELECT vec_id AS i FROM embeddings WHERE vec_id < 200),
         |base AS (SELECT i AS a, i + 1 AS b FROM ids WHERE i % 10 < 3),
         |inc AS (
@@ -144,30 +71,14 @@ object Dedup {
         |alle AS (SELECT a, b FROM base UNION ALL SELECT a, b FROM inc),
         |edges AS (SELECT a AS src, b AS dst FROM alle
         |          UNION SELECT b, a FROM alle),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id)
+        |$reachSql
         |SELECT id AS vec_id, min(r) AS cluster_id
         |FROM reach GROUP BY id ORDER BY vec_id""".stripMargin),
     // prefix-filtered Jaccard is LOSSLESS, so the oracle is the plain
     // all-pairs truth set with the exact integer Jaccard
     Query("dedup_prefix_jaccard", dedupPrefixJaccard)(
-      """WITH docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text || ' near duplicate tail' AS text
-        |  FROM documents WHERE doc_id % 50 = 0),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(
-        |      CASE WHEN len(regexp_split_to_array(lower(trim(text)), '\s+')) >= 3
-        |           THEN [array_to_string(regexp_split_to_array(lower(trim(text)), '\s+')[i:i+2], ' ')
-        |                 for i in range(1, len(regexp_split_to_array(lower(trim(text)), '\s+')) - 1)]
-        |           ELSE [array_to_string(regexp_split_to_array(lower(trim(text)), '\s+'), ' ')]
-        |      END) AS s
-        |  FROM docs),
-        |g AS (SELECT doc_id, unnest(s) AS g FROM sh),
+      s"""WITH docs AS (
+        |$ngramShinglesSql
         |sz AS (SELECT doc_id, CAST(len(s) AS BIGINT) AS n FROM sh),
         |common AS (
         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(count(*) AS BIGINT) AS c
@@ -190,56 +101,13 @@ object Dedup {
     // oracles over lossy candidate schemes are SF coin tosses; a
     // same-chain replay is not).
     Query("corpus_curation_pipeline", corpusCurationPipeline)(
-      """WITH RECURSIVE base AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text || ' near duplicate tail'
-        |  FROM documents WHERE doc_id % 50 = 0),
-        |alle AS (
-        |  SELECT doc_id, text FROM base
-        |  UNION ALL
-        |  SELECT doc_id + 3000000, text FROM base
-        |  WHERE doc_id % 40 = 0 AND doc_id < 1000000),
-        |tok AS (SELECT doc_id, text,
-        |               regexp_split_to_array(lower(trim(text)), '\s+') AS ws
-        |        FROM alle),
-        |gq AS (
-        |  SELECT doc_id, text, ws FROM (
-        |    SELECT doc_id, text, ws,
-        |      CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE) / len(ws) AS mwl,
-        |      CAST(list_max(list_transform(list_distinct(ws),
-        |             w -> len(list_filter(ws, x -> x = w)))) AS DOUBLE) / len(ws) AS twf,
-        |      CAST(len(bg) - len(list_distinct(bg)) AS DOUBLE) / len(bg) AS dbf
-        |    FROM (SELECT doc_id, text, ws,
-        |            CASE WHEN len(ws) >= 2
-        |                 THEN [array_to_string(ws[i:i+1], ' ') for i in range(1, len(ws))]
-        |                 ELSE [array_to_string(ws, ' ')] END AS bg
-        |          FROM tok))
-        |  WHERE mwl BETWEEN 3.0 AND 10.0 AND twf <= 0.2 AND dbf <= 0.2),
-        |ek AS (
-        |  SELECT doc_id, text, ws FROM (
-        |    SELECT doc_id, text, ws,
-        |           row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-        |    FROM gq)
-        |  WHERE rn = 1),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(
-        |      CASE WHEN len(ws) >= 3
-        |           THEN [array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws) - 1)]
-        |           ELSE [array_to_string(ws, ' ')]
-        |      END) AS s
-        |  FROM ek),
+      s"""$curationHeadSql
         |shing AS (SELECT doc_id AS id, unnest(s) AS g FROM sh),
         |minh AS (
         |  SELECT id, sd.seed, min(md5(sd.seed::varchar || ':' || g)) AS mh
         |  FROM shing CROSS JOIN generate_series(0, 31) sd(seed)
         |  GROUP BY id, sd.seed),
-        |sigs AS (SELECT id, list(mh ORDER BY seed) AS sig FROM minh GROUP BY id),
-        |banded AS (
-        |  SELECT id, b.band,
-        |    md5(array_to_string(sig[b.band*4+1 : b.band*4+4], '|')) AS bh
-        |  FROM sigs CROSS JOIN generate_series(0, 7) b(band)),
+        |$minhashBandsSql
         |buck AS (SELECT band, bh FROM banded GROUP BY band, bh HAVING count(*) <= 2000),
         |bounded AS (SELECT banded.id, banded.band, banded.bh FROM banded JOIN buck USING (band, bh)),
         |cand AS (
@@ -257,31 +125,7 @@ object Dedup {
         |  JOIN sh b ON b.doc_id = e.ib
         |  WHERE len(list_intersect(a.s, b.s)) * 1000000
         |        // (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 500000),
-        |edges AS (SELECT ia AS src, ib AS dst FROM p UNION SELECT ib, ia FROM p),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id),
-        |comp AS (SELECT id, min(r) AS c FROM reach GROUP BY id),
-        |dropn AS (SELECT id FROM comp WHERE id <> c),
-        |surv AS (SELECT ek.doc_id, ek.ws FROM ek
-        |         LEFT JOIN dropn d ON ek.doc_id = d.id WHERE d.id IS NULL),
-        |tele AS (SELECT
-        |  (SELECT count(*) FROM alle) AS n_input,
-        |  (SELECT count(*) FROM gq) AS n_quality,
-        |  (SELECT count(*) FROM ek) AS n_exact_kept,
-        |  (SELECT count(*) FROM surv) AS n_near_kept),
-        |spl AS (SELECT doc_id, len(ws) AS nt,
-        |  CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 100 AS bkt
-        |  FROM surv)
-        |SELECT CASE WHEN bkt < 90 THEN 'train'
-        |            WHEN bkt < 95 THEN 'val' ELSE 'test' END AS split,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(nt) AS BIGINT) AS total_tokens,
-        |  CAST(t.n_input AS BIGINT) AS n_input,
-        |  CAST(t.n_quality AS BIGINT) AS n_quality,
-        |  CAST(t.n_exact_kept AS BIGINT) AS n_exact_kept,
-        |  CAST(t.n_near_kept AS BIGINT) AS n_near_kept
+        |$curationSplitSql
         |FROM spl, tele t
         |GROUP BY 1, t.n_input, t.n_quality, t.n_exact_kept, t.n_near_kept
         |ORDER BY split""".stripMargin),
@@ -289,82 +133,9 @@ object Dedup {
     // dedup, inverted-index jaccard + recursive closure (lossless ⇒
     // equals the prefix-filtered path), md5 split, totals + telemetry
     Query("corpus_curation_pipeline_lossless", corpusCurationPipelineLossless)(
-      """WITH RECURSIVE base AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text || ' near duplicate tail'
-        |  FROM documents WHERE doc_id % 50 = 0),
-        |alle AS (
-        |  SELECT doc_id, text FROM base
-        |  UNION ALL
-        |  SELECT doc_id + 3000000, text FROM base
-        |  WHERE doc_id % 40 = 0 AND doc_id < 1000000),
-        |tok AS (SELECT doc_id, text,
-        |               regexp_split_to_array(lower(trim(text)), '\s+') AS ws
-        |        FROM alle),
-        |gq AS (
-        |  SELECT doc_id, text, ws FROM (
-        |    SELECT doc_id, text, ws,
-        |      CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE) / len(ws) AS mwl,
-        |      CAST(list_max(list_transform(list_distinct(ws),
-        |             w -> len(list_filter(ws, x -> x = w)))) AS DOUBLE) / len(ws) AS twf,
-        |      CAST(len(bg) - len(list_distinct(bg)) AS DOUBLE) / len(bg) AS dbf
-        |    FROM (SELECT doc_id, text, ws,
-        |            CASE WHEN len(ws) >= 2
-        |                 THEN [array_to_string(ws[i:i+1], ' ') for i in range(1, len(ws))]
-        |                 ELSE [array_to_string(ws, ' ')] END AS bg
-        |          FROM tok))
-        |  WHERE mwl BETWEEN 3.0 AND 10.0 AND twf <= 0.2 AND dbf <= 0.2),
-        |ek AS (
-        |  SELECT doc_id, text, ws FROM (
-        |    SELECT doc_id, text, ws,
-        |           row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-        |    FROM gq)
-        |  WHERE rn = 1),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(
-        |      CASE WHEN len(ws) >= 3
-        |           THEN [array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws) - 1)]
-        |           ELSE [array_to_string(ws, ' ')]
-        |      END) AS s
-        |  FROM ek),
-        |gr AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        |szs AS (SELECT doc_id, len(s) AS n FROM sh),
-        |cmn AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS c
-        |  FROM gr a JOIN gr b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |p AS (
-        |  SELECT ia, ib FROM cmn
-        |  JOIN szs sa ON ia = sa.doc_id
-        |  JOIN szs sb ON ib = sb.doc_id
-        |  WHERE c * 1000000 // (sa.n + sb.n - c) >= 500000),
-        |edges AS (SELECT ia AS src, ib AS dst FROM p UNION SELECT ib, ia FROM p),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id),
-        |comp AS (SELECT id, min(r) AS c FROM reach GROUP BY id),
-        |dropn AS (SELECT id FROM comp WHERE id <> c),
-        |surv AS (SELECT ek.doc_id, ek.ws FROM ek
-        |         LEFT JOIN dropn d ON ek.doc_id = d.id WHERE d.id IS NULL),
-        |tele AS (SELECT
-        |  (SELECT count(*) FROM alle) AS n_input,
-        |  (SELECT count(*) FROM gq) AS n_quality,
-        |  (SELECT count(*) FROM ek) AS n_exact_kept,
-        |  (SELECT count(*) FROM surv) AS n_near_kept),
-        |spl AS (SELECT doc_id, len(ws) AS nt,
-        |  CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 100 AS bkt
-        |  FROM surv)
-        |SELECT CASE WHEN bkt < 90 THEN 'train'
-        |            WHEN bkt < 95 THEN 'val' ELSE 'test' END AS split,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(nt) AS BIGINT) AS total_tokens,
-        |  CAST(t.n_input AS BIGINT) AS n_input,
-        |  CAST(t.n_quality AS BIGINT) AS n_quality,
-        |  CAST(t.n_exact_kept AS BIGINT) AS n_exact_kept,
-        |  CAST(t.n_near_kept AS BIGINT) AS n_near_kept
+      s"""$curationHeadSql
+        |$curationExactPairsSql
+        |$curationSplitSql
         |FROM spl, tele t
         |GROUP BY 1, t.n_input, t.n_quality, t.n_exact_kept, t.n_near_kept
         |ORDER BY split""".stripMargin),
@@ -372,90 +143,15 @@ object Dedup {
     // chain (same replay as corpus_curation_pipeline); minhash_ok is
     // asserted true — the banded recall check runs in-plan Spark-side
     Query("corpus_curation_pipeline_minhash", corpusCurationPipelineMinhash)(
-      """WITH RECURSIVE base AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text || ' near duplicate tail'
-        |  FROM documents WHERE doc_id % 50 = 0),
-        |alle AS (
-        |  SELECT doc_id, text FROM base
-        |  UNION ALL
-        |  SELECT doc_id + 3000000, text FROM base
-        |  WHERE doc_id % 40 = 0 AND doc_id < 1000000),
-        |tok AS (SELECT doc_id, text,
-        |               regexp_split_to_array(lower(trim(text)), '\s+') AS ws
-        |        FROM alle),
-        |gq AS (
-        |  SELECT doc_id, text, ws FROM (
-        |    SELECT doc_id, text, ws,
-        |      CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE) / len(ws) AS mwl,
-        |      CAST(list_max(list_transform(list_distinct(ws),
-        |             w -> len(list_filter(ws, x -> x = w)))) AS DOUBLE) / len(ws) AS twf,
-        |      CAST(len(bg) - len(list_distinct(bg)) AS DOUBLE) / len(bg) AS dbf
-        |    FROM (SELECT doc_id, text, ws,
-        |            CASE WHEN len(ws) >= 2
-        |                 THEN [array_to_string(ws[i:i+1], ' ') for i in range(1, len(ws))]
-        |                 ELSE [array_to_string(ws, ' ')] END AS bg
-        |          FROM tok))
-        |  WHERE mwl BETWEEN 3.0 AND 10.0 AND twf <= 0.2 AND dbf <= 0.2),
-        |ek AS (
-        |  SELECT doc_id, text, ws FROM (
-        |    SELECT doc_id, text, ws,
-        |           row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-        |    FROM gq)
-        |  WHERE rn = 1),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(
-        |      CASE WHEN len(ws) >= 3
-        |           THEN [array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws) - 1)]
-        |           ELSE [array_to_string(ws, ' ')]
-        |      END) AS s
-        |  FROM ek),
-        |gr AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        |szs AS (SELECT doc_id, len(s) AS n FROM sh),
-        |cmn AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS c
-        |  FROM gr a JOIN gr b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |p AS (
-        |  SELECT ia, ib FROM cmn
-        |  JOIN szs sa ON ia = sa.doc_id
-        |  JOIN szs sb ON ib = sb.doc_id
-        |  WHERE c * 1000000 // (sa.n + sb.n - c) >= 500000),
-        |edges AS (SELECT ia AS src, ib AS dst FROM p UNION SELECT ib, ia FROM p),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id),
-        |comp AS (SELECT id, min(r) AS c FROM reach GROUP BY id),
-        |dropn AS (SELECT id FROM comp WHERE id <> c),
-        |surv AS (SELECT ek.doc_id, ek.ws FROM ek
-        |         LEFT JOIN dropn d ON ek.doc_id = d.id WHERE d.id IS NULL),
-        |tele AS (SELECT
-        |  (SELECT count(*) FROM alle) AS n_input,
-        |  (SELECT count(*) FROM gq) AS n_quality,
-        |  (SELECT count(*) FROM ek) AS n_exact_kept,
-        |  (SELECT count(*) FROM surv) AS n_near_kept),
-        |spl AS (SELECT doc_id, len(ws) AS nt,
-        |  CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 100 AS bkt
-        |  FROM surv)
-        |SELECT CASE WHEN bkt < 90 THEN 'train'
-        |            WHEN bkt < 95 THEN 'val' ELSE 'test' END AS split,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(nt) AS BIGINT) AS total_tokens,
-        |  CAST(t.n_input AS BIGINT) AS n_input,
-        |  CAST(t.n_quality AS BIGINT) AS n_quality,
-        |  CAST(t.n_exact_kept AS BIGINT) AS n_exact_kept,
-        |  CAST(t.n_near_kept AS BIGINT) AS n_near_kept,
+      s"""$curationHeadSql
+        |$curationExactPairsSql
+        |$curationSplitSql,
         |  true AS minhash_ok
         |FROM spl, tele t
         |GROUP BY 1, t.n_input, t.n_quality, t.n_exact_kept, t.n_near_kept
         |ORDER BY split""".stripMargin),
     Query("dedup_global_ngrams", dedupGlobalNgrams)(
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws
-        |  FROM documents),
+      s"""${Corpus.docWordsSql}
         |g AS (
         |  SELECT doc_id,
         |    list_distinct(
@@ -479,11 +175,8 @@ object Dedup {
     // signature, 5 pigeonhole 12-bit bands, bucket-size guard, exact
     // Hamming verify
     Query("dedup_simhash", dedupSimhash)(
-      """WITH base AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text || ' near duplicate tail'
-        |  FROM documents WHERE doc_id % 50 = 0),
+      raw"""WITH base AS (
+        |$nearDupRowsSql
         |tok AS (
         |  SELECT doc_id AS id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS tk FROM base),
         |th AS (
@@ -533,29 +226,14 @@ object Dedup {
     // store and increment, store-side bucket guard, band probe,
     // signature-agreement Jaccard estimate
     Query("dedup_incremental_minhash", dedupIncrementalMinhash)(
-      """WITH store_docs AS (SELECT doc_id AS id, text FROM documents),
+      raw"""WITH store_docs AS (SELECT doc_id AS id, text FROM documents),
         |inc_docs AS (
         |  SELECT doc_id + 1000000 AS id, text || ' near duplicate tail' AS text
         |  FROM documents WHERE doc_id % 100 = 0),
         |base AS (SELECT * FROM store_docs UNION ALL SELECT * FROM inc_docs),
         |toks AS (
         |  SELECT id, string_split_regex(lower(trim(text)), '\s+') AS t FROM base),
-        |grams AS (
-        |  SELECT id,
-        |    CASE WHEN len(t) >= 3
-        |      THEN list_transform(generate_series(1, len(t)-2), i -> array_to_string(t[i:i+2], ' '))
-        |      ELSE [array_to_string(t, ' ')] END AS g
-        |  FROM toks),
-        |shing AS (SELECT DISTINCT id, unnest(g) AS sh FROM grams),
-        |minh AS (
-        |  SELECT id, s.seed, min(md5(s.seed::varchar || ':' || sh)) AS mh
-        |  FROM shing CROSS JOIN generate_series(0, 31) s(seed)
-        |  GROUP BY id, s.seed),
-        |sigs AS (SELECT id, list(mh ORDER BY seed) AS sig FROM minh GROUP BY id),
-        |banded AS (
-        |  SELECT id, b.band,
-        |    md5(array_to_string(sig[b.band*4+1 : b.band*4+4], '|')) AS bh
-        |  FROM sigs CROSS JOIN generate_series(0, 7) b(band)),
+        |$minhashSignaturesSql
         |store_bands AS (SELECT * FROM banded WHERE id < 1000000),
         |inc_bands AS (SELECT * FROM banded WHERE id >= 1000000),
         |buck AS (
@@ -581,40 +259,13 @@ object Dedup {
     // span dedup replay: k=8 windows, corpus-wide gram count, covered
     // positions, anti-join, ordered string_agg reassembly
     Query("dedup_spans", dedupSpans)(
-      """WITH d0 AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 10 = 1
-        |         THEN 'subscribe to our newsletter for updates terms of service apply ' || text
-        |         ELSE text END AS text
-        |  FROM documents),
-        |t AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM d0),
-        |g0 AS (
-        |  SELECT doc_id,
-        |    unnest([{'s': i, 'g': array_to_string(ws[i:i+7], ' ')}
-        |            for i in range(1, greatest(len(ws) - 6, 1))]) AS e
-        |  FROM t),
-        |g AS (SELECT doc_id, e.s AS start, e.g AS gram FROM g0),
-        |dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
+      s"""WITH d0 AS (
+        |$boilerplateDocsSql),
+        |$spanGramsSql
         |cov0 AS (
         |  SELECT doc_id, unnest([p for p in range(start, start + 8)]) AS pos
         |  FROM g JOIN dup USING (gram)),
-        |cov AS (SELECT DISTINCT doc_id, pos FROM cov0),
-        |p0 AS (
-        |  SELECT doc_id, unnest([{'p': i, 'tok': ws[i]} for i in range(1, len(ws) + 1)]) AS e
-        |  FROM t),
-        |p AS (SELECT doc_id, e.p AS pos, e.tok AS tok FROM p0),
-        |kept AS (
-        |  SELECT p.doc_id, count(*) AS kept_tokens,
-        |    string_agg(p.tok, ' ' ORDER BY p.pos) AS clean_text
-        |  FROM p LEFT JOIN cov ON p.doc_id = cov.doc_id AND p.pos = cov.pos
-        |  WHERE cov.pos IS NULL
-        |  GROUP BY p.doc_id)
-        |SELECT t.doc_id,
-        |  CAST(len(t.ws) AS BIGINT) AS n_tokens,
-        |  CAST(len(t.ws) - coalesce(k.kept_tokens, 0) AS BIGINT) AS removed_tokens,
-        |  coalesce(k.clean_text, '') AS clean_text
-        |FROM t LEFT JOIN kept k ON t.doc_id = k.doc_id
-        |ORDER BY t.doc_id""".stripMargin),
+        |$spanTailSql""".stripMargin),
     // suffix array: the oracle sorts the ACTUAL suffix lists (DuckDB
     // list ordering is token-lexicographic, shorter-prefix-first) —
     // the prefix-doubling construction must reproduce every rank
@@ -629,12 +280,8 @@ object Dedup {
         |FROM sfx
         |ORDER BY doc_id, pos""".stripMargin),
     Query("suffix_repeats", suffixRepeats)(
-      """WITH seeded AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 10 = 1
-        |         THEN 'subscribe to our newsletter for updates terms of service apply ' || text
-        |         ELSE text END AS text
-        |  FROM documents WHERE doc_id < 200),
+      raw"""WITH seeded AS (
+        |$boilerplateDocsSql WHERE doc_id < 200),
         |t AS (
         |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+')[1:30] AS ws
         |  FROM seeded),
@@ -661,20 +308,9 @@ object Dedup {
     // rewrite replays in gram space — rank occurrences per gram by
     // (doc_id, start), cover everything past rank 1
     Query("suffix_dedup_spans", suffixDedupSpans)(
-      """WITH d0 AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 10 = 1
-        |         THEN 'subscribe to our newsletter for updates terms of service apply ' || text
-        |         ELSE text END AS text
-        |  FROM documents WHERE doc_id < 120),
-        |t AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM d0),
-        |g0 AS (
-        |  SELECT doc_id,
-        |    unnest([{'s': i, 'g': array_to_string(ws[i:i+7], ' ')}
-        |            for i in range(1, greatest(len(ws) - 6, 1))]) AS e
-        |  FROM t),
-        |g AS (SELECT doc_id, e.s AS start, e.g AS gram FROM g0),
-        |dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
+      s"""WITH d0 AS (
+        |$boilerplateDocsSql WHERE doc_id < 120),
+        |$spanGramsSql
         |ranked AS (
         |  SELECT doc_id, start, gram,
         |    row_number() OVER (PARTITION BY gram ORDER BY doc_id, start) AS rk
@@ -682,41 +318,14 @@ object Dedup {
         |cov0 AS (
         |  SELECT doc_id, unnest([p for p in range(start, start + 8)]) AS pos
         |  FROM ranked WHERE rk > 1),
-        |cov AS (SELECT DISTINCT doc_id, pos FROM cov0),
-        |p0 AS (
-        |  SELECT doc_id, unnest([{'p': i, 'tok': ws[i]} for i in range(1, len(ws) + 1)]) AS e
-        |  FROM t),
-        |p AS (SELECT doc_id, e.p AS pos, e.tok AS tok FROM p0),
-        |kept AS (
-        |  SELECT p.doc_id, count(*) AS kept_tokens,
-        |    string_agg(p.tok, ' ' ORDER BY p.pos) AS clean_text
-        |  FROM p LEFT JOIN cov ON p.doc_id = cov.doc_id AND p.pos = cov.pos
-        |  WHERE cov.pos IS NULL
-        |  GROUP BY p.doc_id)
-        |SELECT t.doc_id,
-        |  CAST(len(t.ws) AS BIGINT) AS n_tokens,
-        |  CAST(len(t.ws) - coalesce(k.kept_tokens, 0) AS BIGINT) AS removed_tokens,
-        |  coalesce(k.clean_text, '') AS clean_text
-        |FROM t LEFT JOIN kept k ON t.doc_id = k.doc_id
-        |ORDER BY t.doc_id""".stripMargin),
+        |$spanTailSql""".stripMargin),
     // incremental span dedup replay: the FULL union computation (same
     // CTEs as dedup_spans) restricted to the increment's ids — the
     // equivalence the store probe implements
     Query("dedup_incremental_spans", dedupIncrementalSpans)(
-      """WITH d0 AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 10 = 1
-        |         THEN 'subscribe to our newsletter for updates terms of service apply ' || text
-        |         ELSE text END AS text
-        |  FROM documents),
-        |t AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM d0),
-        |g0 AS (
-        |  SELECT doc_id,
-        |    unnest([{'s': i, 'g': array_to_string(ws[i:i+7], ' ')}
-        |            for i in range(1, greatest(len(ws) - 6, 1))]) AS e
-        |  FROM t),
-        |g AS (SELECT doc_id, e.s AS start, e.g AS gram FROM g0),
-        |dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
+      s"""WITH d0 AS (
+        |$boilerplateDocsSql),
+        |$spanGramsSql
         |cov0 AS (
         |  SELECT doc_id, unnest([p for p in range(start, start + 8)]) AS pos
         |  FROM g JOIN dup USING (gram)
@@ -725,18 +334,7 @@ object Dedup {
         |p0 AS (
         |  SELECT doc_id, unnest([{'p': i, 'tok': ws[i]} for i in range(1, len(ws) + 1)]) AS e
         |  FROM t WHERE doc_id % 50 = 7),
-        |p AS (SELECT doc_id, e.p AS pos, e.tok AS tok FROM p0),
-        |kept AS (
-        |  SELECT p.doc_id, count(*) AS kept_tokens,
-        |    string_agg(p.tok, ' ' ORDER BY p.pos) AS clean_text
-        |  FROM p LEFT JOIN cov ON p.doc_id = cov.doc_id AND p.pos = cov.pos
-        |  WHERE cov.pos IS NULL
-        |  GROUP BY p.doc_id)
-        |SELECT t.doc_id,
-        |  CAST(len(t.ws) AS BIGINT) AS n_tokens,
-        |  CAST(len(t.ws) - coalesce(k.kept_tokens, 0) AS BIGINT) AS removed_tokens,
-        |  coalesce(k.clean_text, '') AS clean_text
-        |FROM t LEFT JOIN kept k ON t.doc_id = k.doc_id
+        |$spanKeptSql
         |WHERE t.doc_id % 50 = 7
         |ORDER BY t.doc_id""".stripMargin),
     Query.sharing("dedup_incremental_spans_persisted", dedupIncrementalSpansPersisted,
@@ -784,11 +382,8 @@ object Dedup {
     // slices are INCLUSIVE: h[i:i+7] is 8 elements), distinct per
     // doc, 50-doc bucket guard, pairs sharing >= 10 fingerprints
     Query("winnow_overlap", winnowOverlap)(
-      """WITH alld AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text || ' near duplicate tail'
-        |  FROM documents WHERE doc_id % 50 = 0),
+      raw"""WITH alld AS (
+        |$nearDupRowsSql
         |canon AS (
         |  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS c
         |  FROM alld),
@@ -818,11 +413,8 @@ object Dedup {
     // sorted-neighborhood: bucketed window lags + exact integer
     // Jaccard replay candidate-for-candidate
     Query("dedup_sorted_neighborhood", dedupSortedNeighborhood)(
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text || ' near duplicate tail'
-        |  FROM documents WHERE doc_id % 50 = 0),
+      raw"""WITH corpus AS (
+        |$nearDupRowsSql
         |t AS (
         |  SELECT doc_id,
         |         regexp_split_to_array(lower(trim(text)), '\s+') AS ws
@@ -853,41 +445,7 @@ object Dedup {
     // b-bit minhash: last-hex-char sketches + the integer-grid
     // unbiased estimate over the same replayed candidate pairs
     Query("dedup_minhash_bbit", dedupMinhashBbit)(
-      """WITH base AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text || ' near duplicate tail'
-        |  FROM documents WHERE doc_id % 50 = 0),
-        |toks AS (
-        |  SELECT doc_id AS id, string_split_regex(lower(trim(text)), '\s+') AS t FROM base),
-        |grams AS (
-        |  SELECT id,
-        |    CASE WHEN len(t) >= 3
-        |      THEN list_transform(generate_series(1, len(t)-2), i -> array_to_string(t[i:i+2], ' '))
-        |      ELSE [array_to_string(t, ' ')] END AS g
-        |  FROM toks),
-        |shing AS (SELECT DISTINCT id, unnest(g) AS sh FROM grams),
-        |minh AS (
-        |  SELECT id, s.seed, min(md5(s.seed::varchar || ':' || sh)) AS mh
-        |  FROM shing CROSS JOIN generate_series(0, 31) s(seed)
-        |  GROUP BY id, s.seed),
-        |sigs AS (SELECT id, list(mh ORDER BY seed) AS sig FROM minh GROUP BY id),
-        |banded AS (
-        |  SELECT id, b.band,
-        |    md5(array_to_string(sig[b.band*4+1 : b.band*4+4], '|')) AS bh
-        |  FROM sigs CROSS JOIN generate_series(0, 7) b(band)),
-        |buck AS (SELECT band, bh FROM banded GROUP BY band, bh HAVING count(*) <= 2000),
-        |bounded AS (SELECT banded.id, banded.band, banded.bh FROM banded JOIN buck USING (band, bh)),
-        |cand AS (
-        |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        |  FROM bounded a JOIN bounded b USING (band, bh)
-        |  WHERE a.id < b.id),
-        |est AS (
-        |  SELECT c.id_a, c.id_b,
-        |    len(list_filter(generate_series(1, 32), i -> sa.sig[i] = sb.sig[i])) / 32.0 AS est_jaccard
-        |  FROM cand c
-        |  JOIN sigs sa ON sa.id = c.id_a
-        |  JOIN sigs sb ON sb.id = c.id_b
+      s"""$minhashLshSql
         |  WHERE len(list_filter(generate_series(1, 32), i -> sa.sig[i] = sb.sig[i])) / 32.0 >= 0.5),
         |bb AS (SELECT id, list_transform(sig, h -> substr(h, 32, 1)) AS bb FROM sigs),
         |bbp AS (
@@ -904,11 +462,8 @@ object Dedup {
     // (the thresholded Spark form returns the SAME distance for every
     // pair it keeps)
     Query("dedup_edit_distance", dedupEditDistance)(
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text || ' near duplicate tail'
-        |  FROM documents WHERE doc_id % 50 = 0),
+      raw"""WITH corpus AS (
+        |$nearDupRowsSql
         |k AS (
         |  SELECT doc_id, lower(trim(text)) AS txt,
         |         regexp_split_to_array(lower(trim(text)), '\s+') AS ws
@@ -994,7 +549,7 @@ object Dedup {
     // entity resolution: block, edit-distance verify, transitive
     // closure, golden record per cluster
     Query("entity_resolution", entityResolution)(
-      """WITH RECURSIVE base AS (
+      s"""WITH RECURSIVE base AS (
         |  SELECT c_custkey AS k, c_name AS n FROM customer
         |  UNION ALL
         |  SELECT c_custkey + 1000000,
@@ -1010,10 +565,7 @@ object Dedup {
         |  WHERE levenshtein(a.n, b.n) <= 2),
         |edges AS (SELECT id_a AS src, id_b AS dst FROM p
         |          UNION SELECT id_b, id_a FROM p),
-        |reach(id, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id),
+        |$reachSql,
         |cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
         |SELECT cl.cluster_id, min(b.k) AS golden_key,
         |  min_by(b.n, b.k) AS golden_name,
@@ -1073,6 +625,43 @@ object Dedup {
     d.unionByName(mutated)
   }
 
+  /** The increment the incremental near-dup gates probe their store
+    * with: a near-duplicate tail copy of every 100th doc of `docs`.
+    */
+  private def nearDupIncrement(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") % 100 === 0)
+      .select((col("doc_id") + 1000000L).as("doc_id"),
+        concat(col("text"), lit(" near duplicate tail")).as("text"))
+
+  /** Documents seeded with a 10-token boilerplate prefix on every
+    * doc_id % 10 == 1 doc, so the span and suffix dedup operators find
+    * the same repeated passage at every scale factor.
+    */
+  private def boilerplateDocs(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "documents").select(col("doc_id"),
+      when(col("doc_id") % 10 === 1,
+        concat(lit("subscribe to our newsletter for updates terms of service apply "), col("text")))
+        .otherwise(col("text")).as("text"))
+
+  /** [[boilerplateDocs]] as the oracles state it, after a CTE header;
+    * its last line is `  FROM documents`.
+    */
+  private[queries] val boilerplateDocsSql =
+    """  SELECT doc_id,
+      |    CASE WHEN doc_id % 10 = 1
+      |         THEN 'subscribe to our newsletter for updates terms of service apply ' || text
+      |         ELSE text END AS text
+      |  FROM documents""".stripMargin
+
+  /** [[docsWithNearDups]]' rows as the oracles state them, after a
+    * `base AS (` line (the column aliases come from the first SELECT).
+    */
+  private[queries] val nearDupRowsSql =
+    """  SELECT doc_id, text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 1000000, text || ' near duplicate tail'
+      |  FROM documents WHERE doc_id % 50 = 0),""".stripMargin
+
   /** Shared prefix of the curation pipelines: planted corpus (near-dup
     * tails at `% 50`, exact copies at `% 40`), Gopher quality gate —
     * both frames LAZY, callers persist what they reuse.
@@ -1087,6 +676,50 @@ object Dedup {
       .filter(TF.gopherKeep(col("__ws")))
     (withExact, quality)
   }
+
+  /** The curation oracles' replay of [[curationPrefix]] and
+    * [[curationExactDedup]]: the planted corpus `alle`, its tokens, the
+    * Gopher gate `gq`, the md5 exact-dedup survivors `ek` and their
+    * distinct word-3-gram lists `sh`.
+    */
+  private[queries] val curationHeadSql =
+    raw"""WITH RECURSIVE base AS (
+         |$nearDupRowsSql
+         |alle AS (
+         |  SELECT doc_id, text FROM base
+         |  UNION ALL
+         |  SELECT doc_id + 3000000, text FROM base
+         |  WHERE doc_id % 40 = 0 AND doc_id < 1000000),
+         |tok AS (SELECT doc_id, text,
+         |               regexp_split_to_array(lower(trim(text)), '\s+') AS ws
+         |        FROM alle),
+         |gq AS (
+         |  SELECT doc_id, text, ws FROM (
+         |    SELECT doc_id, text, ws,
+         |      CAST(list_sum(list_transform(ws, w -> length(w))) AS DOUBLE) / len(ws) AS mwl,
+         |      CAST(list_max(list_transform(list_distinct(ws),
+         |             w -> len(list_filter(ws, x -> x = w)))) AS DOUBLE) / len(ws) AS twf,
+         |      CAST(len(bg) - len(list_distinct(bg)) AS DOUBLE) / len(bg) AS dbf
+         |    FROM (SELECT doc_id, text, ws,
+         |            CASE WHEN len(ws) >= 2
+         |                 THEN [array_to_string(ws[i:i+1], ' ') for i in range(1, len(ws))]
+         |                 ELSE [array_to_string(ws, ' ')] END AS bg
+         |          FROM tok))
+         |  WHERE mwl BETWEEN 3.0 AND 10.0 AND twf <= 0.2 AND dbf <= 0.2),
+         |ek AS (
+         |  SELECT doc_id, text, ws FROM (
+         |    SELECT doc_id, text, ws,
+         |           row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
+         |    FROM gq)
+         |  WHERE rn = 1),
+         |sh AS (
+         |  SELECT doc_id,
+         |    list_distinct(
+         |      CASE WHEN len(ws) >= 3
+         |           THEN [array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws) - 1)]
+         |           ELSE [array_to_string(ws, ' ')]
+         |      END) AS s
+         |  FROM ek),""".stripMargin
 
   /** Exact-dedup stage of the curation pipelines: min-id winner per
     * md5, returned as a semi-join of `quality` (which the caller has
@@ -1124,6 +757,59 @@ object Dedup {
       .crossJoin(broadcast(survivors.agg(count(lit(1)).as("n_near_kept"))))
       .orderBy(col("split"))
   }
+
+  /** The oracles' transitive closure `reach(id, r)` over the symmetric
+    * `edges(src, dst)`, the replay of [[Clustering.connectedComponents]].
+    */
+  private[queries] val reachSql =
+    """reach(id, r) AS (
+      |  SELECT src, src FROM edges
+      |  UNION
+      |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id)""".stripMargin
+
+  /** The curation oracles' replay of [[curationSplitCounts]] over the
+    * near-dup pairs `p`: closure, survivors, telemetry and the md5
+    * split, up to the last telemetry column.
+    */
+  private[queries] val curationSplitSql =
+    s"""edges AS (SELECT ia AS src, ib AS dst FROM p UNION SELECT ib, ia FROM p),
+       |$reachSql,
+       |comp AS (SELECT id, min(r) AS c FROM reach GROUP BY id),
+       |dropn AS (SELECT id FROM comp WHERE id <> c),
+       |surv AS (SELECT ek.doc_id, ek.ws FROM ek
+       |         LEFT JOIN dropn d ON ek.doc_id = d.id WHERE d.id IS NULL),
+       |tele AS (SELECT
+       |  (SELECT count(*) FROM alle) AS n_input,
+       |  (SELECT count(*) FROM gq) AS n_quality,
+       |  (SELECT count(*) FROM ek) AS n_exact_kept,
+       |  (SELECT count(*) FROM surv) AS n_near_kept),
+       |spl AS (SELECT doc_id, len(ws) AS nt,
+       |  CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 100 AS bkt
+       |  FROM surv)
+       |SELECT CASE WHEN bkt < 90 THEN 'train'
+       |            WHEN bkt < 95 THEN 'val' ELSE 'test' END AS split,
+       |  CAST(count(*) AS BIGINT) AS n_docs,
+       |  CAST(sum(nt) AS BIGINT) AS total_tokens,
+       |  CAST(t.n_input AS BIGINT) AS n_input,
+       |  CAST(t.n_quality AS BIGINT) AS n_quality,
+       |  CAST(t.n_exact_kept AS BIGINT) AS n_exact_kept,
+       |  CAST(t.n_near_kept AS BIGINT) AS n_near_kept""".stripMargin
+
+  /** The lossless and strategy-agreement oracles' exact all-pairs
+    * verify over `sh`: the near-dup pairs `p` [[curationStages]] stages.
+    */
+  private[queries] val curationExactPairsSql =
+    """gr AS (SELECT doc_id, unnest(s) AS g FROM sh),
+      |szs AS (SELECT doc_id, len(s) AS n FROM sh),
+      |cmn AS (
+      |  SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS c
+      |  FROM gr a JOIN gr b ON a.g = b.g AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2),
+      |p AS (
+      |  SELECT ia, ib FROM cmn
+      |  JOIN szs sa ON ia = sa.doc_id
+      |  JOIN szs sb ON ib = sb.doc_id
+      |  WHERE c * 1000000 // (sa.n + sb.n - c) >= 500000),""".stripMargin
 
   /** The curation pipelines' shared staged stages, built once per
     * (session, dir) — both variants consume the same quality gate,
@@ -1289,6 +975,57 @@ object Dedup {
         shingleSize = 3, minJaccardMicro = 500000L)
       .orderBy(col("id_a"), col("id_b"))
 
+  /** The oracles' signature lists `sigs` over `minh(id, seed, mh)` and
+    * their 8 band hashes `banded`.
+    */
+  private[queries] val minhashBandsSql =
+    """sigs AS (SELECT id, list(mh ORDER BY seed) AS sig FROM minh GROUP BY id),
+      |banded AS (
+      |  SELECT id, b.band,
+      |    md5(array_to_string(sig[b.band*4+1 : b.band*4+4], '|')) AS bh
+      |  FROM sigs CROSS JOIN generate_series(0, 7) b(band)),""".stripMargin
+
+  /** The oracles' portable-md5 signatures over `toks(id, t)`: word-3-gram
+    * shingles, 32 seeded minimums, then [[minhashBandsSql]].
+    */
+  private[queries] val minhashSignaturesSql =
+    s"""grams AS (
+       |  SELECT id,
+       |    CASE WHEN len(t) >= 3
+       |      THEN list_transform(generate_series(1, len(t)-2), i -> array_to_string(t[i:i+2], ' '))
+       |      ELSE [array_to_string(t, ' ')] END AS g
+       |  FROM toks),
+       |shing AS (SELECT DISTINCT id, unnest(g) AS sh FROM grams),
+       |minh AS (
+       |  SELECT id, s.seed, min(md5(s.seed::varchar || ':' || sh)) AS mh
+       |  FROM shing CROSS JOIN generate_series(0, 31) s(seed)
+       |  GROUP BY id, s.seed),
+       |$minhashBandsSql""".stripMargin
+
+  /** The oracles' replay of [[minhashCandidates]]: the near-dup corpus,
+    * its signatures and band buckets under the size guard, the
+    * candidate pairs, and their agreement estimate `est` up to its last
+    * join.
+    */
+  private[queries] val minhashLshSql =
+    raw"""WITH base AS (
+         |$nearDupRowsSql
+         |toks AS (
+         |  SELECT doc_id AS id, string_split_regex(lower(trim(text)), '\s+') AS t FROM base),
+         |$minhashSignaturesSql
+         |buck AS (SELECT band, bh FROM banded GROUP BY band, bh HAVING count(*) <= 2000),
+         |bounded AS (SELECT banded.id, banded.band, banded.bh FROM banded JOIN buck USING (band, bh)),
+         |cand AS (
+         |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
+         |  FROM bounded a JOIN bounded b USING (band, bh)
+         |  WHERE a.id < b.id),
+         |est AS (
+         |  SELECT c.id_a, c.id_b,
+         |    len(list_filter(generate_series(1, 32), i -> sa.sig[i] = sb.sig[i])) / 32.0 AS est_jaccard
+         |  FROM cand c
+         |  JOIN sigs sa ON sa.id = c.id_a
+         |  JOIN sigs sb ON sb.id = c.id_b""".stripMargin
+
   private def minhashCandidates(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     SessionScopedCache.getOrElseUpdate(s, "lsh:" + dir) {
       val docs = docsWithNearDups(s, dir)
@@ -1375,6 +1112,37 @@ object Dedup {
         TextDedup.bbitEstimateMicro(col("agree_bbit"), 32, 4))
       .orderBy(col("id_a"), col("id_b"))
   }
+
+  /** The oracles' exact all-pairs truth set that [[ngramJaccardPairs]]
+    * equals, after a `docs AS (` line: the near-dup corpus, its
+    * distinct word-3-gram lists `sh` and one row per shingle `g`.
+    */
+  private[queries] val ngramShinglesSql =
+    raw"""  SELECT doc_id, text FROM documents
+         |  UNION ALL
+         |  SELECT doc_id + 1000000 AS doc_id, text || ' near duplicate tail' AS text
+         |  FROM documents WHERE doc_id % 50 = 0),
+         |sh AS (
+         |  SELECT doc_id,
+         |    list_distinct(
+         |      CASE WHEN len(regexp_split_to_array(lower(trim(text)), '\s+')) >= 3
+         |           THEN [array_to_string(regexp_split_to_array(lower(trim(text)), '\s+')[i:i+2], ' ')
+         |                 for i in range(1, len(regexp_split_to_array(lower(trim(text)), '\s+')) - 1)]
+         |           ELSE [array_to_string(regexp_split_to_array(lower(trim(text)), '\s+'), ' ')]
+         |      END) AS s
+         |  FROM docs),
+         |g AS (SELECT doc_id, unnest(s) AS g FROM sh),""".stripMargin
+
+  /** [[ngramShinglesSql]] with each doc's shingle count `sz` and each
+    * pair's shared-shingle count `common`.
+    */
+  private[queries] val ngramCommonSql =
+    s"""$ngramShinglesSql
+       |sz AS (SELECT doc_id, len(s) AS n FROM sh),
+       |common AS (
+       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
+       |  FROM g a JOIN g b ON a.g = b.g AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2)""".stripMargin
 
   /** Exact word-3-gram Jaccard verification of the LSH candidates.
     *
@@ -1715,11 +1483,8 @@ object Dedup {
     val store = SessionScopedCache.getOrElseUpdate(s, "minhash-store:" + dir)(
       TextDedup.buildMinhashStore(docs, "doc_id", "text",
         scheme = TextDedup.PortableMd5Scheme))
-    val incoming = docs.filter(col("doc_id") % 100 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"),
-        concat(col("text"), lit(" near duplicate tail")).as("text"))
     TextDedup
-      .minhashAgainstStore(incoming, store, "doc_id", "text",
+      .minhashAgainstStore(nearDupIncrement(docs), store, "doc_id", "text",
         scheme = TextDedup.PortableMd5Scheme)
       .select(col("id").as("doc_id"), col("store_id"), col("est_jaccard"))
       .orderBy(col("doc_id"), col("store_id"))
@@ -1744,11 +1509,8 @@ object Dedup {
       live.unpersist()
       TextDedup.loadMinhashStore(s, path)
     }
-    val incoming = docs.filter(col("doc_id") % 100 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"),
-        concat(col("text"), lit(" near duplicate tail")).as("text"))
     TextDedup
-      .minhashAgainstStore(incoming, store, "doc_id", "text",
+      .minhashAgainstStore(nearDupIncrement(docs), store, "doc_id", "text",
         scheme = TextDedup.PortableMd5Scheme)
       .select(col("id").as("doc_id"), col("store_id"), col("est_jaccard"))
       .orderBy(col("doc_id"), col("store_id"))
@@ -1785,12 +1547,7 @@ object Dedup {
     * prefixes (monotone, so a filter-count is the LCP), filter >= 5.
     */
   private def suffixRepeats(s: SparkSession, dir: String): DataFrame = {
-    val boiler = "subscribe to our newsletter for updates terms of service apply"
-    val seeded = Tables(s, dir, "documents")
-      .filter(col("doc_id") < 200)
-      .select(col("doc_id"),
-        when(col("doc_id") % 10 === 1, concat(lit(boiler + " "), col("text")))
-          .otherwise(col("text")).as("text"))
+    val seeded = boilerplateDocs(s, dir).filter(col("doc_id") < 200)
     val ix = SessionScopedCache.getOrElseUpdate(s, "suffix:" + dir + "#repeats")(
       graft.operators.SuffixArray.build(seeded, "doc_id", "text", maxTokens = 30))
     val out = graft.operators.SuffixArray.repeatedSpans(ix, minLen = 5)
@@ -1812,12 +1569,7 @@ object Dedup {
     * cross-representation hash match.
     */
   private def suffixDedupSpans(s: SparkSession, dir: String): DataFrame = {
-    val boiler = "subscribe to our newsletter for updates terms of service apply"
-    val seeded = Tables(s, dir, "documents")
-      .filter(col("doc_id") < 120)
-      .select(col("doc_id"),
-        when(col("doc_id") % 10 === 1, concat(lit(boiler + " "), col("text")))
-          .otherwise(col("text")).as("text"))
+    val seeded = boilerplateDocs(s, dir).filter(col("doc_id") < 120)
     val ix = SessionScopedCache.getOrElseUpdate(s, "suffix:" + dir + "#dedup-spans")(
       graft.operators.SuffixArray.build(seeded, "doc_id", "text"))
     val out = graft.operators.SuffixArray
@@ -1829,6 +1581,47 @@ object Dedup {
     out
   }
 
+  /** The span oracles' word 8-gram windows over `d0`: tokens `t`,
+    * window starts `g` and the grams that occur twice, `dup`.
+    */
+  private[queries] val spanGramsSql =
+    raw"""t AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM d0),
+         |g0 AS (
+         |  SELECT doc_id,
+         |    unnest([{'s': i, 'g': array_to_string(ws[i:i+7], ' ')}
+         |            for i in range(1, greatest(len(ws) - 6, 1))]) AS e
+         |  FROM t),
+         |g AS (SELECT doc_id, e.s AS start, e.g AS gram FROM g0),
+         |dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),""".stripMargin
+
+  /** The span oracles' reassembly from tokens `p0` and covered
+    * positions `cov`: kept tokens and clean text per doc of `t`.
+    */
+  private[queries] val spanKeptSql =
+    """p AS (SELECT doc_id, e.p AS pos, e.tok AS tok FROM p0),
+      |kept AS (
+      |  SELECT p.doc_id, count(*) AS kept_tokens,
+      |    string_agg(p.tok, ' ' ORDER BY p.pos) AS clean_text
+      |  FROM p LEFT JOIN cov ON p.doc_id = cov.doc_id AND p.pos = cov.pos
+      |  WHERE cov.pos IS NULL
+      |  GROUP BY p.doc_id)
+      |SELECT t.doc_id,
+      |  CAST(len(t.ws) AS BIGINT) AS n_tokens,
+      |  CAST(len(t.ws) - coalesce(k.kept_tokens, 0) AS BIGINT) AS removed_tokens,
+      |  coalesce(k.clean_text, '') AS clean_text
+      |FROM t LEFT JOIN kept k ON t.doc_id = k.doc_id""".stripMargin
+
+  /** The span oracles' tail over the covered positions `cov0` of every
+    * doc: [[spanKeptSql]] for all of `t`.
+    */
+  private[queries] val spanTailSql =
+    s"""cov AS (SELECT DISTINCT doc_id, pos FROM cov0),
+       |p0 AS (
+       |  SELECT doc_id, unnest([{'p': i, 'tok': ws[i]} for i in range(1, len(ws) + 1)]) AS e
+       |  FROM t),
+       |$spanKeptSql
+       |ORDER BY t.doc_id""".stripMargin
+
   /** Span-level exact-substring dedup over documents seeded with a
     * 10-token boilerplate prefix on every doc_id % 10 == 1 doc: the
     * boilerplate's 8-token windows duplicate across those docs, so
@@ -1838,11 +1631,7 @@ object Dedup {
     * reassembled clean text all replay in SQL.
     */
   private def dedupSpans(s: SparkSession, dir: String): DataFrame = {
-    val boiler = "subscribe to our newsletter for updates terms of service apply"
-    val seeded = Tables(s, dir, "documents").select(
-      col("doc_id"),
-      when(col("doc_id") % 10 === 1, concat(lit(boiler + " "), col("text")))
-        .otherwise(col("text")).as("text"))
+    val seeded = boilerplateDocs(s, dir)
     // string gram keys: the SQL-replayable scheme (the xxhash64 default
     // is the 100 TB path; IncrementalDedupSpec proves span-identity)
     TextDedup.removeDupSpans(seeded, "doc_id", "text", k = 8, hashedGramKeys = false)
@@ -1862,11 +1651,7 @@ object Dedup {
     * without re-exploding the corpus side.
     */
   private def dedupIncrementalSpans(s: SparkSession, dir: String): DataFrame = {
-    val boiler = "subscribe to our newsletter for updates terms of service apply"
-    val seeded = Tables(s, dir, "documents").select(
-      col("doc_id"),
-      when(col("doc_id") % 10 === 1, concat(lit(boiler + " "), col("text")))
-        .otherwise(col("text")).as("text"))
+    val seeded = boilerplateDocs(s, dir)
     val store = SessionScopedCache.getOrElseUpdate(s, "span-store:" + dir + "#spans")(
       TextDedup.buildSpanStore(seeded.filter(col("doc_id") % 50 =!= 7), "doc_id", "text",
         k = 8, hashedGramKeys = false))
@@ -1884,11 +1669,7 @@ object Dedup {
     * disk. Oracle-gated with the live twin's SQL verbatim.
     */
   private def dedupIncrementalSpansPersisted(s: SparkSession, dir: String): DataFrame = {
-    val boiler = "subscribe to our newsletter for updates terms of service apply"
-    val seeded = Tables(s, dir, "documents").select(
-      col("doc_id"),
-      when(col("doc_id") % 10 === 1, concat(lit(boiler + " "), col("text")))
-        .otherwise(col("text")).as("text"))
+    val seeded = boilerplateDocs(s, dir)
     val store = SessionScopedCache.getOrElseUpdate(s, "span-store:" + dir + "#spans-persisted") {
       val live = TextDedup.buildSpanStore(seeded.filter(col("doc_id") % 50 =!= 7),
         "doc_id", "text", k = 8, hashedGramKeys = false)

@@ -14,32 +14,18 @@ object Graph {
     // PageRank: 3 power iterations unrolled as CTEs on the integer
     // micro-grid — floor divisions replay exactly, no float anywhere
     Query("page_rank", pageRankQ)(
-      """WITH nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
-        |edges AS (
-        |  SELECT doc_id AS src, (doc_id * 7 + j.i) % nn.n AS dst
-        |  FROM documents, nn, generate_series(1, 3) AS j(i)
-        |  WHERE (doc_id * 7 + j.i) % nn.n <> doc_id),
-        |outdeg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
+      s"""$linkGraphSql
         |nodes AS (SELECT doc_id AS node FROM documents),
         |r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM nodes),
-        |c1 AS (
-        |  SELECT e.dst AS node, sum(r0.r // o.d) AS c
-        |  FROM edges e JOIN r0 ON e.src = r0.node JOIN outdeg o ON e.src = o.src
-        |  GROUP BY e.dst),
+        |${pageRankContribSql(1)}
         |r1 AS (
         |  SELECT n.node, CAST(150000 + coalesce((c.c * 85) // 100, 0) AS BIGINT) AS r
         |  FROM nodes n LEFT JOIN c1 c ON n.node = c.node),
-        |c2 AS (
-        |  SELECT e.dst AS node, sum(r1.r // o.d) AS c
-        |  FROM edges e JOIN r1 ON e.src = r1.node JOIN outdeg o ON e.src = o.src
-        |  GROUP BY e.dst),
+        |${pageRankContribSql(2)}
         |r2 AS (
         |  SELECT n.node, CAST(150000 + coalesce((c.c * 85) // 100, 0) AS BIGINT) AS r
         |  FROM nodes n LEFT JOIN c2 c ON n.node = c.node),
-        |c3 AS (
-        |  SELECT e.dst AS node, sum(r2.r // o.d) AS c
-        |  FROM edges e JOIN r2 ON e.src = r2.node JOIN outdeg o ON e.src = o.src
-        |  GROUP BY e.dst),
+        |${pageRankContribSql(3)}
         |r3 AS (
         |  SELECT n.node, CAST(150000 + coalesce((c.c * 85) // 100, 0) AS BIGINT) AS r
         |  FROM nodes n LEFT JOIN c3 c ON n.node = c.node)
@@ -48,34 +34,20 @@ object Graph {
     // personalized PageRank: seed-conditional teleport + start vector,
     // same unrolled integer iterations
     Query("page_rank_personalized", pageRankPersonalizedQ)(
-      """WITH nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
-        |edges AS (
-        |  SELECT doc_id AS src, (doc_id * 7 + j.i) % nn.n AS dst
-        |  FROM documents, nn, generate_series(1, 3) AS j(i)
-        |  WHERE (doc_id * 7 + j.i) % nn.n <> doc_id),
-        |outdeg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
+      s"""$linkGraphSql
         |nodes AS (SELECT doc_id AS node,
         |                 CASE WHEN doc_id % 100 = 0 THEN 1 ELSE 0 END AS s
         |          FROM documents),
         |r0 AS (SELECT node, CAST(s * 1000000 AS BIGINT) AS r FROM nodes),
-        |c1 AS (
-        |  SELECT e.dst AS node, sum(r0.r // o.d) AS c
-        |  FROM edges e JOIN r0 ON e.src = r0.node JOIN outdeg o ON e.src = o.src
-        |  GROUP BY e.dst),
+        |${pageRankContribSql(1)}
         |r1 AS (
         |  SELECT n.node, CAST(n.s * 150000 + coalesce((c.c * 85) // 100, 0) AS BIGINT) AS r
         |  FROM nodes n LEFT JOIN c1 c ON n.node = c.node),
-        |c2 AS (
-        |  SELECT e.dst AS node, sum(r1.r // o.d) AS c
-        |  FROM edges e JOIN r1 ON e.src = r1.node JOIN outdeg o ON e.src = o.src
-        |  GROUP BY e.dst),
+        |${pageRankContribSql(2)}
         |r2 AS (
         |  SELECT n.node, CAST(n.s * 150000 + coalesce((c.c * 85) // 100, 0) AS BIGINT) AS r
         |  FROM nodes n LEFT JOIN c2 c ON n.node = c.node),
-        |c3 AS (
-        |  SELECT e.dst AS node, sum(r2.r // o.d) AS c
-        |  FROM edges e JOIN r2 ON e.src = r2.node JOIN outdeg o ON e.src = o.src
-        |  GROUP BY e.dst),
+        |${pageRankContribSql(3)}
         |r3 AS (
         |  SELECT n.node, CAST(n.s * 150000 + coalesce((c.c * 85) // 100, 0) AS BIGINT) AS r
         |  FROM nodes n LEFT JOIN c3 c ON n.node = c.node)
@@ -232,24 +204,30 @@ object Graph {
     // same fixture, same closed-form answer: the engine side runs the
     // DISTRIBUTED peel (driverMaxEdges=0), so the fallback's
     // correctness is driver-checked every round
-    Query("graph_coreness_distributed", graphCorenessDistributed)(
-      """WITH users AS (
-        |  SELECT DISTINCT user_id AS u FROM events WHERE user_id < 100),
-        |gs AS (SELECT u // 10 AS g, count(*) AS sz FROM users GROUP BY 1),
-        |cliq AS (SELECT u AS id, sz - 1 AS c FROM users
-        |         JOIN gs ON u // 10 = g WHERE sz >= 2),
-        |anch AS (SELECT u FROM users WHERE u % 10 = 0),
-        |chain AS (
-        |  SELECT u + 1000 AS id, 1 AS c FROM anch
-        |  UNION ALL SELECT u + 2000, 1 FROM anch
-        |  UNION ALL SELECT u + 3000, 1 FROM anch),
-        |lone AS (SELECT u AS id, 1 AS c FROM anch
-        |         JOIN gs ON u // 10 = g WHERE sz = 1)
-        |SELECT id, CAST(c AS BIGINT) AS coreness FROM (
-        |  SELECT * FROM cliq UNION ALL SELECT * FROM chain
-        |  UNION ALL SELECT * FROM lone)
-        |ORDER BY id""".stripMargin),
+    Query.sharing("graph_coreness_distributed", graphCorenessDistributed,
+      oracleOf = "graph_coreness"),
   )
+
+  /** The PageRank oracles' synthetic link graph: 3 out-edges per
+    * document, `dst = (src*7 + j) mod N` without self-loops, and the
+    * out-degrees.
+    */
+  private[queries] val linkGraphSql =
+    """WITH nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
+      |edges AS (
+      |  SELECT doc_id AS src, (doc_id * 7 + j.i) % nn.n AS dst
+      |  FROM documents, nn, generate_series(1, 3) AS j(i)
+      |  WHERE (doc_id * 7 + j.i) % nn.n <> doc_id),
+      |outdeg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),""".stripMargin
+
+  /** The contributions `c$i` that power iteration `i` sends along the
+    * edges from the ranks `r{i-1}`, floor-divided by out-degree.
+    */
+  private def pageRankContribSql(i: Int): String =
+    s"""c$i AS (
+       |  SELECT e.dst AS node, sum(r${i - 1}.r // o.d) AS c
+       |  FROM edges e JOIN r${i - 1} ON e.src = r${i - 1}.node JOIN outdeg o ON e.src = o.src
+       |  GROUP BY e.dst),""".stripMargin
 
   /** Integer-grid PageRank over a deterministic synthetic link graph
     * (3 out-edges per document, `dst = (src*7 + j) mod N`, self-loops
@@ -295,6 +273,21 @@ object Graph {
       .limit(50)
   }
 
+  /** The distinct event users below `limit` and the planted clique
+    * edges among them: every pair of users in one decade
+    * (`user_id div 10`), once, `id_a < id_b`.
+    */
+  private def decadeCliques(s: SparkSession, dir: String, limit: Int): (DataFrame, DataFrame) = {
+    val users = Tables(s, dir, "events")
+      .select(col("user_id")).distinct().filter(col("user_id") < limit)
+    val a = users.select(col("user_id").as("id_a"), expr("user_id div 10").as("__d"))
+    val b = users.select(col("user_id").as("id_b"), expr("user_id div 10").as("__d"))
+    val clique = a.join(b, Seq("__d"))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"))
+    (users, clique)
+  }
+
   /** Label-propagation communities over a bridged-clique user graph
     * (decade cliques joined by single bridge edges): two synchronous
     * majority rounds keep the cliques apart where connected
@@ -305,13 +298,7 @@ object Graph {
     * label counts, argmax with ties to the smallest label).
     */
   private def graphCommunities(s: SparkSession, dir: String): DataFrame = {
-    val users = Tables(s, dir, "events")
-      .select(col("user_id")).distinct().filter(col("user_id") < 150)
-    val a = users.select(col("user_id").as("id_a"), expr("user_id div 10").as("__d"))
-    val b = users.select(col("user_id").as("id_b"), expr("user_id div 10").as("__d"))
-    val clique = a.join(b, Seq("__d"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
+    val (users, clique) = decadeCliques(s, dir, 150)
     val bridges = users
       .filter(col("user_id") % 10 === 9 && col("user_id") < 140)
       .select(col("user_id").as("id_a"), (col("user_id") + 1).as("id_b"))
@@ -335,13 +322,7 @@ object Graph {
     * replays the wedge+closing-edge joins and the integral lcc grid.
     */
   private def graphTriangles(s: SparkSession, dir: String): DataFrame = {
-    val users = Tables(s, dir, "events")
-      .select(col("user_id")).distinct().filter(col("user_id") < 150)
-    val a = users.select(col("user_id").as("id_a"), expr("user_id div 10").as("__d"))
-    val b = users.select(col("user_id").as("id_b"), expr("user_id div 10").as("__d"))
-    val clique = a.join(b, Seq("__d"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
+    val (users, clique) = decadeCliques(s, dir, 150)
     val bridges = users
       .filter(col("user_id") % 10 === 9 && col("user_id") < 140)
       .select(col("user_id").as("id_a"), (col("user_id") + 1).as("id_b"))
@@ -359,25 +340,10 @@ object Graph {
     * agreement proves the fixpoint landed exactly where the
     * closed-form peel says (the LPA unrolled-rounds gate pattern).
     */
-  private def graphKcore(s: SparkSession, dir: String): DataFrame = {
-    val users = Tables(s, dir, "events")
-      .select(col("user_id")).distinct().filter(col("user_id") < 100)
-    val a = users.select(col("user_id").as("id_a"), expr("user_id div 10").as("__d"))
-    val b = users.select(col("user_id").as("id_b"), expr("user_id div 10").as("__d"))
-    val clique = a.join(b, Seq("__d"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-    val anchors = users.filter(col("user_id") % 10 === 0)
-    val chains = anchors
-      .select(col("user_id").as("id_a"), (col("user_id") + 1000).as("id_b"))
-      .unionByName(anchors.select((col("user_id") + 1000).as("id_a"),
-        (col("user_id") + 2000).as("id_b")))
-      .unionByName(anchors.select((col("user_id") + 2000).as("id_a"),
-        (col("user_id") + 3000).as("id_b")))
+  private def graphKcore(s: SparkSession, dir: String): DataFrame =
     graft.operators.Graphs
-      .kCore(clique.unionByName(chains), "id_a", "id_b", k = 2)
+      .kCore(corenessFixtureEdges(s, dir), "id_a", "id_b", k = 2)
       .orderBy(col("id"))
-  }
 
   /** Approximate neighborhood function ([[graft.operators.Graphs
     * .hyperBall]]) vs its exact all-pairs twin ([[graft.operators
@@ -396,13 +362,7 @@ object Graph {
     * exact twin measures, or row counts diverge from the oracle.
     */
   private def graphAnf(s: SparkSession, dir: String): DataFrame = {
-    val users = Tables(s, dir, "events")
-      .select(col("user_id")).distinct().filter(col("user_id") < 40)
-    val a = users.select(col("user_id").as("id_a"), expr("user_id div 10").as("__d"))
-    val b = users.select(col("user_id").as("id_b"), expr("user_id div 10").as("__d"))
-    val clique = a.join(b, Seq("__d"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
+    val (users, clique) = decadeCliques(s, dir, 40)
     val bridges = users
       .filter(col("user_id") % 10 === 9 && col("user_id") < 30)
       .select(col("user_id").as("id_a"), (col("user_id") + 1).as("id_b"))
@@ -429,13 +389,7 @@ object Graph {
     * unreached-absent — is same-chain replay at any SF.
     */
   private def graphBfs(s: SparkSession, dir: String): DataFrame = {
-    val users = Tables(s, dir, "events")
-      .select(col("user_id")).distinct().filter(col("user_id") < 100)
-    val a = users.select(col("user_id").as("id_a"), expr("user_id div 10").as("__d"))
-    val b = users.select(col("user_id").as("id_b"), expr("user_id div 10").as("__d"))
-    val clique = a.join(b, Seq("__d"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
+    val (users, clique) = decadeCliques(s, dir, 100)
     val bridges = users
       .filter(col("user_id") % 10 === 9 && col("user_id") < 90)
       .select(col("user_id").as("id_a"), (col("user_id") + 1).as("id_b"))
@@ -453,13 +407,7 @@ object Graph {
     * states in closed form.
     */
   private def corenessFixtureEdges(s: SparkSession, dir: String): DataFrame = {
-    val users = Tables(s, dir, "events")
-      .select(col("user_id")).distinct().filter(col("user_id") < 100)
-    val a = users.select(col("user_id").as("id_a"), expr("user_id div 10").as("__d"))
-    val b = users.select(col("user_id").as("id_b"), expr("user_id div 10").as("__d"))
-    val clique = a.join(b, Seq("__d"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
+    val (users, clique) = decadeCliques(s, dir, 100)
     val anchors = users.filter(col("user_id") % 10 === 0)
     val chains = anchors
       .select(col("user_id").as("id_a"), (col("user_id") + 1000).as("id_b"))

@@ -121,15 +121,7 @@ object LanguageModels {
       val segIt = UlmEmIters + 1
       s"""WITH RECURSIVE ${ulmChainSql(None)},
          |${ulmDpSql(segIt, UlmEmIters)},
-         |dt AS MATERIALIZED (
-         |  SELECT doc_id, p.tok AS tok, p.ord AS ord
-         |  FROM (
-         |    SELECT doc_id,
-         |      unnest([{'tok': ws[k], 'ord': k} for k in range(1, len(ws) + 1)]) AS p
-         |    FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws
-         |          FROM documents WHERE doc_id < 10))),
-         |st AS MATERIALIZED (
-         |  SELECT d.doc_id, d.ord, array_to_string(s.ps, ' ') AS pstr
+         |$segmentTokensSql
          |  FROM dt d JOIN sg$segIt s ON s.w = d.tok)
          |SELECT doc_id, string_agg(pstr, ' ' ORDER BY ord) AS segmented
          |FROM st GROUP BY doc_id ORDER BY doc_id""".stripMargin
@@ -162,15 +154,7 @@ object LanguageModels {
          |  FROM wm k JOIN gm g ON g.w = k.w AND g.i = k.pos
          |  WHERE k.pos <= k.len),
          |sgm AS MATERIALIZED (SELECT w, ps FROM wm WHERE pos = len + 1),
-         |dt AS MATERIALIZED (
-         |  SELECT doc_id, p.tok AS tok, p.ord AS ord
-         |  FROM (
-         |    SELECT doc_id,
-         |      unnest([{'tok': ws[k], 'ord': k} for k in range(1, len(ws) + 1)]) AS p
-         |    FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws
-         |          FROM documents WHERE doc_id < 10))),
-         |st AS MATERIALIZED (
-         |  SELECT d.doc_id, d.ord, array_to_string(s.ps, ' ') AS pstr
+         |$segmentTokensSql
          |  FROM dt d JOIN sgm s ON s.w = d.tok)
          |SELECT doc_id, string_agg(pstr, ' ' ORDER BY ord) AS segmented
          |FROM st GROUP BY doc_id ORDER BY doc_id""".stripMargin
@@ -386,6 +370,21 @@ object LanguageModels {
   private def ulmTrainQ(s: SparkSession, dir: String): DataFrame =
     graft.operators.UnigramLm
       .vocabTable(Tables(s, dir, "documents"), "text", ulmVocab(s, dir))
+
+  /** The segmentation oracles' tokens of the first 10 documents in
+    * order, `dt`, and the head of `st`, which maps each to its pieces
+    * `s.ps`; the caller names the segmented-word table `s`.
+    */
+  private[queries] val segmentTokensSql =
+    """dt AS MATERIALIZED (
+      |  SELECT doc_id, p.tok AS tok, p.ord AS ord
+      |  FROM (
+      |    SELECT doc_id,
+      |      unnest([{'tok': ws[k], 'ord': k} for k in range(1, len(ws) + 1)]) AS p
+      |    FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws
+      |          FROM documents WHERE doc_id < 10))),
+      |st AS MATERIALIZED (
+      |  SELECT d.doc_id, d.ord, array_to_string(s.ps, ' ') AS pstr""".stripMargin
 
   /** Unigram-LM Viterbi segmentation of the first 10 documents under
     * the trained vocabulary — the serving side, a pure per-row fold

@@ -92,65 +92,13 @@ object Layout {
     // z-order: range-normalized buckets, the 16-term Morton bit sum,
     // value-range file split, per-file min/max windows
     Query("zorder_layout", zorderLayout)(
-      """WITH t AS (SELECT CAST(o_custkey AS BIGINT) AS a,
-        |                  CAST(o_orderkey AS BIGINT) AS b FROM orders),
-        |bounds AS (SELECT min(a) AS mna, max(a) AS mxa,
-        |                  min(b) AS mnb, max(b) AS mxb FROM t),
-        |bk AS (SELECT a, b,
-        |  (a - mna) * 256 // (mxa - mna + 1) AS ba,
-        |  (b - mnb) * 256 // (mxb - mnb + 1) AS bb
-        |  FROM t, bounds),
-        |z AS (SELECT a, b,
-        |  ((ba // 1) % 2) * 2 + ((ba // 2) % 2) * 8 +
-        |  ((ba // 4) % 2) * 32 + ((ba // 8) % 2) * 128 +
-        |  ((ba // 16) % 2) * 512 + ((ba // 32) % 2) * 2048 +
-        |  ((ba // 64) % 2) * 8192 + ((ba // 128) % 2) * 32768 +
-        |  ((bb // 1) % 2) * 1 + ((bb // 2) % 2) * 4 +
-        |  ((bb // 4) % 2) * 16 + ((bb // 8) % 2) * 64 +
-        |  ((bb // 16) % 2) * 256 + ((bb // 32) % 2) * 1024 +
-        |  ((bb // 64) % 2) * 4096 + ((bb // 128) % 2) * 16384 AS zv
-        |  FROM bk),
-        |zb AS (SELECT min(zv) AS zmn, max(zv) AS zmx FROM z),
-        |f AS (SELECT a, b, (zv - zmn) * 16 // (zmx - zmn + 1) AS file_id
-        |      FROM z, zb)
-        |SELECT CAST(file_id AS BIGINT) AS file_id,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(min(a) AS BIGINT) AS min_o_custkey,
-        |  CAST(max(a) AS BIGINT) AS max_o_custkey,
-        |  CAST(min(b) AS BIGINT) AS min_o_orderkey,
-        |  CAST(max(b) AS BIGINT) AS max_o_orderkey
+      s"""$zorderFilesSql
         |FROM f GROUP BY file_id ORDER BY file_id""".stripMargin),
     // manifest gate: same replay as zorder_layout (the write is the
     // same deterministic file split); footer_ok asserted true — the
     // footer==scan agreement check runs in-plan Spark-side
     Query("file_manifest_stats", fileManifestStats)(
-      """WITH t AS (SELECT CAST(o_custkey AS BIGINT) AS a,
-        |                  CAST(o_orderkey AS BIGINT) AS b FROM orders),
-        |bounds AS (SELECT min(a) AS mna, max(a) AS mxa,
-        |                  min(b) AS mnb, max(b) AS mxb FROM t),
-        |bk AS (SELECT a, b,
-        |  (a - mna) * 256 // (mxa - mna + 1) AS ba,
-        |  (b - mnb) * 256 // (mxb - mnb + 1) AS bb
-        |  FROM t, bounds),
-        |z AS (SELECT a, b,
-        |  ((ba // 1) % 2) * 2 + ((ba // 2) % 2) * 8 +
-        |  ((ba // 4) % 2) * 32 + ((ba // 8) % 2) * 128 +
-        |  ((ba // 16) % 2) * 512 + ((ba // 32) % 2) * 2048 +
-        |  ((ba // 64) % 2) * 8192 + ((ba // 128) % 2) * 32768 +
-        |  ((bb // 1) % 2) * 1 + ((bb // 2) % 2) * 4 +
-        |  ((bb // 4) % 2) * 16 + ((bb // 8) % 2) * 64 +
-        |  ((bb // 16) % 2) * 256 + ((bb // 32) % 2) * 1024 +
-        |  ((bb // 64) % 2) * 4096 + ((bb // 128) % 2) * 16384 AS zv
-        |  FROM bk),
-        |zb AS (SELECT min(zv) AS zmn, max(zv) AS zmx FROM z),
-        |f AS (SELECT a, b, (zv - zmn) * 16 // (zmx - zmn + 1) AS file_id
-        |      FROM z, zb)
-        |SELECT CAST(file_id AS BIGINT) AS file_id,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(min(a) AS BIGINT) AS min_o_custkey,
-        |  CAST(max(a) AS BIGINT) AS max_o_custkey,
-        |  CAST(min(b) AS BIGINT) AS min_o_orderkey,
-        |  CAST(max(b) AS BIGINT) AS max_o_orderkey,
+      s"""$zorderFilesSql,
         |  true AS footer_ok
         |FROM f GROUP BY file_id ORDER BY file_id""".stripMargin),
     // manifest-pruned reads: pruning is conservative-lossless, so the
@@ -178,6 +126,39 @@ object Layout {
         |FROM orders WHERE o_custkey BETWEEN 100 AND 180
         |GROUP BY 1 ORDER BY 1""".stripMargin),
   )
+
+  /** The z-order oracles' replay of [[zFileRanges]] up to the last
+    * range column: range-normalized 256-buckets, the 16-bit Morton
+    * value, the 16-way value-range file split and each file's min/max.
+    */
+  private[queries] val zorderFilesSql =
+    """WITH t AS (SELECT CAST(o_custkey AS BIGINT) AS a,
+      |                  CAST(o_orderkey AS BIGINT) AS b FROM orders),
+      |bounds AS (SELECT min(a) AS mna, max(a) AS mxa,
+      |                  min(b) AS mnb, max(b) AS mxb FROM t),
+      |bk AS (SELECT a, b,
+      |  (a - mna) * 256 // (mxa - mna + 1) AS ba,
+      |  (b - mnb) * 256 // (mxb - mnb + 1) AS bb
+      |  FROM t, bounds),
+      |z AS (SELECT a, b,
+      |  ((ba // 1) % 2) * 2 + ((ba // 2) % 2) * 8 +
+      |  ((ba // 4) % 2) * 32 + ((ba // 8) % 2) * 128 +
+      |  ((ba // 16) % 2) * 512 + ((ba // 32) % 2) * 2048 +
+      |  ((ba // 64) % 2) * 8192 + ((ba // 128) % 2) * 32768 +
+      |  ((bb // 1) % 2) * 1 + ((bb // 2) % 2) * 4 +
+      |  ((bb // 4) % 2) * 16 + ((bb // 8) % 2) * 64 +
+      |  ((bb // 16) % 2) * 256 + ((bb // 32) % 2) * 1024 +
+      |  ((bb // 64) % 2) * 4096 + ((bb // 128) % 2) * 16384 AS zv
+      |  FROM bk),
+      |zb AS (SELECT min(zv) AS zmn, max(zv) AS zmx FROM z),
+      |f AS (SELECT a, b, (zv - zmn) * 16 // (zmx - zmn + 1) AS file_id
+      |      FROM z, zb)
+      |SELECT CAST(file_id AS BIGINT) AS file_id,
+      |  CAST(count(*) AS BIGINT) AS n_rows,
+      |  CAST(min(a) AS BIGINT) AS min_o_custkey,
+      |  CAST(max(a) AS BIGINT) AS max_o_custkey,
+      |  CAST(min(b) AS BIGINT) AS min_o_orderkey,
+      |  CAST(max(b) AS BIGINT) AS max_o_orderkey""".stripMargin
 
   /** Z-order layout diagnostic ([[graft.operators.ZOrder.fileRanges]])
     * over orders keyed on (o_custkey, o_orderkey): range-normalized

@@ -2,10 +2,11 @@ package graft.queries
 
 import graft.SparkEntry.{scratchDir, sessionScratchDir}
 import graft.multimodal.Multimodal
+import graft.multimodal.Multimodal.MediaRecord
 import graft.sources.Tables
 import graft.util.SessionScopedCache
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal: image, video and audio features, MP4 and MKV container
@@ -89,42 +90,8 @@ object Media {
         |FROM documents WHERE doc_id < 500
         |ORDER BY doc_id""".stripMargin),
     Query("image_dedup", imageDedup)(
-      """WITH imgs AS (
-        |  SELECT doc_id AS id, text,
-        |         least(doc_id % 640 + 16, 32) AS w,
-        |         least(doc_id % 480 + 16, 32) AS h
-        |  FROM documents WHERE doc_id % 3 = 0 AND doc_id < 120),
-        |variants AS (
-        |  SELECT id, text, w, h, 0 AS noise FROM imgs
-        |  UNION ALL SELECT id + 5000000, text, w, h, 0 FROM imgs WHERE id % 30 = 0
-        |  UNION ALL SELECT id + 6000000, text, w, h, 1 FROM imgs WHERE id % 45 = 0),
-        |gcells AS (
-        |  SELECT v.id, v.noise, v.text, gr.r, gc.c,
-        |         ((gr.r * v.h) // 8) * v.w + ((gc.c * v.w) // 9) AS p
-        |  FROM variants v, generate_series(0, 7) AS gr(r), generate_series(0, 8) AS gc(c)),
-        |lums AS (
-        |  SELECT id, r, c,
-        |    299 * b + 587 * ((b * 31) % 256)
-        |      + 114 * (CASE WHEN noise = 1 AND p % 7 = 0
-        |                    THEN xor((b * 7) % 256, 255)
-        |                    ELSE (b * 7) % 256 END) AS lum
-        |  FROM (SELECT id, noise, r, c, p,
-        |          CASE WHEN strlen(text) = 0 THEN 0
-        |               ELSE unicode(substr(text, CAST(p % strlen(text) AS INT) + 1, 1))
-        |          END AS b
-        |        FROM gcells)),
-        |bits AS (
-        |  SELECT a.id, a.r * 8 + a.c AS i,
-        |         CASE WHEN b.lum > a.lum THEN 1 ELSE 0 END AS bit
-        |  FROM lums a JOIN lums b ON a.id = b.id AND a.r = b.r AND b.c = a.c + 1
-        |  WHERE a.c < 8),
-        |pairs AS (
-        |  SELECT x.id AS id_a, y.id AS id_b,
-        |         sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END) AS ham
-        |  FROM bits x JOIN bits y ON x.i = y.i AND x.id < y.id
-        |  GROUP BY x.id, y.id)
-        |SELECT id_a, id_b, CAST(ham AS BIGINT) AS ham
-        |FROM pairs WHERE ham <= 3 ORDER BY id_a, id_b""".stripMargin),
+      s"""$imageBitsSql
+        |$hammingPairsSql""".stripMargin),
     // image dHash dedup, closed-form: every 9x8 grid cell's integer
     // Rec.601 luma recomputed from the document bytes (ASCII, so
     // unicode() == byte), gradient-sign bits, all-pairs popcount at
@@ -135,36 +102,7 @@ object Media {
     // sampled frame; grid bits, per-frame hamming and the all-frames
     // filter replay closed-form from the text
     Query("video_dedup", videoDedup)(
-      """WITH vids AS (
-        |  SELECT doc_id AS id, text
-        |  FROM documents WHERE doc_id % 3 = 0 AND doc_id < 120),
-        |variants AS (
-        |  SELECT id, text, 0 AS noise FROM vids
-        |  UNION ALL SELECT id + 5000000, text, 0 FROM vids WHERE id % 30 = 0
-        |  UNION ALL SELECT id + 6000000, text, 1 FROM vids WHERE id % 45 = 0),
-        |gcells AS (
-        |  SELECT v.id, v.noise, v.text, fr.f, gr.r, gc.c,
-        |         ((gr.r * 24) // 8) * 32 + ((gc.c * 32) // 9) AS p
-        |  FROM variants v, (VALUES (0), (2), (4)) AS fr(f),
-        |       generate_series(0, 7) AS gr(r), generate_series(0, 8) AS gc(c)),
-        |lums AS (
-        |  SELECT id, f, r, c,
-        |    (299 * (b % 256) + 587 * ((b * 31) % 256)
-        |      + 114 * (CASE WHEN noise = 1 AND p % 13 = 0
-        |                    THEN xor((b * 7) % 256, 255)
-        |                    ELSE (b * 7) % 256 END)) // 1000 AS lum
-        |  FROM (SELECT id, noise, f, r, c, p,
-        |          CASE WHEN strlen(text) = 0 THEN 0
-        |               ELSE unicode(substr(text,
-        |                 CAST((p + 13 * f) % strlen(text) AS INT) + 1, 1))
-        |          END AS b
-        |        FROM gcells)),
-        |bits AS (
-        |  SELECT a.id, a.f, a.r * 8 + a.c AS i,
-        |         CASE WHEN b.lum > a.lum THEN 1 ELSE 0 END AS bit
-        |  FROM lums a JOIN lums b ON a.id = b.id AND a.f = b.f
-        |                         AND a.r = b.r AND b.c = a.c + 1
-        |  WHERE a.c < 8),
+      s"""$videoBitsSql
         |fpairs AS (
         |  SELECT x.id AS id_a, y.id AS id_b, x.f,
         |         sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END) AS ham
@@ -179,36 +117,7 @@ object Media {
     // incremental video near-dup: same closed-form replay restricted
     // to increment (variant ids) vs store (base ids)
     Query("video_dedup_incremental", videoDedupIncremental)(
-      """WITH vids AS (
-        |  SELECT doc_id AS id, text
-        |  FROM documents WHERE doc_id % 3 = 0 AND doc_id < 120),
-        |variants AS (
-        |  SELECT id, text, 0 AS noise FROM vids
-        |  UNION ALL SELECT id + 5000000, text, 0 FROM vids WHERE id % 30 = 0
-        |  UNION ALL SELECT id + 6000000, text, 1 FROM vids WHERE id % 45 = 0),
-        |gcells AS (
-        |  SELECT v.id, v.noise, v.text, fr.f, gr.r, gc.c,
-        |         ((gr.r * 24) // 8) * 32 + ((gc.c * 32) // 9) AS p
-        |  FROM variants v, (VALUES (0), (2), (4)) AS fr(f),
-        |       generate_series(0, 7) AS gr(r), generate_series(0, 8) AS gc(c)),
-        |lums AS (
-        |  SELECT id, f, r, c,
-        |    (299 * (b % 256) + 587 * ((b * 31) % 256)
-        |      + 114 * (CASE WHEN noise = 1 AND p % 13 = 0
-        |                    THEN xor((b * 7) % 256, 255)
-        |                    ELSE (b * 7) % 256 END)) // 1000 AS lum
-        |  FROM (SELECT id, noise, f, r, c, p,
-        |          CASE WHEN strlen(text) = 0 THEN 0
-        |               ELSE unicode(substr(text,
-        |                 CAST((p + 13 * f) % strlen(text) AS INT) + 1, 1))
-        |          END AS b
-        |        FROM gcells)),
-        |bits AS (
-        |  SELECT a.id, a.f, a.r * 8 + a.c AS i,
-        |         CASE WHEN b.lum > a.lum THEN 1 ELSE 0 END AS bit
-        |  FROM lums a JOIN lums b ON a.id = b.id AND a.f = b.f
-        |                         AND a.r = b.r AND b.c = a.c + 1
-        |  WHERE a.c < 8),
+      s"""$videoBitsSql
         |fpairs AS (
         |  SELECT y.id AS media_id, x.id AS store_id, x.f,
         |         sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END) AS ham
@@ -225,35 +134,7 @@ object Media {
     // incremental image dedup: same closed-form hashes, but pairs are
     // the increment (variant ids) against the stored base corpus
     Query("image_dedup_incremental", imageDedupIncremental)(
-      """WITH imgs AS (
-        |  SELECT doc_id AS id, text,
-        |         least(doc_id % 640 + 16, 32) AS w,
-        |         least(doc_id % 480 + 16, 32) AS h
-        |  FROM documents WHERE doc_id % 3 = 0 AND doc_id < 120),
-        |variants AS (
-        |  SELECT id, text, w, h, 0 AS noise FROM imgs
-        |  UNION ALL SELECT id + 5000000, text, w, h, 0 FROM imgs WHERE id % 30 = 0
-        |  UNION ALL SELECT id + 6000000, text, w, h, 1 FROM imgs WHERE id % 45 = 0),
-        |gcells AS (
-        |  SELECT v.id, v.noise, v.text, gr.r, gc.c,
-        |         ((gr.r * v.h) // 8) * v.w + ((gc.c * v.w) // 9) AS p
-        |  FROM variants v, generate_series(0, 7) AS gr(r), generate_series(0, 8) AS gc(c)),
-        |lums AS (
-        |  SELECT id, r, c,
-        |    299 * b + 587 * ((b * 31) % 256)
-        |      + 114 * (CASE WHEN noise = 1 AND p % 7 = 0
-        |                    THEN xor((b * 7) % 256, 255)
-        |                    ELSE (b * 7) % 256 END) AS lum
-        |  FROM (SELECT id, noise, r, c, p,
-        |          CASE WHEN strlen(text) = 0 THEN 0
-        |               ELSE unicode(substr(text, CAST(p % strlen(text) AS INT) + 1, 1))
-        |          END AS b
-        |        FROM gcells)),
-        |bits AS (
-        |  SELECT a.id, a.r * 8 + a.c AS i,
-        |         CASE WHEN b.lum > a.lum THEN 1 ELSE 0 END AS bit
-        |  FROM lums a JOIN lums b ON a.id = b.id AND a.r = b.r AND b.c = a.c + 1
-        |  WHERE a.c < 8),
+      s"""$imageBitsSql
         |pairs AS (
         |  SELECT x.id AS id, y.id AS store_id,
         |         sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END) AS ham
@@ -268,7 +149,7 @@ object Media {
     // bits, all-pairs popcount at ham <= 3. Synthetic samples are all
     // EVEN, so the halved variant's s // 2 is exact (floor == trunc)
     Query("audio_dedup", audioDedup)(
-      """WITH auds AS (
+      s"""WITH auds AS (
         |  SELECT doc_id AS id, text, strlen(text) AS len
         |  FROM documents
         |  WHERE doc_id % 3 = 1 AND doc_id < 120 AND strlen(text) >= 17),
@@ -302,13 +183,7 @@ object Media {
         |         CASE WHEN b.e * a.wn > a.e * b.wn THEN 1 ELSE 0 END AS bit
         |  FROM we a JOIN we b ON a.id = b.id AND b.j = a.j + 1
         |  WHERE a.j < 64),
-        |pairs AS (
-        |  SELECT x.id AS id_a, y.id AS id_b,
-        |         sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END) AS ham
-        |  FROM bits x JOIN bits y ON x.i = y.i AND x.id < y.id
-        |  GROUP BY x.id, y.id)
-        |SELECT id_a, id_b, CAST(ham AS BIGINT) AS ham
-        |FROM pairs WHERE ham <= 3 ORDER BY id_a, id_b""".stripMargin),
+        |$hammingPairsSql""".stripMargin),
   )
 
   /** Multimodal pipeline: synthetic media table (REAL BMP/WAV
@@ -448,6 +323,75 @@ object Media {
       .orderBy(col("doc_id"))
   }
 
+  /** The image oracles' replay of the dHash stage: the sampled images,
+    * their two resized and one noisy variant, every grid cell's luma
+    * and the 64 gradient-sign `bits` per image.
+    */
+  private[queries] val imageBitsSql =
+    """WITH imgs AS (
+      |  SELECT doc_id AS id, text,
+      |         least(doc_id % 640 + 16, 32) AS w,
+      |         least(doc_id % 480 + 16, 32) AS h
+      |  FROM documents WHERE doc_id % 3 = 0 AND doc_id < 120),
+      |variants AS (
+      |  SELECT id, text, w, h, 0 AS noise FROM imgs
+      |  UNION ALL SELECT id + 5000000, text, w, h, 0 FROM imgs WHERE id % 30 = 0
+      |  UNION ALL SELECT id + 6000000, text, w, h, 1 FROM imgs WHERE id % 45 = 0),
+      |gcells AS (
+      |  SELECT v.id, v.noise, v.text, gr.r, gc.c,
+      |         ((gr.r * v.h) // 8) * v.w + ((gc.c * v.w) // 9) AS p
+      |  FROM variants v, generate_series(0, 7) AS gr(r), generate_series(0, 8) AS gc(c)),
+      |lums AS (
+      |  SELECT id, r, c,
+      |    299 * b + 587 * ((b * 31) % 256)
+      |      + 114 * (CASE WHEN noise = 1 AND p % 7 = 0
+      |                    THEN xor((b * 7) % 256, 255)
+      |                    ELSE (b * 7) % 256 END) AS lum
+      |  FROM (SELECT id, noise, r, c, p,
+      |          CASE WHEN strlen(text) = 0 THEN 0
+      |               ELSE unicode(substr(text, CAST(p % strlen(text) AS INT) + 1, 1))
+      |          END AS b
+      |        FROM gcells)),
+      |bits AS (
+      |  SELECT a.id, a.r * 8 + a.c AS i,
+      |         CASE WHEN b.lum > a.lum THEN 1 ELSE 0 END AS bit
+      |  FROM lums a JOIN lums b ON a.id = b.id AND a.r = b.r AND b.c = a.c + 1
+      |  WHERE a.c < 8),""".stripMargin
+
+  /** The all-pairs Hamming tail the image and audio oracles share
+    * over `bits(id, i, bit)`, at ham <= 3.
+    */
+  private[queries] val hammingPairsSql =
+    """pairs AS (
+      |  SELECT x.id AS id_a, y.id AS id_b,
+      |         sum(CASE WHEN x.bit <> y.bit THEN 1 ELSE 0 END) AS ham
+      |  FROM bits x JOIN bits y ON x.i = y.i AND x.id < y.id
+      |  GROUP BY x.id, y.id)
+      |SELECT id_a, id_b, CAST(ham AS BIGINT) AS ham
+      |FROM pairs WHERE ham <= 3 ORDER BY id_a, id_b""".stripMargin
+
+  /** The planted image variants of [[imageBitsSql]]: a 72x72 resize
+    * of every 30th image (ids + 5,000,000) and a noised copy of every
+    * 45th (ids + 6,000,000).
+    */
+  private def imageVariants(media: Dataset[MediaRecord]): Dataset[MediaRecord] = {
+    import graft.multimodal.Codecs
+    import media.sparkSession.implicits._
+    val resized = Multimodal.resize(media.filter(_.media_id % 30 == 0), 72, 72)
+      .map(m => m.copy(media_id = m.media_id + 5000000L))
+    resized.union(media.filter(_.media_id % 45 == 0).mapPartitions(_.map { m =>
+      val im = Codecs.decodeBmp(m.content)
+      val px = im.pixels.clone()
+      var i = 0
+      // invert the blue channel of every 7th pixel: up to ~11% of the
+      // luma range on the handful of 9x8 cells that sample those
+      // pixels — enough to flip a few gradient bits, far from 64
+      while (i < px.length) { if (i % 7 == 0) px(i) = px(i) ^ 0xff; i += 1 }
+      m.copy(media_id = m.media_id + 6000000L,
+        content = Codecs.encodeBmp(im.width, im.height, px))
+    }))
+  }
+
   /** Image perceptual-hash near-dup dedup over the synthetic BMP
     * corpus: 64-bit difference hashes from REAL decoded pixels
     * ([[graft.multimodal.ImageDedup.dHash]] — integer Rec.601 luma on
@@ -466,28 +410,64 @@ object Media {
     * ham <= 3, and must match the banded pipeline row for row.
     */
   private def imageDedup(s: SparkSession, dir: String): DataFrame = {
-    import graft.multimodal.{Codecs, ImageDedup => ID}
-    import s.implicits._
+    import graft.multimodal.{ImageDedup => ID}
     val docs = Tables(s, dir, "documents")
       .filter(col("doc_id") % 3 === 0 && col("doc_id") < 120)
     val media = Multimodal.syntheticMediaFromDocs(s, docs)
-    val resized = Multimodal.resize(media.filter(_.media_id % 30 == 0), 72, 72)
-      .map(m => m.copy(media_id = m.media_id + 5000000L))
-    val noised = media.filter(_.media_id % 45 == 0).mapPartitions(_.map { m =>
-      val im = Codecs.decodeBmp(m.content)
-      val px = im.pixels.clone()
-      var i = 0
-      // invert the blue channel of every 7th pixel: up to ~11% of the
-      // luma range on the handful of 9x8 cells that sample those
-      // pixels — enough to flip a few gradient bits, far from 64
-      while (i < px.length) { if (i % 7 == 0) px(i) = px(i) ^ 0xff; i += 1 }
-      m.copy(media_id = m.media_id + 6000000L,
-        content = Codecs.encodeBmp(im.width, im.height, px))
-    })
-    ID.nearDupPairs(ID.dHashes(media.union(resized).union(noised)),
+    ID.nearDupPairs(ID.dHashes(media.union(imageVariants(media))),
         "media_id", "hash", maxHamming = 3)
       .select(col("id_a"), col("id_b"), col("ham").cast("long").as("ham"))
       .orderBy(col("id_a"), col("id_b"))
+  }
+
+  /** The video oracles' replay of the frame-hash stage: the sampled
+    * videos and their variants, three frames' grid lumas and the
+    * per-frame gradient-sign `bits`.
+    */
+  private[queries] val videoBitsSql =
+    """WITH vids AS (
+      |  SELECT doc_id AS id, text
+      |  FROM documents WHERE doc_id % 3 = 0 AND doc_id < 120),
+      |variants AS (
+      |  SELECT id, text, 0 AS noise FROM vids
+      |  UNION ALL SELECT id + 5000000, text, 0 FROM vids WHERE id % 30 = 0
+      |  UNION ALL SELECT id + 6000000, text, 1 FROM vids WHERE id % 45 = 0),
+      |gcells AS (
+      |  SELECT v.id, v.noise, v.text, fr.f, gr.r, gc.c,
+      |         ((gr.r * 24) // 8) * 32 + ((gc.c * 32) // 9) AS p
+      |  FROM variants v, (VALUES (0), (2), (4)) AS fr(f),
+      |       generate_series(0, 7) AS gr(r), generate_series(0, 8) AS gc(c)),
+      |lums AS (
+      |  SELECT id, f, r, c,
+      |    (299 * (b % 256) + 587 * ((b * 31) % 256)
+      |      + 114 * (CASE WHEN noise = 1 AND p % 13 = 0
+      |                    THEN xor((b * 7) % 256, 255)
+      |                    ELSE (b * 7) % 256 END)) // 1000 AS lum
+      |  FROM (SELECT id, noise, f, r, c, p,
+      |          CASE WHEN strlen(text) = 0 THEN 0
+      |               ELSE unicode(substr(text,
+      |                 CAST((p + 13 * f) % strlen(text) AS INT) + 1, 1))
+      |          END AS b
+      |        FROM gcells)),
+      |bits AS (
+      |  SELECT a.id, a.f, a.r * 8 + a.c AS i,
+      |         CASE WHEN b.lum > a.lum THEN 1 ELSE 0 END AS bit
+      |  FROM lums a JOIN lums b ON a.id = b.id AND a.f = b.f
+      |                         AND a.r = b.r AND b.c = a.c + 1
+      |  WHERE a.c < 8),""".stripMargin
+
+  /** The planted video variants of [[videoBitsSql]]: a copy of every
+    * 30th video of `base` (ids + 5,000,000) and a noised render of every
+    * 45th of `docs` (ids + 6,000,000).
+    */
+  private def videoVariants(base: Dataset[MediaRecord], docs: DataFrame): Dataset[MediaRecord] = {
+    import base.sparkSession.implicits._
+    base.filter(_.media_id % 30 == 0)
+      .map(m => m.copy(media_id = m.media_id + 5000000L))
+      .union(Multimodal
+        .syntheticVideosFromDocs(base.sparkSession, docs.filter(col("doc_id") % 45 === 0),
+          noiseEvery = 13)
+        .map(m => m.copy(media_id = m.media_id + 6000000L)))
   }
 
   /** Near-duplicate VIDEO detection over REAL Y4M containers
@@ -502,19 +482,12 @@ object Media {
     * matched-frame filter all replay in SQL.
     */
   private def videoDedup(s: SparkSession, dir: String): DataFrame = {
-    import graft.multimodal.{Multimodal, VideoDedup => VD}
-    import s.implicits._
+    import graft.multimodal.{VideoDedup => VD}
     val docs = Tables(s, dir, "documents")
       .filter(col("doc_id") % 3 === 0 && col("doc_id") < 120)
     val base = Multimodal.syntheticVideosFromDocs(s, docs)
-    val copies = base.filter(_.media_id % 30 == 0)
-      .map(m => m.copy(media_id = m.media_id + 5000000L))
-    val noised = Multimodal
-      .syntheticVideosFromDocs(s, docs.filter(col("doc_id") % 45 === 0),
-        noiseEvery = 13)
-      .map(m => m.copy(media_id = m.media_id + 6000000L))
     VD.nearDupPairs(
-        VD.frameHashes(base.union(copies).union(noised), stride = 2),
+        VD.frameHashes(base.union(videoVariants(base, docs)), stride = 2),
         maxHamming = 3)
       .select(col("id_a"), col("id_b"), col("matched_frames"),
         col("total_frames"), col("ham_sum"))
@@ -533,8 +506,7 @@ object Media {
     * increment-vs-base comparison the oracle computes closed-form.
     */
   private def videoDedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    import graft.multimodal.{Multimodal, VideoDedup => VD}
-    import s.implicits._
+    import graft.multimodal.{VideoDedup => VD}
     val docs = Tables(s, dir, "documents")
       .filter(col("doc_id") % 3 === 0 && col("doc_id") < 120)
     val path = SessionScopedCache.getOrElseUpdate(s, "video-store:" + dir) {
@@ -544,14 +516,8 @@ object Media {
       p
     }
     val base = Multimodal.syntheticVideosFromDocs(s, docs)
-    val copies = base.filter(_.media_id % 30 == 0)
-      .map(m => m.copy(media_id = m.media_id + 5000000L))
-    val noised = Multimodal
-      .syntheticVideosFromDocs(s, docs.filter(col("doc_id") % 45 === 0),
-        noiseEvery = 13)
-      .map(m => m.copy(media_id = m.media_id + 6000000L))
     VD.probeFrameStore(
-        VD.frameHashes(copies.union(noised), stride = 2),
+        VD.frameHashes(videoVariants(base, docs), stride = 2),
         VD.loadFrameStore(s, path), maxHamming = 3)
       .select(col("media_id"), col("store_id"), col("matched_frames"),
         col("total_frames"), col("ham_sum"))
@@ -569,25 +535,14 @@ object Media {
     * the DuckDB oracle computes closed-form.
     */
   private def imageDedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    import graft.multimodal.{Codecs, ImageDedup => ID}
-    import s.implicits._
+    import graft.multimodal.{ImageDedup => ID}
     val docs = Tables(s, dir, "documents")
       .filter(col("doc_id") % 3 === 0 && col("doc_id") < 120)
     val media = Multimodal.syntheticMediaFromDocs(s, docs)
     val path = sessionScratchDir(s, dir, "graft-phash-store")
     ID.saveHashStore(ID.dHashes(media), "media_id", "hash", path,
       prefixBuckets = 16)
-    val resized = Multimodal.resize(media.filter(_.media_id % 30 == 0), 72, 72)
-      .map(m => m.copy(media_id = m.media_id + 5000000L))
-    val noised = media.filter(_.media_id % 45 == 0).mapPartitions(_.map { m =>
-      val im = Codecs.decodeBmp(m.content)
-      val px = im.pixels.clone()
-      var i = 0
-      while (i < px.length) { if (i % 7 == 0) px(i) = px(i) ^ 0xff; i += 1 }
-      m.copy(media_id = m.media_id + 6000000L,
-        content = Codecs.encodeBmp(im.width, im.height, px))
-    })
-    ID.probeStore(ID.dHashes(resized.union(noised)),
+    ID.probeStore(ID.dHashes(imageVariants(media)),
         ID.loadHashStore(s, path), "media_id", "hash", maxHamming = 3)
       .select(col("id"), col("store_id"), col("ham").cast("long").as("ham"))
       .orderBy(col("id"), col("store_id"))

@@ -151,12 +151,7 @@ object Relational {
         |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
         |  ON p.user_id = c.user_id AND p.ts >= c.ts
         |ORDER BY p.event_id""".stripMargin),
-    Query("q45_asof_physical", asofPhysical)(
-      """SELECT p.event_id AS event_id, c.event_id AS click_id
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin),
+    Query.sharing("q45_asof_physical", asofPhysical, oracleOf = "q22_asof_join"),
     Query("q46_range_join", rangeJoinBands)(
       """SELECT band_id, count(*) AS n,
         | round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 2) AS total
@@ -228,13 +223,7 @@ object Relational {
         |FROM lineitem
         |GROUP BY l_returnflag
         |ORDER BY l_returnflag""".stripMargin),
-    Query("q31_window_dedup_agg", windowDedupAgg)(
-      """SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
-        | round(value, 2) AS last_value
-        |FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        |      FROM events)
-        |WHERE rn = 1
-        |ORDER BY user_id""".stripMargin),
+    Query.sharing("q31_window_dedup_agg", windowDedupAgg, oracleOf = "q05_window_dedup"),
     Query("q32_sample_per_group", samplePerGroup)(
       """SELECT source, doc_id
         |FROM (SELECT source, doc_id,

@@ -23,26 +23,7 @@ object Search {
     // RRF: BM25 top-100 (exact-sum cut, rank over the rounded score)
     // + dense decimal-cosine top-100, quantized reciprocal ranks
     Query("rrf_fusion", rrfFusion)(
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
-        |  FROM documents),
-        |docs AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
-        |meta AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(dl) AS BIGINT) AS total FROM docs),
-        |post AS (
-        |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |  FROM (SELECT doc_id, unnest(t) AS term FROM toks)
-        |  WHERE term IN ('vector', 'merge', 'stream')
-        |  GROUP BY doc_id, term),
-        |dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM post GROUP BY term),
-        |contrib AS (
-        |  SELECT p.doc_id,
-        |    CAST(floor(
-        |      ln((CAST(n - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5) + 1.0) *
-        |      ((CAST(tf AS DOUBLE) * (1.2 + 1.0)) /
-        |       (CAST(tf AS DOUBLE) + 1.2 * ((1.0 - 0.75) + 0.75 *
-        |         (CAST(dl AS DOUBLE) / (CAST(total AS DOUBLE) / CAST(n AS DOUBLE)))))) *
-        |      1000000.0) AS BIGINT) AS lp
-        |  FROM post p JOIN dfreq USING (term) JOIN docs USING (doc_id) CROSS JOIN meta),
+      s"""$bm25ContribSql
         |bagg AS (
         |  SELECT doc_id, sum(lp) AS s
         |  FROM contrib GROUP BY doc_id),
@@ -50,18 +31,7 @@ object Search {
         |  SELECT doc_id AS id,
         |    row_number() OVER (ORDER BY round(CAST(s AS DOUBLE) / 1000000.0, 4) DESC, doc_id) AS rank
         |  FROM (SELECT doc_id, s FROM bagg ORDER BY s DESC, doc_id LIMIT 100)),
-        |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-        |exploded AS (
-        |  SELECT e.vec_id,
-        |         unnest(CAST(e.embedding AS DOUBLE[])) AS x,
-        |         unnest(CAST(q.qv AS DOUBLE[])) AS y
-        |  FROM embeddings e, q),
-        |sums AS (
-        |  SELECT vec_id,
-        |         sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
-        |         sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
-        |         sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
-        |  FROM exploded GROUP BY vec_id),
+        |${Vectors.queryCosineSumsSql}),
         |cosd AS (
         |  SELECT vec_id,
         |         round(CAST(dotd AS DOUBLE) /
@@ -90,16 +60,7 @@ object Search {
     // chunk-level BM25: the chunk_documents replay feeding the
     // bm25_search integer-grid formula over composite chunk ids
     Query("chunk_search", chunkSearch)(
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS ws
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, ws,
-        |    unnest(range(0,
-        |      greatest(CAST(ceil((len(ws) - 64) / 48.0) AS BIGINT), 0) + 1))
-        |      AS cid
-        |  FROM t),
+      raw"""${Text.chunkStartsSql},
         |ch AS (
         |  SELECT doc_id * 100000 + cid AS cid,
         |    array_to_string(ws[cid*48 + 1 : cid*48 + 64], ' ') AS chunk_text
@@ -117,12 +78,7 @@ object Search {
         |dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM post GROUP BY term),
         |contrib AS (
         |  SELECT p.cid,
-        |    CAST(floor(
-        |      ln((CAST(n - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5) + 1.0) *
-        |      ((CAST(tf AS DOUBLE) * (1.2 + 1.0)) /
-        |       (CAST(tf AS DOUBLE) + 1.2 * ((1.0 - 0.75) + 0.75 *
-        |         (CAST(dl AS DOUBLE) / (CAST(total AS DOUBLE) / CAST(n AS DOUBLE)))))) *
-        |      1000000.0) AS BIGINT) AS lp
+        |$bm25TermScoreSql
         |  FROM post p JOIN dfreq USING (term) JOIN lens USING (cid) CROSS JOIN meta),
         |agg2 AS (
         |  SELECT cid, CAST(count(*) AS BIGINT) AS n_terms, sum(lp) AS s
@@ -133,7 +89,7 @@ object Search {
     // hard negatives: decimal-cosine replay (the simsearch_cosine
     // formula) + label exclusion + per-query row_number ranking
     Query("hard_negatives", hardNegativesQ)(
-      """WITH q AS (
+      s"""WITH q AS (
         |  SELECT vec_id AS query_id, embedding AS qv, label AS qlabel
         |  FROM embeddings WHERE vec_id < 3),
         |exploded AS (
@@ -144,9 +100,7 @@ object Search {
         |  WHERE e.label <> q.qlabel AND e.vec_id <> q.query_id),
         |sums AS (
         |  SELECT query_id, neg_id, neg_label,
-        |         sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
-        |         sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
-        |         sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
+        |${Vectors.decimalDotNormsSql}
         |  FROM exploded GROUP BY query_id, neg_id, neg_label),
         |scored AS (
         |  SELECT query_id, neg_id, neg_label,
@@ -640,30 +594,43 @@ object Search {
       .orderBy(col("query_id"), col("rank"))
   }
 
+  /** The BM25 oracles' floor-quantized contribution `lp` of one
+    * (doc, term) from its `tf`, `df`, `dl` and the corpus `n` and
+    * `total`.
+    */
+  private[queries] val bm25TermScoreSql =
+    """    CAST(floor(
+      |      ln((CAST(n - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5) + 1.0) *
+      |      ((CAST(tf AS DOUBLE) * (1.2 + 1.0)) /
+      |       (CAST(tf AS DOUBLE) + 1.2 * ((1.0 - 0.75) + 0.75 *
+      |         (CAST(dl AS DOUBLE) / (CAST(total AS DOUBLE) / CAST(n AS DOUBLE)))))) *
+      |      1000000.0) AS BIGINT) AS lp""".stripMargin
+
+  /** The BM25 oracles' per-(doc, term) contributions `contrib` for the
+    * three query terms over the whole corpus.
+    */
+  private[queries] val bm25ContribSql =
+    raw"""WITH toks AS (
+         |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
+         |  FROM documents),
+         |docs AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
+         |meta AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(dl) AS BIGINT) AS total FROM docs),
+         |post AS (
+         |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
+         |  FROM (SELECT doc_id, unnest(t) AS term FROM toks)
+         |  WHERE term IN ('vector', 'merge', 'stream')
+         |  GROUP BY doc_id, term),
+         |dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM post GROUP BY term),
+         |contrib AS (
+         |  SELECT p.doc_id,
+         |$bm25TermScoreSql
+         |  FROM post p JOIN dfreq USING (term) JOIN docs USING (doc_id) CROSS JOIN meta),""".stripMargin
+
   /** `bm25_search` oracle; `bm25_retract_search` derives its own
     * from it.
     */
   private lazy val bm25SearchOracleSql: String =
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
-        |  FROM documents),
-        |docs AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
-        |meta AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(dl) AS BIGINT) AS total FROM docs),
-        |post AS (
-        |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |  FROM (SELECT doc_id, unnest(t) AS term FROM toks)
-        |  WHERE term IN ('vector', 'merge', 'stream')
-        |  GROUP BY doc_id, term),
-        |dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM post GROUP BY term),
-        |contrib AS (
-        |  SELECT p.doc_id,
-        |    CAST(floor(
-        |      ln((CAST(n - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5) + 1.0) *
-        |      ((CAST(tf AS DOUBLE) * (1.2 + 1.0)) /
-        |       (CAST(tf AS DOUBLE) + 1.2 * ((1.0 - 0.75) + 0.75 *
-        |         (CAST(dl AS DOUBLE) / (CAST(total AS DOUBLE) / CAST(n AS DOUBLE)))))) *
-        |      1000000.0) AS BIGINT) AS lp
-        |  FROM post p JOIN dfreq USING (term) JOIN docs USING (doc_id) CROSS JOIN meta),
+      s"""$bm25ContribSql
         |agg AS (
         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms, sum(lp) AS s
         |  FROM contrib GROUP BY doc_id)

@@ -45,55 +45,13 @@ object Text {
     // floor-quantized to 1e-12-scaled BIGINTs; movers selected on the
     // exact quantized value with a token tie-break
     Query("corpus_drift_movers", corpusDriftMovers)(
-      """WITH ta AS (
-        |  SELECT regexp_split_to_array(lower(trim(text)), '\s+') AS t
-        |  FROM documents WHERE doc_id % 2 = 0),
-        |tb AS (
-        |  SELECT regexp_split_to_array(lower(trim(text)), '\s+') AS t
-        |  FROM documents WHERE doc_id % 2 = 1),
-        |va AS (SELECT tok AS token, CAST(count(*) AS BIGINT) AS c_a
-        |       FROM (SELECT unnest(t) AS tok FROM ta) GROUP BY tok),
-        |vb AS (SELECT tok AS token, CAST(count(*) AS BIGINT) AS c_b
-        |       FROM (SELECT unnest(t) AS tok FROM tb) GROUP BY tok),
-        |u AS (SELECT coalesce(va.token, vb.token) AS token,
-        |        coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b
-        |      FROM va FULL OUTER JOIN vb ON va.token = vb.token),
-        |m AS (SELECT CAST(count(*) AS BIGINT) AS v,
-        |        CAST(sum(c_a) AS BIGINT) AS n_a,
-        |        CAST(sum(c_b) AS BIGINT) AS n_b FROM u),
-        |d AS (SELECT token, c_a, c_b,
-        |  CAST(floor(
-        |    (CAST(c_a + 1 AS DOUBLE) / CAST(n_a + v AS DOUBLE)) *
-        |    ln((CAST(c_a + 1 AS DOUBLE) / CAST(n_a + v AS DOUBLE)) /
-        |       (CAST(c_b + 1 AS DOUBLE) / CAST(n_b + v AS DOUBLE))) *
-        |    1000000000000.0) AS BIGINT) AS lp_ab
+      s"""$driftCountsSql
         |  FROM u CROSS JOIN m)
         |SELECT token, c_a, c_b,
         |  round(CAST(lp_ab AS DOUBLE) / 1000000000000.0, 6) AS kl_contrib
         |FROM d ORDER BY abs(lp_ab) DESC, token LIMIT 20""".stripMargin),
     Query("corpus_drift_kl", corpusDriftKl)(
-      """WITH ta AS (
-        |  SELECT regexp_split_to_array(lower(trim(text)), '\s+') AS t
-        |  FROM documents WHERE doc_id % 2 = 0),
-        |tb AS (
-        |  SELECT regexp_split_to_array(lower(trim(text)), '\s+') AS t
-        |  FROM documents WHERE doc_id % 2 = 1),
-        |va AS (SELECT tok AS token, CAST(count(*) AS BIGINT) AS c_a
-        |       FROM (SELECT unnest(t) AS tok FROM ta) GROUP BY tok),
-        |vb AS (SELECT tok AS token, CAST(count(*) AS BIGINT) AS c_b
-        |       FROM (SELECT unnest(t) AS tok FROM tb) GROUP BY tok),
-        |u AS (SELECT coalesce(va.token, vb.token) AS token,
-        |        coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b
-        |      FROM va FULL OUTER JOIN vb ON va.token = vb.token),
-        |m AS (SELECT CAST(count(*) AS BIGINT) AS v,
-        |        CAST(sum(c_a) AS BIGINT) AS n_a,
-        |        CAST(sum(c_b) AS BIGINT) AS n_b FROM u),
-        |d AS (SELECT token, c_a, c_b,
-        |  CAST(floor(
-        |    (CAST(c_a + 1 AS DOUBLE) / CAST(n_a + v AS DOUBLE)) *
-        |    ln((CAST(c_a + 1 AS DOUBLE) / CAST(n_a + v AS DOUBLE)) /
-        |       (CAST(c_b + 1 AS DOUBLE) / CAST(n_b + v AS DOUBLE))) *
-        |    1000000000000.0) AS BIGINT) AS lp_ab,
+      s"""$driftCountsSql,
         |  CAST(floor(
         |    (CAST(c_b + 1 AS DOUBLE) / CAST(n_b + v AS DOUBLE)) *
         |    ln((CAST(c_b + 1 AS DOUBLE) / CAST(n_b + v AS DOUBLE)) /
@@ -138,9 +96,7 @@ object Text {
     // multiplicities via list comprehension + group-by; the Spark side
     // computes both as per-row folds (sorted-array max-run)
     Query("text_repetition", textRepetition)(
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws
-        |  FROM documents),
+      s"""${Corpus.docWordsSql}
         |g AS (
         |  SELECT doc_id, ws,
         |    CASE WHEN len(ws) >= 3
@@ -170,9 +126,7 @@ object Text {
     // OOV vs the corpus top-25 vocab: rebuild the vocab (count desc,
     // token asc), replay the per-occurrence membership filter
     Query("vocab_coverage", vocabCoverage)(
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws
-        |  FROM documents),
+      s"""${Corpus.docWordsSql}
         |cnt AS (
         |  SELECT tok, count(*) AS n
         |  FROM (SELECT unnest(ws) AS tok FROM t) GROUP BY tok),
@@ -189,9 +143,7 @@ object Text {
     // smoothed tf-idf on the integer mu-nat grid (same quantization as
     // the KL drift / bigram LM oracles), top-3 per doc by row_number
     Query("tfidf_top_terms", tfidfTopTerms)(
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws
-        |  FROM documents),
+      s"""${Corpus.docWordsSql}
         |tf AS (
         |  SELECT doc_id, tok AS term, count(*) AS tf
         |  FROM (SELECT doc_id, unnest(ws) AS tok FROM t) GROUP BY doc_id, tok),
@@ -214,18 +166,9 @@ object Text {
         |FROM documents
         |ORDER BY doc_id""".stripMargin),
     Query("text_langid", textLangid)(
-      """WITH scored AS (
+      s"""WITH scored AS (
         |  SELECT lang,
-        |    len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-        |      t -> list_contains(['der','die','das','und','ist','nicht','ein','mit','für','auf','zu','den'], t))) AS s_de,
-        |    len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-        |      t -> list_contains(['the','a','of','and','to','in','is','for','on','with','that','it'], t))) AS s_en,
-        |    len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-        |      t -> list_contains(['el','la','los','las','y','es','un','una','para','en','que','de'], t))) AS s_es,
-        |    len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-        |      t -> list_contains(['le','la','les','et','est','un','une','pour','dans','que','des','du'], t))) AS s_fr,
-        |    len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-        |      t -> list_contains(['il','la','gli','e','è','un','una','per','che','di','non','con'], t))) AS s_it
+        |$langIdScoresSql
         |  FROM documents),
         |pred AS (
         |  SELECT lang,
@@ -243,16 +186,7 @@ object Text {
     // sliding-window chunking: same starts (0,48,96,… until a window
     // reaches the end), inclusive list slices clamp like Spark slice()
     Query("chunk_documents", chunkDocuments)(
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS ws
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, ws,
-        |    unnest(range(0,
-        |      greatest(CAST(ceil((len(ws) - 64) / 48.0) AS BIGINT), 0) + 1))
-        |      AS cid
-        |  FROM t)
+      s"""$chunkStartsSql
         |SELECT doc_id, CAST(cid AS INT) AS chunk_id,
         |  CAST(cid * 48 AS BIGINT) AS chunk_start,
         |  CAST(len(ws[cid*48 + 1 : cid*48 + 64]) AS BIGINT) AS n_tokens,
@@ -260,16 +194,7 @@ object Text {
         |FROM c
         |ORDER BY doc_id, chunk_id""".stripMargin),
     Query("chunk_dedup", chunkDedup)(
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS ws
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, ws,
-        |    unnest(range(0,
-        |      greatest(CAST(ceil((len(ws) - 64) / 48.0) AS BIGINT), 0) + 1))
-        |      AS cid
-        |  FROM t),
+      s"""$chunkStartsSql,
         |ch AS (
         |  SELECT doc_id, CAST(cid AS INT) AS chunk_id,
         |    array_to_string(ws[cid*48 + 1 : cid*48 + 64], ' ') AS chunk_text
@@ -287,13 +212,7 @@ object Text {
     // + footer joined by chr(10)) is synthesized identically in both
     // engines; frequency, removal, and in-order reconstruction replay
     Query("line_stats", lineStats)(
-      """WITH docs2 AS (
-        |  SELECT doc_id,
-        |         '=== ' || source || ' header ===' || chr(10) ||
-        |         text || chr(10) ||
-        |         CASE WHEN doc_id % 3 = 0 THEN 'subscribe to our newsletter'
-        |              ELSE 'contact us at ' || source || '.example' END AS text
-        |  FROM documents),
+      s"""$boilerplateChromeSql
         |lines AS (
         |  SELECT doc_id, unnest(str_split(text, chr(10))) AS line FROM docs2)
         |SELECT line,
@@ -302,29 +221,7 @@ object Text {
         |FROM lines GROUP BY line
         |ORDER BY n_docs DESC, line LIMIT 20""".stripMargin),
     Query("line_dedup", lineDedup)(
-      """WITH docs2 AS (
-        |  SELECT doc_id,
-        |         '=== ' || source || ' header ===' || chr(10) ||
-        |         text || chr(10) ||
-        |         CASE WHEN doc_id % 3 = 0 THEN 'subscribe to our newsletter'
-        |              ELSE 'contact us at ' || source || '.example' END AS text
-        |  FROM documents),
-        |lines AS (
-        |  SELECT doc_id,
-        |         unnest(str_split(text, chr(10))) AS line,
-        |         unnest(range(1, len(str_split(text, chr(10))) + 1)) AS pos
-        |  FROM docs2),
-        |freq AS (
-        |  SELECT line FROM (
-        |    SELECT line, count(DISTINCT doc_id) AS nd FROM lines GROUP BY line)
-        |  WHERE nd >= 10),
-        |flagged AS (
-        |  SELECT l.doc_id, l.pos, l.line, f.line IS NOT NULL AS hit
-        |  FROM lines l LEFT JOIN freq f USING (line)),
-        |rebuilt AS (
-        |  SELECT doc_id,
-        |         coalesce(string_agg(line, chr(10) ORDER BY pos)
-        |                    FILTER (WHERE NOT hit), '') AS text,
+      s"""$lineDedupSql
         |         CAST(sum(CASE WHEN hit THEN 1 ELSE 0 END) AS BIGINT) AS removed_lines,
         |         CAST(sum(CASE WHEN NOT hit THEN 1 ELSE 0 END) AS BIGINT) AS kept_lines
         |  FROM flagged GROUP BY doc_id)
@@ -596,6 +493,21 @@ object Text {
         round(TF.dupNgramFraction(col("ws"), 3), 4).as("dup_trigram_frac"))
       .orderBy(col("doc_id"))
 
+  /** The chunking oracles' window starts: tokens `t` and one row per
+    * 64-token window starting every 48 tokens, `c(doc_id, ws, cid)`.
+    */
+  private[queries] val chunkStartsSql =
+    raw"""WITH t AS (
+         |  SELECT doc_id,
+         |    regexp_split_to_array(lower(trim(text)), '\s+') AS ws
+         |  FROM documents),
+         |c AS (
+         |  SELECT doc_id, ws,
+         |    unnest(range(0,
+         |      greatest(CAST(ceil((len(ws) - 64) / 48.0) AS BIGINT), 0) + 1))
+         |      AS cid
+         |  FROM t)""".stripMargin
+
   /** Sliding-window document chunking (window 64 tokens, stride 48 —
     * 16-token overlap): one stateless tokenize→posexplode→slice
     * projection per row ([[graft.operators.Chunking.chunk]]); the
@@ -756,6 +668,33 @@ object Text {
         md5(col("nt").cast("binary")).as("norm_md5"))
       .orderBy(col("doc_id"))
 
+  /** The drift oracles' token counts of the two corpus halves and each
+    * token's a-to-b KL contribution `lp_ab`, floor-quantized at 1e-12.
+    */
+  private[queries] val driftCountsSql =
+    raw"""WITH ta AS (
+         |  SELECT regexp_split_to_array(lower(trim(text)), '\s+') AS t
+         |  FROM documents WHERE doc_id % 2 = 0),
+         |tb AS (
+         |  SELECT regexp_split_to_array(lower(trim(text)), '\s+') AS t
+         |  FROM documents WHERE doc_id % 2 = 1),
+         |va AS (SELECT tok AS token, CAST(count(*) AS BIGINT) AS c_a
+         |       FROM (SELECT unnest(t) AS tok FROM ta) GROUP BY tok),
+         |vb AS (SELECT tok AS token, CAST(count(*) AS BIGINT) AS c_b
+         |       FROM (SELECT unnest(t) AS tok FROM tb) GROUP BY tok),
+         |u AS (SELECT coalesce(va.token, vb.token) AS token,
+         |        coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b
+         |      FROM va FULL OUTER JOIN vb ON va.token = vb.token),
+         |m AS (SELECT CAST(count(*) AS BIGINT) AS v,
+         |        CAST(sum(c_a) AS BIGINT) AS n_a,
+         |        CAST(sum(c_b) AS BIGINT) AS n_b FROM u),
+         |d AS (SELECT token, c_a, c_b,
+         |  CAST(floor(
+         |    (CAST(c_a + 1 AS DOUBLE) / CAST(n_a + v AS DOUBLE)) *
+         |    ln((CAST(c_a + 1 AS DOUBLE) / CAST(n_a + v AS DOUBLE)) /
+         |       (CAST(c_b + 1 AS DOUBLE) / CAST(n_b + v AS DOUBLE))) *
+         |    1000000000000.0) AS BIGINT) AS lp_ab""".stripMargin
+
   /** Token-distribution drift between the even- and odd-doc_id halves
     * of the corpus (the between-epochs monitoring op). Oracle-gated:
     * counts and the union vocab are exact, the smoothed probabilities
@@ -798,6 +737,21 @@ object Text {
           lit("@mail.example or call +1-555-0100 today"))).as("scrubbed"))
       .orderBy(col("doc_id"))
 
+  /** The lang-id oracles' stopword hit counts `s_de` .. `s_it` per
+    * document, as the SELECT list's last five columns.
+    */
+  private[queries] val langIdScoresSql =
+    raw"""    len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
+         |      t -> list_contains(['der','die','das','und','ist','nicht','ein','mit','für','auf','zu','den'], t))) AS s_de,
+         |    len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
+         |      t -> list_contains(['the','a','of','and','to','in','is','for','on','with','that','it'], t))) AS s_en,
+         |    len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
+         |      t -> list_contains(['el','la','los','las','y','es','un','una','para','en','que','de'], t))) AS s_es,
+         |    len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
+         |      t -> list_contains(['le','la','les','et','est','un','une','pour','dans','que','des','du'], t))) AS s_fr,
+         |    len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
+         |      t -> list_contains(['il','la','gli','e','è','un','una','per','che','di','non','con'], t))) AS s_it""".stripMargin
+
   /** Language-id heuristic vs the labeled lang column (oracle-gated:
     * greatest-of-struct argmax is expressible as a reverse-alphabetical
     * CASE over the per-profile scores).
@@ -808,6 +762,41 @@ object Text {
       .groupBy(col("lang"), col("predicted"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("lang"), col("predicted"))
+
+  /** `SparkEntry.docsWithBoilerplate` as the line oracles state it:
+    * the `docs2` CTE.
+    */
+  private[queries] val boilerplateChromeSql =
+    """WITH docs2 AS (
+      |  SELECT doc_id,
+      |         '=== ' || source || ' header ===' || chr(10) ||
+      |         text || chr(10) ||
+      |         CASE WHEN doc_id % 3 = 0 THEN 'subscribe to our newsletter'
+      |              ELSE 'contact us at ' || source || '.example' END AS text
+      |  FROM documents),""".stripMargin
+
+  /** The line-dedup oracles' replay up to the rebuilt text: numbered
+    * lines, the lines in >= 10 docs, and each doc's remaining lines
+    * joined in order.
+    */
+  private[queries] val lineDedupSql =
+    s"""$boilerplateChromeSql
+       |lines AS (
+       |  SELECT doc_id,
+       |         unnest(str_split(text, chr(10))) AS line,
+       |         unnest(range(1, len(str_split(text, chr(10))) + 1)) AS pos
+       |  FROM docs2),
+       |freq AS (
+       |  SELECT line FROM (
+       |    SELECT line, count(DISTINCT doc_id) AS nd FROM lines GROUP BY line)
+       |  WHERE nd >= 10),
+       |flagged AS (
+       |  SELECT l.doc_id, l.pos, l.line, f.line IS NOT NULL AS hit
+       |  FROM lines l LEFT JOIN freq f USING (line)),
+       |rebuilt AS (
+       |  SELECT doc_id,
+       |         coalesce(string_agg(line, chr(10) ORDER BY pos)
+       |                    FILTER (WHERE NOT hit), '') AS text,""".stripMargin
 
   /** Line-frequency statistics over the boilerplate fixture: the
     * chrome lines dominate the distinct-document counts; body lines

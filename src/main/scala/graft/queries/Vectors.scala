@@ -23,12 +23,8 @@ object Vectors {
     // Double prefilter at 0.97 keeps the all-pairs pass linear-ish;
     // decimal-exact recompute decides the emitted value and threshold.
     Query("dedup_embedding", dedupEmbedding)(
-      """WITH allv AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 1000000,
-        |         list_transform(embedding, x -> x + CAST(0.0005 AS FLOAT))
-        |  FROM embeddings WHERE vec_id % 100 = 0),
+      s"""WITH allv AS (
+        |$perturbedCopiesSql
         |pre AS (
         |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
         |         a.embedding AS va, b.embedding AS vb
@@ -41,9 +37,7 @@ object Vectors {
         |  FROM pre),
         |sums AS (
         |  SELECT id_a, id_b,
-        |         sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
-        |         sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
-        |         sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
+        |$decimalDotNormsSql
         |  FROM exploded GROUP BY id_a, id_b)
         |SELECT id_a, id_b,
         |       round(CAST(dotd AS DOUBLE) / (sqrt(CAST(nad AS DOUBLE)) * sqrt(CAST(nbd AS DOUBLE))), 3) AS cos,
@@ -90,12 +84,7 @@ object Vectors {
          |    list_transform(CAST(embedding AS DOUBLE[]),
          |      x -> CAST(floor(x * 1000000) AS BIGINT)) AS q
          |  FROM embeddings),
-         |seeds AS (
-         |  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cl,
-         |         q AS c
-         |  FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
-         |${kmeansIterSql(1, "seeds")}
-         |${kmeansIterSql(2, "c1")}
+         |$kmeansTwoItersSql
          |${kmeansIterSql(3, "c2")}
          |final AS (
          |  SELECT vec_id, cl, dist,
@@ -109,18 +98,7 @@ object Vectors {
          |FROM final WHERE rn = 1
          |ORDER BY vec_id""".stripMargin),
     Query("simsearch_cosine", simsearchCosine)(
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-        |exploded AS (
-        |  SELECT e.vec_id,
-        |         unnest(CAST(e.embedding AS DOUBLE[])) AS x,
-        |         unnest(CAST(q.qv AS DOUBLE[])) AS y
-        |  FROM embeddings e, q),
-        |sums AS (
-        |  SELECT vec_id,
-        |         sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
-        |         sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
-        |         sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
-        |  FROM exploded GROUP BY vec_id)
+      s"""WITH $queryCosineSumsSql)
         |SELECT vec_id,
         |       round(CAST(dotd AS DOUBLE) / (sqrt(CAST(nad AS DOUBLE)) * sqrt(CAST(nbd AS DOUBLE))), 3) + 0.0 AS cos
         |FROM sums ORDER BY vec_id""".stripMargin),
@@ -147,26 +125,10 @@ object Vectors {
     // replays of the Spark side: float(i) * float(0.0005) added in
     // single precision.
     Query("ann_lsh_topk", annLshTopk)(
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-        |planted AS (
-        |  SELECT 1000000 + t.i AS vec_id,
-        |         list_transform(q.qv,
-        |           x -> x + CAST(t.i AS FLOAT) * CAST(0.0005 AS FLOAT)) AS embedding
-        |  FROM q, generate_series(1, 24) AS t(i)),
-        |corpus AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL SELECT vec_id, embedding FROM planted),
-        |exploded AS (
-        |  SELECT e.vec_id,
-        |         unnest(CAST(e.embedding AS DOUBLE[])) AS x,
-        |         unnest(CAST(q.qv AS DOUBLE[])) AS y
+      s"""$plantedNeighborsSql
+        |$cosineExplodeSql
         |  FROM corpus e, q),
-        |sums AS (
-        |  SELECT vec_id,
-        |         sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
-        |         sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
-        |         sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
-        |  FROM exploded GROUP BY vec_id)
+        |$cosineSumsSql)
         |SELECT vec_id,
         |       round(CAST(dotd AS DOUBLE) / (sqrt(CAST(nad AS DOUBLE)) * sqrt(CAST(nbd AS DOUBLE))), 3) + 0.0 AS cos,
         |       true AS recall_ok
@@ -174,31 +136,7 @@ object Vectors {
     // quantized-prefilter + exact-rerank emits the same rows; shared
     // oracle (ann gate pattern)
     Query.sharing("ann_quantized_rerank", annQuantizedRerank, oracleOf = "ann_lsh_topk"),
-    Query("ann_ivf_topk", annIvfTopk)(
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-        |planted AS (
-        |  SELECT 1000000 + t.i AS vec_id,
-        |         list_transform(q.qv,
-        |           x -> x + CAST(t.i AS FLOAT) * CAST(0.0005 AS FLOAT)) AS embedding
-        |  FROM q, generate_series(1, 24) AS t(i)),
-        |corpus AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL SELECT vec_id, embedding FROM planted),
-        |exploded AS (
-        |  SELECT e.vec_id,
-        |         unnest(CAST(e.embedding AS DOUBLE[])) AS x,
-        |         unnest(CAST(q.qv AS DOUBLE[])) AS y
-        |  FROM corpus e, q),
-        |sums AS (
-        |  SELECT vec_id,
-        |         sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
-        |         sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
-        |         sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
-        |  FROM exploded GROUP BY vec_id)
-        |SELECT vec_id,
-        |       round(CAST(dotd AS DOUBLE) / (sqrt(CAST(nad AS DOUBLE)) * sqrt(CAST(nbd AS DOUBLE))), 3) + 0.0 AS cos,
-        |       true AS recall_ok
-        |FROM sums ORDER BY cos DESC, vec_id LIMIT 20""".stripMargin),
+    Query.sharing("ann_ivf_topk", annIvfTopk, oracleOf = "ann_lsh_topk"),
     // PQ training + encoding: 4 subspace k-means unrolled as CTEs,
     // all integer-grid exact (see pqSubspaceSql)
     // `pq_encode` oracle: quantize, pick the 16 md5-order seed rows,
@@ -233,18 +171,7 @@ object Vectors {
     // as the LSH gate; the oracle is shared (ann gate pattern)
     Query.sharing("pq_topk", pqTopk, oracleOf = "ann_lsh_topk"),
     Query("ann_ivf_fullprobe", annIvfFullprobe)(
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-        |exploded AS (
-        |  SELECT e.vec_id,
-        |         unnest(CAST(e.embedding AS DOUBLE[])) AS x,
-        |         unnest(CAST(q.qv AS DOUBLE[])) AS y
-        |  FROM embeddings e, q),
-        |sums AS (
-        |  SELECT vec_id,
-        |         sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
-        |         sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
-        |         sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
-        |  FROM exploded GROUP BY vec_id)
+      s"""WITH $queryCosineSumsSql)
         |SELECT vec_id,
         |       round(CAST(dotd AS DOUBLE) / (sqrt(CAST(nad AS DOUBLE)) * sqrt(CAST(nbd AS DOUBLE))), 3) + 0.0 AS cos
         |FROM sums ORDER BY cos DESC, vec_id LIMIT 20""".stripMargin),
@@ -257,22 +184,13 @@ object Vectors {
     // >= 0.98 set) so the decimal explode only runs on candidates.
     Query("semantic_dedup", semanticDedup)(
       s"""WITH allv AS (
-         |  SELECT vec_id, embedding FROM embeddings
-         |  UNION ALL
-         |  SELECT vec_id + 1000000,
-         |         list_transform(embedding, x -> x + CAST(0.0005 AS FLOAT))
-         |  FROM embeddings WHERE vec_id % 100 = 0),
+         |$perturbedCopiesSql
          |e AS (
          |  SELECT vec_id,
          |    list_transform(CAST(embedding AS DOUBLE[]),
          |      x -> CAST(floor(x * 1000000) AS BIGINT)) AS q
          |  FROM allv),
-         |seeds AS (
-         |  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cl,
-         |         q AS c
-         |  FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
-         |${kmeansIterSql(1, "seeds")}
-         |${kmeansIterSql(2, "c1")}
+         |$kmeansTwoItersSql
          |fin AS (
          |  SELECT vec_id, cl,
          |    row_number() OVER (PARTITION BY vec_id ORDER BY dist, cl) AS rn
@@ -301,9 +219,7 @@ object Vectors {
          |  FROM pre),
          |sums AS (
          |  SELECT cluster, id_a, id_b,
-         |         sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
-         |         sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
-         |         sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
+         |$decimalDotNormsSql
          |  FROM exploded GROUP BY cluster, id_a, id_b),
          |hits AS (
          |  SELECT cluster, id_a, id_b,
@@ -329,15 +245,7 @@ object Vectors {
     // pool (ham, vec_id LIMIT 64) -> decimal-cosine rerank -> top-20,
     // with the recall@20 verdict vs the exact top-20 also recomputed
     Query("ann_hamming_topk", annHammingTopk)(
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-        |planted AS (
-        |  SELECT 1000000 + t.i AS vec_id,
-        |         list_transform(q.qv,
-        |           x -> x + CAST(t.i AS FLOAT) * CAST(0.0005 AS FLOAT)) AS embedding
-        |  FROM q, generate_series(1, 24) AS t(i)),
-        |corpus AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL SELECT vec_id, embedding FROM planted),
+      s"""$plantedNeighborsSql
         |ham AS (
         |  SELECT e.vec_id, e.embedding, q.qv,
         |         CAST(list_sum([CASE WHEN (e.embedding[i] > 0) <> (q.qv[i] > 0)
@@ -354,9 +262,7 @@ object Vectors {
         |  FROM pool),
         |sums AS (
         |  SELECT vec_id, any_value(ham) AS ham,
-        |         sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
-        |         sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
-        |         sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
+        |$decimalDotNormsSql
         |  FROM exploded GROUP BY vec_id),
         |topk AS (
         |  SELECT vec_id, ham,
@@ -369,9 +275,7 @@ object Vectors {
         |  FROM corpus e, q),
         |exact_sums AS (
         |  SELECT vec_id,
-        |         sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
-        |         sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
-        |         sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
+        |$decimalDotNormsSql
         |  FROM exact_exploded GROUP BY vec_id),
         |exact_top AS (
         |  SELECT vec_id,
@@ -431,26 +335,10 @@ object Vectors {
         |FROM pairs ORDER BY group_a, group_b""".stripMargin),
     // mutual kNN graph: decimal cosine, per-source top-5, mutuality
     Query("knn_graph", knnGraphQ)(
-      """WITH n AS (
+      s"""WITH n AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |  FROM embeddings WHERE vec_id < 100),
-        |p AS (SELECT a.vec_id AS src, b.vec_id AS dst, a.v AS va, b.v AS vb
-        |      FROM n a JOIN n b ON a.vec_id <> b.vec_id),
-        |e AS (SELECT src, dst, unnest(va) AS x, unnest(vb) AS y FROM p),
-        |sums AS (SELECT src, dst,
-        |        sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
-        |        sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
-        |        sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
-        |      FROM e GROUP BY src, dst),
-        |sim AS (SELECT src, dst,
-        |        CAST(floor(CAST(dotd AS DOUBLE) /
-        |          (sqrt(CAST(nad AS DOUBLE)) * sqrt(CAST(nbd AS DOUBLE)))
-        |          * 1000000.0) AS BIGINT) AS sim_micro
-        |        FROM sums),
-        |r AS (SELECT src, dst, sim_micro,
-        |        row_number() OVER (PARTITION BY src
-        |                           ORDER BY sim_micro DESC, dst) AS rk
-        |      FROM sim),
+        |$knnSimSql
         |d AS (SELECT src, dst, sim_micro FROM r WHERE rk <= 5)
         |SELECT d.src AS id_a, d.dst AS id_b, d.sim_micro
         |FROM d JOIN d d2 ON d.src = d2.dst AND d.dst = d2.src
@@ -459,106 +347,14 @@ object Vectors {
     // bitext mining: decimal-cosine sims over the two planted sides,
     // integral ratio margins, mutual argmax, 1.5 threshold
     Query("bitext_mine", bitextMineQ)(
-      """WITH s AS (
-        |  SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id < 30),
-        |tt AS (
-        |  SELECT vec_id + 2000 AS id,
-        |    CAST(list_transform(embedding, x -> x + CAST(0.0004 AS FLOAT))
-        |      AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id < 24
-        |  UNION ALL
-        |  SELECT vec_id + 3000, CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id >= 40 AND vec_id < 50),
-        |p AS (SELECT s.id AS src_id, tt.id AS tgt_id, s.v AS va, tt.v AS vb
-        |      FROM s, tt),
-        |e AS (SELECT src_id, tgt_id, unnest(va) AS x, unnest(vb) AS y FROM p),
-        |sums AS (SELECT src_id, tgt_id,
-        |        sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
-        |        sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
-        |        sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
-        |      FROM e GROUP BY src_id, tgt_id),
-        |sim AS (SELECT src_id, tgt_id,
-        |        CAST(floor(CAST(dotd AS DOUBLE) /
-        |          (sqrt(CAST(nad AS DOUBLE)) * sqrt(CAST(nbd AS DOUBLE)))
-        |          * 1000000.0) AS BIGINT) AS sim
-        |        FROM sums),
-        |f AS (SELECT src_id, sum(sim) AS fsum, count(*) AS fcnt FROM (
-        |        SELECT src_id, sim,
-        |          row_number() OVER (PARTITION BY src_id
-        |                             ORDER BY sim DESC, tgt_id) AS rk
-        |        FROM sim) WHERE rk <= 4 GROUP BY src_id),
-        |b AS (SELECT tgt_id, sum(sim) AS bsum, count(*) AS bcnt FROM (
-        |        SELECT tgt_id, sim,
-        |          row_number() OVER (PARTITION BY tgt_id
-        |                             ORDER BY sim DESC, src_id) AS rk
-        |        FROM sim) WHERE rk <= 4 GROUP BY tgt_id),
-        |m AS (SELECT sim.src_id, sim.tgt_id, sim.sim,
-        |        sim.sim * 2000000 * fcnt * bcnt
-        |          // (fsum * bcnt + bsum * fcnt) AS margin
-        |      FROM sim JOIN f ON sim.src_id = f.src_id
-        |                JOIN b ON sim.tgt_id = b.tgt_id),
-        |best AS (SELECT src_id, tgt_id, sim, margin,
-        |        row_number() OVER (PARTITION BY src_id
-        |                           ORDER BY margin DESC, tgt_id) AS bf,
-        |        row_number() OVER (PARTITION BY tgt_id
-        |                           ORDER BY margin DESC, src_id) AS bb
-        |      FROM m)
-        |SELECT src_id, tgt_id, CAST(sim AS BIGINT) AS sim_micro,
-        |  CAST(margin AS BIGINT) AS margin_micro
+      s"""$bitextMarginsSql
         |FROM best WHERE bf = 1 AND bb = 1 AND margin >= 1500000
         |ORDER BY src_id, tgt_id""".stripMargin),
     // ANN-composed bitext mining: rows are the exact broadcast mine
     // (same replay as bitext_mine); recall_ok asserted true — the
     // >=90% ANN-recall check runs in-plan Spark-side
     Query("bitext_mine_ann", bitextMineAnnQ)(
-      """WITH s AS (
-        |  SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id < 30),
-        |tt AS (
-        |  SELECT vec_id + 2000 AS id,
-        |    CAST(list_transform(embedding, x -> x + CAST(0.0004 AS FLOAT))
-        |      AS DOUBLE[]) AS v
-        |  FROM embeddings WHERE vec_id < 24
-        |  UNION ALL
-        |  SELECT vec_id + 3000, CAST(embedding AS DOUBLE[])
-        |  FROM embeddings WHERE vec_id >= 40 AND vec_id < 50),
-        |p AS (SELECT s.id AS src_id, tt.id AS tgt_id, s.v AS va, tt.v AS vb
-        |      FROM s, tt),
-        |e AS (SELECT src_id, tgt_id, unnest(va) AS x, unnest(vb) AS y FROM p),
-        |sums AS (SELECT src_id, tgt_id,
-        |        sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
-        |        sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
-        |        sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
-        |      FROM e GROUP BY src_id, tgt_id),
-        |sim AS (SELECT src_id, tgt_id,
-        |        CAST(floor(CAST(dotd AS DOUBLE) /
-        |          (sqrt(CAST(nad AS DOUBLE)) * sqrt(CAST(nbd AS DOUBLE)))
-        |          * 1000000.0) AS BIGINT) AS sim
-        |        FROM sums),
-        |f AS (SELECT src_id, sum(sim) AS fsum, count(*) AS fcnt FROM (
-        |        SELECT src_id, sim,
-        |          row_number() OVER (PARTITION BY src_id
-        |                             ORDER BY sim DESC, tgt_id) AS rk
-        |        FROM sim) WHERE rk <= 4 GROUP BY src_id),
-        |b AS (SELECT tgt_id, sum(sim) AS bsum, count(*) AS bcnt FROM (
-        |        SELECT tgt_id, sim,
-        |          row_number() OVER (PARTITION BY tgt_id
-        |                             ORDER BY sim DESC, src_id) AS rk
-        |        FROM sim) WHERE rk <= 4 GROUP BY tgt_id),
-        |m AS (SELECT sim.src_id, sim.tgt_id, sim.sim,
-        |        sim.sim * 2000000 * fcnt * bcnt
-        |          // (fsum * bcnt + bsum * fcnt) AS margin
-        |      FROM sim JOIN f ON sim.src_id = f.src_id
-        |                JOIN b ON sim.tgt_id = b.tgt_id),
-        |best AS (SELECT src_id, tgt_id, sim, margin,
-        |        row_number() OVER (PARTITION BY src_id
-        |                           ORDER BY margin DESC, tgt_id) AS bf,
-        |        row_number() OVER (PARTITION BY tgt_id
-        |                           ORDER BY margin DESC, src_id) AS bb
-        |      FROM m)
-        |SELECT src_id, tgt_id, CAST(sim AS BIGINT) AS sim_micro,
-        |  CAST(margin AS BIGINT) AS margin_micro, true AS recall_ok
+      s"""$bitextMarginsSql, true AS recall_ok
         |FROM best WHERE bf = 1 AND bb = 1 AND margin >= 1500000
         |ORDER BY src_id, tgt_id""".stripMargin),
     // ANN graph gate: the exact mutual 5-NN graph over the planted
@@ -566,30 +362,9 @@ object Vectors {
     // construction), recall_ok asserted true — the IVF composition's
     // recall runs in-plan on the Spark side
     Query("knn_graph_ann", knnGraphAnnQ)(
-      """WITH n AS (
-        |  SELECT b.vec_id * 10 + t.i AS vec_id,
-        |         CAST(list_transform(b.embedding,
-        |           x -> x + CAST(t.i AS FLOAT) * CAST(0.0005 AS FLOAT))
-        |           AS DOUBLE[]) AS v
-        |  FROM embeddings b, generate_series(0, 9) AS t(i)
-        |  WHERE b.vec_id < 30),
-        |p AS (SELECT a.vec_id AS src, b.vec_id AS dst, a.v AS va, b.v AS vb
-        |      FROM n a JOIN n b ON a.vec_id <> b.vec_id),
-        |e AS (SELECT src, dst, unnest(va) AS x, unnest(vb) AS y FROM p),
-        |sums AS (SELECT src, dst,
-        |        sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
-        |        sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
-        |        sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
-        |      FROM e GROUP BY src, dst),
-        |sim AS (SELECT src, dst,
-        |        CAST(floor(CAST(dotd AS DOUBLE) /
-        |          (sqrt(CAST(nad AS DOUBLE)) * sqrt(CAST(nbd AS DOUBLE)))
-        |          * 1000000.0) AS BIGINT) AS sim_micro
-        |        FROM sums),
-        |r AS (SELECT src, dst, sim_micro,
-        |        row_number() OVER (PARTITION BY src
-        |                           ORDER BY sim_micro DESC, dst) AS rk
-        |      FROM sim),
+      s"""WITH n AS (
+        |$plantedClustersSql
+        |$knnSimSql
         |d AS (SELECT src, dst, sim_micro FROM r WHERE rk <= 5)
         |SELECT d.src AS id_a, d.dst AS id_b, d.sim_micro, true AS recall_ok
         |FROM d JOIN d d2 ON d.src = d2.dst AND d.dst = d2.src
@@ -599,30 +374,9 @@ object Vectors {
     // (recursive closure), clusters_ok asserted true — the ANN
     // component agreement runs in-plan on the Spark side
     Query("semantic_clusters_ann", semanticClustersAnn)(
-      """WITH RECURSIVE n AS (
-        |  SELECT b.vec_id * 10 + t.i AS vec_id,
-        |         CAST(list_transform(b.embedding,
-        |           x -> x + CAST(t.i AS FLOAT) * CAST(0.0005 AS FLOAT))
-        |           AS DOUBLE[]) AS v
-        |  FROM embeddings b, generate_series(0, 9) AS t(i)
-        |  WHERE b.vec_id < 30),
-        |p AS (SELECT a.vec_id AS src, b.vec_id AS dst, a.v AS va, b.v AS vb
-        |      FROM n a JOIN n b ON a.vec_id <> b.vec_id),
-        |e AS (SELECT src, dst, unnest(va) AS x, unnest(vb) AS y FROM p),
-        |sums AS (SELECT src, dst,
-        |        sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
-        |        sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
-        |        sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
-        |      FROM e GROUP BY src, dst),
-        |sim AS (SELECT src, dst,
-        |        CAST(floor(CAST(dotd AS DOUBLE) /
-        |          (sqrt(CAST(nad AS DOUBLE)) * sqrt(CAST(nbd AS DOUBLE)))
-        |          * 1000000.0) AS BIGINT) AS sim_micro
-        |        FROM sums),
-        |r AS (SELECT src, dst, sim_micro,
-        |        row_number() OVER (PARTITION BY src
-        |                           ORDER BY sim_micro DESC, dst) AS rk
-        |      FROM sim),
+      s"""WITH RECURSIVE n AS (
+        |$plantedClustersSql
+        |$knnSimSql
         |d AS (SELECT src, dst FROM r WHERE rk <= 5),
         |mut AS (SELECT d.src AS a, d.dst AS b
         |        FROM d JOIN d d2 ON d.src = d2.dst AND d.dst = d2.src
@@ -662,17 +416,12 @@ object Vectors {
         |FROM agg ORDER BY label""".stripMargin),
     // semantic clusters: mutual 3-NN graph -> transitive closure
     Query("semantic_clusters", semanticClusters)(
-      """WITH RECURSIVE nodes AS (
+      s"""WITH RECURSIVE nodes AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |  FROM embeddings WHERE vec_id < 100),
         |p AS (SELECT a.vec_id AS src, b.vec_id AS dst, a.v AS va, b.v AS vb
         |      FROM nodes a JOIN nodes b ON a.vec_id <> b.vec_id),
-        |e AS (SELECT src, dst, unnest(va) AS x, unnest(vb) AS y FROM p),
-        |sums AS (SELECT src, dst,
-        |        sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
-        |        sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
-        |        sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
-        |      FROM e GROUP BY src, dst),
+        |$pairCosineSumsSql
         |sim AS (SELECT src, dst,
         |        CAST(floor(CAST(dotd AS DOUBLE) /
         |          (sqrt(CAST(nad AS DOUBLE)) * sqrt(CAST(nbd AS DOUBLE)))
@@ -836,6 +585,42 @@ object Vectors {
       .withColumnRenamed("id", "vec_id")
       .orderBy(col("vec_id"))
   }
+
+  /** The oracles' exact decimal dot product `dotd` and squared norms
+    * `nad`, `nbd` of the component pairs `(x, y)`, as SELECT columns.
+    */
+  private[queries] val decimalDotNormsSql =
+    """         sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
+      |         sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
+      |         sum(CAST(y*y AS DECIMAL(28,14))) AS nbd""".stripMargin
+
+  /** The oracles' `exploded` CTE of query-cosine pairs, up to its
+    * FROM line: the components `x` of each `e.embedding` against the
+    * query vector `q.qv`.
+    */
+  private[queries] val cosineExplodeSql =
+    """exploded AS (
+      |  SELECT e.vec_id,
+      |         unnest(CAST(e.embedding AS DOUBLE[])) AS x,
+      |         unnest(CAST(q.qv AS DOUBLE[])) AS y""".stripMargin
+
+  /** The oracles' decimal dot product and norms per vec_id over
+    * `exploded`, without the closing parenthesis.
+    */
+  private[queries] val cosineSumsSql =
+    s"""sums AS (
+       |  SELECT vec_id,
+       |$decimalDotNormsSql
+       |  FROM exploded GROUP BY vec_id""".stripMargin
+
+  /** The oracles' replay of [[simsearchCosine]]'s decimal cosine terms:
+    * query vec 0 as `q`, then [[cosineSumsSql]] over every embedding.
+    */
+  private[queries] val queryCosineSumsSql =
+    s"""q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+       |$cosineExplodeSql
+       |  FROM embeddings e, q),
+       |$cosineSumsSql""".stripMargin
 
   /** Brute-force cosine similarity of every vector against a query
     * vector (vec_id=0) — the exact baseline for ANN.
@@ -1015,6 +800,60 @@ object Vectors {
         (col("scatter") + lit(0.0)).as("scatter"))
       .orderBy(col("label"))
 
+  /** The bitext oracles' replay of [[bitextMineQ]] up to the last
+    * emitted column: both planted sides, micro-scaled decimal cosines,
+    * the forward and backward top-4 sums, ratio margins and the mutual
+    * argmax ranks.
+    */
+  private[queries] val bitextMarginsSql =
+    """WITH s AS (
+      |  SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
+      |  FROM embeddings WHERE vec_id < 30),
+      |tt AS (
+      |  SELECT vec_id + 2000 AS id,
+      |    CAST(list_transform(embedding, x -> x + CAST(0.0004 AS FLOAT))
+      |      AS DOUBLE[]) AS v
+      |  FROM embeddings WHERE vec_id < 24
+      |  UNION ALL
+      |  SELECT vec_id + 3000, CAST(embedding AS DOUBLE[])
+      |  FROM embeddings WHERE vec_id >= 40 AND vec_id < 50),
+      |p AS (SELECT s.id AS src_id, tt.id AS tgt_id, s.v AS va, tt.v AS vb
+      |      FROM s, tt),
+      |e AS (SELECT src_id, tgt_id, unnest(va) AS x, unnest(vb) AS y FROM p),
+      |sums AS (SELECT src_id, tgt_id,
+      |        sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
+      |        sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
+      |        sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
+      |      FROM e GROUP BY src_id, tgt_id),
+      |sim AS (SELECT src_id, tgt_id,
+      |        CAST(floor(CAST(dotd AS DOUBLE) /
+      |          (sqrt(CAST(nad AS DOUBLE)) * sqrt(CAST(nbd AS DOUBLE)))
+      |          * 1000000.0) AS BIGINT) AS sim
+      |        FROM sums),
+      |f AS (SELECT src_id, sum(sim) AS fsum, count(*) AS fcnt FROM (
+      |        SELECT src_id, sim,
+      |          row_number() OVER (PARTITION BY src_id
+      |                             ORDER BY sim DESC, tgt_id) AS rk
+      |        FROM sim) WHERE rk <= 4 GROUP BY src_id),
+      |b AS (SELECT tgt_id, sum(sim) AS bsum, count(*) AS bcnt FROM (
+      |        SELECT tgt_id, sim,
+      |          row_number() OVER (PARTITION BY tgt_id
+      |                             ORDER BY sim DESC, src_id) AS rk
+      |        FROM sim) WHERE rk <= 4 GROUP BY tgt_id),
+      |m AS (SELECT sim.src_id, sim.tgt_id, sim.sim,
+      |        sim.sim * 2000000 * fcnt * bcnt
+      |          // (fsum * bcnt + bsum * fcnt) AS margin
+      |      FROM sim JOIN f ON sim.src_id = f.src_id
+      |                JOIN b ON sim.tgt_id = b.tgt_id),
+      |best AS (SELECT src_id, tgt_id, sim, margin,
+      |        row_number() OVER (PARTITION BY src_id
+      |                           ORDER BY margin DESC, tgt_id) AS bf,
+      |        row_number() OVER (PARTITION BY tgt_id
+      |                           ORDER BY margin DESC, src_id) AS bb
+      |      FROM m)
+      |SELECT src_id, tgt_id, CAST(sim AS BIGINT) AS sim_micro,
+      |  CAST(margin AS BIGINT) AS margin_micro""".stripMargin
+
   /** Margin-based bitext mining ([[graft.operators.BitextMine]]) over
     * a two-sided planted fixture: sources are the first 30 embedding
     * vectors; targets are float-exact +0.0004 shifted "translations"
@@ -1092,6 +931,35 @@ object Vectors {
       .orderBy(col("src_id"), col("tgt_id"))
   }
 
+  /** The graph oracles' decimal dot product and norms per (src, dst)
+    * pair of `p(src, dst, va, vb)`.
+    */
+  private[queries] val pairCosineSumsSql =
+    """e AS (SELECT src, dst, unnest(va) AS x, unnest(vb) AS y FROM p),
+      |sums AS (SELECT src, dst,
+      |        sum(CAST(x*y AS DECIMAL(28,14))) AS dotd,
+      |        sum(CAST(x*x AS DECIMAL(28,14))) AS nad,
+      |        sum(CAST(y*y AS DECIMAL(28,14))) AS nbd
+      |      FROM e GROUP BY src, dst),""".stripMargin
+
+  /** The mutual-kNN oracles' replay of [[SimilaritySearch.mutualKnnGraph]]
+    * over the nodes `n(vec_id, v)`: micro-scaled cosine per ordered
+    * pair and its per-source rank `r`.
+    */
+  private[queries] val knnSimSql =
+    s"""p AS (SELECT a.vec_id AS src, b.vec_id AS dst, a.v AS va, b.v AS vb
+       |      FROM n a JOIN n b ON a.vec_id <> b.vec_id),
+       |$pairCosineSumsSql
+       |sim AS (SELECT src, dst,
+       |        CAST(floor(CAST(dotd AS DOUBLE) /
+       |          (sqrt(CAST(nad AS DOUBLE)) * sqrt(CAST(nbd AS DOUBLE)))
+       |          * 1000000.0) AS BIGINT) AS sim_micro
+       |        FROM sums),
+       |r AS (SELECT src, dst, sim_micro,
+       |        row_number() OVER (PARTITION BY src
+       |                           ORDER BY sim_micro DESC, dst) AS rk
+       |      FROM sim),""".stripMargin
+
   /** Mutual k-NN graph over the first 100 embedding vectors, BIT-EXACT
     * end-to-end: decimal-cosine similarities on the µ-grid, per-source
     * top-5, and the mutuality intersection all replay in SQL
@@ -1106,6 +974,17 @@ object Vectors {
         knownNodeCount = Some(100L)) // vec_id < 100 bounds the set by construction
       .select(col("id_a"), col("id_b"), col("sim").as("sim_micro"))
       .orderBy(col("id_a"), col("id_b"))
+
+  /** [[plantedClusterNodes]] as the oracles state it, after an
+    * `n AS (` line.
+    */
+  private[queries] val plantedClustersSql =
+    """  SELECT b.vec_id * 10 + t.i AS vec_id,
+      |         CAST(list_transform(b.embedding,
+      |           x -> x + CAST(t.i AS FLOAT) * CAST(0.0005 AS FLOAT))
+      |           AS DOUBLE[]) AS v
+      |  FROM embeddings b, generate_series(0, 9) AS t(i)
+      |  WHERE b.vec_id < 30),""".stripMargin
 
   /** The planted 30x10 cluster corpus of the ANN graph gates: each of
     * the first 30 embeddings plus 9 copies shifted by `i * 0.0005f`.
@@ -1228,6 +1107,20 @@ object Vectors {
     graft.operators.RandomProjection
       .project(Tables(s, dir, "embeddings"), "vec_id", "embedding", d = 64, k = 8)
       .orderBy(col("vec_id"))
+
+  /** [[embWithPlantedNeighbors]] as the oracles state it: the query
+    * `q`, its 24 `planted` copies and the `corpus` holding both.
+    */
+  private[queries] val plantedNeighborsSql =
+    """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+      |planted AS (
+      |  SELECT 1000000 + t.i AS vec_id,
+      |         list_transform(q.qv,
+      |           x -> x + CAST(t.i AS FLOAT) * CAST(0.0005 AS FLOAT)) AS embedding
+      |  FROM q, generate_series(1, 24) AS t(i)),
+      |corpus AS (
+      |  SELECT vec_id, embedding FROM embeddings
+      |  UNION ALL SELECT vec_id, embedding FROM planted),""".stripMargin
 
   /** Embeddings plus 24 planted near-copies of the query vector
     * (vec_id 1000001..1000024, component shift `i * 0.0005f`) — the
@@ -1471,6 +1364,16 @@ object Vectors {
     exactTopWithRecallVerdict(exactTop20(s, dir, corpus, query), approx)
   }
 
+  /** The embedding-dedup oracles' corpus after an `allv AS (` line:
+    * every embedding plus a copy of every 100th shifted by 0.0005f.
+    */
+  private[queries] val perturbedCopiesSql =
+    """  SELECT vec_id, embedding FROM embeddings
+      |  UNION ALL
+      |  SELECT vec_id + 1000000,
+      |         list_transform(embedding, x -> x + CAST(0.0005 AS FLOAT))
+      |  FROM embeddings WHERE vec_id % 100 = 0),""".stripMargin
+
   /** Embedding near-dup pairs, gated the knn_graph_ann way: the
     * EMITTED rows are the exact truth set (all-pairs double-cosine
     * prefilter at 0.97 — 0.01 of slack under the final gate, so
@@ -1671,6 +1574,28 @@ object Vectors {
         (round(col("cos"), 4) + lit(0.0)).as("cos"))
       .orderBy(col("group_a"), col("group_b"))
 
+  /** The k-means and PQ oracles' floor-mean centroid update over the
+    * argmin rows of an assignment CTE, up to its FROM line.
+    */
+  private[queries] val lloydMeanSql =
+    """  SELECT cl, list(cv ORDER BY pos) AS c
+      |  FROM (
+      |    SELECT cl, pos,
+      |      CAST(floor(CAST(sum(val) AS DOUBLE) / count(*)) AS BIGINT) AS cv
+      |    FROM (
+      |      SELECT cl, unnest(range(1, len(q) + 1)) AS pos, unnest(q) AS val""".stripMargin
+
+  /** The k-means oracles' md5-order `seeds` over the quantized corpus
+    * `e` and two unrolled Lloyd iterations, ending in centroids `c2`.
+    */
+  private[queries] val kmeansTwoItersSql =
+    s"""seeds AS (
+       |  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cl,
+       |         q AS c
+       |  FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8),
+       |${kmeansIterSql(1, "seeds")}
+       |${kmeansIterSql(2, "c1")}""".stripMargin
+
   /** One unrolled Lloyd iteration for the `kmeans_train` oracle:
     * assignment CTE `a$i` (exact integer distances vs centroid table
     * `$centIn`, ties to lower cluster), floor-mean update `n$i`, and
@@ -1688,12 +1613,7 @@ object Vectors {
        |                for j in range(1, len(e.q) + 1)]) AS dist
        |    FROM e, $centIn c)),
        |n$i AS (
-       |  SELECT cl, list(cv ORDER BY pos) AS c
-       |  FROM (
-       |    SELECT cl, pos,
-       |      CAST(floor(CAST(sum(val) AS DOUBLE) / count(*)) AS BIGINT) AS cv
-       |    FROM (
-       |      SELECT cl, unnest(range(1, len(q) + 1)) AS pos, unnest(q) AS val
+       |$lloydMeanSql
        |      FROM a$i WHERE rn = 1)
        |    GROUP BY cl, pos)
        |  GROUP BY cl),
@@ -1715,12 +1635,7 @@ object Vectors {
        |                for j in range(1, len(t.q) + 1)]) AS dist
        |    FROM pe$s t, $centIn c)),
        |pn${s}_$i AS (
-       |  SELECT cl, list(cv ORDER BY pos) AS c
-       |  FROM (
-       |    SELECT cl, pos,
-       |      CAST(floor(CAST(sum(val) AS DOUBLE) / count(*)) AS BIGINT) AS cv
-       |    FROM (
-       |      SELECT cl, unnest(range(1, len(q) + 1)) AS pos, unnest(q) AS val
+       |$lloydMeanSql
        |      FROM pa${s}_$i WHERE rn = 1)
        |    GROUP BY cl, pos)
        |  GROUP BY cl),

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.avro.{AvroDecode, AvroSchemas}
+import graft.avro.AvroSchemas
 import graft.config.TableConfig
-import graft.debezium.{DebeziumCast, SchemaProvider}
+import graft.debezium.SchemaProvider
 import graft.operators.{CdcDedup, MergeEngine}
 import graft.util.SessionScopedCache
 
@@ -20,15 +20,14 @@ import org.apache.spark.sql.types.StructType
   * key_schema_id, value_schema_id) triples, merged on the driver (the
   * reference runs a topics pass plus a pairs pass per topic) -> per
   * topic, pairs in ascending registry order (older schema versions
-  * merge first — ids are monotone; the topic slice is additionally
-  * cached only when several pairs will re-read it) -> per pair: pk cols
-  * from the key schema, FAILFAST Avro decode, struct expansion,
-  * Debezium casts, W1 latest-per-key dedup, additional cols, memoized
-  * create-table, then ONE [[MergeEngine.apply]] — the change set's
-  * routing, strict-LSN upsert and pk-only delete in one transaction,
-  * which runs no delete probe when the `additionalCols` projection
-  * derives every partition column from the pk
-  * ([[MergeEngine.partitionsFollowPk]]).
+  * merge first — ids are monotone) -> per pair: its rows filtered from
+  * the cached batch, pk cols from the key schema, the payload decode
+  * ([[StreamPipeline.decodeValues]]), W1 latest-per-key dedup,
+  * additional cols, memoized create-table, then ONE
+  * [[MergeEngine.apply]] — the change set's routing, strict-LSN upsert
+  * and pk-only delete in one transaction, which runs no delete probe
+  * when the `additionalCols` projection derives every partition column
+  * from the pk ([[MergeEngine.partitionsFollowPk]]).
   */
 object MicroBatchMerger {
 
@@ -61,51 +60,34 @@ object MicroBatchMerger {
         configs.get(topic).foreach { cfg =>
           // older schema versions merge first — registry ids are monotone
           val pairs = rows.map(r => (r.getInt(1), r.getInt(2))).sortBy { case (k, v) => (v, k) }
-          // the slice cache (S7) only pays for itself when several
-          // schema pairs re-read the same topic's rows; a single-pair
-          // topic reads straight from the cached batch
-          val current =
-            if (pairs.length > 1) batch.filter(col("topic") === topic).cache() else batch
-          try {
-            pairs.foreach { case (keyId, valueId) =>
-              val keyJson = provider.schemaJson(keyId)
-              val valueJson = provider.schemaJson(valueId)
-              val pkCols = AvroSchemas.fieldNames(keyJson)
-
-              val slice = current
-                .filter(col("topic") === topic)
-                .filter(col("key_schema_id") === keyId)
-                .filter(col("value_schema_id") === valueId)
-              val raw = slice
-                .select(
-                  AvroDecode.fromAvro(col("value_avro"), valueJson, failFast = failFast)
-                    .as("value"))
-              val decoded = (if (failFast) raw else raw.filter(col("value").isNotNull))
-                .select(col("value.*"))
-                .select(DebeziumCast.castColumns(valueJson): _*)
-
-              val deduped = CdcDedup.latestPerKeyAgg(decoded, pkCols, DefaultVersionCol)
-              // one projection, also with no additionalCols: MergeEngine
-              // reads from it whether the partition columns follow the pk
-              val changes =
-                deduped.select(deduped.columns.map(col).toSeq ++ cfg.additionalCols.map(expr): _*)
-              // per-(application, table) memo: the ensure is idempotent
-              // DDL, so after the first success per session its two
-              // catalog roundtrips per micro-batch are pure fixed cost
-              SessionScopedCache.getOrElseUpdate(spark, "ensured:" + cfg.qualifiedName) {
-                MergeEngine.createTableIfNotExists(
-                  spark, StructType(changes.schema.filterNot(_.name == DefaultDeletedCol)), cfg)
-                true
-              }
-              MergeEngine(spark, cfg, changes, pkCols, DefaultVersionCol, DefaultDeletedCol)
+          pairs.foreach { case (keyId, valueId) =>
+            val keyJson = provider.schemaJson(keyId)
+            val valueJson = provider.schemaJson(valueId)
+            val pkCols = AvroSchemas.fieldNames(keyJson)
+            val slice = batch.filter(col("topic") === topic &&
+              col("key_schema_id") === keyId && col("value_schema_id") === valueId)
+            val decoded = StreamPipeline.decodeValues(slice, valueJson, failFast)
+            val deduped = CdcDedup.latestPerKeyAgg(decoded, pkCols, DefaultVersionCol)
+            // one projection, also with no additionalCols: MergeEngine
+            // reads from it whether the partition columns follow the pk
+            val changes =
+              deduped.select(deduped.columns.map(col).toSeq ++ cfg.additionalCols.map(expr): _*)
+            // per-(application, table) memo: the ensure is idempotent
+            // DDL, so after the first success per session its two
+            // catalog roundtrips per micro-batch are pure fixed cost
+            SessionScopedCache.getOrElseUpdate(spark, "ensured:" + cfg.qualifiedName) {
+              MergeEngine.createTableIfNotExists(
+                spark, StructType(changes.schema.filterNot(_.name == DefaultDeletedCol)), cfg)
+              true
             }
-            if (cfg.autoCompactEvery > 0) {
-              val n = SessionScopedCache
-                .getOrElseUpdate(spark, "batches:" + cfg.qualifiedName)(new java.util.concurrent.atomic.AtomicLong)
-                .incrementAndGet()
-              if (n % cfg.autoCompactEvery == 0) { MergeEngine.compact(spark, cfg); () }
-            }
-          } finally { if (current ne batch) { current.unpersist(); () } }
+            MergeEngine(spark, cfg, changes, pkCols, DefaultVersionCol, DefaultDeletedCol)
+          }
+          if (cfg.autoCompactEvery > 0) {
+            val n = SessionScopedCache
+              .getOrElseUpdate(spark, "batches:" + cfg.qualifiedName)(new java.util.concurrent.atomic.AtomicLong)
+              .incrementAndGet()
+            if (n % cfg.autoCompactEvery == 0) { MergeEngine.compact(spark, cfg); () }
+          }
         }
       }
     } finally { batch.unpersist(); () }

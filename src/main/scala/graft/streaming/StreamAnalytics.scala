@@ -1,8 +1,5 @@
 package graft.streaming
 
-import graft.avro.AvroDecode
-import graft.debezium.DebeziumCast
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,11 +25,8 @@ object StreamAnalytics {
       valueSchemaJson: String,
       eventTimeCol: String = "event_time",
       timestampCol: String = "__timestamp"): DataFrame = {
-    val projected = StreamPipeline.projectEnvelope(source.load(spark))
-    projected
-      .select(AvroDecode.fromAvro(col("value_avro"), valueSchemaJson).as("value"))
-      .select(col("value.*"))
-      .select(DebeziumCast.castColumns(valueSchemaJson): _*)
+    StreamPipeline
+      .decodeValues(StreamPipeline.projectEnvelope(source.load(spark)), valueSchemaJson, failFast = true)
       .withColumn(eventTimeCol, timestamp_millis(col(timestampCol)))
   }
 }

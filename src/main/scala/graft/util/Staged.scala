@@ -45,14 +45,30 @@ object Staged {
     out
   }
 
+  /** Persist + materialize an operator's `result`, then release the
+    * intermediate cached stages — long-lived sessions calling the
+    * operators repeatedly would otherwise accumulate cached blocks until
+    * storage eviction pressure builds. The returned DataFrame is
+    * persisted (operator results such as candidate-pair sets are small
+    * relative to the corpus); callers owning the last reference may
+    * `.unpersist()` it.
+    */
+  private[graft] def materialized(result: DataFrame, intermediates: Seq[DataFrame]): DataFrame = {
+    val out = result.persist()
+    out.count() // force evaluation while the intermediate caches are alive
+    intermediates.foreach(_.unpersist())
+    out
+  }
+
   /** Release the RDD blocks behind a settled frame NOW (for the
     * per-invocation settle pattern — a frame settled inside one query
     * evaluation and fully consumed before it returns).
     * `Dataset.unpersist` only clears CacheManager entries, so a
     * checkpoint's blocks otherwise linger until the GC-driven
-    * ContextCleaner notices the RDD is unreachable (the
-    * [[graft.operators.SuffixArray]] release pattern). Matches only a
-    * frame whose ROOT is the checkpoint; no-op on anything else.
+    * ContextCleaner notices the RDD is unreachable. Matches only a
+    * frame whose ROOT is the checkpoint (never a derived plan, whose
+    * tree would contain some OTHER live checkpoint's LogicalRDD); no-op
+    * on anything else.
     */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed match {

@@ -163,6 +163,25 @@ class MergeEngineSpec extends SparkSpec {
       "re-added partition missing from catalog (stale registration memo)")
   }
 
+  test("a catalog reader sees every commit to a registered partitioned table") {
+    val path = tmpDir("merge-cat-read")
+    val cfg = TableConfig("graft_test", "cat_read_tbl", s"$path/t", partitionCols = Seq("year"))
+    val schema = Seq((0, "x", 2023, 0L)).toDF("id", "name", "year", "lsn").schema
+    MergeEngine.createTableIfNotExists(spark, schema, cfg)
+    MergeEngine.upsert(spark, cfg,
+      Seq((1, "a", 2023, 10L), (2, "b", 2024, 11L)).toDF("id", "name", "year", "lsn"),
+      Seq("id"), "lsn")
+    assert(spark.table(cfg.qualifiedName).count() == 2L)
+    // the second commit replaces year=2023's files and adds a column
+    MergeEngine.upsert(spark, cfg,
+      Seq((1, "a2", 2023, 20L, "555")).toDF("id", "name", "year", "lsn", "phone"),
+      Seq("id"), "lsn")
+    val viaCatalog = spark.table(cfg.qualifiedName)
+    assert(viaCatalog.columns.contains("phone"))
+    assert(viaCatalog.select("id", "name", "phone").as[(Int, String, Option[String])]
+      .collect().sortBy(_._1).toSeq == Seq((1, "a2", Some("555")), (2, "b", None)))
+  }
+
   private val usersTopic = "pg.public.users"
 
   private lazy val usersProvider = new graft.debezium.InMemorySchemaProvider(Map(

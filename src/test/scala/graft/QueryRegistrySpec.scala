@@ -42,6 +42,12 @@ class QueryRegistrySpec extends AnyFunSuite {
     assert(declared.exists(_.sharesOracleOf.nonEmpty))
   }
 
+  test("no two queries own byte-identical oracle SQL; a duplicate uses Query.sharing") {
+    val dups = declared.filter(_.sharesOracleOf.isEmpty).groupBy(_.sql).values
+      .collect { case qs if qs.size > 1 => qs.map(_.name).mkString(" = ") }
+    assert(dups.isEmpty, s"identical oracles owned twice: ${dups.mkString("; ")}")
+  }
+
   test("each declaration in src/main is in the table, once; SparkEntry declares none") {
     val bySource = mainSources.flatMap { p =>
       declaration.findAllMatchIn(Files.readString(p)).map(m => m.group(1) -> p.getFileName.toString)

@@ -5,6 +5,7 @@ import graft.debezium.InMemorySchemaProvider
 import graft.operators.MergeEngine
 import graft.streaming.{GraftStreamingListener, KafkaRecord, MemoryCdcSource, StreamPipeline}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -77,6 +78,15 @@ class StreamPipelineSpec extends SparkSpec {
       checkpointLocation = s"$base/ckpt",
       provider = provider,
       trigger = Trigger.ProcessingTime(0))
+    // a catalog reader sees every commit: the rows readTable reads, and
+    // the columns schema evolution added
+    def assertCatalogRead(t: DataFrame): Unit = {
+      val viaCatalog = spark.table(cfg.qualifiedName)
+      assert(viaCatalog.columns.toSet == t.columns.toSet)
+      def rows(df: DataFrame) = df.select(t.columns.map(col).toSeq: _*)
+        .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+      assert(rows(viaCatalog) == rows(t))
+    }
     try {
       assert(query.isActive)
 
@@ -84,6 +94,7 @@ class StreamPipelineSpec extends SparkSpec {
       source.addRecords((1 to 5).map(i => record(i, s"user$i", lsn = i * 10L)))
       query.processAllAvailable()
       val t1 = MergeEngine.readTable(spark, cfg.path).get
+      assertCatalogRead(t1)
       assert(t1.count() == 5)
       assert(t1.schema.fieldNames.contains("__log_sequence_number"))
       assert(!t1.schema.fieldNames.contains("__deleted"), "__deleted must not reach the target")
@@ -95,6 +106,7 @@ class StreamPipelineSpec extends SparkSpec {
         record(3, "user3-stale", lsn = 1L))) // must NOT overwrite lsn=30
       query.processAllAvailable()
       val t2 = MergeEngine.readTable(spark, cfg.path).get
+      assertCatalogRead(t2)
       assert(t2.count() == 5)
       val names = t2.select("id", "name").as[(Int, String)].collect().toMap
       assert(names(1) == "user1-renamed" && names(2) == "user2-renamed")
@@ -106,6 +118,7 @@ class StreamPipelineSpec extends SparkSpec {
         record(4, "user4", lsn = 200L, deleted = true)))
       query.processAllAvailable()
       val t3 = MergeEngine.readTable(spark, cfg.path).get
+      assertCatalogRead(t3)
       assert(t3.select("id").as[Int].collect().sorted.toSeq == Seq(2, 3, 5))
 
       // batch 4: schema evolution — v2 adds phone_number
@@ -114,8 +127,10 @@ class StreamPipelineSpec extends SparkSpec {
           valueSchemaJson = AvroTestData.usersValueSchemaV2, phone = Some("555-0100"))))
       query.processAllAvailable()
       val t4 = MergeEngine.readTable(spark, cfg.path).get
+      assertCatalogRead(t4)
       assert(t4.count() == 4)
       assert(t4.schema.fieldNames.contains("phone_number"))
+      assert(spark.table(cfg.qualifiedName).columns.contains("phone_number"))
       val phones = t4.select("id", "phone_number").as[(Int, Option[String])].collect().toMap
       assert(phones(6).contains("555-0100"))
       assert(phones(2).isEmpty, "pre-evolution rows must read null for the new column")
@@ -124,8 +139,10 @@ class StreamPipelineSpec extends SparkSpec {
       source.addRecords(Seq(record(7, "user7", lsn = 400L)))
       query.processAllAvailable()
       val t5 = MergeEngine.readTable(spark, cfg.path).get
+      assertCatalogRead(t5)
       assert(t5.count() == 5)
       assert(t5.schema.fieldNames.contains("phone_number"), "dropped column must persist")
+      assert(spark.table(cfg.qualifiedName).columns.contains("phone_number"))
       assert(t5.filter(col("id") === 7).select("phone_number").collect().head.isNullAt(0))
 
       // listener saw the rows
