@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
+  * SPARK_GRAFT_SF_DIR and prints, as its last stdout line, ONE JSON line
+  * with per-query seconds.
   *
   * Each query runs SPARK_GRAFT_BENCH_REPS times (default 3); the JSON
   * reports the per-query MEDIAN (noise-resistant — a single-shot bench
@@ -143,7 +144,6 @@ object Bench {
     val totalCpu = results.filter(!_._5).map(_._6).sum
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"total_cpu":$totalCpu,"failed":$failedList,"queries":$qs,"queries_cpu":$cpuJs,"queries_gc":$gcJs,"queries_cold":$cold,"queries_min":$mins,"stage_cached":$stagedList,"sf":"$sfDir"}"""
-    println(line)
     val record =
       s"""{"loadavg_before":"$loadBefore","loadavg_after":"${loadavg()}","bench":$line}"""
     // only FULL runs AT THE COMPARATOR SF update the durable record —
@@ -179,8 +179,7 @@ object Bench {
     // any SF, any cpu count — writes its complete per-query record to a
     // path keyed by (sf, cpus), so no later run at a different
     // configuration can overwrite it. The compact trailer below points
-    // here; a consumer that needs the per-query map follows the pointer
-    // instead of parsing the (over-long) first stdout line.
+    // here, for a consumer whose capture truncates the full line.
     val detailPath =
       if (only.nonEmpty || sys.env.get("SPARK_GRAFT_BENCH_RECORD").contains("0")) None
       else Some(s"BENCH_DETAIL_${sfBase}_c$cpus.json")
@@ -192,15 +191,14 @@ object Bench {
         case e: Throwable => System.err.println(s"[bench] $path write failed: $e")
       }
     }
-    // compact trailer for the driver's tail capture: the full line
-    // above overflows its buffer at 238 queries (BENCH_r14/r15 parsed
-    // null) — this short line carries the headline numbers and is
-    // printed LAST so a tail parse always sees it intact. Three rounds
-    // of `parsed: null` later (r16: the trailer WAS in the tail but
-    // wore sbt's `[info] ` prefix), the line is belt-and-braced:
-    // build.sbt forces StdoutOutput for forked runs (bare stdout, no
-    // log-prefix rewrite) AND the trailer is mirrored to
-    // BENCH_TRAILER.json so any consumer can read it as a bare file.
+    // Stdout ends with two lines: this compact trailer, then the full
+    // per-query line LAST, so that a parse of the last line gets every
+    // query's numbers, also from a filtered run, which writes no detail
+    // record. A capture that truncates the long line (BENCH_r14/r15
+    // parsed null at 238 queries) still has the trailer's headline
+    // numbers on the line before it, and in BENCH_TRAILER.json as a
+    // bare file; build.sbt forces StdoutOutput for forked runs, so
+    // neither line wears sbt's `[info] ` prefix.
     // `detail` points at the RUN-UNIQUE per-query record written above
     // (r18 VERDICT: a mutable pointer — BENCH_SELF.json — lost the
     // round's 32-cpu detail to the driver's later 8-cpu run), falling
@@ -215,6 +213,7 @@ object Bench {
       case e: Throwable => System.err.println(s"[bench] trailer write failed: $e")
     }
     println(trailer)
+    println(line)
     spark.stop()
   }
 }

@@ -120,7 +120,7 @@ object PlanAudit {
     * prune (e.g. `year(o_orderdate) = 1996`, which pushes below joins
     * but never reaches PushedFilters) fails the audit.
     */
-  final case class PruneExpect(desc: String, re: String)
+  private[graft] final case class PruneExpect(desc: String, re: String)
 
   /** The pruning-sensitive queries and the scan evidence each must
     * carry (verified against the actual sf0.001 plans; a deliberate
@@ -254,7 +254,7 @@ object PlanAudit {
       .map(e => s"prune expectation unmet: ${e.desc} (/${e.re}/)")
   }
 
-  final case class QueryAudit(
+  private[graft] final case class QueryAudit(
       cartesian: Int,
       bnljBounded: Int,
       bnljUnbounded: Int,

@@ -100,7 +100,7 @@ object ScaleFixture {
     * (l_orderkey -> orders, o_custkey -> customer, *_nationkey ->
     * nation -> region).
     */
-  def writeStar(spark: SparkSession, outDir: String, scale: Int): Unit = {
+  private def writeStar(spark: SparkSession, outDir: String, scale: Int): Unit = {
     require(scale > 0, "scale must be positive")
     val par = spark.sparkContext.defaultParallelism
     def h(seed: String, n: Long): org.apache.spark.sql.Column =

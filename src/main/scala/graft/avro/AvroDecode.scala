@@ -58,7 +58,7 @@ case class AvroDecode(child: Expression, schemaJson: String, failFast: Boolean)
   /** public: called from generated code via an expression reference.
     * Returns null for a malformed payload in PERMISSIVE mode.
     */
-  def decodeBytes(bytes: Array[Byte]): Any =
+  private[graft] def decodeBytes(bytes: Array[Byte]): Any =
     try {
       decoder = DecoderFactory.get().binaryDecoder(bytes, 0, bytes.length, decoder)
       record = reader.read(record, decoder)

@@ -52,7 +52,7 @@ case class AvroEncode(child: Expression, schemaJson: String)
     encodeRow(input.asInstanceOf[InternalRow])
 
   /** public: called from generated code via an expression reference */
-  def encodeRow(row: InternalRow): Array[Byte] = {
+  private[graft] def encodeRow(row: InternalRow): Array[Byte] = {
     out.reset()
     encoder = EncoderFactory.get().binaryEncoder(out, encoder)
     writer.write(serialize(row), encoder)

@@ -33,7 +33,7 @@ object DebeziumCast {
   /** True when the field type (unwrapping a `["null", T]` union) is a
     * string annotated with `connect.name = io.debezium.time.ZonedTimestamp`.
     */
-  def isZonedTimestamp(s: Schema): Boolean = {
+  private def isZonedTimestamp(s: Schema): Boolean = {
     val t = unwrapNullable(s)
     t.getType == Schema.Type.STRING && t.getProp(ConnectNameProp) == ZonedTimestamp
   }

@@ -45,7 +45,7 @@ case class ArrayHitCount(child: Expression, needles: Seq[String])
     hitsOf(input.asInstanceOf[ArrayData])
 
   /** public: called from generated code via an expression reference */
-  def hitsOf(arr: ArrayData): Long = {
+  private[graft] def hitsOf(arr: ArrayData): Long = {
     val n = arr.numElements()
     var hits = 0L
     var j = 0

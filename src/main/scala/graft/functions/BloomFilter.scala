@@ -149,7 +149,7 @@ case class BloomContains(
     containsOf(words.asInstanceOf[ArrayData], value)
 
   /** public: called from generated code via an expression reference */
-  def containsOf(words: ArrayData, value: Any): Boolean = {
+  private[graft] def containsOf(words: ArrayData, value: Any): Boolean = {
     valueRow.update(0, value)
     var i = 0
     while (i < numHashes) {
@@ -208,7 +208,7 @@ case class BloomHitCount(
   override def nullSafeEval(input: Any): Any = hitCountOf(input.asInstanceOf[ArrayData])
 
   /** public: called from generated code via an expression reference */
-  def hitCountOf(arr: ArrayData): Long = {
+  private[graft] def hitCountOf(arr: ArrayData): Long = {
     var hits = 0L
     var j = 0
     val n = arr.numElements()

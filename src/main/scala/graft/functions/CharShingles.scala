@@ -36,7 +36,7 @@ case class CharShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
     shinglesOf(input.asInstanceOf[UTF8String])
 
   /** public: called from generated code via an expression reference */
-  def shinglesOf(s: UTF8String): GenericArrayData = {
+  private[graft] def shinglesOf(s: UTF8String): GenericArrayData = {
     val len = s.numChars()
     if (len < n) return new GenericArrayData(Array[Any](s))
     val out = new Array[Any](len - n + 1)

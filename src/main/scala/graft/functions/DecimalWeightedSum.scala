@@ -61,7 +61,7 @@ case class DecimalWeightedSum(child: Expression, weights: Seq[Double])
   /** public: called from generated code via an expression reference.
     * Returns java.lang.Double (null for the poisoned cases).
     */
-  def sumOf(a: ArrayData): java.lang.Double = {
+  private[graft] def sumOf(a: ArrayData): java.lang.Double = {
     val d = w.length
     if (a.numElements() < d) {
       // ANSI-faithful: the chained form's element_at throws here

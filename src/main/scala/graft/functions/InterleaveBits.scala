@@ -61,7 +61,7 @@ case class InterleaveBits(children: Seq[Expression]) extends Expression {
   }
 
   /** public: called from generated code via an expression reference */
-  def monotoneDouble(d: Double): Long = {
+  private[graft] def monotoneDouble(d: Double): Long = {
     val bits = java.lang.Double.doubleToLongBits(d)
     if (bits < 0) ~bits else bits | Long.MinValue
   }

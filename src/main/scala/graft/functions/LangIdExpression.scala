@@ -61,7 +61,7 @@ case class LangIdExpression(child: Expression, profiles: Map[String, Seq[String]
     langOf(input.asInstanceOf[UTF8String])
 
   /** public: called from generated code via an expression reference */
-  def langOf(input: UTF8String): UTF8String = {
+  private[graft] def langOf(input: UTF8String): UTF8String = {
     // UTF8String's own trim/toLowerCase so canonicalization matches
     // Spark's trim()/lower() exactly (incl. unicode case folding)
     val s = input.trim().toLowerCase.toString

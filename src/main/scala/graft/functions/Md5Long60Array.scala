@@ -43,7 +43,7 @@ case class Md5Long60Array(child: Expression) extends UnaryExpression {
     hashAll(input.asInstanceOf[ArrayData])
 
   /** public: called from generated code via an expression reference */
-  def hashAll(arr: ArrayData): ArrayData = {
+  private[graft] def hashAll(arr: ArrayData): ArrayData = {
     val md = Md5Long60Array.digest.get()
     val n = arr.numElements()
     val out = new Array[Any](n)

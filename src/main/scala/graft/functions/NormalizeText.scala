@@ -49,7 +49,7 @@ case class NormalizeText(child: Expression, form: String) extends UnaryExpressio
     normalizeOf(input.asInstanceOf[UTF8String])
 
   /** public: called from generated code via an expression reference */
-  def normalizeOf(s: UTF8String): UTF8String = {
+  private[graft] def normalizeOf(s: UTF8String): UTF8String = {
     val str = s.toString
     // fast path: already normalized (the overwhelmingly common case
     // for ASCII-heavy corpora) — skip the rebuild

@@ -73,7 +73,7 @@ case class ProbeListsArray(child: Expression, centroids: Seq[Seq[Double]], nprob
     probesOf(input.asInstanceOf[ArrayData])
 
   /** public: called from generated code via an expression reference */
-  def probesOf(arr: ArrayData): ArrayData = {
+  private[graft] def probesOf(arr: ArrayData): ArrayData = {
     val dims = arr.numElements()
     val cd = index.dims
     val take = math.min(nprobe, centroids.length)

@@ -48,7 +48,7 @@ case class ScrubLines(child: Expression, lines: Seq[String], sep: String)
     scrubOf(input.asInstanceOf[UTF8String])
 
   /** public: called from generated code via an expression reference */
-  def scrubOf(text: UTF8String): InternalRow = {
+  private[graft] def scrubOf(text: UTF8String): InternalRow = {
     // -1 limit: Spark's split keeps trailing empty lines; Java's
     // default 0 would silently drop them
     val parts = text.toString.split(sep, -1)

@@ -42,7 +42,7 @@ case class SignBits(child: Expression) extends UnaryExpression {
     packOf(input.asInstanceOf[ArrayData])
 
   /** public: called from generated code via an expression reference */
-  def packOf(arr: ArrayData): ArrayData = {
+  private[graft] def packOf(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     val words = new Array[Long]((n + 31) / 32)
     var j = 0
@@ -87,7 +87,7 @@ case class HammingWords(left: Expression, right: Expression) extends BinaryExpre
     hammingOf(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   /** public: called from generated code via an expression reference */
-  def hammingOf(a: ArrayData, b: ArrayData): Long = {
+  private[graft] def hammingOf(a: ArrayData, b: ArrayData): Long = {
     val n = a.numElements()
     require(b.numElements() == n,
       s"hamming_words: mismatched word counts ${n} vs ${b.numElements()}")

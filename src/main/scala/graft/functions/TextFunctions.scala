@@ -31,7 +31,7 @@ object TextFunctions {
   /** Characters matched by the class, as a count. `cls` must be a valid
     * Java regex character class, e.g. `"[.,;:!?]"`.
     */
-  def charClassCount(text: Column, cls: String): Column =
+  private def charClassCount(text: Column, cls: String): Column =
     (length(text) - length(regexp_replace(text, cls, ""))).cast("long")
 
   /** Punctuation ratio (simple fixed class, identical semantics in ANSI
@@ -76,17 +76,10 @@ object TextFunctions {
   def fingerprint64(text: Column): Column =
     xxhash64(regexp_replace(lower(trim(text)), "\\s+", " "))
 
-  /** Word n-gram array (n >= 1) over whitespace tokens.
-    *
-    * NOTE: when this appears inside another per-element expression
-    * (e.g. a MinHash transform), stage `tokens(text)` as its own
-    * projection first and use [[ngramsFromTokens]] — interpreted
-    * higher-order functions re-evaluate inlined subtrees per element.
-    */
-  def wordNgrams(text: Column, n: Int): Column = ngramsFromTokens(tokens(text), n)
-
   /** Word n-grams from an already-computed token array column. Short
-    * inputs (< n tokens) yield the whole text as one shingle.
+    * inputs (< n tokens) yield the whole text as one shingle. Stage
+    * `tokens(text)` as its own projection first: interpreted
+    * higher-order functions re-evaluate inlined subtrees per element.
     * Native codegen'd expression ([[WordNgrams]]); its HOF twin is the
     * differential reference in WordNgramsSpec.
     */

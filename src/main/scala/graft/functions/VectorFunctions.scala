@@ -106,16 +106,6 @@ object VectorFunctions {
         org.apache.spark.sql.GraftColumnShim.expression(qa),
         org.apache.spark.sql.GraftColumnShim.expression(qb)))
 
-  /** Squared L2 distance. */
-  def l2DistanceSq(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0),
-      (acc, x) => acc + x)
-
   /** Random-hyperplane (SimHash) signature for cosine LSH: `bits`
     * pseudo-random hyperplanes derived deterministically from `seed`;
     * bit i is the sign of the projection onto hyperplane i. Vectors with

@@ -41,7 +41,7 @@ case class WindowMinima(child: Expression, w: Int) extends UnaryExpression {
     minimaOf(input.asInstanceOf[ArrayData])
 
   /** public: called from generated code via an expression reference */
-  def minimaOf(arr: ArrayData): ArrayData = {
+  private[graft] def minimaOf(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     if (n < w) {
       // short input: one element, the array_min of everything

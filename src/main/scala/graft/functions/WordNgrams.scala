@@ -45,7 +45,7 @@ case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
   @transient private lazy val sep = UTF8String.fromString(" ")
 
   /** public: called from generated code via an expression reference */
-  def gramsOf(arr: ArrayData): ArrayData = {
+  private[graft] def gramsOf(arr: ArrayData): ArrayData = {
     if (arr == null)
       return new GenericArrayData(Array[Any](UTF8String.EMPTY_UTF8))
     val len = arr.numElements()

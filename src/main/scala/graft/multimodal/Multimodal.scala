@@ -46,7 +46,7 @@ object Multimodal {
     * (mp4, png, ...) that have no real codec here. A production
     * embedding model drops into this call shape.
     */
-  object StubCodec extends Serializable {
+  private object StubCodec extends Serializable {
     def features(content: Array[Byte], dim: Int): Array[Float] = {
       val out = new Array[Float](dim)
       var h = 1125899906842597L // FNV-ish rolling hash over the bytes

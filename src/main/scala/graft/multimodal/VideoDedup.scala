@@ -26,7 +26,7 @@ object VideoDedup {
     * [[graft.operators.BinaryAnn.packSignBits]] layout, same as
     * [[ImageDedup.dHash]] — one hash space across modalities).
     */
-  def dHashLuma(luma: Array[Int], width: Int, height: Int): Array[Long] = {
+  private def dHashLuma(luma: Array[Int], width: Int, height: Int): Array[Long] = {
     val g = Codecs.resampleNearestLuma(luma, width, height, 9, 8)
     val words = new Array[Long](2)
     var r = 0

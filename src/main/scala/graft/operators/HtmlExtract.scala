@@ -137,7 +137,7 @@ object HtmlExtract {
     * 0 for empty, else separator count + 1 — integer arithmetic that
     * replays exactly (DuckDB's str_split on a space agrees).
     */
-  def lineWords(line: Column): Column =
+  private def lineWords(line: Column): Column =
     when(length(line) === 0, lit(0L))
       .otherwise(size(split(line, " ")).cast("long"))
 
@@ -146,7 +146,7 @@ object HtmlExtract {
     * keywords, short fragments with no terminal punctuation, and
     * template lines repeated across >= `minDocs` documents.
     */
-  def isBoilerplate(line: Column, docFreq: Column, minDocs: Long): Column =
+  private def isBoilerplate(line: Column, docFreq: Column, minDocs: Long): Column =
     lower(line).rlike(BoilerKeywords) ||
       (lineWords(line) <= 3 && !line.rlike("[.!?]$")) ||
       docFreq >= minDocs

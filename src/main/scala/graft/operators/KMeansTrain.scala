@@ -112,7 +112,7 @@ object KMeansTrain {
     * FIXED centroid (the training-loss projection for the emitted
     * assignment — replayable, order-free).
     */
-  def distToQ(q: Column, centroid: Seq[Long]): Column =
+  private def distToQ(q: Column, centroid: Seq[Long]): Column =
     aggregate(
       zip_with(q, typedLit(centroid), (a, b) => (a - b) * (a - b)),
       lit(0L),

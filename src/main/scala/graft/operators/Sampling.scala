@@ -74,7 +74,7 @@ object Sampling {
     df.filter(pmod(xxhash64(idCols.map(col): _*), lit(denom.toLong)) < num.toLong)
 
   /** Rate-filter on a caller-supplied deterministic hash column. */
-  def hashRateFilter(df: DataFrame, hash: Column, num: Int, denom: Int): DataFrame =
+  private def hashRateFilter(df: DataFrame, hash: Column, num: Int, denom: Int): DataFrame =
     df.filter(pmod(hash, lit(denom.toLong)) < num.toLong)
 
   /** Deterministic MIXTURE sampling: each group (e.g. data source) is

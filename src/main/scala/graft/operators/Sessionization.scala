@@ -7,13 +7,12 @@ import org.apache.spark.sql.functions._
 /** Batch sessionization: assign inactivity-gap session ids with two
   * window passes over (key, ts) — lag to flag session starts, then a
   * running sum to number them. One shuffle on the key; both windows
-  * share the same sort. (The streaming counterpart with bounded state
-  * is [[graft.streaming.Sessionize]].)
+  * share the same sort.
   */
 object Sessionization {
 
   /** Adds a `session_id` column (0-based per key, in time order). */
-  def assignSessions(
+  private def assignSessions(
       df: DataFrame,
       keyCols: Seq[String],
       tsSeconds: Column,

@@ -221,7 +221,7 @@ object SimilaritySearch {
     * self-join keyed by the (reversed) pair — the directed edge table
     * is k·|nodes| rows, never corpus-sized.
     */
-  def mutualEdges(directed: DataFrame): DataFrame = {
+  private def mutualEdges(directed: DataFrame): DataFrame = {
     val e = directed.select(col("src"), col("dst"), col("sim"))
     val rev = e.select(col("dst").as("src"), col("src").as("dst"))
     e.join(rev, Seq("src", "dst"))

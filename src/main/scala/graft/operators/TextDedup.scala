@@ -33,26 +33,26 @@ object TextDedup {
   sealed trait MinhashScheme {
     /** Hash of one shingle under seed `i`; any type with a total order
       * under `least`. */
-    def shingleHash(seed: Int, shingle: Column): Column
+    private[operators] def shingleHash(seed: Int, shingle: Column): Column
     /** Identity element for `least` over [[shingleHash]] values. */
-    def hashMax: Column
+    private[operators] def hashMax: Column
     /** Hash of one signature band (a slice of the signature array). */
-    def bandHash(sigSlice: Column): Column
+    private[operators] def bandHash(sigSlice: Column): Column
   }
 
   case object XxHash64Scheme extends MinhashScheme {
-    def shingleHash(seed: Int, shingle: Column): Column = xxhash64(lit(seed), shingle)
-    def hashMax: Column = lit(Long.MaxValue)
-    def bandHash(sigSlice: Column): Column = xxhash64(sigSlice)
+    override def shingleHash(seed: Int, shingle: Column): Column = xxhash64(lit(seed), shingle)
+    override def hashMax: Column = lit(Long.MaxValue)
+    override def bandHash(sigSlice: Column): Column = xxhash64(sigSlice)
   }
 
   case object PortableMd5Scheme extends MinhashScheme {
-    def shingleHash(seed: Int, shingle: Column): Column =
+    override def shingleHash(seed: Int, shingle: Column): Column =
       md5(concat(lit(s"$seed:"), shingle))
     // 'g' sorts after every hex digit, so it is an identity for `least`
     // over md5 hex strings.
-    def hashMax: Column = lit("g")
-    def bandHash(sigSlice: Column): Column = md5(concat_ws("|", sigSlice))
+    override def hashMax: Column = lit("g")
+    override def bandHash(sigSlice: Column): Column = md5(concat_ws("|", sigSlice))
   }
 
   /** Spread a SMALL-partition-count input across the cores before
@@ -180,18 +180,10 @@ object TextDedup {
         (m.toDouble * (pow - 1))).cast("long"))
   }
 
-  /** MinHash signature column: `numHashes` minimums over seeded
-    * xxhash64 of the document's character shingles. Entirely per-row —
-    * one `aggregate` pass, no explode, no shuffle.
-    */
-  def minhashSignature(text: Column, numHashes: Int = 32, shingleSize: Int = 5): Column =
-    minhashSignatureFromShingles(
-      array_distinct(TextFunctions.charShingles(text, shingleSize)), numHashes)
-
   /** Estimated Jaccard similarity from two MinHash signatures: the
     * fraction of agreeing components.
     */
-  def estimatedJaccard(sigA: Column, sigB: Column): Column =
+  private def estimatedJaccard(sigA: Column, sigB: Column): Column =
     size(filter(zip_with(sigA, sigB, (a, b) => a === b), x => x)).cast("double") / size(sigA)
 
   /** Default per-bucket candidate-pair budget for the banded LSH
@@ -1116,19 +1108,19 @@ object TextDedup {
     * `dedup_simhash` oracle gate.
     */
   sealed trait SimhashScheme {
-    def tokenHash(t: Column): Column
+    private[operators] def tokenHash(t: Column): Column
     def bits: Int
     /** Array-level token hashing; published schemes get native twins. */
-    def tokenHashArray(toks: Column): Column = transform(toks, t => tokenHash(t))
+    private[operators] def tokenHashArray(toks: Column): Column = transform(toks, t => tokenHash(t))
   }
 
   case object XxHash64Simhash extends SimhashScheme {
-    def tokenHash(t: Column): Column = xxhash64(t)
+    override def tokenHash(t: Column): Column = xxhash64(t)
     val bits: Int = 64
   }
 
   case object PortableMd5Simhash extends SimhashScheme {
-    def tokenHash(t: Column): Column =
+    override def tokenHash(t: Column): Column =
       conv(substring(md5(t), 1, 15), 16, 10).cast("long")
     val bits: Int = 60
     // one digest + integer shifts per token instead of the interpreted

@@ -53,14 +53,14 @@ object UnigramLm {
 
   /** A trained vocabulary: piece -> (count, quantized log-prob). */
   final case class Vocab(pieces: Seq[(String, Long, Long)], maxPieceLen: Int) {
-    def lpMap: Map[String, Long] = pieces.map(p => (p._1, p._3)).toMap
+    private[UnigramLm] def lpMap: Map[String, Long] = pieces.map(p => (p._1, p._3)).toMap
   }
 
   /** Distinct words of the corpus with frequencies, bounded to
     * `maxWordLen` characters (the DP-unroll bound the SQL oracle
     * shares; words above it are dropped by BOTH engines).
     */
-  def wordTable(docs: DataFrame, textCol: String, maxWordLen: Int): DataFrame =
+  private def wordTable(docs: DataFrame, textCol: String, maxWordLen: Int): DataFrame =
     docs
       .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
       .filter(length(col("w")).between(1, maxWordLen))
@@ -86,7 +86,7 @@ object UnigramLm {
     * chars plus the top `topMulti` multi-char pieces. The collect is
     * bounded by |alphabet| + topMulti.
     */
-  def seedCounts(words: DataFrame, maxPieceLen: Int, topMulti: Int): Seq[(String, Long)] = {
+  private def seedCounts(words: DataFrame, maxPieceLen: Int, topMulti: Int): Seq[(String, Long)] = {
     val subs = words
       .select(col("wn"),
         explode(flatten(transform(

@@ -113,8 +113,36 @@ private[graft] object StagedSwap {
     }
   }
 
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** Whether `p` is on the local file system as the `file` scheme
+    * resolves by default — Hadoop's `LocalFileSystem`, or the proxy of
+    * it that hive-exec registers for the scheme — which [[LocalFs]]
+    * replaces. A session that names its own `fs.file.impl` keeps it.
+    */
+  private def isDefaultLocal(spark: SparkSession, p: Path): Boolean = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.get("fs.file.impl") == null && p.getFileSystem(conf).getUri.getScheme == "file"
+  }
+
+  private def fsOf(spark: SparkSession, p: Path): FileSystem = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    if (!isDefaultLocal(spark, p)) p.getFileSystem(conf)
+    else { val local = new LocalFs; local.initialize(p.getFileSystem(conf).getUri, conf); local }
+  }
+
+  /** The stage write of every commit: `df` as parquet at `dir`,
+    * partitioned by `partCols`, replacing what is there. On the
+    * default local file system the write's tasks and its committer run
+    * on [[LocalFs]] (per-write Hadoop options, uncached so that no
+    * other write's instance is reused).
+    */
+  private[graft] def writeStage(
+      spark: SparkSession, df: DataFrame, partCols: Seq[String], dir: String): Unit = {
+    val w = df.write.mode("overwrite")
+    val local =
+      if (!isDefaultLocal(spark, new Path(dir))) w
+      else w.option("fs.file.impl", classOf[LocalFs].getName).option("fs.file.impl.disable.cache", "true")
+    (if (partCols.nonEmpty) local.partitionBy(partCols: _*) else local).parquet(dir)
+  }
 
   /** Replace units of the store at `root` in one transaction. `stage`
     * writes the replacement units under the staging dir it is handed
@@ -229,8 +257,7 @@ private[graft] object StagedSwap {
       partCols: Seq[String],
       removed: Seq[String] => Seq[String] = _ => Nil): Seq[String] =
     commit(spark, root) { staging =>
-      val w = df.write.mode("overwrite")
-      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(staging)
+      writeStage(spark, df, partCols, staging)
       val fs = fsOf(spark, new Path(staging))
       val base = fs.makeQualified(new Path(staging)).toString
       val touched = units(fs, new Path(staging), partCols.size)

@@ -102,10 +102,8 @@ private[graft] object Store {
   def write(spark: SparkSession, root: String)(ops: Op*): Unit = {
     require(ops.map(_.table).distinct.size == ops.size,
       s"one op per table: ${ops.map(_.table).mkString(", ")}")
-    def stage(df: DataFrame, partCol: Option[String], dst: String): Unit = {
-      val w = df.write.mode("overwrite")
-      partCol.fold(w)(w.partitionBy(_)).parquet(dst)
-    }
+    def stage(df: DataFrame, partCol: Option[String], dst: String): Unit =
+      StagedSwap.writeStage(spark, df, partCol.toSeq, dst)
     ops match {
       case Seq(Put("", df, partCol)) => StagedSwap.rotateIn(spark, root)(stage(df, partCol, _))
       case _ => StagedSwap.commit(spark, root) { staging =>

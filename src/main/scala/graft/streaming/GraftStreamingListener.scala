@@ -5,74 +5,30 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
-/** Streaming observability + test synchronization — capability-parity
-  * with the reference's listener (reference: stream_listener.py:10-80):
-  * accumulates `numInputRows` from progress events, tracks activity
-  * timestamps, captures termination errors, and offers the two polling
-  * helpers the reference's tests rely on (row-count checkpoints and
-  * idle detection for "initial snapshot complete").
+/** Streaming observability — capability-parity with the reference's
+  * listener (reference: stream_listener.py:10-80): accumulates
+  * `numInputRows` from progress events and captures termination
+  * errors.
   */
 final class GraftStreamingListener extends StreamingQueryListener {
 
   private val rows = new AtomicLong(0L)
-  private val lastActivityMs = new AtomicLong(System.currentTimeMillis())
   private val lastError = new AtomicReference[Option[String]](None)
-  @volatile private var started = false
   @volatile private var terminated = false
 
   def rowsProcessed: Long = rows.get()
   def error: Option[String] = lastError.get()
-  def isStarted: Boolean = started
   def isTerminated: Boolean = terminated
 
-  override def onQueryStarted(event: QueryStartedEvent): Unit = {
-    started = true
-    lastActivityMs.set(System.currentTimeMillis())
-  }
+  override def onQueryStarted(event: QueryStartedEvent): Unit = ()
 
   override def onQueryProgress(event: QueryProgressEvent): Unit = {
     val n = event.progress.numInputRows
-    if (n > 0) {
-      rows.addAndGet(n)
-      lastActivityMs.set(System.currentTimeMillis())
-    }
+    if (n > 0) rows.addAndGet(n)
   }
 
   override def onQueryTerminated(event: QueryTerminatedEvent): Unit = {
     terminated = true
     lastError.set(event.exception)
   }
-
-  /** Reset the row checkpoint (reference: set_checkpoint). */
-  def setCheckpoint(): Unit = rows.set(0L)
-
-  /** Block until at least `n` rows have been processed since the last
-    * checkpoint (reference: wait_for_rows, default timeout 240 s).
-    */
-  def waitForRows(n: Long, timeoutMs: Long = 240000L): Boolean = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (System.currentTimeMillis() < deadline) {
-      failIfTerminated()
-      if (rows.get() >= n) return true
-      Thread.sleep(50)
-    }
-    false
-  }
-
-  /** Block until the stream has been idle (no input rows) for
-    * `idleMs` (reference: wait_for_snapshot_to_complete — idle >= 5 s
-    * means the initial snapshot has drained).
-    */
-  def waitForIdle(idleMs: Long = 5000L, timeoutMs: Long = 120000L): Boolean = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (System.currentTimeMillis() < deadline) {
-      failIfTerminated()
-      if (started && System.currentTimeMillis() - lastActivityMs.get() >= idleMs) return true
-      Thread.sleep(50)
-    }
-    false
-  }
-
-  private def failIfTerminated(): Unit =
-    lastError.get().foreach(e => throw new IllegalStateException(s"stream terminated with error: $e"))
 }

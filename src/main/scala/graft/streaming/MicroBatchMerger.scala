@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.avro.AvroSchemas
+import graft.avro.{AvroDecode, AvroSchemas}
 import graft.config.TableConfig
-import graft.debezium.SchemaProvider
+import graft.debezium.{DebeziumCast, SchemaProvider}
 import graft.operators.{CdcDedup, MergeEngine}
 import graft.util.SessionScopedCache
 
@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.StructType
   * topic, pairs in ascending registry order (older schema versions
   * merge first — ids are monotone) -> per pair: its rows filtered from
   * the cached batch, pk cols from the key schema, the payload decode
-  * ([[StreamPipeline.decodeValues]]), W1 latest-per-key dedup,
+  * ([[decodeValues]]), W1 latest-per-key dedup,
   * additional cols, memoized create-table, then ONE
   * [[MergeEngine.apply]] — the change set's routing, strict-LSN upsert
   * and pk-only delete in one transaction, which runs no delete probe
@@ -66,7 +66,7 @@ object MicroBatchMerger {
             val pkCols = AvroSchemas.fieldNames(keyJson)
             val slice = batch.filter(col("topic") === topic &&
               col("key_schema_id") === keyId && col("value_schema_id") === valueId)
-            val decoded = StreamPipeline.decodeValues(slice, valueJson, failFast)
+            val decoded = decodeValues(slice, valueJson, failFast)
             val deduped = CdcDedup.latestPerKeyAgg(decoded, pkCols, DefaultVersionCol)
             // one projection, also with no additionalCols: MergeEngine
             // reads from it whether the partition columns follow the pk
@@ -91,5 +91,20 @@ object MicroBatchMerger {
         }
       }
     } finally { batch.unpersist(); () }
+  }
+
+  /** The payload decode: Avro decode of `value_avro` (FAILFAST, or
+    * PERMISSIVE with the malformed rows, decoded to null, dropped),
+    * struct expansion, then the Debezium casts.
+    */
+  private def decodeValues(
+      envelope: DataFrame,
+      valueSchemaJson: String,
+      failFast: Boolean): DataFrame = {
+    val raw = envelope.select(
+      AvroDecode.fromAvro(col("value_avro"), valueSchemaJson, failFast = failFast).as("value"))
+    (if (failFast) raw else raw.filter(col("value").isNotNull))
+      .select(col("value.*"))
+      .select(DebeziumCast.castColumns(valueSchemaJson): _*)
   }
 }

@@ -99,7 +99,7 @@ object StreamCuration {
   /** Gopher quality gate, staged with the token array the later
     * stages reuse (`__ws` — the batch pipeline's convention).
     */
-  def qualityGate(docs: DataFrame, textCol: String): DataFrame =
+  private def qualityGate(docs: DataFrame, textCol: String): DataFrame =
     docs.withColumn("__ws", TextFunctions.tokens(col(textCol)))
       .filter(TextFunctions.gopherKeep(col("__ws")))
 

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import graft.avro.AvroDecode
 import graft.config.TableConfig
-import graft.debezium.{DebeziumCast, SchemaProvider}
+import graft.debezium.SchemaProvider
 import graft.functions.ConfluentWire
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -36,22 +35,6 @@ object StreamPipeline {
       ConfluentWire.schemaId(col("key")).as("key_schema_id"),
       ConfluentWire.schemaId(col("value")).as("value_schema_id"),
       ConfluentWire.avroPayload(col("value")).as("value_avro"))
-
-  /** The payload decode of the merge loop and the analytics stream:
-    * Avro decode of `value_avro` (FAILFAST, or PERMISSIVE with the
-    * malformed rows, decoded to null, dropped), struct expansion, then
-    * the Debezium casts.
-    */
-  private[streaming] def decodeValues(
-      envelope: DataFrame,
-      valueSchemaJson: String,
-      failFast: Boolean): DataFrame = {
-    val raw = envelope.select(
-      AvroDecode.fromAvro(col("value_avro"), valueSchemaJson, failFast = failFast).as("value"))
-    (if (failFast) raw else raw.filter(col("value").isNotNull))
-      .select(col("value.*"))
-      .select(DebeziumCast.castColumns(valueSchemaJson): _*)
-  }
 
   def streamToTable(
       spark: SparkSession,

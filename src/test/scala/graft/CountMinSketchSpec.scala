@@ -5,6 +5,8 @@ import graft.functions.CountMinSketch
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import java.sql.Timestamp
+
 class CountMinSketchSpec extends SparkSpec {
   import spark.implicits._
 
@@ -114,5 +116,25 @@ class CountMinSketchSpec extends SparkSpec {
       .select(CountMinSketch.innerProductEstimate(col("ska"), col("ska"), d, 4096))
       .head().getLong(0)
     assert(self == 9L + 1L + 1L) // 3^2 + 1 + 1, exact at this width
+  }
+
+  test("per event-time window: counters sum to the window's count; hitters clear it") {
+    // minutes 0-5: alpha x3, beta x1; minutes 5-10: beta x2
+    def ts(min: Int) = new Timestamp(1700000400000L + min * 60000L)
+    val events = Seq(
+      (ts(0), "alpha"), (ts(1), "alpha"), (ts(2), "beta"), (ts(3), "alpha"),
+      (ts(6), "beta"), (ts(7), "beta")).toDF("ts", "v")
+    val sketches = events
+      .groupBy(window(col("ts"), "5 minutes"))
+      .agg(CountMinSketch.sketch(col("v"), d, w).as("sk"))
+      .select(col("window.start").as("window_start"), col("sk"))
+    val sums = sketches.as[(Timestamp, Seq[Long])].collect()
+      .sortBy(_._1.getTime).map(_._2.sum).toSeq
+    assert(sums == Seq(d.toLong * 4, d.toLong * 2))
+    val est = sketches.crossJoin(Seq("alpha", "beta").toDF("v"))
+      .select(col("window_start"), col("v"), CountMinSketch.estimate(col("sk"), col("v"), d, w))
+      .as[(Timestamp, String, Long)].collect()
+      .map(r => (r._1.getTime - 1700000400000L) / 60000L -> r._2 -> r._3).toMap
+    assert(est((0L, "alpha")) >= 3L && est((5L, "beta")) >= 2L)
   }
 }

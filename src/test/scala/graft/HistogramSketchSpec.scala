@@ -4,6 +4,8 @@ import graft.functions.HistogramSketch
 
 import org.apache.spark.sql.functions._
 
+import java.sql.Timestamp
+
 class HistogramSketchSpec extends SparkSpec {
 
   import spark.implicits._
@@ -88,5 +90,21 @@ class HistogramSketchSpec extends SparkSpec {
       col("e95")).collect().head
     assert(math.abs(row.getDouble(0) - row.getDouble(1)) <= 10.0)
     assert(math.abs(row.getDouble(2) - row.getDouble(3)) <= 10.0)
+  }
+
+  test("per event-time window: counters and quantile reads per window") {
+    def ts(min: Int) = new Timestamp(1700000400000L + min * 60000L)
+    val events = Seq(
+      (ts(0), 12.0), (ts(1), 47.0), (ts(2), 12.5), (ts(3), 88.0),
+      (ts(6), 5.0), (ts(7), 95.0), (ts(8), 55.0)).toDF("ts", "v")
+    val got = events
+      .groupBy(window(col("ts"), "5 minutes"))
+      .agg(HistogramSketch.sketch(col("v"), NB, Lo, Hi).as("counters"))
+      .select(col("window.start"), col("counters"),
+        HistogramSketch.quantile(col("counters"), 0.5, NB, Lo, Hi))
+      .as[(Timestamp, Seq[Long], Double)].collect().sortBy(_._1.getTime).toSeq
+    assert(got.map(_._2.sum) == Seq(4L, 3L))
+    // window 1 holds 12, 12.5, 47, 88 -> median read = bucket [10,20) midpoint
+    assert(got.head._3 == 15.0)
   }
 }

@@ -4,6 +4,8 @@ import graft.functions.HyperLogLog
 
 import org.apache.spark.sql.functions._
 
+import java.sql.Timestamp
+
 class HllSketchSpec extends SparkSpec {
 
   import spark.implicits._
@@ -77,5 +79,20 @@ class HllSketchSpec extends SparkSpec {
       .collect().head.getDouble(0)
     assert(math.abs(est / 2000.0 - 1.0) < 0.10, s"est=$est")
     spark.catalog.dropTempView("hll_in")
+  }
+
+  test("per event-time window: tiny cardinalities are exact under linear counting") {
+    // minutes 0-5: users a, b, c with repeats; minutes 5-10: b, d
+    def ts(min: Int) = new Timestamp(1700000400000L + min * 60000L)
+    val events = Seq(
+      (ts(0), "user_a"), (ts(1), "user_b"), (ts(2), "user_a"), (ts(3), "user_c"),
+      (ts(4), "user_a"), (ts(6), "user_b"), (ts(7), "user_d"), (ts(8), "user_b"))
+      .toDF("ts", "user")
+    val byWindow = events
+      .groupBy(window(col("ts"), "5 minutes"))
+      .agg(HyperLogLog.sketch(col("user")).as("registers"))
+      .select(col("window.start"), HyperLogLog.estimate(col("registers")))
+      .as[(Timestamp, Double)].collect().sortBy(_._1.getTime).map(r => math.round(r._2)).toSeq
+    assert(byWindow == Seq(3L, 2L))
   }
 }

@@ -1,11 +1,19 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
 
 import graft.operators.Bm25
 import graft.sources.StagedSwap
 
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.io.nativeio.NativeIO
 import org.apache.spark.sql.functions.col
+
+import scala.jdk.CollectionConverters._
 
 /** Crash states of the [[StagedSwap]] commit protocol through its
   * full-replace form [[StagedSwap.rotateIn]]: whatever a killed
@@ -160,5 +168,77 @@ class StagedSwapSpec extends SparkSpec {
     val afterAbsorb = search(Bm25.load(spark, path), "catalyst")
     assert(afterAbsorb.contains(3L), s"absorbed doc missing: $afterAbsorb")
     assert(KillPoints.debris(path).isEmpty)
+  }
+
+  /** Relative dir -> permission bits, and (kind, permission bits) of
+    * every file, where the kind is `parquet`, `crc` or the file name. */
+  private def tree(root: String): (Map[String, String], Seq[(String, String)]) = {
+    val base = Paths.get(root)
+    val paths = Files.walk(base).iterator().asScala.toSeq
+    def perms(p: java.nio.file.Path) = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    val (dirs, files) = paths.partition(Files.isDirectory(_))
+    (dirs.map(d => base.relativize(d).toString -> perms(d)).toMap,
+      files.map { f =>
+        val name = f.getFileName.toString
+        val kind = if (name.endsWith(".crc")) "crc" else if (name.endsWith(".parquet")) "parquet" else name
+        kind -> perms(f)
+      }.sorted)
+  }
+
+  /** The commands of the processes `body` starts on executor task threads. */
+  private def taskThreadForks(body: => Unit): Seq[String] = {
+    val recording = new Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    try body finally recording.stop()
+    val dump = Files.createTempFile(Paths.get(tmpDir("jfr")), "forks", ".jfr")
+    recording.dump(dump)
+    recording.close()
+    RecordingFile.readAllEvents(dump).asScala.toSeq
+      .filter(e => Option(e.getThread).exists(_.getJavaName.startsWith("Executor task launch")))
+      .map(_.getString("command"))
+  }
+
+  private lazy val partitioned = spark.range(0, 3000, 1, 4).select(col("id"), (col("id") % 3).as("p"))
+
+  test("a staged write leaves a plain parquet write's tree, files and permission bits, forking nothing") {
+    val plain = tmpDir("plain-write") + "/t"
+    val plainForks = taskThreadForks(partitioned.write.partitionBy("p").parquet(plain))
+    val staged = tmpDir("staged-write") + "/t"
+    val stagedForks = taskThreadForks(StagedSwap.writeStage(spark, partitioned, Seq("p"), staged))
+    val (plainDirs, plainFiles) = tree(plain)
+    assert(plainDirs.size == 4 && plainFiles.count(_._1 == "parquet") >= 3)
+    assert(tree(staged) == ((plainDirs, plainFiles)))
+    assert(stagedForks.isEmpty, stagedForks.mkString("\n"))
+    // without libhadoop the plain write runs chmod per file on its tasks
+    if (!NativeIO.isAvailable) assert(plainForks.exists(_.contains("chmod")))
+  }
+
+  test("a session's own fs.file.impl is kept for the staged write") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = tmpDir("recording-fs") + "/t"
+    RecordingLocalFs.permissionsSet.clear()
+    conf.set("fs.file.impl", classOf[RecordingLocalFs].getName)
+    conf.set("fs.file.impl.disable.cache", "true")
+    try StagedSwap.overwritePartitions(spark, root, partitioned, Seq("p"))
+    finally { conf.unset("fs.file.impl"); conf.unset("fs.file.impl.disable.cache") }
+    val recorded = RecordingLocalFs.permissionsSet.asScala.toSeq
+    assert(recorded.exists(p => p.contains("__staging") && p.endsWith(".parquet")), recorded.mkString("\n"))
+    assert(recorded.exists(_.endsWith("_graft_txn.json.tmp")), "the manifest bypassed the session's file system")
+    assert(spark.read.parquet(root).count() == 3000L)
+  }
+}
+
+/** A local file system that records every path it sets a permission on. */
+class RecordingLocalFs extends LocalFileSystem(new RecordingLocalFs.Raw)
+
+object RecordingLocalFs {
+  val permissionsSet = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  class Raw extends RawLocalFileSystem {
+    override def setPermission(p: Path, permission: FsPermission): Unit = {
+      permissionsSet.add(p.toString)
+      super.setPermission(p, permission)
+    }
   }
 }

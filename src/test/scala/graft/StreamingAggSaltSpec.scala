@@ -1,42 +1,11 @@
 package graft
 
 import graft.operators.Salting
-import graft.streaming.WindowedAggs
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Encoders
-
-import java.sql.Timestamp
-
-case class TimedEvent(ts: Timestamp, kind: String, value: Double)
 
 class StreamingAggSaltSpec extends SparkSpec {
   import spark.implicits._
-
-  test("tumbling windowed agg with watermark over a stream") {
-    val stream = MemoryStream[TimedEvent](Encoders.product[TimedEvent], spark.sqlContext)
-    val out = WindowedAggs.tumblingCounts(
-      stream.toDF(), "ts", Seq("kind"), "5 minutes", "10 minutes", valueCol = Some("value"))
-    val name = s"winagg_${System.nanoTime()}"
-    val q = out.writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      def t(m: Int) = new Timestamp(1700000000000L + m * 60000L)
-      stream.addData(
-        TimedEvent(t(0), "a", 1.0), TimedEvent(t(1), "a", 2.0),
-        TimedEvent(t(2), "b", 5.0), TimedEvent(t(6), "a", 10.0))
-      q.processAllAvailable()
-      // advance watermark far enough to close the first windows
-      stream.addData(TimedEvent(t(60), "a", 0.0))
-      q.processAllAvailable()
-      val rows = spark.table(name)
-        .select(col("kind"), col("n"), col("total"))
-        .as[(String, Long, Double)].collect().toSet
-      assert(rows.contains(("a", 2L, 3.0)), s"first a-window missing: $rows") // minutes 0-5
-      assert(rows.contains(("b", 1L, 5.0)))
-      assert(rows.contains(("a", 1L, 10.0))) // minutes 5-10
-    } finally q.stop()
-  }
 
   test("saltedJoin equals plain join") {
     val left = (1 to 1000).map(i => (i % 3, i)).toDF("k", "v") // hot keys 0,1,2
